@@ -313,8 +313,18 @@ object Dedup {
       .map(_.toLong).getOrElse(100000L)
     val longIds = fwd.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    val nPairs = fwd.count()
-    if (longIds && nPairs <= localLimit) {
+    // the count only decides the local path: skip it when that path is
+    // ruled out anyway (non-long ids, or the limit pinned to 0)
+    val localEdges =
+      if (longIds && localLimit > 0 && fwd.count() <= localLimit)
+        Some(fwd.collect())
+          // a null id is no identity to union: the distributed rounds
+          // carry it as its own (null, null) label, so such input takes
+          // them too instead of failing on the primitive read
+          .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      else None
+    if (localEdges.nonEmpty) {
+      val collected = localEdges.get
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x0: Long): Long = {
         var x = x0
@@ -326,7 +336,6 @@ object Dedup {
         }
         x
       }
-      val collected = fwd.collect()
       fwd.unpersist()
       collected.foreach { r =>
         val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))

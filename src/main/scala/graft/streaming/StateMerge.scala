@@ -114,6 +114,20 @@ private[streaming] object StateMerge {
       states.map(s => lastBatchId(s._2)).max)
   }
 
+  /** The face-binding refusal every merge runs after [[guard]]: all
+    * inputs must carry the same `what` (value column, ordered pair, k,
+    * binning, ...); returns that one binding. `why` says what a mixed
+    * merge would break. */
+  def sameBinding[B](what: String, bindings: Seq[B], show: B => String,
+      why: String): B = {
+    val distinct = bindings.distinct
+    if (distinct.size > 1)
+      throw new IllegalStateException(
+        s"mergeStates: inputs fold different $what " +
+          distinct.map(show).mkString(", ") + " — " + why)
+    distinct.head
+  }
+
   /** The shared union-cap refusal for the grouped merges: regional
     * group sets may be disjoint, so the UNION can exceed what any one
     * region held. */

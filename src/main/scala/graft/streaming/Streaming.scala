@@ -50,14 +50,6 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // deliberately NOT BatchShuffleTuning.tune'd: the ingest body is
-        // not a tiny order-insensitive fold — it is dedup + dimension-gate
-        // + store-append work whose joins and writes want the session's
-        // full shuffle width. Clamping it to the batch's input-partition
-        // count (often 1 for a single-producer-file batch) serializes the
-        // whole body; the r17 driver bench measured streaming_ingest
-        // regressing 27% under the clamp. The tuner stays on the 16
-        // aggregate folds, where reducer count is pure overhead.
         store.dimension match {
           case None =>
             val d = batch.select(size(col("embedding"))).head(1)
@@ -170,10 +162,6 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batchRaw: DataFrame, batchId: Long) =>
-        // NOT tuned — same reasoning as [[ingest]]'s body above: this is
-        // the join/write-heavy ingest shape (LSH self-join, state collide
-        // joins, a state append), not an aggregate fold; the clamp's
-        // 1-partition floor for single-file batches serializes it.
         // finish any state compaction a previous process died inside (the
         // same tmp+swap+marker recovery contract as the store's tier
         // rewrites — see VectorStore.recoverSwaps)

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import graft.operators.Profile
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
 
 /** Streaming exact co-moments — the bivariate face of the streaming
@@ -33,14 +31,11 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
   * correlation are DERIVED FP views computed from the exact sums at read
   * time, never folded.
   *
-  * State durability and exactly-once are the family protocol verbatim:
-  * one JSON state file through the [[graft.core.SwapStateFile]] tmp+marker
-  * swap, bindings refused loudly at stream entry — (checkpoint, and BOTH
-  * COLUMN NAMES: folding a different pair, or the same pair SWAPPED, into
-  * one state would silently produce the co-moments of neither ordering,
-  * so the ordered (x, y) pair is part of the state's identity) — replay
-  * idempotence off the last-applied batch id, loud (never phantom-empty)
-  * reads, linearizable [[readStateLocked]] for monitors.
+  * State file, exactly-once and entry-time guards: [[FoldStateStore]].
+  * The bindings are the checkpoint and BOTH COLUMN NAMES: folding a
+  * different pair, or the same pair SWAPPED, into one state would
+  * silently produce the co-moments of neither ordering, so the ordered
+  * (x, y) pair is part of the state's identity.
   *
   * 100 TB/day posture: per batch ONE map-side-combined aggregate
   * collapsing to a single row (partials are thirteen counters per task —
@@ -137,17 +132,6 @@ object StreamingComoments {
   case class ComomentsSnapshot(xCol: String, yCol: String,
       checkpoint: String, lastBatchId: Long, comoments: Comoments)
 
-  private val StateName = "comoments_state.json"
-
-  private def stateFile(spark: SparkSession, stateDir: String) =
-    new graft.core.SwapStateFile(
-      new Path(stateDir, StateName)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      stateDir, StateName, "comoments_state.swap.inprogress",
-      "comoments state")
-
-  private def emptySnapshot = ComomentsSnapshot("", "", "", -1L, emptyComoments)
-
   /** JSON field writer shared with the grouped fold — sums as STRINGS
     * (exact integers of unbounded width; a JSON double would silently
     * round past 2^53), pair stats only when n > 0 (no phantom fields on
@@ -191,54 +175,38 @@ object StreamingComoments {
       BigInt(0), BigInt(0), BigInt(0), BigInt(0), BigInt(0))
   }
 
-  private def parseSnapshot(stateDir: String)(txt: String): ComomentsSnapshot = {
-    val node = new ObjectMapper().readTree(txt)
-    if (node.get("x_col") == null || node.get("y_col") == null ||
-        node.get("checkpoint") == null)
-      throw new IllegalStateException(
-        s"comoments state file under $stateDir lacks the x_col/y_col/" +
-          "checkpoint binding fields — refusing to guess which stream " +
-          "it belongs to; re-fold from the source with a fresh state dir")
-    ComomentsSnapshot(node.get("x_col").asText(), node.get("y_col").asText(),
-      node.get("checkpoint").asText(), node.get("batch_id").asLong(),
-      parseComoments(node))
-  }
+  private val store = new FoldStateStore[ComomentsSnapshot](
+    "comoments state", "comoments_state.json",
+    Seq("x_col", "y_col", "checkpoint"),
+    ComomentsSnapshot("", "", "", -1L, emptyComoments), _.lastBatchId,
+    _.checkpoint,
+    encode = (root, snap) => {
+      root.put("x_col", snap.xCol)
+      root.put("y_col", snap.yCol)
+      root.put("checkpoint", snap.checkpoint)
+      root.put("batch_id", snap.lastBatchId)
+      putComoments(root, snap.comoments)
+    },
+    decode = node => ComomentsSnapshot(node.get("x_col").asText(),
+      node.get("y_col").asText(), node.get("checkpoint").asText(),
+      node.get("batch_id").asLong(), parseComoments(node)))
 
   /** Lock-free read ([[graft.core.SwapStateFile.read]] protocol); absent
     * file = empty stream. Monitors on a hot stream should use
     * [[readStateLocked]]. */
   def readState(spark: SparkSession, stateDir: String): ComomentsSnapshot =
-    stateFile(spark, stateDir).read(parseSnapshot(stateDir), emptySnapshot)
+    store.read(spark, stateDir)
 
   /** Linearizable read under the writer's own swap lock. */
   def readStateLocked(spark: SparkSession,
       stateDir: String): ComomentsSnapshot =
-    stateFile(spark, stateDir)
-      .readLocked(parseSnapshot(stateDir), emptySnapshot)
-
-  private def writeState(spark: SparkSession, stateDir: String,
-      snap: ComomentsSnapshot): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("x_col", snap.xCol)
-    root.put("y_col", snap.yCol)
-    root.put("checkpoint", snap.checkpoint)
-    root.put("batch_id", snap.lastBatchId)
-    putComoments(root, snap.comoments)
-    stateFile(spark, stateDir).write(mapper.writeValueAsBytes(root))
-  }
+    store.readLocked(spark, stateDir)
 
   private[streaming] def checkStateBindings(st: ComomentsSnapshot,
       stateDir: String, checkpoint: String, xCol: String,
       yCol: String): Unit = {
     if (st.lastBatchId < 0L) return
-    if (st.checkpoint != checkpoint)
-      throw new IllegalStateException(
-        s"comoments state at $stateDir was folded under checkpoint " +
-          s"'${st.checkpoint}' but this stream runs under '$checkpoint' " +
-          "— batch ids restart at 0 per checkpoint, so continuing would " +
-          "skip new data as replays (or double-count on a rewound " +
-          "checkpoint). Use a fresh state dir with a fresh checkpoint")
+    store.checkCheckpoint(st, stateDir, checkpoint)
     if (st.xCol != xCol || st.yCol != yCol)
       throw new IllegalStateException(
         s"comoments state at $stateDir was folded over the ordered pair " +
@@ -286,63 +254,37 @@ object StreamingComoments {
     * Package-visible so idempotence and bindings are directly testable. */
   private[streaming] def applyBatch(spark: SparkSession, stateDir: String,
       checkpoint: String, batch: DataFrame, xCol: String, yCol: String,
-      batchId: Long): ComomentsSnapshot = {
-    val st = readState(spark, stateDir)
-    checkStateBindings(st, stateDir, checkpoint, xCol, yCol)
-    StreamingHeavyHitters.checkFreshStateVsCheckpoint(st.lastBatchId,
-      stateDir, batchId,
-      "comoments state")
-    if (batchId <= st.lastBatchId) st // replayed batch: already folded
-    else {
-      // ONE aggregate, ONE row back — Profile.comoments IS the per-batch
-      // arithmetic, so the stream and the batch twin cannot drift
-      val bm = comomentsFromRow(
-        Profile.comoments(batch, xCol, yCol).head(), 0,
-        s"comoments fold at $stateDir (batch $batchId)")
-      val next = ComomentsSnapshot(xCol, yCol, checkpoint, batchId,
-        mergeComoments(st.comoments, bm))
-      writeState(spark, stateDir, next)
-      next
-    }
-  }
+      batchId: Long): ComomentsSnapshot =
+    store.applyBatch(spark, stateDir, batchId,
+      st => checkStateBindings(st, stateDir, checkpoint, xCol, yCol),
+      st => {
+        // ONE aggregate, ONE row back — Profile.comoments IS the
+        // per-batch arithmetic, so the stream and the batch twin cannot
+        // drift
+        val bm = comomentsFromRow(
+          Profile.comoments(batch, xCol, yCol).head(), 0,
+          s"comoments fold at $stateDir (batch $batchId)")
+        ComomentsSnapshot(xCol, yCol, checkpoint, batchId,
+          mergeComoments(st.comoments, bm))
+      })
 
   /** Start the stream: parquet arrivals under `sourceDir` with LONG
     * `xCol`/`yCol`, folded per micro-batch into the co-moments state
-    * under `stateDir`. Single-stream-per-state-dir contract,
-    * non-atomic-rename refusal at entry, binding checks before any
-    * checkpoint WAL — the family's chokepoint discipline verbatim. */
+    * under `stateDir`; entry-time guards are [[FoldStateStore.ingest]]'s. */
   def ingest(spark: SparkSession, sourceDir: String, stateDir: String,
       checkpointDir: String, xCol: String = "x", yCol: String = "y",
       maxFilesPerTrigger: Int = 0): StreamingQuery = {
     require(xCol != yCol,
       s"comoments of a column with itself ('$xCol') are the univariate " +
         "moments — use StreamingMoments for that profile")
-    val srcSchema = new StructType().add(xCol, LongType).add(yCol, LongType)
-    val stateFs = new Path(stateDir, StateName)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.FsCapabilities.assertAtomicRenameAtOpen(stateFs,
-      new Path(stateDir), "streaming comoments state commit")
-    val ckptPath = new Path(checkpointDir)
-    val ckptId = ckptPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(ckptPath).toString
-    val st0 = readState(spark, stateDir)
-    checkStateBindings(st0, stateDir, ckptId, xCol, yCol)
-    val reader = spark.readStream.schema(srcSchema)
-    val src =
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-          .parquet(sourceDir)
-      else reader.parquet(sourceDir)
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchShuffleTuning.tune(batch)
-        applyBatch(spark, stateDir, ckptId, batch, xCol, yCol, batchId); ()
-      }
-      .start()
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
+      new StructType().add(xCol, LongType).add(yCol, LongType),
+      maxFilesPerTrigger,
+      entryCheck = (st, ckptId) =>
+        checkStateBindings(st, stateDir, ckptId, xCol, yCol),
+      applyB = (batch, batchId, ckptId) =>
+        { applyBatch(spark, stateDir, ckptId, batch, xCol, yCol, batchId)
+          () })
   }
 
   /** Cross-cluster merge — the bivariate face of
@@ -354,25 +296,22 @@ object StreamingComoments {
     * pair, a synthetic `merged:[...]` checkpoint that trips the ingest
     * binding, no clobbering. */
   def mergeStates(spark: SparkSession, inDirs: Seq[String],
-      outDir: String): ComomentsSnapshot = {
-    val states = inDirs.map(d => d -> readStateLocked(spark, d))
-    val (ckpt, lastId) = StateMerge.guard(spark, "comoments state",
-      "global profile", inDirs, outDir, states,
-      (s: ComomentsSnapshot) => s.lastBatchId,
-      (s: ComomentsSnapshot) => s.checkpoint,
-      readState(spark, outDir).lastBatchId)
-    val pairs = states.map(s => (s._2.xCol, s._2.yCol)).distinct
-    if (pairs.size > 1)
-      throw new IllegalStateException(
-        "mergeStates: inputs fold different ordered column pairs " +
-          pairs.map(p => s"('${p._1}', '${p._2}')").mkString(", ") +
-          " — the merged state would be the co-moments of neither; " +
-          "merge only states folded over the same pair")
-    val merged = ComomentsSnapshot(pairs.head._1, pairs.head._2, ckpt,
-      lastId, states.map(_._2.comoments).reduce(mergeComoments))
-    writeState(spark, outDir, merged)
-    merged
-  }
+      outDir: String): ComomentsSnapshot =
+    store.merge(spark, inDirs, outDir, "global profile") {
+      (states, ckpt, lastId) =>
+        val (xCol, yCol) = samePair(states.map(s => (s.xCol, s.yCol)))
+        ComomentsSnapshot(xCol, yCol, ckpt, lastId,
+          states.map(_.comoments).reduce(mergeComoments))
+    }
+
+  /** The merge binding refusal shared with the grouped fold: every
+    * input must fold the same ORDERED column pair. */
+  private[streaming] def samePair(
+      pairs: Seq[(String, String)]): (String, String) =
+    StateMerge.sameBinding("ordered column pairs", pairs,
+      (p: (String, String)) => s"('${p._1}', '${p._2}')",
+      "the merged state would be the co-moments of neither; merge only " +
+        "states folded over the same pair")
 
   /** The batch twin, for cross-checks: [[Profile.comoments]] one-shot
     * over a corpus — the co-moments the folded state must EQUAL on a

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
 import org.apache.datasketches.memory.Memory
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Streaming distinct-count — the cardinality face of the streaming
@@ -40,12 +38,9 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *    against the DuckDB-exact count at the documented 5% bound, and the
   *    exact nRows counter pins exactly-once independently of the sketch.
   *
-  * State durability and bindings are the family protocol verbatim: one
-  * JSON state file (sketch bytes base64) through the
-  * [[graft.core.SwapStateFile]] tmp+marker swap; (checkpoint, lgK, and
-  * the folded COLUMN — the moments fold's identity argument: a state
-  * mixing two columns counts neither) refused loudly at stream entry;
-  * loud reads; linearizable [[readStateLocked]] for monitors.
+  * State file (sketch bytes base64), exactly-once and entry-time
+  * guards: [[FoldStateStore]]. The bindings are the checkpoint, lgK and
+  * the folded COLUMN (a state mixing two columns counts neither).
   *
   * 100 TB/day posture: per batch one map-side-combined sketch aggregate
   * (fixed-size partials, never values), one O(2^lgK) driver union, one
@@ -86,74 +81,54 @@ object StreamingDistinct {
         java.util.Arrays.hashCode(sketch)).hashCode()
   }
 
-  private val StateName = "distinct_state.json"
-
-  private def stateFile(spark: SparkSession, stateDir: String) =
-    new graft.core.SwapStateFile(
-      new Path(stateDir, StateName)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      stateDir, StateName, "distinct_state.swap.inprogress",
-      "distinct state")
-
-  private def emptySnapshot =
-    DistinctSnapshot(-1, "", "", -1L, 0L, 0L, Array.empty)
-
-  private def parseSnapshot(stateDir: String)(txt: String): DistinctSnapshot = {
-    val node = new ObjectMapper().readTree(txt)
-    if (node.get("lg_k") == null || node.get("value_col") == null ||
-        node.get("checkpoint") == null)
-      throw new IllegalStateException(
-        s"distinct state file under $stateDir lacks the lg_k/value_col/" +
-          "checkpoint binding fields — refusing to guess which stream it " +
-          "belongs to; re-fold from the source with a fresh state dir")
-    DistinctSnapshot(node.get("lg_k").asInt(),
+  private val store = new FoldStateStore[DistinctSnapshot](
+    "distinct state", "distinct_state.json",
+    Seq("lg_k", "value_col", "checkpoint"),
+    DistinctSnapshot(-1, "", "", -1L, 0L, 0L, Array.empty), _.lastBatchId,
+    _.checkpoint,
+    encode = (root, snap) => {
+      root.put("lg_k", snap.lgK)
+      root.put("value_col", snap.valueCol)
+      root.put("checkpoint", snap.checkpoint)
+      root.put("batch_id", snap.lastBatchId)
+      putCounters(root, snap.nRows, snap.nNull, snap.sketch)
+    },
+    decode = node => DistinctSnapshot(node.get("lg_k").asInt(),
       node.get("value_col").asText(), node.get("checkpoint").asText(),
       node.get("batch_id").asLong(), node.get("n_rows").asLong(),
-      node.get("n_null").asLong(),
-      Option(node.get("sketch")).map(_.asText())
-        .filter(_.nonEmpty)
-        .map(java.util.Base64.getDecoder.decode)
-        .getOrElse(Array.empty))
+      node.get("n_null").asLong(), parseSketch(node)))
+
+  /** The (n_rows, n_null, sketch) fields, shared by the three distinct
+    * faces — sketch bytes base64, an empty string for no sketch. */
+  private[streaming] def putCounters(
+      into: com.fasterxml.jackson.databind.node.ObjectNode, nRows: Long,
+      nNull: Long, sketch: Array[Byte]): Unit = {
+    into.put("n_rows", nRows)
+    into.put("n_null", nNull)
+    into.put("sketch", java.util.Base64.getEncoder.encodeToString(sketch))
   }
+
+  private[streaming] def parseSketch(
+      node: com.fasterxml.jackson.databind.JsonNode): Array[Byte] =
+    Option(node.get("sketch")).map(_.asText()).filter(_.nonEmpty)
+      .map(java.util.Base64.getDecoder.decode).getOrElse(Array.empty)
 
   /** Lock-free read ([[graft.core.SwapStateFile.read]] protocol); absent
     * file = empty stream. Monitors on a hot stream should use
     * [[readStateLocked]]. */
   def readState(spark: SparkSession, stateDir: String): DistinctSnapshot =
-    stateFile(spark, stateDir).read(parseSnapshot(stateDir), emptySnapshot)
+    store.read(spark, stateDir)
 
   /** Linearizable read under the writer's own swap lock. */
   def readStateLocked(spark: SparkSession,
       stateDir: String): DistinctSnapshot =
-    stateFile(spark, stateDir)
-      .readLocked(parseSnapshot(stateDir), emptySnapshot)
-
-  private def writeState(spark: SparkSession, stateDir: String,
-      snap: DistinctSnapshot): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("lg_k", snap.lgK)
-    root.put("value_col", snap.valueCol)
-    root.put("checkpoint", snap.checkpoint)
-    root.put("batch_id", snap.lastBatchId)
-    root.put("n_rows", snap.nRows)
-    root.put("n_null", snap.nNull)
-    root.put("sketch",
-      java.util.Base64.getEncoder.encodeToString(snap.sketch))
-    stateFile(spark, stateDir).write(mapper.writeValueAsBytes(root))
-  }
+    store.readLocked(spark, stateDir)
 
   private[streaming] def checkStateBindings(st: DistinctSnapshot,
       stateDir: String, checkpoint: String, lgK: Int,
       valueCol: String): Unit = {
     if (st.lastBatchId < 0L) return
-    if (st.checkpoint != checkpoint)
-      throw new IllegalStateException(
-        s"distinct state at $stateDir was folded under checkpoint " +
-          s"'${st.checkpoint}' but this stream runs under '$checkpoint' " +
-          "— batch ids restart at 0 per checkpoint, so continuing would " +
-          "skip new data as replays (or double-count on a rewound " +
-          "checkpoint). Use a fresh state dir with a fresh checkpoint")
+    store.checkCheckpoint(st, stateDir, checkpoint)
     if (st.lgK != lgK || st.valueCol != valueCol)
       throw new IllegalStateException(
         s"distinct state at $stateDir was folded with (lgK=${st.lgK}, " +
@@ -183,74 +158,44 @@ object StreamingDistinct {
     * directly testable. */
   private[streaming] def applyBatch(spark: SparkSession, stateDir: String,
       lgK: Int, checkpoint: String, batch: DataFrame, valueCol: String,
-      batchId: Long): DistinctSnapshot = {
-    val st = readState(spark, stateDir)
-    checkStateBindings(st, stateDir, checkpoint, lgK, valueCol)
-    StreamingHeavyHitters.checkFreshStateVsCheckpoint(st.lastBatchId,
-      stateDir, batchId,
-      "distinct state")
-    if (batchId <= st.lastBatchId) st // replayed batch: already folded
-    else {
-      val v = col("`" + valueCol.replace("`", "``") + "`")
-      // ONE aggregate, ONE row back: the sketch plus the exact counters
-      // on the same pass (hll_sketch_agg ignores nulls; they are counted,
-      // not folded — the family's null-value rule)
-      val r = batch.agg(count(lit(1)).as("n_rows"), count(v).as("n"),
-        hll_sketch_agg(v, lit(lgK)).as("sk")).head()
-      val nRows = r.getLong(0)
-      val n = r.getLong(1)
-      // n == 0: nothing non-null was folded — keep the no-sketch shape
-      // (hll_sketch_agg returns an EMPTY sketch, not SQL NULL, on
-      // all-null input; estimate None must mean "no values", not 0.0)
-      val bytes =
-        if (n == 0L || r.isNullAt(2)) Array.empty[Byte]
-        else r.getAs[Array[Byte]](2)
-      val next = DistinctSnapshot(lgK, valueCol, checkpoint, batchId,
-        st.nRows + nRows, st.nNull + (nRows - n),
-        unionSketches(lgK, st.sketch, bytes))
-      writeState(spark, stateDir, next)
-      next
-    }
-  }
+      batchId: Long): DistinctSnapshot =
+    store.applyBatch(spark, stateDir, batchId,
+      st => checkStateBindings(st, stateDir, checkpoint, lgK, valueCol),
+      st => {
+        val v = col("`" + valueCol.replace("`", "``") + "`")
+        // ONE aggregate, ONE row back: the sketch plus the exact counters
+        // on the same pass (hll_sketch_agg ignores nulls; they are
+        // counted, not folded — the family's null-value rule)
+        val r = batch.agg(count(lit(1)).as("n_rows"), count(v).as("n"),
+          hll_sketch_agg(v, lit(lgK)).as("sk")).head()
+        val nRows = r.getLong(0)
+        val n = r.getLong(1)
+        // n == 0: nothing non-null was folded — keep the no-sketch shape
+        // (hll_sketch_agg returns an EMPTY sketch, not SQL NULL, on
+        // all-null input; estimate None must mean "no values", not 0.0)
+        val bytes =
+          if (n == 0L || r.isNullAt(2)) Array.empty[Byte]
+          else r.getAs[Array[Byte]](2)
+        DistinctSnapshot(lgK, valueCol, checkpoint, batchId,
+          st.nRows + nRows, st.nNull + (nRows - n),
+          unionSketches(lgK, st.sketch, bytes))
+      })
 
   /** Start the stream: parquet arrivals under `sourceDir` with a STRING
     * `valueCol`, folded per micro-batch into the distinct-count state
-    * under `stateDir`. Single-stream-per-state-dir contract,
-    * non-atomic-rename refusal AND the conf-gated functional probe at
-    * entry, binding checks before any checkpoint WAL — the family's
-    * chokepoint discipline verbatim. */
+    * under `stateDir`; entry-time guards are [[FoldStateStore.ingest]]'s. */
   def ingest(spark: SparkSession, sourceDir: String, stateDir: String,
       checkpointDir: String, valueCol: String = "value",
       lgK: Int = DefaultLgK, maxFilesPerTrigger: Int = 0): StreamingQuery = {
     require(lgK >= 4 && lgK <= 21,
       s"lgK must be in the sketch's supported [4, 21], got $lgK")
-    val srcSchema = new StructType().add(valueCol, StringType)
-    val stateFs = new Path(stateDir, StateName)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.FsCapabilities.assertAtomicRenameAtOpen(stateFs,
-      new Path(stateDir), "streaming distinct state commit")
-    val ckptPath = new Path(checkpointDir)
-    val ckptId = ckptPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(ckptPath).toString
-    val st0 = readState(spark, stateDir)
-    checkStateBindings(st0, stateDir, ckptId, lgK, valueCol)
-    val reader = spark.readStream.schema(srcSchema)
-    val src =
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-          .parquet(sourceDir)
-      else reader.parquet(sourceDir)
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchShuffleTuning.tune(batch)
-        applyBatch(spark, stateDir, lgK, ckptId, batch, valueCol, batchId)
-        ()
-      }
-      .start()
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
+      new StructType().add(valueCol, StringType), maxFilesPerTrigger,
+      entryCheck = (st, ckptId) =>
+        checkStateBindings(st, stateDir, ckptId, lgK, valueCol),
+      applyB = (batch, batchId, ckptId) =>
+        { applyBatch(spark, stateDir, lgK, ckptId, batch, valueCol, batchId)
+          () })
   }
 
   /** Cross-cluster merge — the cardinality face of
@@ -266,28 +211,24 @@ object StreamingDistinct {
     * `merged:[...]` checkpoint that trips the ingest binding, no
     * clobbering. */
   def mergeStates(spark: SparkSession, inDirs: Seq[String],
-      outDir: String): DistinctSnapshot = {
-    val states = inDirs.map(d => d -> readStateLocked(spark, d))
-    val (ckpt, lastId) = StateMerge.guard(spark, "distinct state",
-      "global cardinality", inDirs, outDir, states,
-      (s: DistinctSnapshot) => s.lastBatchId,
-      (s: DistinctSnapshot) => s.checkpoint,
-      readState(spark, outDir).lastBatchId)
-    val bindings = states.map(s => (s._2.lgK, s._2.valueCol)).distinct
-    if (bindings.size > 1)
-      throw new IllegalStateException(
-        "mergeStates: inputs fold different (lgK, valueCol) bindings " +
-          bindings.map(b => s"(lgK=${b._1}, '${b._2}')").mkString(", ") +
-          " — sketches of different columns cannot be unioned " +
-          "meaningfully and mixed precisions degrade silently; merge " +
-          "only states folded with the same binding")
-    val (lgK, valueCol) = bindings.head
-    val merged = DistinctSnapshot(lgK, valueCol, ckpt, lastId,
-      states.map(_._2.nRows).sum, states.map(_._2.nNull).sum,
-      states.map(_._2.sketch).reduce(unionSketches(lgK, _, _)))
-    writeState(spark, outDir, merged)
-    merged
-  }
+      outDir: String): DistinctSnapshot =
+    store.merge(spark, inDirs, outDir, "global cardinality") {
+      (states, ckpt, lastId) =>
+        val (lgK, valueCol) = sameLgKCol(states.map(s => (s.lgK, s.valueCol)))
+        DistinctSnapshot(lgK, valueCol, ckpt, lastId,
+          states.map(_.nRows).sum, states.map(_.nNull).sum,
+          states.map(_.sketch).reduce(unionSketches(lgK, _, _)))
+    }
+
+  /** The merge binding refusal shared with the grouped fold: every
+    * input must carry the same (lgK, valueCol). */
+  private[streaming] def sameLgKCol(
+      bindings: Seq[(Int, String)]): (Int, String) =
+    StateMerge.sameBinding("(lgK, valueCol) bindings", bindings,
+      (b: (Int, String)) => s"(lgK=${b._1}, '${b._2}')",
+      "sketches of different columns cannot be unioned meaningfully and " +
+        "mixed precisions degrade silently; merge only states folded " +
+        "with the same binding")
 
   /** The batch twin, for cross-checks: the one-shot sketch over a corpus
     * — by the HLL semilattice its registers EQUAL the fold's union on a

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import graft.operators.Profile
 import graft.streaming.StreamingComoments.{comomentsFromRow, mergeComoments, Comoments}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructType}
 
 /** Per-group streaming exact co-moments — the grouped face of
@@ -41,10 +39,8 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructType
   * identity to profile under — the batch face's rule) but tallied in
   * `excludedNullRows` within the same single pass; rows missing either
   * VALUE inside a group ride that group's own exact n_null_x/n_null_y.
-  * Durability/exactly-once/bindings are the family protocol verbatim
-  * (SwapStateFile swap, (checkpoint, xCol, yCol) binding — the flat
-  * fold's ordered-pair identity argument — replay idempotence, loud
-  * reads, linearizable [[readStateLocked]]).
+  * State file and exactly-once: [[FoldStateStore]]; the bindings are
+  * (checkpoint, xCol, yCol), the flat fold's ordered-pair identity.
   *
   * 100 TB/day posture: per batch one grouped map-side-combined aggregate
   * (partials are thirteen counters per group per task), one ≤ maxGroups
@@ -64,82 +60,53 @@ object StreamingGroupedComoments {
     * ([[StreamingGroupedHeavyHitters.DefaultMaxGroups]] rationale). */
   val DefaultMaxGroups: Int = 10000
 
-  private val StateName = "comoments_grouped_state.json"
-
-  private def stateFile(spark: SparkSession, stateDir: String) =
-    new graft.core.SwapStateFile(
-      new Path(stateDir, StateName)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      stateDir, StateName, "comoments_grouped_state.swap.inprogress",
-      "grouped comoments state")
-
-  private def emptySnapshot =
-    GroupedComomentsSnapshot("", "", "", -1L, Map.empty, 0L)
-
-  private def parseSnapshot(stateDir: String)(
-      txt: String): GroupedComomentsSnapshot = {
-    val node = new ObjectMapper().readTree(txt)
-    if (node.get("x_col") == null || node.get("y_col") == null ||
-        node.get("checkpoint") == null)
-      throw new IllegalStateException(
-        s"grouped comoments state file under $stateDir lacks the " +
-          "x_col/y_col/checkpoint binding fields — refusing to guess " +
-          "which stream it belongs to; re-fold from the source with a " +
-          "fresh state dir")
-    val groups = Map.newBuilder[String, Comoments]
-    val git = node.get("groups").fields()
-    while (git.hasNext) {
-      val ge = git.next()
-      groups += ge.getKey -> StreamingComoments.parseComoments(ge.getValue)
-    }
-    GroupedComomentsSnapshot(node.get("x_col").asText(),
-      node.get("y_col").asText(), node.get("checkpoint").asText(),
-      node.get("batch_id").asLong(), groups.result(),
-      node.get("excluded_null_rows").asLong())
-  }
+  private val store = new FoldStateStore[GroupedComomentsSnapshot](
+    "grouped comoments state", "comoments_grouped_state.json",
+    Seq("x_col", "y_col", "checkpoint"),
+    GroupedComomentsSnapshot("", "", "", -1L, Map.empty, 0L),
+    _.lastBatchId, _.checkpoint,
+    encode = (root, snap) => {
+      root.put("x_col", snap.xCol)
+      root.put("y_col", snap.yCol)
+      root.put("checkpoint", snap.checkpoint)
+      root.put("batch_id", snap.lastBatchId)
+      root.put("excluded_null_rows", snap.excludedNullRows)
+      val gs = root.putObject("groups")
+      // sorted for a stable file layout (diffable, digest-friendly)
+      snap.groups.toSeq.sortBy(_._1).foreach { case (g, m) =>
+        StreamingComoments.putComoments(gs.putObject(g), m)
+      }
+    },
+    decode = node => {
+      val groups = Map.newBuilder[String, Comoments]
+      val git = node.get("groups").fields()
+      while (git.hasNext) {
+        val ge = git.next()
+        groups += ge.getKey -> StreamingComoments.parseComoments(ge.getValue)
+      }
+      GroupedComomentsSnapshot(node.get("x_col").asText(),
+        node.get("y_col").asText(), node.get("checkpoint").asText(),
+        node.get("batch_id").asLong(), groups.result(),
+        node.get("excluded_null_rows").asLong())
+    })
 
   /** Lock-free read ([[graft.core.SwapStateFile.read]] protocol); absent
     * file = empty stream. Monitors on a hot stream should use
     * [[readStateLocked]]. */
   def readState(spark: SparkSession,
       stateDir: String): GroupedComomentsSnapshot =
-    stateFile(spark, stateDir).read(parseSnapshot(stateDir), emptySnapshot)
+    store.read(spark, stateDir)
 
   /** Linearizable read under the writer's own swap lock. */
   def readStateLocked(spark: SparkSession,
       stateDir: String): GroupedComomentsSnapshot =
-    stateFile(spark, stateDir)
-      .readLocked(parseSnapshot(stateDir), emptySnapshot)
-
-  private def writeState(spark: SparkSession, stateDir: String,
-      snap: GroupedComomentsSnapshot): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("x_col", snap.xCol)
-    root.put("y_col", snap.yCol)
-    root.put("checkpoint", snap.checkpoint)
-    root.put("batch_id", snap.lastBatchId)
-    root.put("excluded_null_rows", snap.excludedNullRows)
-    val gs = root.putObject("groups")
-    // sorted for a stable file layout (diffable, digest-friendly)
-    snap.groups.toSeq.sortBy(_._1).foreach { case (g, m) =>
-      StreamingComoments.putComoments(gs.putObject(g), m)
-    }
-    stateFile(spark, stateDir).write(mapper.writeValueAsBytes(root))
-  }
+    store.readLocked(spark, stateDir)
 
   private[streaming] def checkStateBindings(st: GroupedComomentsSnapshot,
       stateDir: String, checkpoint: String, xCol: String,
       yCol: String): Unit = {
     if (st.lastBatchId < 0L) return
-    if (st.checkpoint != checkpoint)
-      throw new IllegalStateException(
-        s"grouped comoments state at $stateDir was folded under " +
-          s"checkpoint '${st.checkpoint}' but this stream runs under " +
-          s"'$checkpoint' — batch ids restart at 0 per checkpoint, so " +
-          "continuing would skip new data as replays (or double-count " +
-          "on a rewound checkpoint). Use a fresh state dir with a fresh " +
-          "checkpoint")
+    store.checkCheckpoint(st, stateDir, checkpoint)
     if (st.xCol != xCol || st.yCol != yCol)
       throw new IllegalStateException(
         s"grouped comoments state at $stateDir was folded over the " +
@@ -156,62 +123,55 @@ object StreamingGroupedComoments {
   private[streaming] def applyBatch(spark: SparkSession, stateDir: String,
       maxGroups: Int, checkpoint: String, batch: DataFrame,
       groupCol: String, xCol: String, yCol: String,
-      batchId: Long): GroupedComomentsSnapshot = {
-    val st = readState(spark, stateDir)
-    checkStateBindings(st, stateDir, checkpoint, xCol, yCol)
-    StreamingHeavyHitters.checkFreshStateVsCheckpoint(st.lastBatchId,
-      stateDir, batchId,
-      "grouped comoments state")
-    if (batchId <= st.lastBatchId) st // replayed batch: already folded
-    else {
-      // groupBy KEEPS the null group as its own row (unlike the batch
-      // face's filtered join-shape), so the excluded-row count rides the
-      // SAME single pass — its n_rows IS the batch's excluded tally
-      val g = col("`" + groupCol.replace("`", "``") + "`")
-      val aggs = Profile.comomentsAggs(xCol, yCol)
-      val grouped = batch.groupBy(g.as("__group"))
-        .agg(aggs.head, aggs.tail: _*)
-      // bounded collect: head(cap + 2) — the null group (at most one row)
-      // must not displace a real group at the probe boundary; a batch
-      // whose own real-group count exceeds the cap can never fold into a
-      // capped state, so the probe both bounds the driver allocation and
-      // detects the refusal case
-      val rows = grouped.head(maxGroups + 2)
-      val (nullRows, realRows) = rows.partition(_.isNullAt(0))
-      val excludedThisBatch =
-        nullRows.headOption.map(_.getLong(1)).getOrElse(0L)
-      val merged = scala.collection.mutable.Map.empty[String, Comoments]
-      merged ++= st.groups
-      realRows.foreach { r =>
-        val grp = r.getString(0)
-        val bm = comomentsFromRow(r, 1,
-          s"grouped comoments fold at $stateDir (batch $batchId, " +
-            s"group '$grp')")
-        merged.put(grp,
-          mergeComoments(
-            merged.getOrElse(grp, StreamingComoments.emptyComoments), bm))
-      }
-      if (merged.size > maxGroups) {
-        // the head probe TRUNCATES the batch's group relation, so when it
-        // came back full `merged.size` is only a LOWER BOUND on the real
-        // cardinality
-        val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
-        throw new IllegalStateException(
-          s"grouped comoments state at $stateDir would hold " +
-            s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
-            "the state file (and the per-batch driver fold) is bounded " +
-            "BY this cap. Raise maxGroups if the group key is genuinely " +
-            "this wide and the driver can hold it, or coarsen the group " +
-            "key; a per-document-cardinality key belongs on the batch " +
-            "comomentsPerGroup path, not a driver-side state file. Batch " +
-            "NOT applied; the stream should be stopped and re-planned")
-      }
-      val next = GroupedComomentsSnapshot(xCol, yCol, checkpoint, batchId,
-        merged.toMap, st.excludedNullRows + excludedThisBatch)
-      writeState(spark, stateDir, next)
-      next
-    }
-  }
+      batchId: Long): GroupedComomentsSnapshot =
+    store.applyBatch(spark, stateDir, batchId,
+      st => checkStateBindings(st, stateDir, checkpoint, xCol, yCol),
+      st => {
+        // groupBy KEEPS the null group as its own row (unlike the batch
+        // face's filtered join-shape), so the excluded-row count rides the
+        // SAME single pass — its n_rows IS the batch's excluded tally
+        val g = col("`" + groupCol.replace("`", "``") + "`")
+        val aggs = Profile.comomentsAggs(xCol, yCol)
+        val grouped = batch.groupBy(g.as("__group"))
+          .agg(aggs.head, aggs.tail: _*)
+        // bounded collect: head(cap + 2) — the null group (at most one row)
+        // must not displace a real group at the probe boundary; a batch
+        // whose own real-group count exceeds the cap can never fold into a
+        // capped state, so the probe both bounds the driver allocation and
+        // detects the refusal case
+        val rows = grouped.head(maxGroups + 2)
+        val (nullRows, realRows) = rows.partition(_.isNullAt(0))
+        val excludedThisBatch =
+          nullRows.headOption.map(_.getLong(1)).getOrElse(0L)
+        val merged = scala.collection.mutable.Map.empty[String, Comoments]
+        merged ++= st.groups
+        realRows.foreach { r =>
+          val grp = r.getString(0)
+          val bm = comomentsFromRow(r, 1,
+            s"grouped comoments fold at $stateDir (batch $batchId, " +
+              s"group '$grp')")
+          merged.put(grp,
+            mergeComoments(
+              merged.getOrElse(grp, StreamingComoments.emptyComoments), bm))
+        }
+        if (merged.size > maxGroups) {
+          // the head probe TRUNCATES the batch's group relation, so when it
+          // came back full `merged.size` is only a LOWER BOUND on the real
+          // cardinality
+          val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
+          throw new IllegalStateException(
+            s"grouped comoments state at $stateDir would hold " +
+              s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
+              "the state file (and the per-batch driver fold) is bounded " +
+              "BY this cap. Raise maxGroups if the group key is genuinely " +
+              "this wide and the driver can hold it, or coarsen the group " +
+              "key; a per-document-cardinality key belongs on the batch " +
+              "comomentsPerGroup path, not a driver-side state file. Batch " +
+              "NOT applied; the stream should be stopped and re-planned")
+        }
+        GroupedComomentsSnapshot(xCol, yCol, checkpoint, batchId,
+          merged.toMap, st.excludedNullRows + excludedThisBatch)
+      })
 
   /** Start the stream: parquet arrivals under `sourceDir` with a STRING
     * `groupCol` and LONG `xCol`/`yCol`, folded per micro-batch into the
@@ -225,34 +185,15 @@ object StreamingGroupedComoments {
     require(xCol != yCol,
       s"comoments of a column with itself ('$xCol') are the univariate " +
         "moments — use StreamingGroupedMoments for that profile")
-    val srcSchema = new StructType()
-      .add(groupCol, StringType).add(xCol, LongType).add(yCol, LongType)
-    val stateFs = new Path(stateDir, StateName)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.FsCapabilities.assertAtomicRenameAtOpen(stateFs,
-      new Path(stateDir), "streaming grouped comoments state commit")
-    val ckptPath = new Path(checkpointDir)
-    val ckptId = ckptPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(ckptPath).toString
-    val st0 = readState(spark, stateDir)
-    checkStateBindings(st0, stateDir, ckptId, xCol, yCol)
-    val reader = spark.readStream.schema(srcSchema)
-    val src =
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-          .parquet(sourceDir)
-      else reader.parquet(sourceDir)
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchShuffleTuning.tune(batch)
-        applyBatch(spark, stateDir, maxGroups, ckptId, batch, groupCol,
-          xCol, yCol, batchId); ()
-      }
-      .start()
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
+      new StructType().add(groupCol, StringType).add(xCol, LongType)
+        .add(yCol, LongType),
+      maxFilesPerTrigger,
+      entryCheck = (st, ckptId) =>
+        checkStateBindings(st, stateDir, ckptId, xCol, yCol),
+      applyB = (batch, batchId, ckptId) =>
+        { applyBatch(spark, stateDir, maxGroups, ckptId, batch, groupCol,
+            xCol, yCol, batchId); () })
   }
 
   /** Cross-cluster merge — the grouped bivariate face of
@@ -263,35 +204,23 @@ object StreamingGroupedComoments {
     * contract: locked input reads, every input folded, the same ORDERED
     * column pair, a synthetic `merged:[...]` checkpoint, no clobbering. */
   def mergeStates(spark: SparkSession, inDirs: Seq[String], outDir: String,
-      maxGroups: Int = DefaultMaxGroups): GroupedComomentsSnapshot = {
-    val states = inDirs.map(d => d -> readStateLocked(spark, d))
-    val (ckpt, lastId) = StateMerge.guard(spark, "grouped comoments state",
-      "global profile", inDirs, outDir, states,
-      (s: GroupedComomentsSnapshot) => s.lastBatchId,
-      (s: GroupedComomentsSnapshot) => s.checkpoint,
-      readState(spark, outDir).lastBatchId)
-    val pairs = states.map(s => (s._2.xCol, s._2.yCol)).distinct
-    if (pairs.size > 1)
-      throw new IllegalStateException(
-        "mergeStates: inputs fold different ordered column pairs " +
-          pairs.map(p => s"('${p._1}', '${p._2}')").mkString(", ") +
-          " — the merged state would be the co-moments of neither; " +
-          "merge only states folded over the same pair")
-    val groups = scala.collection.mutable.Map.empty[String, Comoments]
-    states.foreach { case (_, st) =>
-      st.groups.foreach { case (g, m) =>
-        groups.put(g, mergeComoments(
-          groups.getOrElse(g, StreamingComoments.emptyComoments), m))
-      }
+      maxGroups: Int = DefaultMaxGroups): GroupedComomentsSnapshot =
+    store.merge(spark, inDirs, outDir, "global profile") {
+      (states, ckpt, lastId) =>
+        val (xCol, yCol) = StreamingComoments.samePair(states.map(s =>
+          (s.xCol, s.yCol)))
+        val groups = scala.collection.mutable.Map.empty[String, Comoments]
+        states.foreach { st =>
+          st.groups.foreach { case (g, m) =>
+            groups.put(g, mergeComoments(
+              groups.getOrElse(g, StreamingComoments.emptyComoments), m))
+          }
+        }
+        StateMerge.checkMergedGroupCap("grouped comoments state",
+          groups.size, maxGroups)
+        GroupedComomentsSnapshot(xCol, yCol, ckpt, lastId, groups.toMap,
+          states.map(_.excludedNullRows).sum)
     }
-    StateMerge.checkMergedGroupCap("grouped comoments state", groups.size,
-      maxGroups)
-    val merged = GroupedComomentsSnapshot(pairs.head._1, pairs.head._2,
-      ckpt, lastId, groups.toMap,
-      states.map(_._2.excludedNullRows).sum)
-    writeState(spark, outDir, merged)
-    merged
-  }
 
   /** The folded state as a (group, n_rows, n, n_null_x, n_null_y, xmin,
     * xmax, ymin, ymax, xsum, ysum, xsum_sq, ysum_sq, xysum) relation,

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Per-group streaming distinct-count — the grouped face of
@@ -27,9 +25,8 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * maxGroups × O(2^lgK) bytes under the loud `maxGroups` refusal
   * (lower-bound phrasing off the truncating head probe). Null group
   * rows are excluded-but-counted; null values ride each group's exact
-  * `n_null`. Durability/bindings are the family protocol verbatim
-  * ((checkpoint, lgK, valueCol) identity, SwapStateFile swap, replay
-  * idempotence, loud reads, linearizable [[readStateLocked]]).
+  * `n_null`. State file and exactly-once: [[FoldStateStore]]; the
+  * bindings are (checkpoint, lgK, valueCol).
   *
   * 100 TB/day posture: per batch one grouped sketch aggregate
   * (fixed-size partials per group per task), one ≤ maxGroups driver
@@ -61,91 +58,57 @@ object StreamingGroupedDistinct {
     * driver notices, while covering any realistic profiling group key. */
   val DefaultMaxGroups: Int = 10000
 
-  private val StateName = "distinct_grouped_state.json"
-
-  private def stateFile(spark: SparkSession, stateDir: String) =
-    new graft.core.SwapStateFile(
-      new Path(stateDir, StateName)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      stateDir, StateName, "distinct_grouped_state.swap.inprogress",
-      "grouped distinct state")
-
-  private def emptySnapshot =
-    GroupedDistinctSnapshot(-1, "", "", -1L, Map.empty, 0L)
-
-  private def parseSnapshot(stateDir: String)(
-      txt: String): GroupedDistinctSnapshot = {
-    val node = new ObjectMapper().readTree(txt)
-    if (node.get("lg_k") == null || node.get("value_col") == null ||
-        node.get("checkpoint") == null)
-      throw new IllegalStateException(
-        s"grouped distinct state file under $stateDir lacks the lg_k/" +
-          "value_col/checkpoint binding fields — refusing to guess which " +
-          "stream it belongs to; re-fold from the source with a fresh " +
-          "state dir")
-    val dec = java.util.Base64.getDecoder
-    val groups = Map.newBuilder[String, GroupDistinct]
-    val git = node.get("groups").fields()
-    while (git.hasNext) {
-      val ge = git.next()
-      val sk = Option(ge.getValue.get("sketch")).map(_.asText())
-        .filter(_.nonEmpty).map(dec.decode).getOrElse(Array.empty[Byte])
-      groups += ge.getKey -> GroupDistinct(
-        ge.getValue.get("n_rows").asLong(),
-        ge.getValue.get("n_null").asLong(), sk)
-    }
-    GroupedDistinctSnapshot(node.get("lg_k").asInt(),
-      node.get("value_col").asText(), node.get("checkpoint").asText(),
-      node.get("batch_id").asLong(), groups.result(),
-      node.get("excluded_null_rows").asLong())
-  }
+  private val store = new FoldStateStore[GroupedDistinctSnapshot](
+    "grouped distinct state", "distinct_grouped_state.json",
+    Seq("lg_k", "value_col", "checkpoint"),
+    GroupedDistinctSnapshot(-1, "", "", -1L, Map.empty, 0L),
+    _.lastBatchId, _.checkpoint,
+    encode = (root, snap) => {
+      root.put("lg_k", snap.lgK)
+      root.put("value_col", snap.valueCol)
+      root.put("checkpoint", snap.checkpoint)
+      root.put("batch_id", snap.lastBatchId)
+      root.put("excluded_null_rows", snap.excludedNullRows)
+      val gs = root.putObject("groups")
+      // sorted for a stable file layout (diffable, digest-friendly)
+      snap.groups.toSeq.sortBy(_._1).foreach { case (g, d) =>
+        StreamingDistinct.putCounters(gs.putObject(g), d.nRows, d.nNull,
+          d.sketch)
+      }
+    },
+    decode = node => {
+      val groups = Map.newBuilder[String, GroupDistinct]
+      val git = node.get("groups").fields()
+      while (git.hasNext) {
+        val ge = git.next()
+        groups += ge.getKey -> GroupDistinct(
+          ge.getValue.get("n_rows").asLong(),
+          ge.getValue.get("n_null").asLong(),
+          StreamingDistinct.parseSketch(ge.getValue))
+      }
+      GroupedDistinctSnapshot(node.get("lg_k").asInt(),
+        node.get("value_col").asText(), node.get("checkpoint").asText(),
+        node.get("batch_id").asLong(), groups.result(),
+        node.get("excluded_null_rows").asLong())
+    })
 
   /** Lock-free read ([[graft.core.SwapStateFile.read]] protocol); absent
     * file = empty stream. Monitors on a hot stream should use
     * [[readStateLocked]]. */
   def readState(spark: SparkSession,
       stateDir: String): GroupedDistinctSnapshot =
-    stateFile(spark, stateDir).read(parseSnapshot(stateDir), emptySnapshot)
+    store.read(spark, stateDir)
 
   /** Linearizable read under the writer's own swap lock. */
   def readStateLocked(spark: SparkSession,
       stateDir: String): GroupedDistinctSnapshot =
-    stateFile(spark, stateDir)
-      .readLocked(parseSnapshot(stateDir), emptySnapshot)
-
-  private def writeState(spark: SparkSession, stateDir: String,
-      snap: GroupedDistinctSnapshot): Unit = {
-    val mapper = new ObjectMapper()
-    val enc = java.util.Base64.getEncoder
-    val root = mapper.createObjectNode()
-    root.put("lg_k", snap.lgK)
-    root.put("value_col", snap.valueCol)
-    root.put("checkpoint", snap.checkpoint)
-    root.put("batch_id", snap.lastBatchId)
-    root.put("excluded_null_rows", snap.excludedNullRows)
-    val gs = root.putObject("groups")
-    // sorted for a stable file layout (diffable, digest-friendly)
-    snap.groups.toSeq.sortBy(_._1).foreach { case (g, d) =>
-      val gn = gs.putObject(g)
-      gn.put("n_rows", d.nRows)
-      gn.put("n_null", d.nNull)
-      gn.put("sketch", enc.encodeToString(d.sketch))
-    }
-    stateFile(spark, stateDir).write(mapper.writeValueAsBytes(root))
-  }
+    store.readLocked(spark, stateDir)
 
   private[streaming] def checkStateBindings(st: GroupedDistinctSnapshot,
       stateDir: String, checkpoint: String, lgK: Int,
       valueCol: String): Unit = {
     if (st.lastBatchId < 0L) return
-    if (st.checkpoint != checkpoint)
-      throw new IllegalStateException(
-        s"grouped distinct state at $stateDir was folded under " +
-          s"checkpoint '${st.checkpoint}' but this stream runs under " +
-          s"'$checkpoint' — batch ids restart at 0 per checkpoint, so " +
-          "continuing would skip new data as replays (or double-count " +
-          "on a rewound checkpoint). Use a fresh state dir with a fresh " +
-          "checkpoint")
+    store.checkCheckpoint(st, stateDir, checkpoint)
     if (st.lgK != lgK || st.valueCol != valueCol)
       throw new IllegalStateException(
         s"grouped distinct state at $stateDir was folded with " +
@@ -162,62 +125,55 @@ object StreamingGroupedDistinct {
   private[streaming] def applyBatch(spark: SparkSession, stateDir: String,
       lgK: Int, maxGroups: Int, checkpoint: String, batch: DataFrame,
       groupCol: String, valueCol: String,
-      batchId: Long): GroupedDistinctSnapshot = {
-    val st = readState(spark, stateDir)
-    checkStateBindings(st, stateDir, checkpoint, lgK, valueCol)
-    StreamingHeavyHitters.checkFreshStateVsCheckpoint(st.lastBatchId,
-      stateDir, batchId,
-      "grouped distinct state")
-    if (batchId <= st.lastBatchId) st // replayed batch: already folded
-    else {
-      val g = col("`" + groupCol.replace("`", "``") + "`")
-      val v = col("`" + valueCol.replace("`", "``") + "`")
-      // groupBy KEEPS the null group as its own row, so the excluded-row
-      // count rides the SAME single pass (its n_rows IS the batch tally)
-      val grouped = batch.groupBy(g.as("__group"))
-        .agg(count(lit(1)).as("n_rows"), count(v).as("n"),
-          hll_sketch_agg(v, lit(lgK)).as("sk"))
-      // bounded collect: head(cap + 2) — the null group (at most one
-      // row) must not displace a real group at the probe boundary
-      val rows = grouped.head(maxGroups + 2)
-      val (nullRows, realRows) = rows.partition(_.isNullAt(0))
-      val excludedThisBatch =
-        nullRows.headOption.map(_.getLong(1)).getOrElse(0L)
-      val merged = scala.collection.mutable.Map.empty[String, GroupDistinct]
-      merged ++= st.groups
-      realRows.foreach { r =>
-        val grp = r.getString(0)
-        val nRows = r.getLong(1)
-        val n = r.getLong(2)
-        // the flat fold's no-values rule, per group
-        val bytes =
-          if (n == 0L || r.isNullAt(3)) Array.empty[Byte]
-          else r.getAs[Array[Byte]](3)
-        val prev = merged.getOrElse(grp, GroupDistinct(0L, 0L, Array.empty))
-        merged.put(grp, GroupDistinct(prev.nRows + nRows,
-          prev.nNull + (nRows - n),
-          StreamingDistinct.unionSketches(lgK, prev.sketch, bytes)))
-      }
-      if (merged.size > maxGroups) {
-        // the head probe TRUNCATES the batch's group relation, so when
-        // it came back full `merged.size` is only a LOWER BOUND
-        val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
-        throw new IllegalStateException(
-          s"grouped distinct state at $stateDir would hold " +
-            s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
-            "the state file (and the per-batch driver fold) is bounded " +
-            "BY this cap. Raise maxGroups if the group key is genuinely " +
-            "this wide and the driver can hold it, or coarsen the group " +
-            "key; a per-document-cardinality key belongs on the batch " +
-            "count(DISTINCT) path, not a driver-side state file. Batch " +
-            "NOT applied; the stream should be stopped and re-planned")
-      }
-      val next = GroupedDistinctSnapshot(lgK, valueCol, checkpoint,
-        batchId, merged.toMap, st.excludedNullRows + excludedThisBatch)
-      writeState(spark, stateDir, next)
-      next
-    }
-  }
+      batchId: Long): GroupedDistinctSnapshot =
+    store.applyBatch(spark, stateDir, batchId,
+      st => checkStateBindings(st, stateDir, checkpoint, lgK, valueCol),
+      st => {
+        val g = col("`" + groupCol.replace("`", "``") + "`")
+        val v = col("`" + valueCol.replace("`", "``") + "`")
+        // groupBy KEEPS the null group as its own row, so the excluded-row
+        // count rides the SAME single pass (its n_rows IS the batch tally)
+        val grouped = batch.groupBy(g.as("__group"))
+          .agg(count(lit(1)).as("n_rows"), count(v).as("n"),
+            hll_sketch_agg(v, lit(lgK)).as("sk"))
+        // bounded collect: head(cap + 2) — the null group (at most one
+        // row) must not displace a real group at the probe boundary
+        val rows = grouped.head(maxGroups + 2)
+        val (nullRows, realRows) = rows.partition(_.isNullAt(0))
+        val excludedThisBatch =
+          nullRows.headOption.map(_.getLong(1)).getOrElse(0L)
+        val merged = scala.collection.mutable.Map.empty[String, GroupDistinct]
+        merged ++= st.groups
+        realRows.foreach { r =>
+          val grp = r.getString(0)
+          val nRows = r.getLong(1)
+          val n = r.getLong(2)
+          // the flat fold's no-values rule, per group
+          val bytes =
+            if (n == 0L || r.isNullAt(3)) Array.empty[Byte]
+            else r.getAs[Array[Byte]](3)
+          val prev = merged.getOrElse(grp, GroupDistinct(0L, 0L, Array.empty))
+          merged.put(grp, GroupDistinct(prev.nRows + nRows,
+            prev.nNull + (nRows - n),
+            StreamingDistinct.unionSketches(lgK, prev.sketch, bytes)))
+        }
+        if (merged.size > maxGroups) {
+          // the head probe TRUNCATES the batch's group relation, so when
+          // it came back full `merged.size` is only a LOWER BOUND
+          val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
+          throw new IllegalStateException(
+            s"grouped distinct state at $stateDir would hold " +
+              s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
+              "the state file (and the per-batch driver fold) is bounded " +
+              "BY this cap. Raise maxGroups if the group key is genuinely " +
+              "this wide and the driver can hold it, or coarsen the group " +
+              "key; a per-document-cardinality key belongs on the batch " +
+              "count(DISTINCT) path, not a driver-side state file. Batch " +
+              "NOT applied; the stream should be stopped and re-planned")
+        }
+        GroupedDistinctSnapshot(lgK, valueCol, checkpoint, batchId,
+          merged.toMap, st.excludedNullRows + excludedThisBatch)
+      })
 
   /** Cross-cluster merge — the grouped cardinality face of
     * [[StreamingMoments.mergeStates]]: union of the regional group maps
@@ -230,38 +186,25 @@ object StreamingGroupedDistinct {
     * that trips the ingest binding, no clobbering — plus the family's
     * cap discipline on the UNION of the group sets. */
   def mergeStates(spark: SparkSession, inDirs: Seq[String], outDir: String,
-      maxGroups: Int = DefaultMaxGroups): GroupedDistinctSnapshot = {
-    val states = inDirs.map(d => d -> readStateLocked(spark, d))
-    val (ckpt, lastId) = StateMerge.guard(spark, "grouped distinct state",
-      "global cardinality", inDirs, outDir, states,
-      (s: GroupedDistinctSnapshot) => s.lastBatchId,
-      (s: GroupedDistinctSnapshot) => s.checkpoint,
-      readState(spark, outDir).lastBatchId)
-    val bindings = states.map(s => (s._2.lgK, s._2.valueCol)).distinct
-    if (bindings.size > 1)
-      throw new IllegalStateException(
-        "mergeStates: inputs fold different (lgK, valueCol) bindings " +
-          bindings.map(b => s"(lgK=${b._1}, '${b._2}')").mkString(", ") +
-          " — sketches of different columns cannot be unioned " +
-          "meaningfully and mixed precisions degrade silently; merge " +
-          "only states folded with the same binding")
-    val (lgK, valueCol) = bindings.head
-    val groups = scala.collection.mutable.Map.empty[String, GroupDistinct]
-    states.foreach { case (_, st) =>
-      st.groups.foreach { case (g, d) =>
-        val prev = groups.getOrElse(g, GroupDistinct(0L, 0L, Array.empty))
-        groups.put(g, GroupDistinct(prev.nRows + d.nRows,
-          prev.nNull + d.nNull,
-          StreamingDistinct.unionSketches(lgK, prev.sketch, d.sketch)))
-      }
+      maxGroups: Int = DefaultMaxGroups): GroupedDistinctSnapshot =
+    store.merge(spark, inDirs, outDir, "global cardinality") {
+      (states, ckpt, lastId) =>
+        val (lgK, valueCol) = StreamingDistinct.sameLgKCol(states.map(s =>
+          (s.lgK, s.valueCol)))
+        val groups = scala.collection.mutable.Map.empty[String, GroupDistinct]
+        states.foreach { st =>
+          st.groups.foreach { case (g, d) =>
+            val prev = groups.getOrElse(g, GroupDistinct(0L, 0L, Array.empty))
+            groups.put(g, GroupDistinct(prev.nRows + d.nRows,
+              prev.nNull + d.nNull,
+              StreamingDistinct.unionSketches(lgK, prev.sketch, d.sketch)))
+          }
+        }
+        StateMerge.checkMergedGroupCap("grouped distinct state",
+          groups.size, maxGroups)
+        GroupedDistinctSnapshot(lgK, valueCol, ckpt, lastId, groups.toMap,
+          states.map(_.excludedNullRows).sum)
     }
-    StateMerge.checkMergedGroupCap("grouped distinct state", groups.size,
-      maxGroups)
-    val merged = GroupedDistinctSnapshot(lgK, valueCol, ckpt, lastId,
-      groups.toMap, states.map(_._2.excludedNullRows).sum)
-    writeState(spark, outDir, merged)
-    merged
-  }
 
   /** Start the stream: parquet arrivals under `sourceDir` with STRING
     * `groupCol` and `valueCol`, folded per micro-batch into the grouped
@@ -275,33 +218,13 @@ object StreamingGroupedDistinct {
     require(lgK >= 4 && lgK <= 21,
       s"lgK must be in the sketch's supported [4, 21], got $lgK")
     require(maxGroups > 0, s"maxGroups must be positive, got $maxGroups")
-    val srcSchema = new StructType()
-      .add(groupCol, StringType).add(valueCol, StringType)
-    val stateFs = new Path(stateDir, StateName)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.FsCapabilities.assertAtomicRenameAtOpen(stateFs,
-      new Path(stateDir), "streaming grouped distinct state commit")
-    val ckptPath = new Path(checkpointDir)
-    val ckptId = ckptPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(ckptPath).toString
-    val st0 = readState(spark, stateDir)
-    checkStateBindings(st0, stateDir, ckptId, lgK, valueCol)
-    val reader = spark.readStream.schema(srcSchema)
-    val src =
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-          .parquet(sourceDir)
-      else reader.parquet(sourceDir)
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchShuffleTuning.tune(batch)
-        applyBatch(spark, stateDir, lgK, maxGroups, ckptId, batch,
-          groupCol, valueCol, batchId); ()
-      }
-      .start()
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
+      new StructType().add(groupCol, StringType).add(valueCol, StringType),
+      maxFilesPerTrigger,
+      entryCheck = (st, ckptId) =>
+        checkStateBindings(st, stateDir, ckptId, lgK, valueCol),
+      applyB = (batch, batchId, ckptId) =>
+        { applyBatch(spark, stateDir, lgK, maxGroups, ckptId, batch,
+            groupCol, valueCol, batchId); () })
   }
 }

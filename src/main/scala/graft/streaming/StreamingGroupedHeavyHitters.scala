@@ -1,10 +1,9 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import graft.operators.HeavyHitters
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** Per-group streaming heavy hitters — the streaming face of
@@ -33,13 +32,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   * per-document key; a million-group key needs the batch path's
   * shuffle-join recount, not a driver-side state file).
   *
-  * Durability/exactly-once mirrors the flat fold (it IS the r12 template):
-  * one JSON state file committed through FsSwap via
-  * [[graft.core.SwapStateFile]], state bound to (FS-qualified checkpoint,
-  * k), last-applied batch id for replay idempotence, the
-  * fresh-state-vs-advanced-checkpoint mirror guard, and loud (never
-  * phantom-empty) reads with a linearizable [[readStateLocked]] variant
-  * for monitors.
+  * State file and exactly-once: [[FoldStateStore]]; the bindings are
+  * (checkpoint, k), as on the flat fold.
   *
   * The final answer is exact: [[heavyHittersFromState]] recounts each
   * group's folded candidates over the corpus with that group's own
@@ -82,75 +76,61 @@ object StreamingGroupedHeavyHitters {
     * any realistic profiling group key (sources, languages, TLDs). */
   val DefaultMaxGroups: Int = 10000
 
-  private val StateName = "mg_grouped_state.json"
-
-  private def stateFile(spark: SparkSession, stateDir: String) =
-    new graft.core.SwapStateFile(
-      new org.apache.hadoop.fs.Path(stateDir, StateName)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      stateDir, StateName, "mg_grouped_state.swap.inprogress",
-      "grouped MG state")
-
-  private def emptySnapshot = GroupedMgSnapshot(-1, "", -1L, Map.empty, 0L)
-
-  private def parseSnapshot(stateDir: String)(txt: String): GroupedMgSnapshot = {
-    val node = new ObjectMapper().readTree(txt)
-    if (node.get("k") == null || node.get("checkpoint") == null)
-      throw new IllegalStateException(
-        s"grouped MG state file under $stateDir lacks the k/checkpoint " +
-          "binding fields — it was written by a pre-binding format. No " +
-          "automatic migration (the old format cannot prove which " +
-          "checkpoint its batch ids belong to); re-fold from the source " +
-          "with a fresh state dir")
-    val groups = Map.newBuilder[String, GroupState]
-    val git = node.get("groups").fields()
-    while (git.hasNext) {
-      val ge = git.next()
-      val counts = Map.newBuilder[String, Long]
-      val cit = ge.getValue.get("counts").fields()
-      while (cit.hasNext) {
-        val ce = cit.next(); counts += ce.getKey -> ce.getValue.asLong()
+  private val store = new FoldStateStore[GroupedMgSnapshot](
+    "grouped MG state", "mg_grouped_state.json", Seq("k", "checkpoint"),
+    GroupedMgSnapshot(-1, "", -1L, Map.empty, 0L), _.lastBatchId,
+    _.checkpoint,
+    encode = (root, snap) => {
+      root.put("k", snap.k)
+      root.put("checkpoint", snap.checkpoint)
+      root.put("batch_id", snap.lastBatchId)
+      root.put("excluded_null_rows", snap.excludedNullRows)
+      val gs = root.putObject("groups")
+      snap.groups.foreach { case (g, st) =>
+        val gn = gs.putObject(g)
+        gn.put("n", st.n)
+        val c = gn.putObject("counts")
+        st.counts.foreach { case (item, cnt) => c.put(item, cnt) }
       }
-      groups += ge.getKey ->
-        GroupState(ge.getValue.get("n").asLong(), counts.result())
-    }
-    GroupedMgSnapshot(node.get("k").asInt(), node.get("checkpoint").asText(),
-      node.get("batch_id").asLong(), groups.result(),
-      // observability field, not a binding one: a pre-r14 state file
-      // simply hasn't counted yet — read as 0, no migration refusal
-      Option(node.get("excluded_null_rows")).map(_.asLong()).getOrElse(0L))
-  }
+    },
+    decode = node => {
+      val groups = Map.newBuilder[String, GroupState]
+      val git = node.get("groups").fields()
+      while (git.hasNext) {
+        val ge = git.next()
+        val counts = Map.newBuilder[String, Long]
+        val cit = ge.getValue.get("counts").fields()
+        while (cit.hasNext) {
+          val ce = cit.next(); counts += ce.getKey -> ce.getValue.asLong()
+        }
+        groups += ge.getKey ->
+          GroupState(ge.getValue.get("n").asLong(), counts.result())
+      }
+      GroupedMgSnapshot(node.get("k").asInt(),
+        node.get("checkpoint").asText(), node.get("batch_id").asLong(),
+        groups.result(),
+        // observability field, not a binding one: a pre-r14 state file
+        // simply hasn't counted yet — read as 0, no migration refusal
+        Option(node.get("excluded_null_rows")).map(_.asLong())
+          .getOrElse(0L))
+    })
 
   /** Lock-free read (the [[graft.core.SwapStateFile.read]] protocol: may
     * complete a crashed swap, believes "empty" only after a stable double
     * observation, exhausts loudly — never phantom-empty). */
   def readState(spark: SparkSession, stateDir: String): GroupedMgSnapshot =
-    stateFile(spark, stateDir).read(parseSnapshot(stateDir), emptySnapshot)
+    store.read(spark, stateDir)
 
   /** Linearizable read under the writer's swap lock — for monitors
     * polling a hot stream (see [[StreamingHeavyHitters.readStateLocked]]). */
   def readStateLocked(spark: SparkSession,
       stateDir: String): GroupedMgSnapshot =
-    stateFile(spark, stateDir)
-      .readLocked(parseSnapshot(stateDir), emptySnapshot)
+    store.readLocked(spark, stateDir)
 
-  private def writeState(spark: SparkSession, stateDir: String,
-      snap: GroupedMgSnapshot): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("k", snap.k)
-    root.put("checkpoint", snap.checkpoint)
-    root.put("batch_id", snap.lastBatchId)
-    root.put("excluded_null_rows", snap.excludedNullRows)
-    val gs = root.putObject("groups")
-    snap.groups.foreach { case (g, st) =>
-      val gn = gs.putObject(g)
-      gn.put("n", st.n)
-      val c = gn.putObject("counts")
-      st.counts.foreach { case (item, cnt) => c.put(item, cnt) }
-    }
-    stateFile(spark, stateDir).write(mapper.writeValueAsBytes(root))
-  }
+  private def checkStateBindings(st: GroupedMgSnapshot, stateDir: String,
+      checkpoint: String, k: Int): Unit =
+    StreamingHeavyHitters.checkStateBindings(st.lastBatchId, st.checkpoint,
+      st.k, stateDir, checkpoint, k, "grouped MG state")
 
   /** Apply ONE micro-batch of (source, text) rows: skip if already applied
     * (replay), else fold each group's ≤ k batch summary into its state
@@ -158,74 +138,67 @@ object StreamingGroupedHeavyHitters {
     * rules are directly testable. Returns the state now in effect. */
   private[streaming] def applyBatch(spark: SparkSession, stateDir: String,
       k: Int, maxGroups: Int, checkpoint: String, batch: DataFrame,
-      batchId: Long): GroupedMgSnapshot = {
-    val st = readState(spark, stateDir)
-    StreamingHeavyHitters.checkStateBindings(
-      st.lastBatchId, st.checkpoint, st.k, stateDir, checkpoint, k)
-    StreamingHeavyHitters.checkFreshStateVsCheckpoint(
-      st.lastBatchId, stateDir, batchId)
-    if (batchId <= st.lastBatchId) st // replayed batch: already folded
-    else {
-      val perGroup = batch
-        // a NULL group key can't be a JSON field name (the fold would
-        // NPE mid-batch and wedge the stream in a replay-crash loop) and
-        // the batch operator's recount drops null groups anyway (inner
-        // join on the group key never matches null) — so null-source
-        // rows are excluded from the fold, keeping the documented
-        // stream == exactPerGroup equivalence exact on corpora that
-        // carry them. Excluded rows are COUNTED, though (r14): each
-        // null-source row contributes exactly one dummy element here, so
-        // the null group's `n` below IS the batch's excluded row count —
-        // tracked in the state within the same single pass, no second
-        // scan of the batch
-        .select(col("source"),
-          explode(when(col("source").isNotNull,
-              graft.functions.TextFunctions.tokens(col("text")))
-            .otherwise(array(lit("")))).as("token"))
-        .groupBy("source")
-        .agg(HeavyHitters.mgCandidates(k)(col("token")).as("cand"),
-          count(col("token")).as("n"))
-      // bounded collect: head(cap + 2) — the null group (at most one row)
-      // must not displace a real group at the probe boundary; a batch
-      // whose OWN real-group count exceeds the cap can never fold into a
-      // capped state, so the probe both bounds the driver allocation and
-      // detects the refusal case
-      val rows = perGroup.head(maxGroups + 2)
-      val (nullRows, realRows) = rows.partition(_.isNullAt(0))
-      val excludedThisBatch = nullRows.headOption.map(_.getLong(2)).getOrElse(0L)
-      val merged = scala.collection.mutable.Map.empty[String, GroupState]
-      merged ++= st.groups
-      realRows.foreach { r =>
-        val g = r.getString(0)
-        val bc = r.getSeq[org.apache.spark.sql.Row](1)
-          .map(c => (c.getString(0), c.getLong(1)))
-        val bn = r.getLong(2)
-        val prev = merged.getOrElse(g, GroupState(0L, Map.empty))
-        merged.put(g, GroupState(prev.n + bn,
-          StreamingHeavyHitters.mergeMg(k, prev.counts, bc)))
-      }
-      if (merged.size > maxGroups) {
-        // the head probe TRUNCATES the batch's group relation, so when it
-        // came back full `merged.size` is only a LOWER BOUND on the real
-        // cardinality (a 1M-group batch would otherwise report ~cap+1
-        // groups and mislead an operator sizing a raised cap)
-        val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
-        throw new IllegalStateException(
-          s"grouped MG state at $stateDir would hold $atLeast${merged.size} " +
-            s"groups, past maxGroups=$maxGroups — the state file (and the " +
-            "per-batch driver fold) is bounded by groups × k BY this cap. " +
-            "Raise maxGroups if the group key is genuinely this wide and " +
-            "the driver can hold it, or coarsen the group key; a per-" +
-            "document-cardinality key belongs on the batch exactPerGroup " +
-            "path, not a driver-side state file. Batch NOT applied; the " +
-            "stream should be stopped and re-planned")
-      }
-      val next = GroupedMgSnapshot(k, checkpoint, batchId, merged.toMap,
-        st.excludedNullRows + excludedThisBatch)
-      writeState(spark, stateDir, next)
-      next
-    }
-  }
+      batchId: Long): GroupedMgSnapshot =
+    store.applyBatch(spark, stateDir, batchId,
+      st => checkStateBindings(st, stateDir, checkpoint, k),
+      st => {
+        val perGroup = batch
+          // a NULL group key can't be a JSON field name (the fold would
+          // NPE mid-batch and wedge the stream in a replay-crash loop) and
+          // the batch operator's recount drops null groups anyway (inner
+          // join on the group key never matches null) — so null-source
+          // rows are excluded from the fold, keeping the documented
+          // stream == exactPerGroup equivalence exact on corpora that
+          // carry them. Excluded rows are COUNTED, though (r14): each
+          // null-source row contributes exactly one dummy element here, so
+          // the null group's `n` below IS the batch's excluded row count —
+          // tracked in the state within the same single pass, no second
+          // scan of the batch
+          .select(col("source"),
+            explode(when(col("source").isNotNull,
+                graft.functions.TextFunctions.tokens(col("text")))
+              .otherwise(array(lit("")))).as("token"))
+          .groupBy("source")
+          .agg(HeavyHitters.mgCandidates(k)(col("token")).as("cand"),
+            count(col("token")).as("n"))
+        // bounded collect: head(cap + 2) — the null group (at most one row)
+        // must not displace a real group at the probe boundary; a batch
+        // whose OWN real-group count exceeds the cap can never fold into a
+        // capped state, so the probe both bounds the driver allocation and
+        // detects the refusal case
+        val rows = perGroup.head(maxGroups + 2)
+        val (nullRows, realRows) = rows.partition(_.isNullAt(0))
+        val excludedThisBatch = nullRows.headOption.map(_.getLong(2)).getOrElse(0L)
+        val merged = scala.collection.mutable.Map.empty[String, GroupState]
+        merged ++= st.groups
+        realRows.foreach { r =>
+          val g = r.getString(0)
+          val bc = r.getSeq[org.apache.spark.sql.Row](1)
+            .map(c => (c.getString(0), c.getLong(1)))
+          val bn = r.getLong(2)
+          val prev = merged.getOrElse(g, GroupState(0L, Map.empty))
+          merged.put(g, GroupState(prev.n + bn,
+            StreamingHeavyHitters.mergeMg(k, prev.counts, bc)))
+        }
+        if (merged.size > maxGroups) {
+          // the head probe TRUNCATES the batch's group relation, so when it
+          // came back full `merged.size` is only a LOWER BOUND on the real
+          // cardinality (a 1M-group batch would otherwise report ~cap+1
+          // groups and mislead an operator sizing a raised cap)
+          val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
+          throw new IllegalStateException(
+            s"grouped MG state at $stateDir would hold $atLeast${merged.size} " +
+              s"groups, past maxGroups=$maxGroups — the state file (and the " +
+              "per-batch driver fold) is bounded by groups × k BY this cap. " +
+              "Raise maxGroups if the group key is genuinely this wide and " +
+              "the driver can hold it, or coarsen the group key; a per-" +
+              "document-cardinality key belongs on the batch exactPerGroup " +
+              "path, not a driver-side state file. Batch NOT applied; the " +
+              "stream should be stopped and re-planned")
+        }
+        GroupedMgSnapshot(k, checkpoint, batchId, merged.toMap,
+          st.excludedNullRows + excludedThisBatch)
+      })
 
   /** Cross-cluster merge — the grouped frequency face of
     * [[StreamingMoments.mergeStates]]: union of the regional group maps
@@ -239,35 +212,23 @@ object StreamingGroupedHeavyHitters {
     * binding, no clobbering — plus the family's cap discipline on the
     * UNION of the group sets. */
   def mergeStates(spark: SparkSession, inDirs: Seq[String], outDir: String,
-      maxGroups: Int = DefaultMaxGroups): GroupedMgSnapshot = {
-    val states = inDirs.map(d => d -> readStateLocked(spark, d))
-    val (ckpt, lastId) = StateMerge.guard(spark, "grouped MG state",
-      "global frequencies", inDirs, outDir, states,
-      (s: GroupedMgSnapshot) => s.lastBatchId,
-      (s: GroupedMgSnapshot) => s.checkpoint,
-      readState(spark, outDir).lastBatchId)
-    val ks = states.map(_._2.k).distinct
-    if (ks.size > 1)
-      throw new IllegalStateException(
-        "mergeStates: inputs fold different k values " + ks.mkString(", ") +
-          " — mixed-k merges weaken the composed error bound the exact " +
-          "recount rests on; merge only states folded with the same k")
-    val k = ks.head
-    val groups = scala.collection.mutable.Map.empty[String, GroupState]
-    states.foreach { case (_, st) =>
-      st.groups.foreach { case (g, s) =>
-        val prev = groups.getOrElse(g, GroupState(0L, Map.empty))
-        groups.put(g, GroupState(prev.n + s.n,
-          StreamingHeavyHitters.mergeMg(k, prev.counts, s.counts.toSeq)))
-      }
+      maxGroups: Int = DefaultMaxGroups): GroupedMgSnapshot =
+    store.merge(spark, inDirs, outDir, "global frequencies") {
+      (states, ckpt, lastId) =>
+        val k = StreamingHeavyHitters.sameK(states.map(_.k))
+        val groups = scala.collection.mutable.Map.empty[String, GroupState]
+        states.foreach { st =>
+          st.groups.foreach { case (g, s) =>
+            val prev = groups.getOrElse(g, GroupState(0L, Map.empty))
+            groups.put(g, GroupState(prev.n + s.n,
+              StreamingHeavyHitters.mergeMg(k, prev.counts, s.counts.toSeq)))
+          }
+        }
+        StateMerge.checkMergedGroupCap("grouped MG state", groups.size,
+          maxGroups)
+        GroupedMgSnapshot(k, ckpt, lastId, groups.toMap,
+          states.map(_.excludedNullRows).sum)
     }
-    StateMerge.checkMergedGroupCap("grouped MG state", groups.size,
-      maxGroups)
-    val merged = GroupedMgSnapshot(k, ckpt, lastId, groups.toMap,
-      states.map(_._2.excludedNullRows).sum)
-    writeState(spark, outDir, merged)
-    merged
-  }
 
   /** Start the stream: parquet (doc_id, source, text) arrivals under
     * `sourceDir`, folded per micro-batch into the grouped MG state under
@@ -281,41 +242,15 @@ object StreamingGroupedHeavyHitters {
       maxGroups: Int = DefaultMaxGroups): StreamingQuery = {
     val k = HeavyHitters.checkedK(sketchK, denominator)
     require(maxGroups > 0, s"maxGroups must be positive, got $maxGroups")
-    val srcSchema = new StructType()
-      .add("doc_id", LongType).add("source", StringType)
-      .add("text", StringType)
-    // same outermost-chokepoint rules as the flat ingest: refuse
-    // non-atomic-rename state filesystems and mismatched bindings NOW,
-    // before any checkpoint WAL is written — including the conf-gated
-    // functional probe (r14; scratch dir under the state dir), so a
-    // broken-primitives FS fails ingest entry, never mid-stream
-    val stateFs = new org.apache.hadoop.fs.Path(stateDir, StateName)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.FsCapabilities.assertAtomicRenameAtOpen(stateFs,
-      new org.apache.hadoop.fs.Path(stateDir),
-      "streaming grouped heavy-hitters state commit")
-    val ckptPath = new org.apache.hadoop.fs.Path(checkpointDir)
-    val ckptId = ckptPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(ckptPath).toString
-    val st0 = readState(spark, stateDir) // also finishes any crashed swap
-    StreamingHeavyHitters.checkStateBindings(
-      st0.lastBatchId, st0.checkpoint, st0.k, stateDir, ckptId, k)
-    val reader = spark.readStream.schema(srcSchema)
-    val src =
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-          .parquet(sourceDir)
-      else reader.parquet(sourceDir)
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchShuffleTuning.tune(batch)
-        applyBatch(spark, stateDir, k, maxGroups, ckptId, batch, batchId); ()
-      }
-      .start()
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
+      new StructType().add("doc_id", LongType).add("source", StringType)
+        .add("text", StringType),
+      maxFilesPerTrigger,
+      entryCheck = (st, ckptId) =>
+        checkStateBindings(st, stateDir, ckptId, k),
+      applyB = (batch, batchId, ckptId) =>
+        { applyBatch(spark, stateDir, k, maxGroups, ckptId, batch, batchId)
+          () })
   }
 
   /** Exact per-group heavy hitters from the folded state: recount each

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import graft.operators.HistogramSketch
 import graft.operators.HistogramSketch.HistogramSpec
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, StringType, StructType}
 
 /** Per-group streaming exact histograms — the grouped face of
@@ -34,11 +32,8 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructType}
   * a pipeline whose group column rots to NULL sees the thinning instead
   * of silence (the [[StreamingGroupedHeavyHitters]] r14 rule).
   *
-  * Durability/exactly-once is the family protocol verbatim: one JSON
-  * state file through the [[graft.core.SwapStateFile]] tmp+marker swap,
-  * (checkpoint, binning) bindings refused loudly at stream entry, replay
-  * idempotence off the last-applied batch id, loud (never phantom-empty)
-  * reads, linearizable [[readStateLocked]] for monitors.
+  * State file and exactly-once: [[FoldStateStore]]; the bindings are
+  * (checkpoint, binning).
   *
   * 100 TB/day posture: per batch one map-side-combined (group, bin) scan
   * (≤ nBins+2 keys per group per task), one ≤ groups × (nBins+2) driver
@@ -66,78 +61,47 @@ object StreamingGroupedHistogram {
     * raise it only with the driver sized for groups × (nBins+2). */
   val DefaultMaxGroups: Int = 1000
 
-  private val StateName = "hist_grouped_state.json"
-
-  private def stateFile(spark: SparkSession, stateDir: String) =
-    new graft.core.SwapStateFile(
-      new Path(stateDir, StateName)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      stateDir, StateName, "hist_grouped_state.swap.inprogress",
-      "grouped histogram state")
-
-  private def emptySnapshot = GroupedHistSnapshot(
-    HistogramSpec(0.0, 1.0, 1), "", -1L, Map.empty, 0L)
-
-  private def parseSnapshot(stateDir: String)(txt: String): GroupedHistSnapshot = {
-    val node = new ObjectMapper().readTree(txt)
-    if (node.get("lo") == null || node.get("hi") == null ||
-        node.get("n_bins") == null || node.get("checkpoint") == null)
-      throw new IllegalStateException(
-        s"grouped histogram state file under $stateDir lacks the binning/" +
-          "checkpoint binding fields — refusing to guess which stream it " +
-          "belongs to; re-fold from the source with a fresh state dir")
-    val groups = Map.newBuilder[String, GroupHist]
-    val git = node.get("groups").fields()
-    while (git.hasNext) {
-      val ge = git.next()
-      val bins = Map.newBuilder[Int, Long]
-      val bit = ge.getValue.get("bins").fields()
-      while (bit.hasNext) {
-        val be = bit.next(); bins += be.getKey.toInt -> be.getValue.asLong()
+  private val store = new FoldStateStore[GroupedHistSnapshot](
+    "grouped histogram state", "hist_grouped_state.json",
+    Seq("lo", "hi", "n_bins", "checkpoint"),
+    GroupedHistSnapshot(HistogramSpec(0.0, 1.0, 1), "", -1L, Map.empty, 0L),
+    _.lastBatchId, _.checkpoint,
+    encode = (root, snap) => {
+      StreamingHistogram.putSpec(root, snap.spec)
+      root.put("checkpoint", snap.checkpoint)
+      root.put("batch_id", snap.lastBatchId)
+      root.put("excluded_null_rows", snap.excludedNullRows)
+      val gs = root.putObject("groups")
+      snap.groups.toSeq.sortBy(_._1).foreach { case (g, gh) =>
+        val gn = gs.putObject(g)
+        gn.put("n", gh.n)
+        StreamingHistogram.putBins(gn, gh.bins)
       }
-      groups += ge.getKey ->
-        GroupHist(ge.getValue.get("n").asLong(), bins.result())
-    }
-    GroupedHistSnapshot(
-      HistogramSpec(node.get("lo").asDouble(), node.get("hi").asDouble(),
-        node.get("n_bins").asInt()),
-      node.get("checkpoint").asText(), node.get("batch_id").asLong(),
-      groups.result(),
-      Option(node.get("excluded_null_rows")).map(_.asLong()).getOrElse(0L))
-  }
+    },
+    decode = node => {
+      val groups = Map.newBuilder[String, GroupHist]
+      val git = node.get("groups").fields()
+      while (git.hasNext) {
+        val ge = git.next()
+        groups += ge.getKey -> GroupHist(ge.getValue.get("n").asLong(),
+          StreamingHistogram.parseBins(ge.getValue))
+      }
+      GroupedHistSnapshot(StreamingHistogram.parseSpec(node),
+        node.get("checkpoint").asText(), node.get("batch_id").asLong(),
+        groups.result(),
+        Option(node.get("excluded_null_rows")).map(_.asLong())
+          .getOrElse(0L))
+    })
 
   /** Lock-free read (the [[graft.core.SwapStateFile.read]] protocol);
     * absent file = empty stream. Monitors should use [[readStateLocked]]. */
   def readState(spark: SparkSession, stateDir: String): GroupedHistSnapshot =
-    stateFile(spark, stateDir).read(parseSnapshot(stateDir), emptySnapshot)
+    store.read(spark, stateDir)
 
   /** Linearizable read under the writer's own swap lock. */
   def readStateLocked(spark: SparkSession,
       stateDir: String): GroupedHistSnapshot =
-    stateFile(spark, stateDir)
-      .readLocked(parseSnapshot(stateDir), emptySnapshot)
-
-  private def writeState(spark: SparkSession, stateDir: String,
-      snap: GroupedHistSnapshot): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("lo", snap.spec.lo)
-    root.put("hi", snap.spec.hi)
-    root.put("n_bins", snap.spec.nBins)
-    root.put("checkpoint", snap.checkpoint)
-    root.put("batch_id", snap.lastBatchId)
-    root.put("excluded_null_rows", snap.excludedNullRows)
-    val gs = root.putObject("groups")
-    snap.groups.toSeq.sortBy(_._1).foreach { case (g, gh) =>
-      val gn = gs.putObject(g)
-      gn.put("n", gh.n)
-      val b = gn.putObject("bins")
-      gh.bins.toSeq.sortBy(_._1).foreach { case (bin, c) =>
-        b.put(bin.toString, c)
-      }
-    }
-    stateFile(spark, stateDir).write(mapper.writeValueAsBytes(root))
-  }
+    store.readLocked(spark, stateDir)
 
   /** Apply ONE micro-batch of (group, value) rows: skip if already
     * applied, else add each group's exact bin counts. Package-visible so
@@ -145,82 +109,68 @@ object StreamingGroupedHistogram {
   private[streaming] def applyBatch(spark: SparkSession, stateDir: String,
       spec: HistogramSpec, maxGroups: Int, checkpoint: String,
       batch: DataFrame, groupCol: String, valueCol: String,
-      batchId: Long): GroupedHistSnapshot = {
-    val st = readState(spark, stateDir)
-    checkStateBindings(st, stateDir, checkpoint, spec)
-    StreamingHeavyHitters.checkFreshStateVsCheckpoint(st.lastBatchId,
-      stateDir, batchId,
-      "grouped histogram state")
-    if (batchId <= st.lastBatchId) st // replayed batch: already folded
-    else {
-      // one pass: null-group rows are kept (ALL of them — their values,
-      // null or not, are irrelevant) under a dummy bin so their count
-      // rides the same aggregation; real groups bin non-null values only
-      val perGroup = batch
-        .select(col(groupCol).cast("string").as("g"),
-          col(valueCol).cast("double").as("v"))
-        .filter(col("g").isNull || col("v").isNotNull)
-        .select(col("g"),
-          when(col("g").isNull, lit(Int.MinValue))
-            .otherwise(spec.binExpr(col("v"))).as("bin"))
-        .groupBy("g", "bin").agg(count(lit(1)).as("cnt"))
-        .groupBy("g")
-        .agg(collect_list(struct(col("bin"), col("cnt"))).as("cells"),
-          sum("cnt").as("n"))
-      // bounded collect: the null group is at most one row, so cap + 2
-      // both bounds the driver allocation and detects the refusal case
-      val rows = perGroup.head(maxGroups + 2)
-      val (nullRows, realRows) = rows.partition(_.isNullAt(0))
-      val excludedThisBatch = nullRows.headOption.map(_.getLong(2)).getOrElse(0L)
-      val merged = scala.collection.mutable.Map.empty[String, GroupHist]
-      merged ++= st.groups
-      realRows.foreach { r =>
-        val g = r.getString(0)
-        val prev = merged.getOrElse(g, GroupHist(0L, Map.empty))
-        var bins = prev.bins
-        var added = 0L
-        r.getSeq[org.apache.spark.sql.Row](1).foreach { cell =>
-          val bin = cell.getInt(0); val c = cell.getLong(1)
-          bins = bins.updated(bin, bins.getOrElse(bin, 0L) + c)
-          added += c
+      batchId: Long): GroupedHistSnapshot =
+    store.applyBatch(spark, stateDir, batchId,
+      st => checkStateBindings(st, stateDir, checkpoint, spec),
+      st => {
+        // one pass: null-group rows are kept (ALL of them — their values,
+        // null or not, are irrelevant) under a dummy bin so their count
+        // rides the same aggregation; real groups bin non-null values only
+        val perGroup = batch
+          .select(col(groupCol).cast("string").as("g"),
+            col(valueCol).cast("double").as("v"))
+          .filter(col("g").isNull || col("v").isNotNull)
+          .select(col("g"),
+            when(col("g").isNull, lit(Int.MinValue))
+              .otherwise(spec.binExpr(col("v"))).as("bin"))
+          .groupBy("g", "bin").agg(count(lit(1)).as("cnt"))
+          .groupBy("g")
+          .agg(collect_list(struct(col("bin"), col("cnt"))).as("cells"),
+            sum("cnt").as("n"))
+        // bounded collect: the null group is at most one row, so cap + 2
+        // both bounds the driver allocation and detects the refusal case
+        val rows = perGroup.head(maxGroups + 2)
+        val (nullRows, realRows) = rows.partition(_.isNullAt(0))
+        val excludedThisBatch = nullRows.headOption.map(_.getLong(2)).getOrElse(0L)
+        val merged = scala.collection.mutable.Map.empty[String, GroupHist]
+        merged ++= st.groups
+        realRows.foreach { r =>
+          val g = r.getString(0)
+          val prev = merged.getOrElse(g, GroupHist(0L, Map.empty))
+          var bins = prev.bins
+          var added = 0L
+          r.getSeq[org.apache.spark.sql.Row](1).foreach { cell =>
+            val bin = cell.getInt(0); val c = cell.getLong(1)
+            bins = bins.updated(bin, bins.getOrElse(bin, 0L) + c)
+            added += c
+          }
+          merged.put(g, GroupHist(prev.n + added, bins))
         }
-        merged.put(g, GroupHist(prev.n + added, bins))
-      }
-      if (merged.size > maxGroups) {
-        // the head probe truncates the batch's group relation: a full
-        // probe means the count below is only a LOWER bound
-        val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
-        throw new IllegalStateException(
-          s"grouped histogram state at $stateDir would hold " +
-            s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
-            "the state file (and the per-batch driver fold) is bounded " +
-            "by groups x (nBins+2) BY this cap. Raise maxGroups if the " +
-            "group key is genuinely this wide and the driver can hold " +
-            "it, or coarsen the group key; a per-document-cardinality " +
-            "key belongs on a batch groupBy, not a driver-side state " +
-            "file. Batch NOT applied; the stream should be stopped and " +
-            "re-planned")
-      }
-      val next = GroupedHistSnapshot(spec, checkpoint, batchId,
-        merged.toMap, st.excludedNullRows + excludedThisBatch)
-      writeState(spark, stateDir, next)
-      next
-    }
-  }
+        if (merged.size > maxGroups) {
+          // the head probe truncates the batch's group relation: a full
+          // probe means the count below is only a LOWER bound
+          val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
+          throw new IllegalStateException(
+            s"grouped histogram state at $stateDir would hold " +
+              s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
+              "the state file (and the per-batch driver fold) is bounded " +
+              "by groups x (nBins+2) BY this cap. Raise maxGroups if the " +
+              "group key is genuinely this wide and the driver can hold " +
+              "it, or coarsen the group key; a per-document-cardinality " +
+              "key belongs on a batch groupBy, not a driver-side state " +
+              "file. Batch NOT applied; the stream should be stopped and " +
+              "re-planned")
+        }
+        GroupedHistSnapshot(spec, checkpoint, batchId,
+          merged.toMap, st.excludedNullRows + excludedThisBatch)
+      })
 
   /** The checkpoint/binning binding rules — [[StreamingHistogram]]'s rule
     * set, enforced at both chokepoints. */
   private[streaming] def checkStateBindings(st: GroupedHistSnapshot,
       stateDir: String, checkpoint: String, spec: HistogramSpec): Unit = {
     if (st.lastBatchId < 0L) return
-    if (st.checkpoint != checkpoint)
-      throw new IllegalStateException(
-        s"grouped histogram state at $stateDir was folded under " +
-          s"checkpoint '${st.checkpoint}' but this stream runs under " +
-          s"'$checkpoint' — batch ids restart at 0 per checkpoint, so " +
-          "continuing would skip new data as replays (or double-count " +
-          "on a rewound checkpoint). Use a fresh state dir with a fresh " +
-          "checkpoint")
+    store.checkCheckpoint(st, stateDir, checkpoint)
     if (st.spec != spec)
       throw new IllegalStateException(
         s"grouped histogram state at $stateDir was folded with binning " +
@@ -241,39 +191,26 @@ object StreamingGroupedHistogram {
     * ingest binding, no clobbering — plus the family's cap discipline
     * on the UNION of the group sets. */
   def mergeStates(spark: SparkSession, inDirs: Seq[String], outDir: String,
-      maxGroups: Int = DefaultMaxGroups): GroupedHistSnapshot = {
-    val states = inDirs.map(d => d -> readStateLocked(spark, d))
-    val (ckpt, lastId) = StateMerge.guard(spark, "grouped histogram state",
-      "global histogram", inDirs, outDir, states,
-      (s: GroupedHistSnapshot) => s.lastBatchId,
-      (s: GroupedHistSnapshot) => s.checkpoint,
-      readState(spark, outDir).lastBatchId)
-    val specs = states.map(_._2.spec).distinct
-    if (specs.size > 1)
-      throw new IllegalStateException(
-        "mergeStates: inputs fold different binnings " +
-          specs.map(s => s"[${s.lo}, ${s.hi}) x ${s.nBins}").mkString(", ") +
-          " — bin counts are only meaningful relative to their binning; " +
-          "merge only states folded with the identical spec (re-fold " +
-          "divergent regions under one shared binning first)")
-    val groups = scala.collection.mutable.Map.empty[String, GroupHist]
-    states.foreach { case (_, st) =>
-      st.groups.foreach { case (g, h) =>
-        val prev = groups.getOrElse(g, GroupHist(0L, Map.empty))
-        val bins = scala.collection.mutable.Map.empty[Int, Long]
-        bins ++= prev.bins
-        h.bins.foreach { case (b, c) =>
-          bins.put(b, bins.getOrElse(b, 0L) + c) }
-        groups.put(g, GroupHist(prev.n + h.n, bins.toMap))
-      }
+      maxGroups: Int = DefaultMaxGroups): GroupedHistSnapshot =
+    store.merge(spark, inDirs, outDir, "global histogram") {
+      (states, ckpt, lastId) =>
+        val spec = StreamingHistogram.sameSpec(states.map(_.spec))
+        val groups = scala.collection.mutable.Map.empty[String, GroupHist]
+        states.foreach { st =>
+          st.groups.foreach { case (g, h) =>
+            val prev = groups.getOrElse(g, GroupHist(0L, Map.empty))
+            val bins = scala.collection.mutable.Map.empty[Int, Long]
+            bins ++= prev.bins
+            h.bins.foreach { case (b, c) =>
+              bins.put(b, bins.getOrElse(b, 0L) + c) }
+            groups.put(g, GroupHist(prev.n + h.n, bins.toMap))
+          }
+        }
+        StateMerge.checkMergedGroupCap("grouped histogram state",
+          groups.size, maxGroups)
+        GroupedHistSnapshot(spec, ckpt, lastId, groups.toMap,
+          states.map(_.excludedNullRows).sum)
     }
-    StateMerge.checkMergedGroupCap("grouped histogram state", groups.size,
-      maxGroups)
-    val merged = GroupedHistSnapshot(specs.head, ckpt, lastId,
-      groups.toMap, states.map(_._2.excludedNullRows).sum)
-    writeState(spark, outDir, merged)
-    merged
-  }
 
   /** Start the stream: parquet (group, value) arrivals under `sourceDir`,
     * folded per micro-batch into the grouped histogram state. Same
@@ -286,34 +223,14 @@ object StreamingGroupedHistogram {
       maxFilesPerTrigger: Int = 0,
       maxGroups: Int = DefaultMaxGroups): StreamingQuery = {
     require(maxGroups > 0, s"maxGroups must be positive, got $maxGroups")
-    val srcSchema = new StructType()
-      .add(groupCol, StringType).add(valueCol, DoubleType)
-    val stateFs = new Path(stateDir, StateName)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.FsCapabilities.assertAtomicRenameAtOpen(stateFs,
-      new Path(stateDir), "streaming grouped histogram state commit")
-    val ckptPath = new Path(checkpointDir)
-    val ckptId = ckptPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(ckptPath).toString
-    val st0 = readState(spark, stateDir) // also finishes any crashed swap
-    checkStateBindings(st0, stateDir, ckptId, spec)
-    val reader = spark.readStream.schema(srcSchema)
-    val src =
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-          .parquet(sourceDir)
-      else reader.parquet(sourceDir)
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchShuffleTuning.tune(batch)
-        applyBatch(spark, stateDir, spec, maxGroups, ckptId, batch,
-          groupCol, valueCol, batchId); ()
-      }
-      .start()
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
+      new StructType().add(groupCol, StringType).add(valueCol, DoubleType),
+      maxFilesPerTrigger,
+      entryCheck = (st, ckptId) =>
+        checkStateBindings(st, stateDir, ckptId, spec),
+      applyB = (batch, batchId, ckptId) =>
+        { applyBatch(spark, stateDir, spec, maxGroups, ckptId, batch,
+            groupCol, valueCol, batchId); () })
   }
 
   /** Per-group interpolated quantiles from an already-read snapshot:

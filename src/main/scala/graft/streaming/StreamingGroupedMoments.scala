@@ -1,12 +1,10 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import graft.operators.Profile
 import graft.streaming.StreamingMoments.{mergeMoments, momentsFromRow, Moments}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructType}
 
 /** Per-group streaming exact moments — the grouped face of
@@ -40,10 +38,8 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructType
   * rows are excluded from the fold (no identity to profile under — the
   * batch face's rule) but tallied in `excludedNullRows` within the same
   * single pass; null VALUES inside a group ride each group's own exact
-  * `n_null`. Durability/exactly-once/bindings are the family protocol
-  * verbatim (SwapStateFile swap, (checkpoint, valueCol) binding — the
-  * flat fold's identity argument — replay idempotence, loud reads,
-  * linearizable [[readStateLocked]]).
+  * `n_null`. State file and exactly-once: [[FoldStateStore]]; the
+  * bindings are (checkpoint, valueCol), the flat fold's identity.
   *
   * 100 TB/day posture: per batch one grouped map-side-combined aggregate
   * (partials are seven counters per group per task), one ≤ maxGroups
@@ -65,77 +61,50 @@ object StreamingGroupedMoments {
     * key). */
   val DefaultMaxGroups: Int = 10000
 
-  private val StateName = "moments_grouped_state.json"
-
-  private def stateFile(spark: SparkSession, stateDir: String) =
-    new graft.core.SwapStateFile(
-      new Path(stateDir, StateName)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      stateDir, StateName, "moments_grouped_state.swap.inprogress",
-      "grouped moments state")
-
-  private def emptySnapshot =
-    GroupedMomentsSnapshot("", "", -1L, Map.empty, 0L)
-
-  private def parseSnapshot(stateDir: String)(
-      txt: String): GroupedMomentsSnapshot = {
-    val node = new ObjectMapper().readTree(txt)
-    if (node.get("value_col") == null || node.get("checkpoint") == null)
-      throw new IllegalStateException(
-        s"grouped moments state file under $stateDir lacks the " +
-          "value_col/checkpoint binding fields — refusing to guess which " +
-          "stream it belongs to; re-fold from the source with a fresh " +
-          "state dir")
-    val groups = Map.newBuilder[String, Moments]
-    val git = node.get("groups").fields()
-    while (git.hasNext) {
-      val ge = git.next()
-      groups += ge.getKey -> StreamingMoments.parseMoments(ge.getValue)
-    }
-    GroupedMomentsSnapshot(node.get("value_col").asText(),
-      node.get("checkpoint").asText(), node.get("batch_id").asLong(),
-      groups.result(), node.get("excluded_null_rows").asLong())
-  }
+  private val store = new FoldStateStore[GroupedMomentsSnapshot](
+    "grouped moments state", "moments_grouped_state.json",
+    Seq("value_col", "checkpoint"),
+    GroupedMomentsSnapshot("", "", -1L, Map.empty, 0L), _.lastBatchId,
+    _.checkpoint,
+    encode = (root, snap) => {
+      root.put("value_col", snap.valueCol)
+      root.put("checkpoint", snap.checkpoint)
+      root.put("batch_id", snap.lastBatchId)
+      root.put("excluded_null_rows", snap.excludedNullRows)
+      val gs = root.putObject("groups")
+      // sorted for a stable file layout (diffable, digest-friendly)
+      snap.groups.toSeq.sortBy(_._1).foreach { case (g, m) =>
+        StreamingMoments.putMoments(gs.putObject(g), m)
+      }
+    },
+    decode = node => {
+      val groups = Map.newBuilder[String, Moments]
+      val git = node.get("groups").fields()
+      while (git.hasNext) {
+        val ge = git.next()
+        groups += ge.getKey -> StreamingMoments.parseMoments(ge.getValue)
+      }
+      GroupedMomentsSnapshot(node.get("value_col").asText(),
+        node.get("checkpoint").asText(), node.get("batch_id").asLong(),
+        groups.result(), node.get("excluded_null_rows").asLong())
+    })
 
   /** Lock-free read ([[graft.core.SwapStateFile.read]] protocol); absent
     * file = empty stream. Monitors on a hot stream should use
     * [[readStateLocked]]. */
   def readState(spark: SparkSession,
       stateDir: String): GroupedMomentsSnapshot =
-    stateFile(spark, stateDir).read(parseSnapshot(stateDir), emptySnapshot)
+    store.read(spark, stateDir)
 
   /** Linearizable read under the writer's own swap lock. */
   def readStateLocked(spark: SparkSession,
       stateDir: String): GroupedMomentsSnapshot =
-    stateFile(spark, stateDir)
-      .readLocked(parseSnapshot(stateDir), emptySnapshot)
-
-  private def writeState(spark: SparkSession, stateDir: String,
-      snap: GroupedMomentsSnapshot): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("value_col", snap.valueCol)
-    root.put("checkpoint", snap.checkpoint)
-    root.put("batch_id", snap.lastBatchId)
-    root.put("excluded_null_rows", snap.excludedNullRows)
-    val gs = root.putObject("groups")
-    // sorted for a stable file layout (diffable, digest-friendly)
-    snap.groups.toSeq.sortBy(_._1).foreach { case (g, m) =>
-      StreamingMoments.putMoments(gs.putObject(g), m)
-    }
-    stateFile(spark, stateDir).write(mapper.writeValueAsBytes(root))
-  }
+    store.readLocked(spark, stateDir)
 
   private[streaming] def checkStateBindings(st: GroupedMomentsSnapshot,
       stateDir: String, checkpoint: String, valueCol: String): Unit = {
     if (st.lastBatchId < 0L) return
-    if (st.checkpoint != checkpoint)
-      throw new IllegalStateException(
-        s"grouped moments state at $stateDir was folded under checkpoint " +
-          s"'${st.checkpoint}' but this stream runs under '$checkpoint' " +
-          "— batch ids restart at 0 per checkpoint, so continuing would " +
-          "skip new data as replays (or double-count on a rewound " +
-          "checkpoint). Use a fresh state dir with a fresh checkpoint")
+    store.checkCheckpoint(st, stateDir, checkpoint)
     if (st.valueCol != valueCol)
       throw new IllegalStateException(
         s"grouped moments state at $stateDir was folded over column " +
@@ -151,62 +120,55 @@ object StreamingGroupedMoments {
   private[streaming] def applyBatch(spark: SparkSession, stateDir: String,
       maxGroups: Int, checkpoint: String, batch: DataFrame,
       groupCol: String, valueCol: String,
-      batchId: Long): GroupedMomentsSnapshot = {
-    val st = readState(spark, stateDir)
-    checkStateBindings(st, stateDir, checkpoint, valueCol)
-    StreamingHeavyHitters.checkFreshStateVsCheckpoint(st.lastBatchId,
-      stateDir, batchId,
-      "grouped moments state")
-    if (batchId <= st.lastBatchId) st // replayed batch: already folded
-    else {
-      // groupBy KEEPS the null group as its own row (unlike the batch
-      // face's filtered join-shape), so the excluded-row count rides the
-      // SAME single pass — its n_rows IS the batch's excluded tally
-      val g = col("`" + groupCol.replace("`", "``") + "`")
-      val aggs = Profile.momentsAggs(valueCol)
-      val grouped = batch.groupBy(g.as("__group"))
-        .agg(aggs.head, aggs.tail: _*)
-      // bounded collect: head(cap + 2) — the null group (at most one row)
-      // must not displace a real group at the probe boundary; a batch
-      // whose own real-group count exceeds the cap can never fold into a
-      // capped state, so the probe both bounds the driver allocation and
-      // detects the refusal case
-      val rows = grouped.head(maxGroups + 2)
-      val (nullRows, realRows) = rows.partition(_.isNullAt(0))
-      val excludedThisBatch =
-        nullRows.headOption.map(_.getLong(1)).getOrElse(0L)
-      val merged = scala.collection.mutable.Map.empty[String, Moments]
-      merged ++= st.groups
-      realRows.foreach { r =>
-        val grp = r.getString(0)
-        val bm = momentsFromRow(r, 1,
-          s"grouped moments fold at $stateDir (batch $batchId, " +
-            s"group '$grp')")
-        merged.put(grp,
-          mergeMoments(merged.getOrElse(grp, StreamingMoments.emptyMoments),
-            bm))
-      }
-      if (merged.size > maxGroups) {
-        // the head probe TRUNCATES the batch's group relation, so when it
-        // came back full `merged.size` is only a LOWER BOUND on the real
-        // cardinality
-        val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
-        throw new IllegalStateException(
-          s"grouped moments state at $stateDir would hold " +
-            s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
-            "the state file (and the per-batch driver fold) is bounded " +
-            "BY this cap. Raise maxGroups if the group key is genuinely " +
-            "this wide and the driver can hold it, or coarsen the group " +
-            "key; a per-document-cardinality key belongs on the batch " +
-            "momentsPerGroup path, not a driver-side state file. Batch " +
-            "NOT applied; the stream should be stopped and re-planned")
-      }
-      val next = GroupedMomentsSnapshot(valueCol, checkpoint, batchId,
-        merged.toMap, st.excludedNullRows + excludedThisBatch)
-      writeState(spark, stateDir, next)
-      next
-    }
-  }
+      batchId: Long): GroupedMomentsSnapshot =
+    store.applyBatch(spark, stateDir, batchId,
+      st => checkStateBindings(st, stateDir, checkpoint, valueCol),
+      st => {
+        // groupBy KEEPS the null group as its own row (unlike the batch
+        // face's filtered join-shape), so the excluded-row count rides the
+        // SAME single pass — its n_rows IS the batch's excluded tally
+        val g = col("`" + groupCol.replace("`", "``") + "`")
+        val aggs = Profile.momentsAggs(valueCol)
+        val grouped = batch.groupBy(g.as("__group"))
+          .agg(aggs.head, aggs.tail: _*)
+        // bounded collect: head(cap + 2) — the null group (at most one row)
+        // must not displace a real group at the probe boundary; a batch
+        // whose own real-group count exceeds the cap can never fold into a
+        // capped state, so the probe both bounds the driver allocation and
+        // detects the refusal case
+        val rows = grouped.head(maxGroups + 2)
+        val (nullRows, realRows) = rows.partition(_.isNullAt(0))
+        val excludedThisBatch =
+          nullRows.headOption.map(_.getLong(1)).getOrElse(0L)
+        val merged = scala.collection.mutable.Map.empty[String, Moments]
+        merged ++= st.groups
+        realRows.foreach { r =>
+          val grp = r.getString(0)
+          val bm = momentsFromRow(r, 1,
+            s"grouped moments fold at $stateDir (batch $batchId, " +
+              s"group '$grp')")
+          merged.put(grp,
+            mergeMoments(merged.getOrElse(grp, StreamingMoments.emptyMoments),
+              bm))
+        }
+        if (merged.size > maxGroups) {
+          // the head probe TRUNCATES the batch's group relation, so when it
+          // came back full `merged.size` is only a LOWER BOUND on the real
+          // cardinality
+          val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
+          throw new IllegalStateException(
+            s"grouped moments state at $stateDir would hold " +
+              s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
+              "the state file (and the per-batch driver fold) is bounded " +
+              "BY this cap. Raise maxGroups if the group key is genuinely " +
+              "this wide and the driver can hold it, or coarsen the group " +
+              "key; a per-document-cardinality key belongs on the batch " +
+              "momentsPerGroup path, not a driver-side state file. Batch " +
+              "NOT applied; the stream should be stopped and re-planned")
+        }
+        GroupedMomentsSnapshot(valueCol, checkpoint, batchId,
+          merged.toMap, st.excludedNullRows + excludedThisBatch)
+      })
 
   /** Start the stream: parquet arrivals under `sourceDir` with a STRING
     * `groupCol` and LONG `valueCol`, folded per micro-batch into the
@@ -217,34 +179,14 @@ object StreamingGroupedMoments {
       valueCol: String = "value", maxFilesPerTrigger: Int = 0,
       maxGroups: Int = DefaultMaxGroups): StreamingQuery = {
     require(maxGroups > 0, s"maxGroups must be positive, got $maxGroups")
-    val srcSchema = new StructType()
-      .add(groupCol, StringType).add(valueCol, LongType)
-    val stateFs = new Path(stateDir, StateName)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.FsCapabilities.assertAtomicRenameAtOpen(stateFs,
-      new Path(stateDir), "streaming grouped moments state commit")
-    val ckptPath = new Path(checkpointDir)
-    val ckptId = ckptPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(ckptPath).toString
-    val st0 = readState(spark, stateDir)
-    checkStateBindings(st0, stateDir, ckptId, valueCol)
-    val reader = spark.readStream.schema(srcSchema)
-    val src =
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-          .parquet(sourceDir)
-      else reader.parquet(sourceDir)
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchShuffleTuning.tune(batch)
-        applyBatch(spark, stateDir, maxGroups, ckptId, batch, groupCol,
-          valueCol, batchId); ()
-      }
-      .start()
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
+      new StructType().add(groupCol, StringType).add(valueCol, LongType),
+      maxFilesPerTrigger,
+      entryCheck = (st, ckptId) =>
+        checkStateBindings(st, stateDir, ckptId, valueCol),
+      applyB = (batch, batchId, ckptId) =>
+        { applyBatch(spark, stateDir, maxGroups, ckptId, batch, groupCol,
+            valueCol, batchId); () })
   }
 
   /** Cross-cluster merge — the grouped face of
@@ -259,34 +201,22 @@ object StreamingGroupedMoments {
     * count must fit `maxGroups` (regional group sets can be disjoint, so
     * the union can exceed what any one region held). */
   def mergeStates(spark: SparkSession, inDirs: Seq[String], outDir: String,
-      maxGroups: Int = DefaultMaxGroups): GroupedMomentsSnapshot = {
-    val states = inDirs.map(d => d -> readStateLocked(spark, d))
-    val (ckpt, lastId) = StateMerge.guard(spark, "grouped moments state",
-      "global profile", inDirs, outDir, states,
-      (s: GroupedMomentsSnapshot) => s.lastBatchId,
-      (s: GroupedMomentsSnapshot) => s.checkpoint,
-      readState(spark, outDir).lastBatchId)
-    val cols = states.map(_._2.valueCol).distinct
-    if (cols.size > 1)
-      throw new IllegalStateException(
-        "mergeStates: inputs fold different value columns " +
-          cols.mkString("'", "', '", "'") +
-          " — the merged state would be the moments of neither; merge " +
-          "only states folded over the same column")
-    val groups = scala.collection.mutable.Map.empty[String, StreamingMoments.Moments]
-    states.foreach { case (_, st) =>
-      st.groups.foreach { case (g, m) =>
-        groups.put(g, mergeMoments(
-          groups.getOrElse(g, StreamingMoments.emptyMoments), m))
-      }
+      maxGroups: Int = DefaultMaxGroups): GroupedMomentsSnapshot =
+    store.merge(spark, inDirs, outDir, "global profile") {
+      (states, ckpt, lastId) =>
+        val valueCol = StreamingMoments.sameValueCol(states.map(_.valueCol))
+        val groups = scala.collection.mutable.Map.empty[String, Moments]
+        states.foreach { st =>
+          st.groups.foreach { case (g, m) =>
+            groups.put(g, mergeMoments(
+              groups.getOrElse(g, StreamingMoments.emptyMoments), m))
+          }
+        }
+        StateMerge.checkMergedGroupCap("grouped moments state",
+          groups.size, maxGroups)
+        GroupedMomentsSnapshot(valueCol, ckpt, lastId, groups.toMap,
+          states.map(_.excludedNullRows).sum)
     }
-    StateMerge.checkMergedGroupCap("grouped moments state", groups.size,
-      maxGroups)
-    val merged = GroupedMomentsSnapshot(cols.head, ckpt, lastId,
-      groups.toMap, states.map(_._2.excludedNullRows).sum)
-    writeState(spark, outDir, merged)
-    merged
-  }
 
   /** The folded state as a (group, n_rows, n, n_null, vmin, vmax, vsum,
     * vsum_sq) relation, ordered by group — schema-aligned with

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import graft.operators.TopKImperative
 import graft.streaming.StreamingSample.SampleEntry
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructType}
 
 /** Per-group streaming deterministic bottom-k sample — the grouped face of
@@ -48,11 +46,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructType}
   * `excludedNullRows` rides the state and the REST envelope so a group
   * column rotting to NULL is visible.
   *
-  * Durability/exactly-once is the family protocol verbatim: one JSON
-  * state file through the [[graft.core.SwapStateFile]] tmp+marker swap,
-  * (checkpoint, k, salt) bindings refused loudly at stream entry, replay
-  * idempotence off the last-applied batch id, loud (never phantom-empty)
-  * reads, linearizable [[readStateLocked]] for monitors. */
+  * State file and exactly-once: [[FoldStateStore]]; the bindings are
+  * (checkpoint, k, salt). */
 object StreamingGroupedSample {
 
   /** One group's folded sample: rows folded for this group (duplicates
@@ -75,93 +70,54 @@ object StreamingGroupedSample {
     * default, covering any realistic profiling group key. */
   val DefaultMaxGroups: Int = 10000
 
-  private val StateName = "sample_grouped_state.json"
-
-  private def stateFile(spark: SparkSession, stateDir: String) =
-    new graft.core.SwapStateFile(
-      new Path(stateDir, StateName)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      stateDir, StateName, "sample_grouped_state.swap.inprogress",
-      "grouped sample state")
-
-  private def emptySnapshot =
-    GroupedSampleSnapshot(-1, "", "", -1L, Map.empty, 0L)
-
-  private def parseSnapshot(stateDir: String)(txt: String): GroupedSampleSnapshot = {
-    val node = new ObjectMapper().readTree(txt)
-    if (node.get("k") == null || node.get("salt") == null ||
-        node.get("checkpoint") == null)
-      throw new IllegalStateException(
-        s"grouped sample state file under $stateDir lacks the " +
-          "k/salt/checkpoint binding fields — refusing to guess which " +
-          "stream it belongs to; re-fold from the source with a fresh " +
-          "state dir")
-    val groups = Map.newBuilder[String, GroupSample]
-    val git = node.get("groups").fields()
-    while (git.hasNext) {
-      val ge = git.next()
-      val es = Seq.newBuilder[SampleEntry]
-      val it = ge.getValue.get("entries").elements()
-      while (it.hasNext) {
-        val e = it.next()
-        es += SampleEntry(e.get("key").asLong(), e.get("id").asLong(),
-          if (e.hasNonNull("value")) Some(e.get("value").asDouble()) else None)
+  private val store = new FoldStateStore[GroupedSampleSnapshot](
+    "grouped sample state", "sample_grouped_state.json",
+    Seq("k", "salt", "checkpoint"),
+    GroupedSampleSnapshot(-1, "", "", -1L, Map.empty, 0L), _.lastBatchId,
+    _.checkpoint,
+    encode = (root, snap) => {
+      root.put("k", snap.k)
+      root.put("salt", snap.salt)
+      root.put("checkpoint", snap.checkpoint)
+      root.put("batch_id", snap.lastBatchId)
+      root.put("excluded_null_rows", snap.excludedNullRows)
+      val gs = root.putObject("groups")
+      snap.groups.foreach { case (g, st) =>
+        val gn = gs.putObject(g)
+        gn.put("n_seen", st.nSeen)
+        StreamingSample.putEntries(gn.putArray("entries"), st.entries)
       }
-      groups += ge.getKey ->
-        GroupSample(ge.getValue.get("n_seen").asLong(), es.result())
-    }
-    GroupedSampleSnapshot(node.get("k").asInt(), node.get("salt").asText(),
-      node.get("checkpoint").asText(), node.get("batch_id").asLong(),
-      groups.result(),
-      Option(node.get("excluded_null_rows")).map(_.asLong()).getOrElse(0L))
-  }
+    },
+    decode = node => {
+      val groups = Map.newBuilder[String, GroupSample]
+      val git = node.get("groups").fields()
+      while (git.hasNext) {
+        val ge = git.next()
+        groups += ge.getKey -> GroupSample(ge.getValue.get("n_seen").asLong(),
+          StreamingSample.parseEntries(ge.getValue.get("entries")))
+      }
+      GroupedSampleSnapshot(node.get("k").asInt(), node.get("salt").asText(),
+        node.get("checkpoint").asText(), node.get("batch_id").asLong(),
+        groups.result(),
+        Option(node.get("excluded_null_rows")).map(_.asLong())
+          .getOrElse(0L))
+    })
 
   /** Lock-free read ([[graft.core.SwapStateFile.read]] protocol); absent
     * file = empty stream. Monitors on a hot stream should use
     * [[readStateLocked]]. */
   def readState(spark: SparkSession, stateDir: String): GroupedSampleSnapshot =
-    stateFile(spark, stateDir).read(parseSnapshot(stateDir), emptySnapshot)
+    store.read(spark, stateDir)
 
   /** Linearizable read under the writer's own swap lock. */
   def readStateLocked(spark: SparkSession,
       stateDir: String): GroupedSampleSnapshot =
-    stateFile(spark, stateDir)
-      .readLocked(parseSnapshot(stateDir), emptySnapshot)
-
-  private def writeState(spark: SparkSession, stateDir: String,
-      snap: GroupedSampleSnapshot): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("k", snap.k)
-    root.put("salt", snap.salt)
-    root.put("checkpoint", snap.checkpoint)
-    root.put("batch_id", snap.lastBatchId)
-    root.put("excluded_null_rows", snap.excludedNullRows)
-    val gs = root.putObject("groups")
-    snap.groups.foreach { case (g, st) =>
-      val gn = gs.putObject(g)
-      gn.put("n_seen", st.nSeen)
-      val arr = gn.putArray("entries")
-      st.entries.foreach { e =>
-        val n = arr.addObject()
-        n.put("key", e.key)
-        n.put("id", e.id)
-        e.value.foreach(v => n.put("value", v))
-      }
-    }
-    stateFile(spark, stateDir).write(mapper.writeValueAsBytes(root))
-  }
+    store.readLocked(spark, stateDir)
 
   private[streaming] def checkStateBindings(st: GroupedSampleSnapshot,
       stateDir: String, checkpoint: String, k: Int, salt: String): Unit = {
     if (st.lastBatchId < 0L) return
-    if (st.checkpoint != checkpoint)
-      throw new IllegalStateException(
-        s"grouped sample state at $stateDir was folded under checkpoint " +
-          s"'${st.checkpoint}' but this stream runs under '$checkpoint' " +
-          "— batch ids restart at 0 per checkpoint, so continuing would " +
-          "skip new data as replays (or double-count on a rewound " +
-          "checkpoint). Use a fresh state dir with a fresh checkpoint")
+    store.checkCheckpoint(st, stateDir, checkpoint)
     if (st.k != k || st.salt != salt)
       throw new IllegalStateException(
         s"grouped sample state at $stateDir was folded with (k=${st.k}, " +
@@ -177,66 +133,59 @@ object StreamingGroupedSample {
   private[streaming] def applyBatch(spark: SparkSession, stateDir: String,
       k: Int, salt: String, maxGroups: Int, checkpoint: String,
       batch: DataFrame, groupCol: String, idCol: String,
-      valueCol: Option[String], batchId: Long): GroupedSampleSnapshot = {
-    val st = readState(spark, stateDir)
-    checkStateBindings(st, stateDir, checkpoint, k, salt)
-    StreamingHeavyHitters.checkFreshStateVsCheckpoint(st.lastBatchId,
-      stateDir, batchId,
-      "grouped sample state")
-    if (batchId <= st.lastBatchId) st // replayed batch: already folded
-    else {
-      // groupBy keeps a NULL group as its own group, so the null-row
-      // count rides the SAME single aggregation (no second scan) — the
-      // null group's n below IS the batch's excluded row count, and its
-      // (wasted but ≤ k) bottom-k is simply dropped on the driver
-      val perGroup = batch.select(
-          col(groupCol).cast("string").as("__g"),
-          StreamingSample.priority(col(idCol), salt).as("__key"),
-          col(idCol).cast("long").as("__id"),
-          valueCol.map(v => col(v).cast("double"))
-            .getOrElse(lit(null).cast(DoubleType)).as("__v"))
-        .groupBy("__g")
-        .agg(TopKImperative.bottomKSample(k)(
-            col("__key"), col("__id"), col("__v")).as("bk"),
-          count(lit(1)).as("n"))
-      // bounded collect: head(cap + 2) — the null group (at most one row)
-      // must not displace a real group at the probe boundary (the grouped
-      // MG fold's probe rule)
-      val rows = perGroup.head(maxGroups + 2)
-      val (nullRows, realRows) = rows.partition(_.isNullAt(0))
-      val excludedThisBatch = nullRows.headOption.map(_.getLong(2)).getOrElse(0L)
-      val merged = scala.collection.mutable.Map.empty[String, GroupSample]
-      merged ++= st.groups
-      realRows.foreach { r =>
-        val g = r.getString(0)
-        val bk = r.getSeq[Row](1).map(c => SampleEntry(c.getLong(0),
-          c.getLong(1), if (c.isNullAt(2)) None else Some(c.getDouble(2))))
-        val bn = r.getLong(2)
-        val prev = merged.getOrElse(g, GroupSample(0L, Seq.empty))
-        merged.put(g, GroupSample(prev.nSeen + bn,
-          StreamingSample.mergeBottomK(k, prev.entries, bk)))
-      }
-      if (merged.size > maxGroups) {
-        // the head probe TRUNCATES the batch's group relation, so when it
-        // came back full `merged.size` is only a LOWER BOUND on the real
-        // cardinality (the grouped MG fold's phrasing rule)
-        val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
-        throw new IllegalStateException(
-          s"grouped sample state at $stateDir would hold " +
-            s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
-            "the state file (and the per-batch driver fold) is bounded " +
-            "by groups × k BY this cap. Raise maxGroups if the group key " +
-            "is genuinely this wide and the driver can hold it, or " +
-            "coarsen the group key; a per-document-cardinality key has " +
-            "no business in a driver-side sample state file. Batch NOT " +
-            "applied; the stream should be stopped and re-planned")
-      }
-      val next = GroupedSampleSnapshot(k, salt, checkpoint, batchId,
-        merged.toMap, st.excludedNullRows + excludedThisBatch)
-      writeState(spark, stateDir, next)
-      next
-    }
-  }
+      valueCol: Option[String], batchId: Long): GroupedSampleSnapshot =
+    store.applyBatch(spark, stateDir, batchId,
+      st => checkStateBindings(st, stateDir, checkpoint, k, salt),
+      st => {
+        // groupBy keeps a NULL group as its own group, so the null-row
+        // count rides the SAME single aggregation (no second scan) — the
+        // null group's n below IS the batch's excluded row count, and its
+        // (wasted but ≤ k) bottom-k is simply dropped on the driver
+        val perGroup = batch.select(
+            col(groupCol).cast("string").as("__g"),
+            StreamingSample.priority(col(idCol), salt).as("__key"),
+            col(idCol).cast("long").as("__id"),
+            valueCol.map(v => col(v).cast("double"))
+              .getOrElse(lit(null).cast(DoubleType)).as("__v"))
+          .groupBy("__g")
+          .agg(TopKImperative.bottomKSample(k)(
+              col("__key"), col("__id"), col("__v")).as("bk"),
+            count(lit(1)).as("n"))
+        // bounded collect: head(cap + 2) — the null group (at most one row)
+        // must not displace a real group at the probe boundary (the grouped
+        // MG fold's probe rule)
+        val rows = perGroup.head(maxGroups + 2)
+        val (nullRows, realRows) = rows.partition(_.isNullAt(0))
+        val excludedThisBatch = nullRows.headOption.map(_.getLong(2)).getOrElse(0L)
+        val merged = scala.collection.mutable.Map.empty[String, GroupSample]
+        merged ++= st.groups
+        realRows.foreach { r =>
+          val g = r.getString(0)
+          val bk = r.getSeq[Row](1).map(c => SampleEntry(c.getLong(0),
+            c.getLong(1), if (c.isNullAt(2)) None else Some(c.getDouble(2))))
+          val bn = r.getLong(2)
+          val prev = merged.getOrElse(g, GroupSample(0L, Seq.empty))
+          merged.put(g, GroupSample(prev.nSeen + bn,
+            StreamingSample.mergeBottomK(k, prev.entries, bk)))
+        }
+        if (merged.size > maxGroups) {
+          // the head probe TRUNCATES the batch's group relation, so when it
+          // came back full `merged.size` is only a LOWER BOUND on the real
+          // cardinality (the grouped MG fold's phrasing rule)
+          val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
+          throw new IllegalStateException(
+            s"grouped sample state at $stateDir would hold " +
+              s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
+              "the state file (and the per-batch driver fold) is bounded " +
+              "by groups × k BY this cap. Raise maxGroups if the group key " +
+              "is genuinely this wide and the driver can hold it, or " +
+              "coarsen the group key; a per-document-cardinality key has " +
+              "no business in a driver-side sample state file. Batch NOT " +
+              "applied; the stream should be stopped and re-planned")
+        }
+        GroupedSampleSnapshot(k, salt, checkpoint, batchId,
+          merged.toMap, st.excludedNullRows + excludedThisBatch)
+      })
 
   /** Cross-cluster merge — the grouped sampling face of
     * [[StreamingMoments.mergeStates]]: union of the regional group maps
@@ -249,37 +198,24 @@ object StreamingGroupedSample {
     * that trips the ingest binding, no clobbering — plus the family's
     * cap discipline on the UNION of the group sets. */
   def mergeStates(spark: SparkSession, inDirs: Seq[String], outDir: String,
-      maxGroups: Int = DefaultMaxGroups): GroupedSampleSnapshot = {
-    val states = inDirs.map(d => d -> readStateLocked(spark, d))
-    val (ckpt, lastId) = StateMerge.guard(spark, "grouped sample state",
-      "global sample", inDirs, outDir, states,
-      (s: GroupedSampleSnapshot) => s.lastBatchId,
-      (s: GroupedSampleSnapshot) => s.checkpoint,
-      readState(spark, outDir).lastBatchId)
-    val bindings = states.map(s => (s._2.k, s._2.salt)).distinct
-    if (bindings.size > 1)
-      throw new IllegalStateException(
-        "mergeStates: inputs fold different (k, salt) bindings " +
-          bindings.map(b => s"(k=${b._1}, salt='${b._2}')").mkString(", ") +
-          " — bottom-k sets are only comparable under identical " +
-          "priorities and budgets; merge only states folded with the " +
-          "same (k, salt)")
-    val (k, salt) = bindings.head
-    val groups = scala.collection.mutable.Map.empty[String, GroupSample]
-    states.foreach { case (_, st) =>
-      st.groups.foreach { case (g, s) =>
-        val prev = groups.getOrElse(g, GroupSample(0L, Seq.empty))
-        groups.put(g, GroupSample(prev.nSeen + s.nSeen,
-          StreamingSample.mergeBottomK(k, prev.entries, s.entries)))
-      }
+      maxGroups: Int = DefaultMaxGroups): GroupedSampleSnapshot =
+    store.merge(spark, inDirs, outDir, "global sample") {
+      (states, ckpt, lastId) =>
+        val (k, salt) =
+          StreamingSample.sameKSalt(states.map(s => (s.k, s.salt)))
+        val groups = scala.collection.mutable.Map.empty[String, GroupSample]
+        states.foreach { st =>
+          st.groups.foreach { case (g, s) =>
+            val prev = groups.getOrElse(g, GroupSample(0L, Seq.empty))
+            groups.put(g, GroupSample(prev.nSeen + s.nSeen,
+              StreamingSample.mergeBottomK(k, prev.entries, s.entries)))
+          }
+        }
+        StateMerge.checkMergedGroupCap("grouped sample state", groups.size,
+          maxGroups)
+        GroupedSampleSnapshot(k, salt, ckpt, lastId, groups.toMap,
+          states.map(_.excludedNullRows).sum)
     }
-    StateMerge.checkMergedGroupCap("grouped sample state", groups.size,
-      maxGroups)
-    val merged = GroupedSampleSnapshot(k, salt, ckpt, lastId, groups.toMap,
-      states.map(_._2.excludedNullRows).sum)
-    writeState(spark, outDir, merged)
-    merged
-  }
 
   /** Start the stream: parquet arrivals under `sourceDir` with a STRING
     * `groupCol`, LONG `idCol` (and optionally a DOUBLE `valueCol` payload
@@ -293,35 +229,16 @@ object StreamingGroupedSample {
       maxGroups: Int = DefaultMaxGroups): StreamingQuery = {
     require(k > 0, s"sample size k must be positive, got $k")
     require(maxGroups > 0, s"maxGroups must be positive, got $maxGroups")
-    val srcSchema = valueCol.foldLeft(
-      new StructType().add(groupCol, StringType).add(idCol, LongType))(
-      (s, v) => s.add(v, DoubleType))
-    val stateFs = new Path(stateDir, StateName)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.FsCapabilities.assertAtomicRenameAtOpen(stateFs,
-      new Path(stateDir), "streaming grouped sample state commit")
-    val ckptPath = new Path(checkpointDir)
-    val ckptId = ckptPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(ckptPath).toString
-    val st0 = readState(spark, stateDir)
-    checkStateBindings(st0, stateDir, ckptId, k, salt)
-    val reader = spark.readStream.schema(srcSchema)
-    val src =
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-          .parquet(sourceDir)
-      else reader.parquet(sourceDir)
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchShuffleTuning.tune(batch)
-        applyBatch(spark, stateDir, k, salt, maxGroups, ckptId, batch,
-          groupCol, idCol, valueCol, batchId); ()
-      }
-      .start()
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
+      valueCol.foldLeft(
+        new StructType().add(groupCol, StringType).add(idCol, LongType))(
+        (s, v) => s.add(v, DoubleType)),
+      maxFilesPerTrigger,
+      entryCheck = (st, ckptId) =>
+        checkStateBindings(st, stateDir, ckptId, k, salt),
+      applyB = (batch, batchId, ckptId) =>
+        { applyBatch(spark, stateDir, k, salt, maxGroups, ckptId, batch,
+            groupCol, idCol, valueCol, batchId); () })
   }
 
   /** The folded grouped sample as a (group STRING, id LONG, value DOUBLE)

@@ -1,12 +1,9 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import graft.core.FsSwap
 import graft.operators.HeavyHitters
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** Streaming heavy hitters: a per-micro-batch Misra–Gries update folded
@@ -24,14 +21,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   * state is therefore BOUNDED at ≤ k entries BY CONSTRUCTION no matter
   * how many batches run — there is nothing to compact, ever.
   *
-  * State durability: one JSON file (`mg_state.json`: last applied batch
-  * id, total item count, the ≤ k counters) rewritten per batch through
-  * [[FsSwap.commit]]'s tmp+marker protocol. Exactly-once under restarts:
-  * the state carries the LAST APPLIED batch id, and a replayed micro-batch
-  * (crash between the state install and the checkpoint commit) is skipped
-  * when its id is ≤ that — the same idempotence rule as any
-  * foreachBatch-with-external-state sink. A crash BEFORE the state
-  * install simply replays the batch against the old state.
+  * State durability and exactly-once: [[FoldStateStore]] (one
+  * `mg_state.json` — last applied batch id, total item count, the ≤ k
+  * counters — rewritten per batch; a replayed batch id is skipped).
   *
   * The final answer is exact, not approximate: [[heavyHittersFromState]]
   * recounts the folded candidates over the corpus (the batch operator's
@@ -55,68 +47,46 @@ object StreamingHeavyHitters {
   case class MgSnapshot(k: Int, checkpoint: String, lastBatchId: Long,
       n: Long, counts: Map[String, Long])
 
-  private def statePath(stateDir: String) = new Path(stateDir, "mg_state.json")
-
-  private def stateFile(spark: SparkSession, stateDir: String) = {
-    val p = statePath(stateDir)
-    new graft.core.SwapStateFile(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      stateDir, p.getName, "mg_state.swap.inprogress", "MG state")
-  }
-
-  private def emptySnapshot = MgSnapshot(-1, "", -1L, 0L, Map.empty)
-
-  private def parseSnapshot(stateDir: String)(txt: String): MgSnapshot = {
-    val node = new ObjectMapper().readTree(txt)
-    if (node.get("k") == null || node.get("checkpoint") == null)
-      throw new IllegalStateException(
-        s"MG state file ${statePath(stateDir)} lacks the k/checkpoint " +
-          "binding fields — it was written by a pre-binding format. No " +
-          "automatic migration (the old format cannot prove which " +
-          "checkpoint its batch ids belong to); re-fold from the source " +
-          "with a fresh state dir")
-    val counts = scala.collection.mutable.Map.empty[String, Long]
-    val it = node.get("counts").fields()
-    while (it.hasNext) {
-      val e = it.next(); counts.put(e.getKey, e.getValue.asLong())
-    }
-    MgSnapshot(node.get("k").asInt(), node.get("checkpoint").asText(),
-      node.get("batch_id").asLong(), node.get("n").asLong(), counts.toMap)
-  }
+  private val store = new FoldStateStore[MgSnapshot](
+    "MG state", "mg_state.json", Seq("k", "checkpoint"),
+    MgSnapshot(-1, "", -1L, 0L, Map.empty), _.lastBatchId, _.checkpoint,
+    encode = (root, snap) => {
+      root.put("k", snap.k)
+      root.put("checkpoint", snap.checkpoint)
+      root.put("batch_id", snap.lastBatchId)
+      root.put("n", snap.n)
+      val c = root.putObject("counts")
+      snap.counts.foreach { case (item, cnt) => c.put(item, cnt) }
+    },
+    decode = node => {
+      val counts = scala.collection.mutable.Map.empty[String, Long]
+      val it = node.get("counts").fields()
+      while (it.hasNext) {
+        val e = it.next(); counts.put(e.getKey, e.getValue.asLong())
+      }
+      MgSnapshot(node.get("k").asInt(), node.get("checkpoint").asText(),
+        node.get("batch_id").asLong(), node.get("n").asLong(),
+        counts.toMap)
+    })
 
   /** Read the persisted state LOCK-FREE; an absent file is the empty
-    * stream. The read protocol ([[graft.core.SwapStateFile.read]],
-    * extracted from here in r13) may COMPLETE a crashed writer's
-    * marker-evidenced swap, believes "empty" only after a stable
-    * double observation, and exhausts LOUDLY under sustained commit
-    * contention — never a phantom-empty snapshot. A consumer needing a
-    * linearizable view without quiescing the stream should use
-    * [[readStateLocked]]. */
+    * stream. The read protocol ([[graft.core.SwapStateFile.read]]) may
+    * COMPLETE a crashed writer's marker-evidenced swap, believes "empty"
+    * only after a stable double observation, and exhausts LOUDLY under
+    * sustained commit contention — never a phantom-empty snapshot. A
+    * consumer needing a linearizable view without quiescing the stream
+    * should use [[readStateLocked]]. */
   def readState(spark: SparkSession, stateDir: String): MgSnapshot =
-    stateFile(spark, stateDir).read(parseSnapshot(stateDir), emptySnapshot)
+    store.read(spark, stateDir)
 
   /** Linearizable read: takes the SAME swap lock the writer's commit
     * rename section holds ([[graft.core.SwapStateFile.readLocked]]), so a
     * monitor polling a hot stream gets a consistent snapshot instead of
     * eventually hitting [[readState]]'s contention error by design. The
     * writer is blocked for the read's duration (one small file); throws
-    * if the lock cannot be obtained within [[FsSwap.LockMaxWaitMs]]. */
+    * if the lock cannot be obtained within [[graft.core.FsSwap.LockMaxWaitMs]]. */
   def readStateLocked(spark: SparkSession, stateDir: String): MgSnapshot =
-    stateFile(spark, stateDir)
-      .readLocked(parseSnapshot(stateDir), emptySnapshot)
-
-  private def writeState(spark: SparkSession, stateDir: String,
-      snap: MgSnapshot): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("k", snap.k)
-    root.put("checkpoint", snap.checkpoint)
-    root.put("batch_id", snap.lastBatchId)
-    root.put("n", snap.n)
-    val c = root.putObject("counts")
-    snap.counts.foreach { case (item, cnt) => c.put(item, cnt) }
-    stateFile(spark, stateDir).write(mapper.writeValueAsBytes(root))
-  }
+    store.readLocked(spark, stateDir)
 
   /** The aggregate's mergeable-summaries reduction, driver-side over the
     * ≤ k persisted counters and a ≤ k batch summary — it IS
@@ -148,39 +118,15 @@ object StreamingHeavyHitters {
     * composed bound the recount's exactness rests on). */
   private[streaming] def checkStateBindings(stLastBatchId: Long,
       stCheckpoint: String, stK: Int, stateDir: String,
-      checkpoint: String, k: Int): Unit = {
+      checkpoint: String, k: Int, face: String = "MG state"): Unit = {
     if (stLastBatchId < 0L) return // fresh state: nothing bound yet
-    if (stCheckpoint != checkpoint)
-      throw new IllegalStateException(
-        s"MG state at $stateDir was folded under checkpoint " +
-          s"'$stCheckpoint' but this stream runs under '$checkpoint' — " +
-          "batch ids restart at 0 per checkpoint, so continuing would " +
-          "skip new data as replays (or double-count on a rewound " +
-          "checkpoint). Use a fresh state dir with a fresh checkpoint")
+    FoldStateStore.checkCheckpoint(face, stateDir, stCheckpoint, checkpoint)
     if (stK != k)
       throw new IllegalStateException(
-        s"MG state at $stateDir was folded with k=$stK but this stream " +
+        s"$face at $stateDir was folded with k=$stK but this stream " +
           s"uses k=$k — mixed-k folds weaken the error bound the exact " +
           "recount rests on. Use a fresh state dir to change k")
   }
-
-  /** The mirror of the checkpoint guard, shared with the grouped fold: a
-    * FRESH state under an already-advanced checkpoint means batches
-    * 0..batchId-1 were committed in the checkpoint and will never be
-    * re-delivered — their items would be permanently missing from a state
-    * claimed exact. */
-  private[streaming] def checkFreshStateVsCheckpoint(stLastBatchId: Long,
-      stateDir: String, batchId: Long,
-      // the guard is shared family-wide; the label must name the CALLER'S
-      // state so the omitted-data diagnostic points at the right operator
-      what: String = "MG state"): Unit =
-    if (stLastBatchId < 0L && batchId > 0L)
-      throw new IllegalStateException(
-        s"$what at $stateDir is empty but the checkpoint resumes at " +
-          s"batch $batchId — batches 0..${batchId - 1} were already " +
-          "committed and will not be re-delivered, so folding from here " +
-          "would silently omit them. Use a fresh checkpoint with a fresh " +
-          "state dir (the source will be re-read from the start)")
 
   /** Apply ONE micro-batch of (doc_id, text) rows to the persisted state:
     * skip if already applied (replay after a crash between state install
@@ -189,28 +135,23 @@ object StreamingHeavyHitters {
     * Returns the state now in effect. */
   private[streaming] def applyBatch(spark: SparkSession, stateDir: String,
       k: Int, checkpoint: String, batch: DataFrame,
-      batchId: Long): MgSnapshot = {
-    val st = readState(spark, stateDir)
-    checkStateBindings(st.lastBatchId, st.checkpoint, st.k,
-      stateDir, checkpoint, k)
-    checkFreshStateVsCheckpoint(st.lastBatchId, stateDir, batchId)
-    if (batchId <= st.lastBatchId) st // replayed batch: already folded
-    else {
-      val row = batch
-        .select(explode(graft.functions.TextFunctions.tokens(col("text")))
-          .as("token"))
-        .agg(HeavyHitters.mgCandidates(k)(col("token")).as("cand"),
-          count(col("token")).as("n"))
-        .head() // bounded: one row, ≤ k candidates
-      val bn = row.getLong(1)
-      val bc = row.getSeq[org.apache.spark.sql.Row](0)
-        .map(r => (r.getString(0), r.getLong(1)))
-      val next = MgSnapshot(k, checkpoint, batchId, st.n + bn,
-        mergeMg(k, st.counts, bc))
-      writeState(spark, stateDir, next)
-      next
-    }
-  }
+      batchId: Long): MgSnapshot =
+    store.applyBatch(spark, stateDir, batchId,
+      st => checkStateBindings(st.lastBatchId, st.checkpoint, st.k,
+        stateDir, checkpoint, k),
+      st => {
+        val row = batch
+          .select(explode(graft.functions.TextFunctions.tokens(col("text")))
+            .as("token"))
+          .agg(HeavyHitters.mgCandidates(k)(col("token")).as("cand"),
+            count(col("token")).as("n"))
+          .head() // bounded: one row, ≤ k candidates
+        val bn = row.getLong(1)
+        val bc = row.getSeq[org.apache.spark.sql.Row](0)
+          .map(r => (r.getString(0), r.getLong(1)))
+        MgSnapshot(k, checkpoint, batchId, st.n + bn,
+          mergeMg(k, st.counts, bc))
+      })
 
   /** Start the stream: parquet (doc_id, text) arrivals under `sourceDir`,
     * folded per micro-batch into the MG state under `stateDir`. Same
@@ -222,54 +163,13 @@ object StreamingHeavyHitters {
       checkpointDir: String, denominator: Long, sketchK: Int = 0,
       maxFilesPerTrigger: Int = 0): StreamingQuery = {
     val k = HeavyHitters.checkedK(sketchK, denominator)
-    val srcSchema = new StructType()
-      .add("doc_id", LongType).add("text", StringType)
-    // refuse non-atomic-rename state filesystems NOW, at the entry point
-    // (the same outermost-chokepoint rule as WriterLease.withLease) —
-    // deferring to the first micro-batch's FsSwap.commit would lay down
-    // checkpoint state and then kill the stream asynchronously. The
-    // FULL open-time guard (r14): the conf-gated functional probe runs
-    // here too (scratch dir under the state dir, same unique-tag
-    // discipline as store open) — an unknown scheme with broken
-    // create/rename primitives must fail stream ENTRY, not the first
-    // state swap after the checkpoint WAL is already down
-    val stateFs = statePath(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.FsCapabilities.assertAtomicRenameAtOpen(stateFs,
-      new Path(stateDir), "streaming heavy-hitters state commit")
-    // FS-qualified so every spelling of one checkpoint ("/x", "file:///x",
-    // "x/" from the same cwd) binds identically — a raw-string identity
-    // would reject a legitimate resume (or accept two different relative
-    // paths that stringify alike)
-    val ckptPath = new Path(checkpointDir)
-    val ckptId = ckptPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(ckptPath).toString
-    // finish any state swap a previous process died inside, BEFORE the
-    // stream starts (an empty source must still leave the state readable)
-    // — and apply the checkpoint/k binding guards HERE, synchronously
-    // (same outermost-chokepoint rule as the FS assert above): deferring
-    // them to the first foreachBatch would lay down checkpoint WAL state
-    // and then kill the stream asynchronously. applyBatch re-checks per
-    // batch for direct callers; only the batchId-dependent fresh-state
-    // guard genuinely belongs there.
-    val st0 = readState(spark, stateDir)
-    checkStateBindings(st0.lastBatchId, st0.checkpoint, st0.k,
-      stateDir, ckptId, k)
-    val reader = spark.readStream.schema(srcSchema)
-    val src =
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(sourceDir)
-      else reader.parquet(sourceDir)
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchShuffleTuning.tune(batch)
-        applyBatch(spark, stateDir, k, ckptId, batch, batchId); ()
-      }
-      .start()
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
+      new StructType().add("doc_id", LongType).add("text", StringType),
+      maxFilesPerTrigger,
+      entryCheck = (st, ckptId) => checkStateBindings(st.lastBatchId,
+        st.checkpoint, st.k, stateDir, ckptId, k),
+      applyB = (batch, batchId, ckptId) =>
+        { applyBatch(spark, stateDir, k, ckptId, batch, batchId); () })
   }
 
   /** Cross-cluster merge — the frequency face of
@@ -287,27 +187,20 @@ object StreamingHeavyHitters {
     * reads, every input folded, a synthetic `merged:[...]` checkpoint
     * that trips the ingest binding, no clobbering. */
   def mergeStates(spark: SparkSession, inDirs: Seq[String],
-      outDir: String): MgSnapshot = {
-    val states = inDirs.map(d => d -> readStateLocked(spark, d))
-    val (ckpt, lastId) = StateMerge.guard(spark, "MG state",
-      "global frequencies", inDirs, outDir, states,
-      (s: MgSnapshot) => s.lastBatchId, (s: MgSnapshot) => s.checkpoint,
-      readState(spark, outDir).lastBatchId)
-    val ks = states.map(_._2.k).distinct
-    if (ks.size > 1)
-      throw new IllegalStateException(
-        "mergeStates: inputs fold different k values " +
-          ks.mkString(", ") +
-          " — mixed-k merges weaken the composed error bound the exact " +
-          "recount rests on; merge only states folded with the same k")
-    val k = ks.head
-    val merged = MgSnapshot(k, ckpt, lastId,
-      states.map(_._2.n).sum,
-      states.map(_._2.counts)
-        .reduce((a, b) => mergeMg(k, a, b.toSeq)))
-    writeState(spark, outDir, merged)
-    merged
-  }
+      outDir: String): MgSnapshot =
+    store.merge(spark, inDirs, outDir, "global frequencies") {
+      (states, ckpt, lastId) =>
+        val k = sameK(states.map(_.k))
+        MgSnapshot(k, ckpt, lastId, states.map(_.n).sum,
+          states.map(_.counts).reduce((a, b) => mergeMg(k, a, b.toSeq)))
+    }
+
+  /** The merge binding refusal shared with the grouped fold: every
+    * input must be folded with the same k. */
+  private[streaming] def sameK(ks: Seq[Int]): Int =
+    StateMerge.sameBinding("k values", ks, (k: Int) => k.toString,
+      "mixed-k merges weaken the composed error bound the exact recount " +
+        "rests on; merge only states folded with the same k")
 
   /** Exact heavy hitters from the folded state: recount the ≤ k candidates
     * over `items` (the stream's full corpus) and keep those at

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import graft.operators.HistogramSketch
 import graft.operators.HistogramSketch.HistogramSpec
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, StructType}
 
 /** Streaming value-distribution profile: per micro-batch one EXACT
@@ -27,12 +25,9 @@ import org.apache.spark.sql.types.{DoubleType, StructType}
   * measured and rejected for this seat — see the [[HistogramSketch]]
   * scaladoc for the numbers.
   *
-  * State durability and exactly-once are [[StreamingHeavyHitters]]'s
-  * protocol verbatim: one JSON state file rewritten per batch through
-  * the [[graft.core.SwapStateFile]] tmp+marker swap, the last-applied
-  * batch id skipping crash replays, the state bound to ONE checkpoint
-  * AND one binning (folding mixed binnings would silently corrupt every
-  * count), both refused loudly at stream entry.
+  * State file, exactly-once and entry-time guards: [[FoldStateStore]].
+  * The state is bound to ONE checkpoint AND one binning (folding mixed
+  * binnings would silently corrupt every count).
   *
   * 100 TB/day posture: per batch one map-side-combined <= nBins+2-key
   * aggregation, O(nBins) driver fold, O(nBins) state file — no per-key
@@ -49,68 +44,67 @@ object StreamingHistogram {
     def overflow: Long = bins.getOrElse(spec.nBins, 0L)
   }
 
-  private def statePath(stateDir: String) =
-    new Path(stateDir, "hist_state.json")
+  private val store = new FoldStateStore[HistSnapshot](
+    "histogram state", "hist_state.json",
+    Seq("lo", "hi", "n_bins", "checkpoint"),
+    HistSnapshot(HistogramSpec(0.0, 1.0, 1), "", -1L, 0L, Map.empty),
+    _.lastBatchId, _.checkpoint,
+    encode = (root, snap) => {
+      putSpec(root, snap.spec)
+      root.put("checkpoint", snap.checkpoint)
+      root.put("batch_id", snap.lastBatchId)
+      root.put("n", snap.n)
+      putBins(root, snap.bins)
+    },
+    decode = node => HistSnapshot(parseSpec(node),
+      node.get("checkpoint").asText(), node.get("batch_id").asLong(),
+      node.get("n").asLong(), parseBins(node)))
 
-  private def stateFile(spark: SparkSession, stateDir: String) = {
-    val p = statePath(stateDir)
-    new graft.core.SwapStateFile(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      stateDir, p.getName, "hist_state.swap.inprogress", "histogram state")
+  /** The binning fields, shared by the three histogram faces. */
+  private[streaming] def putSpec(
+      into: com.fasterxml.jackson.databind.node.ObjectNode,
+      spec: HistogramSpec): Unit = {
+    into.put("lo", spec.lo)
+    into.put("hi", spec.hi)
+    into.put("n_bins", spec.nBins)
   }
 
-  private def emptySnapshot =
-    HistSnapshot(HistogramSpec(0.0, 1.0, 1), "", -1L, 0L, Map.empty)
+  private[streaming] def parseSpec(
+      node: com.fasterxml.jackson.databind.JsonNode): HistogramSpec =
+    HistogramSpec(node.get("lo").asDouble(), node.get("hi").asDouble(),
+      node.get("n_bins").asInt())
 
-  private def parseSnapshot(stateDir: String)(txt: String): HistSnapshot = {
-    val node = new ObjectMapper().readTree(txt)
-    if (node.get("lo") == null || node.get("hi") == null ||
-        node.get("n_bins") == null || node.get("checkpoint") == null)
-      throw new IllegalStateException(
-        s"histogram state file ${statePath(stateDir)} lacks the binning/" +
-          "checkpoint binding fields — refusing to guess which stream it " +
-          "belongs to; re-fold from the source with a fresh state dir")
+  /** The `bins` object, shared by the three histogram faces — sorted by
+    * bin for a stable file layout (diffable, digest-friendly). */
+  private[streaming] def putBins(
+      into: com.fasterxml.jackson.databind.node.ObjectNode,
+      bins: Map[Int, Long]): Unit = {
+    val b = into.putObject("bins")
+    bins.toSeq.sortBy(_._1).foreach { case (bin, c) =>
+      b.put(bin.toString, c)
+    }
+  }
+
+  private[streaming] def parseBins(
+      node: com.fasterxml.jackson.databind.JsonNode): Map[Int, Long] = {
     val b = Map.newBuilder[Int, Long]
     val it = node.get("bins").fields()
     while (it.hasNext) {
       val e = it.next(); b += e.getKey.toInt -> e.getValue.asLong()
     }
-    HistSnapshot(
-      HistogramSpec(node.get("lo").asDouble(), node.get("hi").asDouble(),
-        node.get("n_bins").asInt()),
-      node.get("checkpoint").asText(), node.get("batch_id").asLong(),
-      node.get("n").asLong(), b.result())
+    b.result()
   }
 
   /** Lock-free read (the [[graft.core.SwapStateFile.read]] protocol);
     * absent file = empty stream. Monitors on a hot stream should use
     * [[readStateLocked]]. */
   def readState(spark: SparkSession, stateDir: String): HistSnapshot =
-    stateFile(spark, stateDir).read(parseSnapshot(stateDir), emptySnapshot)
+    store.read(spark, stateDir)
 
   /** Linearizable read under the writer's own swap lock
     * ([[graft.core.SwapStateFile.readLocked]]). */
   def readStateLocked(spark: SparkSession, stateDir: String): HistSnapshot =
-    stateFile(spark, stateDir)
-      .readLocked(parseSnapshot(stateDir), emptySnapshot)
-
-  private def writeState(spark: SparkSession, stateDir: String,
-      snap: HistSnapshot): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("lo", snap.spec.lo)
-    root.put("hi", snap.spec.hi)
-    root.put("n_bins", snap.spec.nBins)
-    root.put("checkpoint", snap.checkpoint)
-    root.put("batch_id", snap.lastBatchId)
-    root.put("n", snap.n)
-    val b = root.putObject("bins")
-    // sorted for a stable file layout (diffable, digest-friendly)
-    snap.bins.toSeq.sortBy(_._1).foreach { case (bin, c) =>
-      b.put(bin.toString, c)
-    }
-    stateFile(spark, stateDir).write(mapper.writeValueAsBytes(root))
-  }
+    store.readLocked(spark, stateDir)
 
   /** The checkpoint/binning binding rules — [[StreamingHeavyHitters]]'s
     * rule set with the binning in the k slot, enforced at both
@@ -119,13 +113,7 @@ object StreamingHistogram {
   private[streaming] def checkStateBindings(st: HistSnapshot,
       stateDir: String, checkpoint: String, spec: HistogramSpec): Unit = {
     if (st.lastBatchId < 0L) return
-    if (st.checkpoint != checkpoint)
-      throw new IllegalStateException(
-        s"histogram state at $stateDir was folded under checkpoint " +
-          s"'${st.checkpoint}' but this stream runs under '$checkpoint' " +
-          "— batch ids restart at 0 per checkpoint, so continuing would " +
-          "skip new data as replays (or double-count on a rewound " +
-          "checkpoint). Use a fresh state dir with a fresh checkpoint")
+    store.checkCheckpoint(st, stateDir, checkpoint)
     if (st.spec != spec)
       throw new IllegalStateException(
         s"histogram state at $stateDir was folded with binning " +
@@ -140,29 +128,22 @@ object StreamingHistogram {
     * visible so idempotence and bindings are directly testable. */
   private[streaming] def applyBatch(spark: SparkSession, stateDir: String,
       spec: HistogramSpec, checkpoint: String, batch: DataFrame,
-      valueCol: String, batchId: Long): HistSnapshot = {
-    val st = readState(spark, stateDir)
-    checkStateBindings(st, stateDir, checkpoint, spec)
-    StreamingHeavyHitters.checkFreshStateVsCheckpoint(st.lastBatchId,
-      stateDir, batchId,
-      "histogram state")
-    if (batchId <= st.lastBatchId) st // replayed batch: already folded
-    else {
-      val rows = HistogramSketch.counts(
-        batch.select(col(valueCol).as("v")), "v", spec)
-        .collect() // bounded: <= nBins+2 rows
-      var bins = st.bins
-      var added = 0L
-      rows.foreach { r =>
-        val bin = r.getInt(0); val c = r.getLong(1)
-        bins = bins.updated(bin, bins.getOrElse(bin, 0L) + c)
-        added += c
-      }
-      val next = HistSnapshot(spec, checkpoint, batchId, st.n + added, bins)
-      writeState(spark, stateDir, next)
-      next
-    }
-  }
+      valueCol: String, batchId: Long): HistSnapshot =
+    store.applyBatch(spark, stateDir, batchId,
+      st => checkStateBindings(st, stateDir, checkpoint, spec),
+      st => {
+        val rows = HistogramSketch.counts(
+          batch.select(col(valueCol).as("v")), "v", spec)
+          .collect() // bounded: <= nBins+2 rows
+        var bins = st.bins
+        var added = 0L
+        rows.foreach { r =>
+          val bin = r.getInt(0); val c = r.getLong(1)
+          bins = bins.updated(bin, bins.getOrElse(bin, 0L) + c)
+          added += c
+        }
+        HistSnapshot(spec, checkpoint, batchId, st.n + added, bins)
+      })
 
   /** Cross-cluster merge — the quantile face of
     * [[StreamingMoments.mergeStates]]: combine ≥ 2 independently-folded
@@ -176,29 +157,27 @@ object StreamingHistogram {
     * synthetic `merged:[...]` checkpoint that trips the ingest binding,
     * no clobbering. */
   def mergeStates(spark: SparkSession, inDirs: Seq[String],
-      outDir: String): HistSnapshot = {
-    val states = inDirs.map(d => d -> readStateLocked(spark, d))
-    val (ckpt, lastId) = StateMerge.guard(spark, "histogram state",
-      "global histogram", inDirs, outDir, states,
-      (s: HistSnapshot) => s.lastBatchId, (s: HistSnapshot) => s.checkpoint,
-      readState(spark, outDir).lastBatchId)
-    val specs = states.map(_._2.spec).distinct
-    if (specs.size > 1)
-      throw new IllegalStateException(
-        "mergeStates: inputs fold different binnings " +
-          specs.map(s => s"[${s.lo}, ${s.hi}) x ${s.nBins}").mkString(", ") +
-          " — bin counts are only meaningful relative to their binning; " +
-          "merge only states folded with the identical spec (re-fold " +
-          "divergent regions under one shared binning first)")
-    val bins = scala.collection.mutable.Map.empty[Int, Long]
-    states.foreach { case (_, st) =>
-      st.bins.foreach { case (b, c) => bins.put(b, bins.getOrElse(b, 0L) + c) }
+      outDir: String): HistSnapshot =
+    store.merge(spark, inDirs, outDir, "global histogram") {
+      (states, ckpt, lastId) =>
+        val spec = sameSpec(states.map(_.spec))
+        val bins = scala.collection.mutable.Map.empty[Int, Long]
+        states.foreach { st =>
+          st.bins.foreach { case (b, c) =>
+            bins.put(b, bins.getOrElse(b, 0L) + c) }
+        }
+        HistSnapshot(spec, ckpt, lastId, states.map(_.n).sum,
+          bins.toMap)
     }
-    val merged = HistSnapshot(specs.head, ckpt, lastId,
-      states.map(_._2.n).sum, bins.toMap)
-    writeState(spark, outDir, merged)
-    merged
-  }
+
+  /** The merge binding refusal shared with the grouped fold: every
+    * input must carry the identical binning. */
+  private[streaming] def sameSpec(specs: Seq[HistogramSpec]): HistogramSpec =
+    StateMerge.sameBinding("binnings", specs,
+      (s: HistogramSpec) => s"[${s.lo}, ${s.hi}) x ${s.nBins}",
+      "bin counts are only meaningful relative to their binning; merge " +
+        "only states folded with the identical spec (re-fold divergent " +
+        "regions under one shared binning first)")
 
   /** One-call sample→histogram bootstrap: derive the binning from a
     * STANDING [[StreamingSample]] fold (its ≤ k carried values, read
@@ -247,40 +226,18 @@ object StreamingHistogram {
 
   /** Start the stream: parquet arrivals under `sourceDir` with a DOUBLE
     * `valueCol`, folded per micro-batch into the histogram state under
-    * `stateDir`. Single-stream-per-state-dir contract, non-atomic-rename
-    * refusal AND the conf-gated functional probe at entry — the
-    * [[StreamingHeavyHitters.ingest]] chokepoint discipline verbatim. */
+    * `stateDir`; entry-time guards are [[FoldStateStore.ingest]]'s. */
   def ingest(spark: SparkSession, sourceDir: String, stateDir: String,
       checkpointDir: String, spec: HistogramSpec,
       valueCol: String = "value",
       maxFilesPerTrigger: Int = 0): StreamingQuery = {
-    val srcSchema = new StructType().add(valueCol, DoubleType)
-    val stateFs = statePath(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.FsCapabilities.assertAtomicRenameAtOpen(stateFs,
-      new Path(stateDir), "streaming histogram state commit")
-    val ckptPath = new Path(checkpointDir)
-    val ckptId = ckptPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(ckptPath).toString
-    val st0 = readState(spark, stateDir)
-    checkStateBindings(st0, stateDir, ckptId, spec)
-    val reader = spark.readStream.schema(srcSchema)
-    val src =
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-          .parquet(sourceDir)
-      else reader.parquet(sourceDir)
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchShuffleTuning.tune(batch)
-        applyBatch(spark, stateDir, spec, ckptId, batch, valueCol,
-          batchId); ()
-      }
-      .start()
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
+      new StructType().add(valueCol, DoubleType), maxFilesPerTrigger,
+      entryCheck = (st, ckptId) =>
+        checkStateBindings(st, stateDir, ckptId, spec),
+      applyB = (batch, batchId, ckptId) =>
+        { applyBatch(spark, stateDir, spec, ckptId, batch, valueCol,
+            batchId); () })
   }
 
   /** Interpolated quantile estimates from an already-read snapshot —

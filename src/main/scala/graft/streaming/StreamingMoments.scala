@@ -1,10 +1,8 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import graft.operators.Profile
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
 
 /** Streaming exact moments — the fourth face of the streaming profiling
@@ -30,15 +28,10 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
   * population variance are DERIVED FP views computed from the exact sums
   * at read time, never folded.
   *
-  * State durability and exactly-once are the family protocol verbatim:
-  * one JSON state file through the [[graft.core.SwapStateFile]] tmp+marker
-  * swap, bindings refused loudly at stream entry — (checkpoint, and the
-  * VALUE COLUMN name: folding two different columns into one state would
-  * silently produce the moments of neither, so unlike the histogram
-  * fold's spec-only binding the folded column is part of the state's
-  * identity here — it has no other spec to bind) — replay idempotence off
-  * the last-applied batch id, loud (never phantom-empty) reads,
-  * linearizable [[readStateLocked]] for monitors.
+  * State file, exactly-once and entry-time guards: [[FoldStateStore]].
+  * The bindings are the checkpoint and the VALUE COLUMN name: folding two
+  * different columns into one state would silently produce the moments
+  * of neither, so the folded column is part of the state's identity.
   *
   * 100 TB/day posture: per batch ONE map-side-combined aggregate
   * collapsing to a single row (partials are seven counters per task — no
@@ -94,16 +87,6 @@ object StreamingMoments {
   case class MomentsSnapshot(valueCol: String, checkpoint: String,
       lastBatchId: Long, moments: Moments)
 
-  private val StateName = "moments_state.json"
-
-  private def stateFile(spark: SparkSession, stateDir: String) =
-    new graft.core.SwapStateFile(
-      new Path(stateDir, StateName)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      stateDir, StateName, "moments_state.swap.inprogress", "moments state")
-
-  private def emptySnapshot = MomentsSnapshot("", "", -1L, emptyMoments)
-
   /** JSON field writer shared with the grouped fold — sums as STRINGS
     * (they are exact integers of unbounded width; a JSON double would
     * silently round past 2^53), min/max only when n > 0 (no phantom
@@ -132,51 +115,35 @@ object StreamingMoments {
     else Moments(nRows, nNull, 0L, 0L, BigInt(0), BigInt(0))
   }
 
-  private def parseSnapshot(stateDir: String)(txt: String): MomentsSnapshot = {
-    val node = new ObjectMapper().readTree(txt)
-    if (node.get("value_col") == null || node.get("checkpoint") == null)
-      throw new IllegalStateException(
-        s"moments state file under $stateDir lacks the value_col/" +
-          "checkpoint binding fields — refusing to guess which stream " +
-          "it belongs to; re-fold from the source with a fresh state dir")
-    MomentsSnapshot(node.get("value_col").asText(),
+  private val store = new FoldStateStore[MomentsSnapshot](
+    "moments state", "moments_state.json", Seq("value_col", "checkpoint"),
+    MomentsSnapshot("", "", -1L, emptyMoments), _.lastBatchId,
+    _.checkpoint,
+    encode = (root, snap) => {
+      root.put("value_col", snap.valueCol)
+      root.put("checkpoint", snap.checkpoint)
+      root.put("batch_id", snap.lastBatchId)
+      putMoments(root, snap.moments)
+    },
+    decode = node => MomentsSnapshot(node.get("value_col").asText(),
       node.get("checkpoint").asText(), node.get("batch_id").asLong(),
-      parseMoments(node))
-  }
+      parseMoments(node)))
 
   /** Lock-free read ([[graft.core.SwapStateFile.read]] protocol); absent
     * file = empty stream. Monitors on a hot stream should use
     * [[readStateLocked]]. */
   def readState(spark: SparkSession, stateDir: String): MomentsSnapshot =
-    stateFile(spark, stateDir).read(parseSnapshot(stateDir), emptySnapshot)
+    store.read(spark, stateDir)
 
   /** Linearizable read under the writer's own swap lock. */
   def readStateLocked(spark: SparkSession,
       stateDir: String): MomentsSnapshot =
-    stateFile(spark, stateDir)
-      .readLocked(parseSnapshot(stateDir), emptySnapshot)
-
-  private def writeState(spark: SparkSession, stateDir: String,
-      snap: MomentsSnapshot): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("value_col", snap.valueCol)
-    root.put("checkpoint", snap.checkpoint)
-    root.put("batch_id", snap.lastBatchId)
-    putMoments(root, snap.moments)
-    stateFile(spark, stateDir).write(mapper.writeValueAsBytes(root))
-  }
+    store.readLocked(spark, stateDir)
 
   private[streaming] def checkStateBindings(st: MomentsSnapshot,
       stateDir: String, checkpoint: String, valueCol: String): Unit = {
     if (st.lastBatchId < 0L) return
-    if (st.checkpoint != checkpoint)
-      throw new IllegalStateException(
-        s"moments state at $stateDir was folded under checkpoint " +
-          s"'${st.checkpoint}' but this stream runs under '$checkpoint' " +
-          "— batch ids restart at 0 per checkpoint, so continuing would " +
-          "skip new data as replays (or double-count on a rewound " +
-          "checkpoint). Use a fresh state dir with a fresh checkpoint")
+    store.checkCheckpoint(st, stateDir, checkpoint)
     if (st.valueCol != valueCol)
       throw new IllegalStateException(
         s"moments state at $stateDir was folded over column " +
@@ -214,62 +181,31 @@ object StreamingMoments {
     * visible so idempotence and bindings are directly testable. */
   private[streaming] def applyBatch(spark: SparkSession, stateDir: String,
       checkpoint: String, batch: DataFrame, valueCol: String,
-      batchId: Long): MomentsSnapshot = {
-    val st = readState(spark, stateDir)
-    checkStateBindings(st, stateDir, checkpoint, valueCol)
-    StreamingHeavyHitters.checkFreshStateVsCheckpoint(st.lastBatchId,
-      stateDir, batchId,
-      "moments state")
-    if (batchId <= st.lastBatchId) st // replayed batch: already folded
-    else {
-      // ONE aggregate, ONE row back — Profile.moments IS the per-batch
-      // arithmetic, so the stream and the batch twin cannot drift
-      val bm = momentsFromRow(
-        Profile.moments(batch, valueCol).head(), 0,
-        s"moments fold at $stateDir (batch $batchId)")
-      val next = MomentsSnapshot(valueCol, checkpoint, batchId,
-        mergeMoments(st.moments, bm))
-      writeState(spark, stateDir, next)
-      next
-    }
-  }
+      batchId: Long): MomentsSnapshot =
+    store.applyBatch(spark, stateDir, batchId,
+      st => checkStateBindings(st, stateDir, checkpoint, valueCol),
+      st => {
+        // ONE aggregate, ONE row back — Profile.moments IS the per-batch
+        // arithmetic, so the stream and the batch twin cannot drift
+        val bm = momentsFromRow(
+          Profile.moments(batch, valueCol).head(), 0,
+          s"moments fold at $stateDir (batch $batchId)")
+        MomentsSnapshot(valueCol, checkpoint, batchId,
+          mergeMoments(st.moments, bm))
+      })
 
   /** Start the stream: parquet arrivals under `sourceDir` with a LONG
     * `valueCol`, folded per micro-batch into the moments state under
-    * `stateDir`. Single-stream-per-state-dir contract, non-atomic-rename
-    * refusal AND the conf-gated functional probe at entry, binding checks
-    * before any checkpoint WAL — the family's chokepoint discipline
-    * verbatim. */
+    * `stateDir`; entry-time guards are [[FoldStateStore.ingest]]'s. */
   def ingest(spark: SparkSession, sourceDir: String, stateDir: String,
       checkpointDir: String, valueCol: String = "value",
-      maxFilesPerTrigger: Int = 0): StreamingQuery = {
-    val srcSchema = new StructType().add(valueCol, LongType)
-    val stateFs = new Path(stateDir, StateName)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.FsCapabilities.assertAtomicRenameAtOpen(stateFs,
-      new Path(stateDir), "streaming moments state commit")
-    val ckptPath = new Path(checkpointDir)
-    val ckptId = ckptPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(ckptPath).toString
-    val st0 = readState(spark, stateDir)
-    checkStateBindings(st0, stateDir, ckptId, valueCol)
-    val reader = spark.readStream.schema(srcSchema)
-    val src =
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-          .parquet(sourceDir)
-      else reader.parquet(sourceDir)
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchShuffleTuning.tune(batch)
-        applyBatch(spark, stateDir, ckptId, batch, valueCol, batchId); ()
-      }
-      .start()
-  }
+      maxFilesPerTrigger: Int = 0): StreamingQuery =
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
+      new StructType().add(valueCol, LongType), maxFilesPerTrigger,
+      entryCheck = (st, ckptId) =>
+        checkStateBindings(st, stateDir, ckptId, valueCol),
+      applyB = (batch, batchId, ckptId) =>
+        { applyBatch(spark, stateDir, ckptId, batch, valueCol, batchId); () })
 
   /** The batch twin, for cross-checks: [[Profile.moments]] one-shot over
     * a corpus — the moments the folded state must EQUAL on a drained
@@ -297,25 +233,19 @@ object StreamingMoments {
     * existing checkpoint binding refusal. An outDir already holding a
     * folded state is refused (merges never clobber). */
   def mergeStates(spark: SparkSession, inDirs: Seq[String],
-      outDir: String): MomentsSnapshot = {
-    val states = inDirs.map(d => d -> readStateLocked(spark, d))
-    val (ckpt, lastId) = StateMerge.guard(spark, "moments state",
-      "global profile",
-      inDirs, outDir, states, (s: MomentsSnapshot) => s.lastBatchId,
-      (s: MomentsSnapshot) => s.checkpoint,
-      readState(spark, outDir).lastBatchId)
-    val cols = states.map(_._2.valueCol).distinct
-    if (cols.size > 1)
-      throw new IllegalStateException(
-        "mergeStates: inputs fold different value columns " +
-          cols.mkString("'", "', '", "'") +
-          " — the merged state would be the moments of neither; merge " +
-          "only states folded over the same column")
-    val merged = MomentsSnapshot(cols.head, ckpt, lastId,
-      states.map(_._2.moments).reduce(mergeMoments))
-    writeState(spark, outDir, merged)
-    merged
-  }
+      outDir: String): MomentsSnapshot =
+    store.merge(spark, inDirs, outDir, "global profile") {
+      (states, ckpt, lastId) =>
+        MomentsSnapshot(sameValueCol(states.map(_.valueCol)), ckpt, lastId,
+          states.map(_.moments).reduce(mergeMoments))
+    }
+
+  /** The merge binding refusal shared with the grouped fold: every
+    * input must fold the same value column. */
+  private[streaming] def sameValueCol(cols: Seq[String]): String =
+    StateMerge.sameBinding("value columns", cols, (c: String) => s"'$c'",
+      "the merged state would be the moments of neither; merge only " +
+        "states folded over the same column")
 
   /** The folded state as a one-row relation — counts/min/max as long,
     * the exact sums as decimal(38,0) (loud on the astronomically-remote

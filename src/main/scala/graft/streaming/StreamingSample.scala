@@ -1,11 +1,9 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import graft.functions.TextFunctions
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 /** Streaming deterministic bottom-k sample — the sampling face of the
@@ -36,12 +34,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
   *    boundaries, and duplicates (a re-ingested id carries the same
   *    priority and dedups in the merge).
   *
-  * State durability and exactly-once are the family protocol verbatim:
-  * one JSON state file through the [[graft.core.SwapStateFile]]
-  * tmp+marker swap, (checkpoint, k, salt) bindings refused loudly at
-  * stream entry, replay idempotence off the last-applied batch id, loud
-  * (never phantom-empty) reads, linearizable [[readStateLocked]] for
-  * monitors.
+  * State file, exactly-once and entry-time guards: [[FoldStateStore]];
+  * the bindings are (checkpoint, k, salt).
   *
   * 100 TB/day posture: per batch ONE pass — one TakeOrdered over the
   * salted hash (each task keeps its own bottom-k — no shuffle of rows,
@@ -69,67 +63,57 @@ object StreamingSample {
     def ids: Seq[Long] = entries.map(_.id)
   }
 
-  private val StateName = "sample_state.json"
+  private val store = new FoldStateStore[SampleSnapshot](
+    "sample state", "sample_state.json", Seq("k", "salt", "checkpoint"),
+    SampleSnapshot(-1, "", "", -1L, 0L, Seq.empty), _.lastBatchId,
+    _.checkpoint,
+    encode = (root, snap) => {
+      root.put("k", snap.k)
+      root.put("salt", snap.salt)
+      root.put("checkpoint", snap.checkpoint)
+      root.put("batch_id", snap.lastBatchId)
+      root.put("n_seen", snap.nSeen)
+      putEntries(root.putArray("entries"), snap.entries)
+    },
+    decode = node => SampleSnapshot(node.get("k").asInt(),
+      node.get("salt").asText(), node.get("checkpoint").asText(),
+      node.get("batch_id").asLong(), node.get("n_seen").asLong(),
+      parseEntries(node.get("entries"))))
 
-  private def stateFile(spark: SparkSession, stateDir: String) =
-    new graft.core.SwapStateFile(
-      new Path(stateDir, StateName)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      stateDir, StateName, "sample_state.swap.inprogress", "sample state")
+  /** JSON entry codec shared with the grouped fold: (key, id[, value]),
+    * the value omitted when the row carried none. */
+  private[streaming] def putEntries(
+      arr: com.fasterxml.jackson.databind.node.ArrayNode,
+      entries: Seq[SampleEntry]): Unit =
+    entries.foreach { e =>
+      val n = arr.addObject()
+      n.put("key", e.key)
+      n.put("id", e.id)
+      e.value.foreach(v => n.put("value", v))
+    }
 
-  private def emptySnapshot =
-    SampleSnapshot(-1, "", "", -1L, 0L, Seq.empty)
-
-  private def parseSnapshot(stateDir: String)(txt: String): SampleSnapshot = {
-    val node = new ObjectMapper().readTree(txt)
-    if (node.get("k") == null || node.get("salt") == null ||
-        node.get("checkpoint") == null)
-      throw new IllegalStateException(
-        s"sample state file under $stateDir lacks the k/salt/checkpoint " +
-          "binding fields — refusing to guess which stream it belongs " +
-          "to; re-fold from the source with a fresh state dir")
+  private[streaming] def parseEntries(
+      arr: com.fasterxml.jackson.databind.JsonNode): Seq[SampleEntry] = {
     val es = Seq.newBuilder[SampleEntry]
-    val it = node.get("entries").elements()
+    val it = arr.elements()
     while (it.hasNext) {
       val e = it.next()
       es += SampleEntry(e.get("key").asLong(), e.get("id").asLong(),
         if (e.hasNonNull("value")) Some(e.get("value").asDouble()) else None)
     }
-    SampleSnapshot(node.get("k").asInt(), node.get("salt").asText(),
-      node.get("checkpoint").asText(), node.get("batch_id").asLong(),
-      node.get("n_seen").asLong(), es.result())
+    es.result()
   }
 
   /** Lock-free read ([[graft.core.SwapStateFile.read]] protocol); absent
     * file = empty stream. Monitors on a hot stream should use
     * [[readStateLocked]]. */
   def readState(spark: SparkSession, stateDir: String): SampleSnapshot =
-    stateFile(spark, stateDir).read(parseSnapshot(stateDir), emptySnapshot)
+    store.read(spark, stateDir)
 
   /** Linearizable read under the writer's own swap lock. */
   def readStateLocked(spark: SparkSession,
       stateDir: String): SampleSnapshot =
-    stateFile(spark, stateDir)
-      .readLocked(parseSnapshot(stateDir), emptySnapshot)
-
-  private def writeState(spark: SparkSession, stateDir: String,
-      snap: SampleSnapshot): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("k", snap.k)
-    root.put("salt", snap.salt)
-    root.put("checkpoint", snap.checkpoint)
-    root.put("batch_id", snap.lastBatchId)
-    root.put("n_seen", snap.nSeen)
-    val arr = root.putArray("entries")
-    snap.entries.foreach { e =>
-      val n = arr.addObject()
-      n.put("key", e.key)
-      n.put("id", e.id)
-      e.value.foreach(v => n.put("value", v))
-    }
-    stateFile(spark, stateDir).write(mapper.writeValueAsBytes(root))
-  }
+    store.readLocked(spark, stateDir)
 
   /** The salted-hash priority — ONE definition with the batch sampling
     * primitive (md5-derived, engine-stable): DuckDB replays it as
@@ -151,13 +135,7 @@ object StreamingSample {
   private[streaming] def checkStateBindings(st: SampleSnapshot,
       stateDir: String, checkpoint: String, k: Int, salt: String): Unit = {
     if (st.lastBatchId < 0L) return
-    if (st.checkpoint != checkpoint)
-      throw new IllegalStateException(
-        s"sample state at $stateDir was folded under checkpoint " +
-          s"'${st.checkpoint}' but this stream runs under '$checkpoint' " +
-          "— batch ids restart at 0 per checkpoint, so continuing would " +
-          "skip new data as replays (or double-count on a rewound " +
-          "checkpoint). Use a fresh state dir with a fresh checkpoint")
+    store.checkCheckpoint(st, stateDir, checkpoint)
     if (st.k != k || st.salt != salt)
       throw new IllegalStateException(
         s"sample state at $stateDir was folded with (k=${st.k}, " +
@@ -171,91 +149,63 @@ object StreamingSample {
     * Package-visible so idempotence and bindings are directly testable. */
   private[streaming] def applyBatch(spark: SparkSession, stateDir: String,
       k: Int, salt: String, checkpoint: String, batch: DataFrame,
-      idCol: String, valueCol: Option[String], batchId: Long): SampleSnapshot = {
-    val st = readState(spark, stateDir)
-    checkStateBindings(st, stateDir, checkpoint, k, salt)
-    StreamingHeavyHitters.checkFreshStateVsCheckpoint(st.lastBatchId,
-      stateDir, batchId,
-      "sample state")
-    if (batchId <= st.lastBatchId) st // replayed batch: already folded
-    else {
-      // nSeen rides the SAME pass as the bottom-k: a CollectMetrics node
-      // (Dataset.observe) under the dedup counts every row as it flows
-      // through the scan — a separate batch.count() would read each
-      // batch's source files twice, doubling the per-batch scan cost the
-      // 100 TB/day posture prices at one TakeOrdered
-      val nSeenObs = org.apache.spark.sql.Observation()
-      val keyed = batch.select(
-          priority(col(idCol), salt).as("__key"),
-          col(idCol).cast("long").as("__id"),
-          valueCol.map(v => col(v).cast("double"))
-            .getOrElse(lit(null).cast(DoubleType)).as("__value"))
-        .observe(nSeenObs, count(lit(1)).as("n_rows"))
-      // dedup by id FIRST: duplicate ids inside one batch would otherwise
-      // occupy several of the k bottom slots and the fold could end up
-      // holding fewer distinct ids than the batch twin — the equality the
-      // family's exactness story rests on. (Duplicates of an id carry the
-      // same priority and, by the stable-identity contract, the same
-      // value.) NULL ids are excluded — no identity, nothing to sample —
-      // though they still count toward nSeen (arrival observability);
-      // without the filter a null id would sort FIRST (null key) and
-      // permanently occupy a bottom slot, and the state write would
-      // crash on the missing long. Then TakeOrderedAndProject: each task
-      // keeps its own bottom-k, the driver merges ≤ k rows.
-      val bottom = keyed.filter(col("__id").isNotNull)
-        .dropDuplicates("__id")
-        .orderBy(col("__key"), col("__id")).limit(k)
-        .collect()
-        .map(r => SampleEntry(r.getLong(0), r.getLong(1),
-          if (r.isNullAt(2)) None else Some(r.getDouble(2))))
-      val bn = nSeenObs.get("n_rows").asInstanceOf[Long]
-      val next = SampleSnapshot(k, salt, checkpoint, batchId,
-        st.nSeen + bn, mergeBottomK(k, st.entries, bottom))
-      writeState(spark, stateDir, next)
-      next
-    }
-  }
+      idCol: String, valueCol: Option[String], batchId: Long): SampleSnapshot =
+    store.applyBatch(spark, stateDir, batchId,
+      st => checkStateBindings(st, stateDir, checkpoint, k, salt),
+      st => {
+        // nSeen rides the SAME pass as the bottom-k: a CollectMetrics node
+        // (Dataset.observe) under the dedup counts every row as it flows
+        // through the scan — a separate batch.count() would read each
+        // batch's source files twice, doubling the per-batch scan cost the
+        // 100 TB/day posture prices at one TakeOrdered
+        val nSeenObs = org.apache.spark.sql.Observation()
+        val keyed = batch.select(
+            priority(col(idCol), salt).as("__key"),
+            col(idCol).cast("long").as("__id"),
+            valueCol.map(v => col(v).cast("double"))
+              .getOrElse(lit(null).cast(DoubleType)).as("__value"))
+          .observe(nSeenObs, count(lit(1)).as("n_rows"))
+        // dedup by id FIRST: duplicate ids inside one batch would otherwise
+        // occupy several of the k bottom slots and the fold could end up
+        // holding fewer distinct ids than the batch twin — the equality the
+        // family's exactness story rests on. (Duplicates of an id carry the
+        // same priority and, by the stable-identity contract, the same
+        // value.) NULL ids are excluded — no identity, nothing to sample —
+        // though they still count toward nSeen (arrival observability);
+        // without the filter a null id would sort FIRST (null key) and
+        // permanently occupy a bottom slot, and the state write would
+        // crash on the missing long. Then TakeOrderedAndProject: each task
+        // keeps its own bottom-k, the driver merges ≤ k rows.
+        val bottom = keyed.filter(col("__id").isNotNull)
+          .dropDuplicates("__id")
+          .orderBy(col("__key"), col("__id")).limit(k)
+          .collect()
+          .map(r => SampleEntry(r.getLong(0), r.getLong(1),
+            if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+        val bn = nSeenObs.get("n_rows").asInstanceOf[Long]
+        SampleSnapshot(k, salt, checkpoint, batchId,
+          st.nSeen + bn, mergeBottomK(k, st.entries, bottom))
+      })
 
   /** Start the stream: parquet arrivals under `sourceDir` with a LONG
     * `idCol` (and optionally a DOUBLE `valueCol` payload to carry with
     * each sampled id), folded per micro-batch into the bottom-k sample
-    * state under `stateDir`. Single-stream-per-state-dir contract,
-    * non-atomic-rename refusal AND the conf-gated functional probe at
-    * entry, binding checks before any checkpoint WAL — the family's
-    * chokepoint discipline verbatim. */
+    * state under `stateDir`; entry-time guards are
+    * [[FoldStateStore.ingest]]'s. */
   def ingest(spark: SparkSession, sourceDir: String, stateDir: String,
       checkpointDir: String, k: Int, salt: String = "sample",
       idCol: String = "doc_id", valueCol: Option[String] = None,
       maxFilesPerTrigger: Int = 0): StreamingQuery = {
     require(k > 0, s"sample size k must be positive, got $k")
-    val srcSchema = valueCol.foldLeft(
-      new StructType().add(idCol, LongType))((s, v) => s.add(v, DoubleType))
-    val stateFs = new Path(stateDir, StateName)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.FsCapabilities.assertAtomicRenameAtOpen(stateFs,
-      new Path(stateDir), "streaming sample state commit")
-    val ckptPath = new Path(checkpointDir)
-    val ckptId = ckptPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(ckptPath).toString
-    val st0 = readState(spark, stateDir)
-    checkStateBindings(st0, stateDir, ckptId, k, salt)
-    val reader = spark.readStream.schema(srcSchema)
-    val src =
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-          .parquet(sourceDir)
-      else reader.parquet(sourceDir)
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchShuffleTuning.tune(batch)
-        applyBatch(spark, stateDir, k, salt, ckptId, batch, idCol,
-          valueCol, batchId); ()
-      }
-      .start()
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
+      valueCol.foldLeft(new StructType().add(idCol, LongType))(
+        (s, v) => s.add(v, DoubleType)),
+      maxFilesPerTrigger,
+      entryCheck = (st, ckptId) =>
+        checkStateBindings(st, stateDir, ckptId, k, salt),
+      applyB = (batch, batchId, ckptId) =>
+        { applyBatch(spark, stateDir, k, salt, ckptId, batch, idCol,
+            valueCol, batchId); () })
   }
 
   /** Cross-cluster merge — the sampling face of
@@ -278,27 +228,22 @@ object StreamingSample {
     * `merged:[...]` checkpoint that trips the ingest binding, no
     * clobbering. */
   def mergeStates(spark: SparkSession, inDirs: Seq[String],
-      outDir: String): SampleSnapshot = {
-    val states = inDirs.map(d => d -> readStateLocked(spark, d))
-    val (ckpt, lastId) = StateMerge.guard(spark, "sample state", "global sample",
-      inDirs, outDir, states, (s: SampleSnapshot) => s.lastBatchId,
-      (s: SampleSnapshot) => s.checkpoint,
-      readState(spark, outDir).lastBatchId)
-    val bindings = states.map(s => (s._2.k, s._2.salt)).distinct
-    if (bindings.size > 1)
-      throw new IllegalStateException(
-        "mergeStates: inputs fold different (k, salt) bindings " +
-          bindings.map(b => s"(k=${b._1}, salt='${b._2}')").mkString(", ") +
-          " — bottom-k sets are only comparable under identical " +
-          "priorities and budgets; merge only states folded with the " +
-          "same (k, salt)")
-    val (k, salt) = bindings.head
-    val merged = SampleSnapshot(k, salt, ckpt, lastId,
-      states.map(_._2.nSeen).sum,
-      states.map(_._2.entries).reduce(mergeBottomK(k, _, _)))
-    writeState(spark, outDir, merged)
-    merged
-  }
+      outDir: String): SampleSnapshot =
+    store.merge(spark, inDirs, outDir, "global sample") {
+      (states, ckpt, lastId) =>
+        val (k, salt) = sameKSalt(states.map(s => (s.k, s.salt)))
+        SampleSnapshot(k, salt, ckpt, lastId, states.map(_.nSeen).sum,
+          states.map(_.entries).reduce(mergeBottomK(k, _, _)))
+    }
+
+  /** The merge binding refusal shared with the grouped fold: every
+    * input must carry the same (k, salt). */
+  private[streaming] def sameKSalt(
+      bindings: Seq[(Int, String)]): (Int, String) =
+    StateMerge.sameBinding("(k, salt) bindings", bindings,
+      (b: (Int, String)) => s"(k=${b._1}, salt='${b._2}')",
+      "bottom-k sets are only comparable under identical priorities and " +
+        "budgets; merge only states folded with the same (k, salt)")
 
   /** The folded sample as a (id LONG, value DOUBLE) local relation — the
     * direct feed for [[graft.operators.HistogramSketch.fromSample]] (its

@@ -5,14 +5,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Sliding-window cardinality — the cardinality face's TIME dimension
-  * and the THIRD instantiation of the ring design (the one whose
-  * arrival promoted the shared state-file scaffold into
-  * [[RingStateStore]], per [[WindowedRing]]'s own documented
-  * threshold): "distinct ids seen in the last N micro-batches" is the
-  * trending-cardinality monitor — an all-time distinct count over a
-  * year of arrivals is numb to a crawler that started replaying one
-  * domain an hour ago, while the windowed estimate dropping toward the
-  * per-batch volume IS that signal.
+  * on the [[WindowedRing]] design: "distinct ids seen in the last N
+  * micro-batches" is the trending-cardinality monitor — an all-time
+  * distinct count over a year of arrivals is numb to a crawler that
+  * started replaying one domain an hour ago, while the windowed
+  * estimate dropping toward the per-batch volume IS that signal.
   *
   * The ring keeps the newest `window` batches' OWN fixed-size HLL
   * sketches (plus each batch's exact row/null counters); the served
@@ -30,8 +27,8 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * Bindings are the family's plus (lgK, valueCol) — the flat
   * cardinality fold's identity rule — and the window width. Empty
   * batches occupy a slot (the window counts ingest time, not rows).
-  * State: window × (two counters + one ≤ O(2^lgK) sketch) through the
-  * shared [[RingStateStore]] scaffold.
+  * State: window × (two counters + one ≤ O(2^lgK) sketch) through
+  * [[FoldStateStore]].
   *
   * 100 TB/day posture: per batch ONE map-side-combined sketch aggregate
   * (fixed-size partials, never values), one O(window × 2^lgK) driver
@@ -79,12 +76,12 @@ object StreamingWindowedDistinct {
       StreamingDistinct.estimateOf(aggregateSketch)
   }
 
-  private val store = new RingStateStore[WindowedDistinctSnapshot](
-    "windowed distinct state", "distinct_window_state.json",
-    "distinct_window_state.swap.inprogress",
+  private val store = new FoldStateStore[WindowedDistinctSnapshot](
+    "windowed distinct state",
+    WindowedRing.registered("distinct_window_state.json"),
     Seq("lg_k", "value_col", "checkpoint", "window"),
     WindowedDistinctSnapshot(-1, "", "", -1, -1L, Seq.empty),
-    _.lastBatchId,
+    _.lastBatchId, _.checkpoint,
     encode = (root, snap) => {
       root.put("lg_k", snap.lgK)
       root.put("value_col", snap.valueCol)
@@ -95,10 +92,7 @@ object StreamingWindowedDistinct {
       snap.ring.foreach { case (bid, slot) =>
         val e = arr.addObject()
         e.put("batch_id", bid)
-        e.put("n_rows", slot.nRows)
-        e.put("n_null", slot.nNull)
-        e.put("sketch",
-          java.util.Base64.getEncoder.encodeToString(slot.sketch))
+        StreamingDistinct.putCounters(e, slot.nRows, slot.nNull, slot.sketch)
       }
     },
     decode = node => {
@@ -108,9 +102,7 @@ object StreamingWindowedDistinct {
         val e = it.next()
         ring += e.get("batch_id").asLong() -> BatchSlot(
           e.get("n_rows").asLong(), e.get("n_null").asLong(),
-          Option(e.get("sketch")).map(_.asText()).filter(_.nonEmpty)
-            .map(java.util.Base64.getDecoder.decode)
-            .getOrElse(Array.empty))
+          StreamingDistinct.parseSketch(e))
       }
       WindowedDistinctSnapshot(node.get("lg_k").asInt(),
         node.get("value_col").asText(), node.get("checkpoint").asText(),
@@ -176,7 +168,8 @@ object StreamingWindowedDistinct {
       maxFilesPerTrigger: Int = 0): StreamingQuery = {
     require(lgK >= 4 && lgK <= 21,
       s"lgK must be in the sketch's supported [4, 21], got $lgK")
-    store.ingest(spark, sourceDir, stateDir, checkpointDir, window,
+    WindowedRing.requireWindow(window)
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
       new StructType().add(valueCol, StringType), maxFilesPerTrigger,
       entryCheck = (st, ckptId) =>
         checkStateBindings(st, stateDir, ckptId, lgK, valueCol, window),

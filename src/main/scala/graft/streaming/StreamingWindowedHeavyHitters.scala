@@ -7,12 +7,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** Sliding-window heavy hitters — "trending NOW": the frequency face's
-  * TIME dimension and the ring design's FOURTH instantiation on the
-  * promoted [[RingStateStore]] scaffold. The all-time MG fold answers
-  * "the most frequent tokens ever"; a trending monitor wants "the most
-  * frequent tokens of the last N micro-batches" — an all-time list over
-  * a year of arrivals is numb to a token that started dominating an
-  * hour ago, while the windowed list IS that signal.
+  * TIME dimension on the [[WindowedRing]] design, state through
+  * [[FoldStateStore]]. The all-time MG fold answers "the most frequent
+  * tokens ever"; a trending monitor wants "the most frequent tokens of
+  * the last N micro-batches" — an all-time list over a year of arrivals
+  * is numb to a token that started dominating an hour ago, while the
+  * windowed list IS that signal.
   *
   * The ring keeps the newest `window` batches' OWN ≤ k-entry MG
   * summaries (each one `misra_gries` aggregation over that batch's
@@ -70,12 +70,12 @@ object StreamingWindowedHeavyHitters {
         .reduce((a, b) => StreamingHeavyHitters.mergeMg(k, a, b.toSeq))
   }
 
-  private val store = new RingStateStore[WindowedMgSnapshot](
-    "windowed MG state", "mg_window_state.json",
-    "mg_window_state.swap.inprogress",
+  private val store = new FoldStateStore[WindowedMgSnapshot](
+    "windowed MG state",
+    WindowedRing.registered("mg_window_state.json"),
     Seq("k", "checkpoint", "window"),
     WindowedMgSnapshot(-1, "", -1, -1L, Seq.empty),
-    _.lastBatchId,
+    _.lastBatchId, _.checkpoint,
     encode = (root, snap) => {
       root.put("k", snap.k)
       root.put("checkpoint", snap.checkpoint)
@@ -170,7 +170,8 @@ object StreamingWindowedHeavyHitters {
       checkpointDir: String, denominator: Long, window: Int,
       sketchK: Int = 0, maxFilesPerTrigger: Int = 0): StreamingQuery = {
     val k = HeavyHitters.checkedK(sketchK, denominator)
-    store.ingest(spark, sourceDir, stateDir, checkpointDir, window,
+    WindowedRing.requireWindow(window)
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
       new StructType().add("doc_id", LongType).add("text", StringType),
       maxFilesPerTrigger,
       entryCheck = (st, ckptId) =>

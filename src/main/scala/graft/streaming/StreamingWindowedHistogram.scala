@@ -26,9 +26,7 @@ import org.apache.spark.sql.types.{DoubleType, StructType}
   * (a window-6 state is not comparable to a window-3 one; counts are
   * meaningless under any other binning). Empty batches occupy a slot —
   * the window counts ingest time, not rows. State: window × (≤ nBins+2)
-  * exact cells through the shared [[RingStateStore]] scaffold (swap
-  * protocol, replay idempotence, loud reads, linearizable
-  * [[readStateLocked]]).
+  * exact cells through [[FoldStateStore]].
   *
   * 100 TB/day posture: per batch ONE ≤ nBins+2-key aggregation
   * (map-side combined), one O(window × bins) driver re-reduce, one
@@ -54,17 +52,15 @@ object StreamingWindowedHistogram {
     }
   }
 
-  private val store = new RingStateStore[WindowedHistSnapshot](
-    "windowed histogram state", "hist_window_state.json",
-    "hist_window_state.swap.inprogress",
+  private val store = new FoldStateStore[WindowedHistSnapshot](
+    "windowed histogram state",
+    WindowedRing.registered("hist_window_state.json"),
     Seq("lo", "hi", "n_bins", "checkpoint", "window"),
     WindowedHistSnapshot(HistogramSpec(0.0, 1.0, 1), "", -1, -1L,
       Seq.empty),
-    _.lastBatchId,
+    _.lastBatchId, _.checkpoint,
     encode = (root, snap) => {
-      root.put("lo", snap.spec.lo)
-      root.put("hi", snap.spec.hi)
-      root.put("n_bins", snap.spec.nBins)
+      StreamingHistogram.putSpec(root, snap.spec)
       root.put("checkpoint", snap.checkpoint)
       root.put("window", snap.window)
       root.put("batch_id", snap.lastBatchId)
@@ -73,9 +69,7 @@ object StreamingWindowedHistogram {
         val e = arr.addObject()
         e.put("batch_id", bid)
         e.put("n", n)
-        val b = e.putObject("bins")
-        bins.toSeq.sortBy(_._1).foreach { case (bin, c) =>
-          b.put(bin.toString, c) }
+        StreamingHistogram.putBins(e, bins)
       }
     },
     decode = node => {
@@ -83,18 +77,10 @@ object StreamingWindowedHistogram {
       val it = node.get("ring").elements()
       while (it.hasNext) {
         val e = it.next()
-        val bins = Map.newBuilder[Int, Long]
-        val bit = e.get("bins").fields()
-        while (bit.hasNext) {
-          val be = bit.next()
-          bins += be.getKey.toInt -> be.getValue.asLong()
-        }
         ring += ((e.get("batch_id").asLong(), e.get("n").asLong(),
-          bins.result()))
+          StreamingHistogram.parseBins(e)))
       }
-      WindowedHistSnapshot(
-        HistogramSpec(node.get("lo").asDouble(), node.get("hi").asDouble(),
-          node.get("n_bins").asInt()),
+      WindowedHistSnapshot(StreamingHistogram.parseSpec(node),
         node.get("checkpoint").asText(), node.get("window").asInt(),
         node.get("batch_id").asLong(), ring.result())
     })
@@ -153,14 +139,16 @@ object StreamingWindowedHistogram {
   def ingest(spark: SparkSession, sourceDir: String, stateDir: String,
       checkpointDir: String, spec: HistogramSpec, window: Int,
       valueCol: String = "value",
-      maxFilesPerTrigger: Int = 0): StreamingQuery =
-    store.ingest(spark, sourceDir, stateDir, checkpointDir, window,
+      maxFilesPerTrigger: Int = 0): StreamingQuery = {
+    WindowedRing.requireWindow(window)
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
       new StructType().add(valueCol, DoubleType), maxFilesPerTrigger,
       entryCheck = (st, ckptId) =>
         checkStateBindings(st, stateDir, ckptId, spec, window),
       applyB = (batch, batchId, ckptId) =>
         { applyBatch(spark, stateDir, spec, window, ckptId, batch,
             valueCol, batchId); () })
+  }
 
   /** Ring states cannot be cross-cluster merged — refused loudly with
     * the real reason ([[WindowedRing.refuseMerge]]). */

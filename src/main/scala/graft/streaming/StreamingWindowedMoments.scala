@@ -27,19 +27,16 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *
   * The same ring design generalizes to any face whose per-batch summary
   * is bounded (per-batch histograms, HLL sketches, MG summaries: keep
-  * the ring, re-merge over it); the state-file scaffold every windowed
-  * face shares lives in [[RingStateStore]] (promoted at the documented
-  * third-instantiation threshold — [[StreamingWindowedDistinct]]); this
-  * face keeps only its own codec, bindings, and per-batch arithmetic.
+  * the ring, re-merge over it); the state file goes through
+  * [[FoldStateStore]] like every other fold, so this face keeps only its
+  * own codec, bindings, and per-batch arithmetic.
   *
-  * State protocol is the family's verbatim: SwapStateFile swap, bindings
-  * refused loudly — (checkpoint, valueCol, AND the window width: a
+  * The bindings are (checkpoint, valueCol, AND the window width: a
   * state folded at window 6 is not comparable to one at window 3, so
-  * the width is part of the state's identity) — replay idempotence off
-  * the last applied batch id, loud reads, linearizable
-  * [[readStateLocked]]. Empty micro-batches occupy a slot (the window
-  * counts BATCHES, i.e. ingest time, not rows — a quiet hour showing up
-  * as a shrunken n IS the signal a rate monitor wants).
+  * the width is part of the state's identity). Empty micro-batches
+  * occupy a slot (the window counts BATCHES, i.e. ingest time, not rows
+  * — a quiet hour showing up as a shrunken n IS the signal a rate
+  * monitor wants).
   *
   * 100 TB/day posture: per batch ONE map-side-combined aggregate
   * collapsing to a single row, one O(window) driver re-reduce, one
@@ -58,12 +55,12 @@ object StreamingWindowedMoments {
       else ring.map(_._2).reduce(mergeMoments)
   }
 
-  private val store = new RingStateStore[WindowedMomentsSnapshot](
-    "windowed moments state", "moments_window_state.json",
-    "moments_window_state.swap.inprogress",
+  private val store = new FoldStateStore[WindowedMomentsSnapshot](
+    "windowed moments state",
+    WindowedRing.registered("moments_window_state.json"),
     Seq("value_col", "checkpoint", "window"),
     WindowedMomentsSnapshot("", "", -1, -1L, Seq.empty),
-    _.lastBatchId,
+    _.lastBatchId, _.checkpoint,
     encode = (root, snap) => {
       root.put("value_col", snap.valueCol)
       root.put("checkpoint", snap.checkpoint)
@@ -140,14 +137,16 @@ object StreamingWindowedMoments {
     * the rest of the family. */
   def ingest(spark: SparkSession, sourceDir: String, stateDir: String,
       checkpointDir: String, window: Int, valueCol: String = "value",
-      maxFilesPerTrigger: Int = 0): StreamingQuery =
-    store.ingest(spark, sourceDir, stateDir, checkpointDir, window,
+      maxFilesPerTrigger: Int = 0): StreamingQuery = {
+    WindowedRing.requireWindow(window)
+    store.ingest(spark, sourceDir, stateDir, checkpointDir,
       new StructType().add(valueCol, LongType), maxFilesPerTrigger,
       entryCheck = (st, ckptId) =>
         checkStateBindings(st, stateDir, ckptId, valueCol, window),
       applyB = (batch, batchId, ckptId) =>
         { applyBatch(spark, stateDir, window, ckptId, batch, valueCol,
             batchId); () })
+  }
 
   /** Ring states cannot be cross-cluster merged — refused loudly with
     * the real reason ([[WindowedRing.refuseMerge]]: non-aligned batch

@@ -1,15 +1,13 @@
 package graft.streaming
 
-/** The sliding-window ring CONTRACT — one implementation of the pieces
-  * every windowed face must agree on, so the refusal messages and the
-  * eviction rule cannot drift between instantiations
-  * ([[StreamingWindowedMoments]], [[StreamingWindowedHistogram]], and
-  * any future ring over bounded per-batch summaries — HLL registers, MG
-  * counters). Face-specific state IO (the payload and binding codecs)
-  * stays with each face, where the types genuinely differ; a THIRD
-  * instantiation should promote the whole state-file scaffold (parse/
-  * write/read/applyBatch skeleton) into a generic ring store — two
-  * faces' worth of duplication is the documented threshold. */
+/** The sliding-window ring contract: the pieces every windowed face
+  * ([[StreamingWindowedMoments]], [[StreamingWindowedHistogram]],
+  * [[StreamingWindowedDistinct]], [[StreamingWindowedHeavyHitters]])
+  * must agree on, so the refusal messages and the eviction rule cannot
+  * drift between them — the window-width validation, the ring file-name
+  * registry [[StateMerge]] probes, the merge refusal, the common
+  * bindings and the slide. The state file itself goes through the same
+  * [[FoldStateStore]] as every all-time face. */
 private[streaming] object WindowedRing {
 
   /** Every ring state file name — [[StateMerge]] probes these so a
@@ -19,6 +17,16 @@ private[streaming] object WindowedRing {
   val StateFileNames: Seq[String] = Seq("moments_window_state.json",
     "hist_window_state.json", "distinct_window_state.json",
     "mg_window_state.json")
+
+  /** A ring face's state file name, checked against
+    * [[StateFileNames]] when the face's store is built. */
+  def registered(stateName: String): String = {
+    require(StateFileNames.contains(stateName),
+      s"ring state file '$stateName' must be registered in " +
+        "WindowedRing.StateFileNames (the StateMerge ring probe reads " +
+        "that list)")
+    stateName
+  }
 
   def requireWindow(window: Int): Unit =
     require(window > 0, s"window must be positive, got $window")
@@ -45,13 +53,7 @@ private[streaming] object WindowedRing {
   def checkCommonBindings(face: String, stateDir: String,
       stCheckpoint: String, checkpoint: String, stWindow: Int,
       window: Int): Unit = {
-    if (stCheckpoint != checkpoint)
-      throw new IllegalStateException(
-        s"$face at $stateDir was folded under checkpoint " +
-          s"'$stCheckpoint' but this stream runs under '$checkpoint' — " +
-          "batch ids restart at 0 per checkpoint, so continuing would " +
-          "skip new data as replays (or double-count on a rewound " +
-          "checkpoint). Use a fresh state dir with a fresh checkpoint")
+    FoldStateStore.checkCheckpoint(face, stateDir, stCheckpoint, checkpoint)
     if (stWindow != window)
       throw new IllegalStateException(
         s"$face at $stateDir was folded at window=$stWindow but this " +

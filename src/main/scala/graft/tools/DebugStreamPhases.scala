@@ -64,27 +64,6 @@ object DebugStreamPhases {
       } finally org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(tmp))
     }
-    // tuner A/B (VERDICT r17 item 7): the same fold, 3 passes each with
-    // BatchShuffleTuning on vs off — demonstrates (or honestly bounds)
-    // the clamp's local effect instead of arguing it
-    for (enabled <- Seq("true", "false", "true", "false")) {
-      spark.conf.set("spark.graft.streaming.batchShuffleTuning.enabled", enabled)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_dbgphase_ab_").toString
-      try {
-        val docs = Tables.load(spark, sfDir, "documents")
-          .select(col("doc_id"), col("n_chars").cast("long").as("value"))
-        docs.select(col("value")).repartition(4).write.parquet(s"$tmp/src")
-        t(s"fold drain (tuner=$enabled)") {
-          val q = graft.streaming.StreamingMoments.ingest(spark, s"$tmp/src",
-            s"$tmp/state", s"$tmp/chk", valueCol = "value",
-            maxFilesPerTrigger = 1)
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(tmp))
-    }
-    spark.conf.unset("spark.graft.streaming.batchShuffleTuning.enabled")
     // checkpoint-checksum A/B (Spark 4.x writes checksum sidecars for
     // checkpoint files): same fold, checksum on/off alternated in ONE
     // session so host drift can't masquerade as a win

@@ -157,4 +157,22 @@ class DedupClustersSpec extends SparkSpec {
     assert(Dedup.lastPropagationRounds <= 10,
       s"expected ~log2(64)+3 rounds, took ${Dedup.lastPropagationRounds}")
   }
+
+  test("a null id below the edge limit takes the distributed labels") {
+    // the in-driver union-find reads primitive longs; a null endpoint
+    // must take the distributed rounds, which label it (null, null) and
+    // link nothing through it
+    val pairs = Seq[(Long, java.lang.Long)]((1L, 2L), (2L, null), (3L, 4L))
+      .toDF("id_a", "id_b")
+    val local = Dedup.duplicateClusters(pairs)
+      .as[(Option[Long], Option[Long])].collect().toSet
+    spark.conf.set("spark.graft.dedup.localClusterMaxEdges", "0")
+    val dist =
+      try Dedup.duplicateClusters(pairs)
+        .as[(Option[Long], Option[Long])].collect().toSet
+      finally spark.conf.unset("spark.graft.dedup.localClusterMaxEdges")
+    assert(local == dist)
+    assert(local == Set(Some(1L) -> Some(1L), Some(2L) -> Some(1L),
+      Some(3L) -> Some(3L), Some(4L) -> Some(3L), None -> None))
+  }
 }
