@@ -189,13 +189,20 @@ object Dedup {
       val capped =
         if (maxBucket <= 0) grouped
         else grouped.filter(size(col("ids")) <= maxBucket)
+      // two plain explodes, so no array value outgrows its bucket: first
+      // one row per position i of the sorted ids, then that id paired
+      // with every id after it. A bucket's pairs in ONE array would be
+      // C(n,2) elements — past the 2^31 array limit at ~65.5k ids, and a
+      // task-memory hazard far below it. Buckets under 2 ids have no
+      // pairs (and sequence(1, 0) would count down).
       capped
-        .withColumn("sids", array_sort(col("ids")))
-        .select(explode(flatten(transform(col("sids"), (x, i) =>
-          transform(
-            slice(col("sids"), i + lit(2), size(col("sids")) - i - lit(1)),
-            y => struct(x.as("id_a"), y.as("id_b")))))).as("p"))
-        .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+        .filter(size(col("ids")) >= 2)
+        .select(array_sort(col("ids")).as("sids"))
+        .select(col("sids"),
+          explode(sequence(lit(1), size(col("sids")) - 1)).as("i"))
+        .select(element_at(col("sids"), col("i")).as("id_a"),
+          explode(slice(col("sids"), col("i") + 1,
+            size(col("sids")) - col("i"))).as("id_b"))
     })
       // group shape: sids ascending makes id_a <= id_b by construction and
       // the strict filter drops only dup-id self-pairs; join shape: the

@@ -3,9 +3,28 @@ package graft.serve
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import graft.operators.{HistogramSketch, Profile}
 import graft.store.VectorStore
+import graft.streaming._
+import graft.streaming.StreamingComoments.{Comoments, ComomentsSnapshot}
+import graft.streaming.StreamingDistinct.DistinctSnapshot
+import graft.streaming.StreamingGroupedComoments.GroupedComomentsSnapshot
+import graft.streaming.StreamingGroupedDistinct.{GroupDistinct, GroupedDistinctSnapshot}
+import graft.streaming.StreamingGroupedHeavyHitters.{GroupState, GroupedMgSnapshot}
+import graft.streaming.StreamingGroupedHistogram.{GroupHist, GroupedHistSnapshot}
+import graft.streaming.StreamingGroupedMoments.GroupedMomentsSnapshot
+import graft.streaming.StreamingGroupedSample.{GroupSample, GroupedSampleSnapshot}
+import graft.streaming.StreamingHeavyHitters.MgSnapshot
+import graft.streaming.StreamingHistogram.HistSnapshot
+import graft.streaming.StreamingMoments.{Moments, MomentsSnapshot}
+import graft.streaming.StreamingSample.{SampleEntry, SampleSnapshot}
+import graft.streaming.StreamingWindowedDistinct.WindowedDistinctSnapshot
+import graft.streaming.StreamingWindowedHeavyHitters.WindowedMgSnapshot
+import graft.streaming.StreamingWindowedHistogram.WindowedHistSnapshot
+import graft.streaming.StreamingWindowedMoments.WindowedMomentsSnapshot
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -62,132 +81,36 @@ import scala.util.control.NonFatal
   *                                      persisting ones; the quiesce wait
   *                                      (default 2 s, clamped ≤ 10 s) runs
   *                                      on the serial dispatcher
-  *   GET    /api/v1/admin/frequent-items — flat OR grouped OR windowed
-  *                                      (the selection ladder; the
-  *                                      windowed rung is "trending now":
-  *                                      window/ring_depth + the ring-
-  *                                      merged MG candidates over the
-  *                                      newest N batches); POST recount
-  *                                      on a windowed fold is a named
-  *                                      409 (the corpus cannot
-  *                                      reproduce the window)
-  *   GET    /api/v1/admin/histogram?probs=0.5,0.9&bins=true&verify=true —
-  *                                      the folded streaming exact-histogram
-  *                                      state: rank-exact quantile estimates
-  *                                      (value resolution = one bin width),
-  *                                      linearizable locked read, with the
-  *                                      out_of_range_mass_fraction alert
-  *                                      (binning_warning past the threshold);
-  *                                      verify=true recounts the per-(group,)
-  *                                      bin cells one-shot over the
-  *                                      operator-configured source corpus
-  *                                      (histogramSourceDir; admin-gated, no
-  *                                      client paths) and reports cell-level
-  *                                      parity against the same snapshot.
-  *                                      Selection ladder: flat → grouped →
-  *                                      WINDOWED (the sliding-window rung
-  *                                      serves the ring aggregate's
-  *                                      quantiles; its verify is a named
-  *                                      409 — an all-time recount cannot
-  *                                      reproduce a window)
+  *   GET    /api/v1/admin/{frequent-items | histogram | sample |
+  *          moments | distinct | comoments}?group=NAME&verify=true
+  *                                      — a profiling face (below);
+  *                                      histogram also takes
+  *                                      ?probs=0.5,0.9&bins=true and warns
+  *                                      (binning_warning) once the out-
+  *                                      of-range mass passes
+  *                                      histogramOutOfRangeAlert
+  *   GET    /api/v1/admin/profile    — the ONE-POLL monitor face: every
+  *                                      configured face's headline
+  *                                      (liveness + the drift number);
+  *                                      per-face locked reads, NOT atomic
+  *                                      across faces (each carries its
+  *                                      own last_batch_id); a failing
+  *                                      face reports a named error, not a
+  *                                      whole-poll 500; 404 when no face
+  *                                      is configured
+  *   POST   /api/v1/admin/frequent-items/recount {denominator} — the EXACT
+  *                                      face of the folded MG state: a
+  *                                      Spark recount of the candidates
+  *                                      over frequentItemsSourceDir
   *   POST   /api/v1/admin/histogram/from-sample {n_bins?, coverage?,
   *                                      group?} — derive a [lo, hi)
   *                                      binning from the standing sample
   *                                      fold's carried values
-  *                                      (HistogramSketch.fromSample); the
-  *                                      spec an operator passes to a new
-  *                                      histogram fold. Derives only —
-  *                                      stream lifecycle stays with the
-  *                                      operator's driver app. 'group'
-  *                                      required when the sample fold is
-  *                                      grouped
-  *   GET    /api/v1/admin/sample?group=NAME&verify=true — the folded
-  *                                      deterministic bottom-k sample,
-  *                                      flat OR grouped (the family's
-  *                                      selection rule: one state dir,
-  *                                      flat wins ties); ids + carried
-  *                                      values via the linearizable
-  *                                      locked read; exact — a pure
-  *                                      function of the corpus. ?group
-  *                                      selects one group's sample from a
-  *                                      grouped fold (404 if the group
-  *                                      was never folded); ?verify=true
-  *                                      recomputes the (per-group)
-  *                                      bottom-k one-shot over the
-  *                                      operator-configured source corpus
-  *                                      (sampleSourceDir; admin-gated, no
-  *                                      client paths) and reports
-  *                                      entry-level parity against the
-  *                                      same snapshot
-  *   GET    /api/v1/admin/moments?group=NAME&verify=true — the folded
-  *                                      streaming exact-moments state
-  *                                      (count/nulls/min/max + exact
-  *                                      integer sums as strings; mean/
-  *                                      stddev_pop derived), flat OR
-  *                                      grouped OR windowed (the
-  *                                      family's selection ladder: flat
-  *                                      → grouped → windowed, one state
-  *                                      dir, earlier rungs win ties),
-  *                                      linearizable locked read.
-  *                                      ?group selects one group (404 if
-  *                                      never folded); ?verify=true
-  *                                      recomputes the (per-group)
-  *                                      moments one-shot over the
-  *                                      operator-configured source corpus
-  *                                      (momentsSourceDir; admin-gated,
-  *                                      no client paths) and reports
-  *                                      number-level parity against the
-  *                                      same snapshot
-  *   GET    /api/v1/admin/distinct?group=NAME&verify=true — the folded
-  *                                      streaming distinct-count state
-  *                                      (exact row/null counters + the
-  *                                      HLL estimate), flat OR grouped
-  *                                      OR windowed (the selection
-  *                                      ladder: flat → grouped →
-  *                                      windowed, earlier rungs win
-  *                                      ties), linearizable locked
-  *                                      read; ?group selects one group;
-  *                                      ?verify=true rebuilds the
-  *                                      one-shot sketch over the
-  *                                      operator-configured source
-  *                                      corpus (distinctSourceDir) and
-  *                                      compares canonical estimates +
-  *                                      exact counters against the same
-  *                                      snapshot (409 on a windowed
-  *                                      fold — the corpus cannot
-  *                                      reproduce the window)
-  *   GET    /api/v1/admin/comoments?group=NAME&verify=true — the folded
-  *                                      streaming exact CO-moments state
-  *                                      (counts/per-axis nulls/min/max +
-  *                                      the five exact integer sums as
-  *                                      strings; mean_x/mean_y/
-  *                                      covariance_pop/correlation
-  *                                      derived), flat OR grouped,
-  *                                      linearizable locked read; ?group
-  *                                      selects one group; ?verify=true
-  *                                      recomputes the (per-group) pair
-  *                                      statistics one-shot over the
-  *                                      operator-configured source corpus
-  *                                      (comomentsSourceDir) and reports
-  *                                      number-level parity against the
-  *                                      same snapshot
-  *   GET    /api/v1/admin/profile    — the ONE-POLL monitor face: every
-  *                                      configured profiling face's
-  *                                      headline envelope (liveness +
-  *                                      the drift number) in a single
-  *                                      response; per-face linearizable
-  *                                      locked reads (NOT atomic across
-  *                                      faces — each carries its own
-  *                                      last_batch_id), per-face named
-  *                                      errors instead of a whole-poll
-  *                                      500, 404 when no face is
-  *                                      configured
-  *   POST   /api/v1/admin/frequent-items/recount {denominator} — the EXACT
-  *                                      face of the folded stream state: a
-  *                                      Spark recount of the candidates over
-  *                                      the operator-configured source
-  *                                      corpus (frequentItemsSourceDir;
-  *                                      admin-gated, no client paths)
+  *                                      (HistogramSketch.fromValues): the
+  *                                      spec a new histogram fold takes.
+  *                                      Derives only — a fold's lifecycle
+  *                                      stays with the operator's driver
+  *                                      app
   *   POST   /api/v1/admin/migrate
   *   POST   /api/v1/admin/vacuum
   *   POST   /api/v1/admin/rebalance   {max_cluster_size?}
@@ -213,6 +136,30 @@ import scala.util.control.NonFatal
   *                                      reference's vestigial WS route,
   *                                      rest.rs:342,727-738)
   *
+  * Profiling faces (graft extensions — the reference has no profiling
+  * surface): six streaming folds served through ONE route template
+  * (`Face`), so every face answers the same way:
+  *  - `<face>StateDir` enables the face (404 until wired). The dir may
+  *    hold the face's FLAT, GROUPED or — frequent-items, histogram,
+  *    moments, distinct — WINDOWED fold's state; the selection ladder
+  *    serves the first rung that folded anything (flat → grouped →
+  *    windowed, earlier rungs win ties) through the fold's linearizable
+  *    locked read, and nothing folded is a well-formed empty envelope.
+  *  - `?group=NAME` (raw query, decoded per value, so `r%26d` names
+  *    "r&d") narrows a grouped envelope's `groups` to one group; it is a
+  *    404 when that group was never folded or the fold is flat, windowed
+  *    or empty — never a silently served whole envelope.
+  *  - `?verify=true` recounts the snapshot one-shot over the operator-
+  *    configured `<face>SourceDir` corpus (admin-gated: no client paths)
+  *    and reports parity against the SAME snapshot the envelope serves.
+  *    Pre-checks in order: 409 on a windowed fold (the corpus does not
+  *    record which rows arrived in the window), 403 with no source dir,
+  *    409 with nothing folded; then 422 when the configured `<face>*Col`
+  *    columns are missing from the source schema. A grouped recount is
+  *    bounded: past (state groups + 16) × its rows per group it reports a
+  *    refusal instead of collecting the drifted relation. Frequent-items
+  *    has no verify twin (its exact face is the POST recount).
+  *
   * Serving-loop extras from the reference:
   *  - repeated-query memo (`hybrid/search_integration.rs:554-623`): LRU on
   *    the canonical search request, invalidated by any mutation — the
@@ -235,45 +182,31 @@ import scala.util.control.NonFatal
 class RestServer(store: VectorStore, port: Int = 0, cacheSize: Int = 128,
     maxEvents: Int = 10000, backupBase: Option[String] = None,
     sseWriteDeadlineMs: Long = 5000L, wsPort: Int = 0,
+    // the profiling faces (see the class doc): `<face>StateDir` enables
+    // GET /admin/<face>, `<face>SourceDir` its verify recount (and the
+    // frequent-items POST recount); the column names must name what the
+    // ingest folded — the state file records none — and default to the
+    // ingest defaults. The comoments x/y columns are an ORDERED pair.
     frequentItemsStateDir: Option[String] = None,
     frequentItemsSourceDir: Option[String] = None,
     histogramStateDir: Option[String] = None,
     histogramSourceDir: Option[String] = None,
     histogramOutOfRangeAlert: Double = 0.05,
-    // the verify recount must read the SAME columns the ingest folded;
-    // both ingests parameterize them, so the server does too (defaults
-    // match the ingest defaults). The state file records no column
-    // names — this is operator configuration, like the source dir.
     histogramGroupCol: String = "event_type",
     histogramValueCol: String = "value",
     sampleStateDir: Option[String] = None,
-    // the sample verify face's recount corpus (GET /admin/sample?
-    // verify=true) — operator-configured like histogramSourceDir /
-    // frequentItemsSourceDir: the recount is a Spark job, so client-
-    // supplied paths are refused by construction. The recount reads the
-    // columns the ingest folded; both ingests parameterize them, so the
-    // server does too (defaults match the ingest defaults)
     sampleSourceDir: Option[String] = None,
     sampleGroupCol: String = "source",
     sampleIdCol: String = "doc_id",
     sampleValueCol: Option[String] = None,
-    // the moments face (GET /admin/moments): same operator-config posture
-    // as the other three profiling monitors — state dir enables the
-    // route, source dir enables its verify recount, the column names
-    // must name what the ingest folded (defaults match the ingest
-    // defaults)
     momentsStateDir: Option[String] = None,
     momentsSourceDir: Option[String] = None,
     momentsGroupCol: String = "source",
     momentsValueCol: String = "value",
-    // the cardinality face (GET /admin/distinct): same posture
     distinctStateDir: Option[String] = None,
     distinctSourceDir: Option[String] = None,
     distinctGroupCol: String = "source",
     distinctValueCol: String = "value",
-    // the bivariate face (GET /admin/comoments): same posture; the two
-    // value columns are an ORDERED pair — they must name (in order) what
-    // the ingest folded, the fold's own binding rule
     comomentsStateDir: Option[String] = None,
     comomentsSourceDir: Option[String] = None,
     comomentsGroupCol: String = "source",
@@ -1031,1685 +964,13 @@ class RestServer(store: VectorStore, port: Int = 0, cacheSize: Int = 128,
         n.put("confirmed_recent_index_missing_parts",
           r.confirmedRecentIndexMissingParts)
         (200, n)
-      // running frequent-items state of the streaming Misra–Gries fold
-      // (graft extension — the reference has no frequent-items surface):
-      // served via the LINEARIZABLE locked read, so a monitor polling a
-      // hot stream gets a consistent snapshot instead of the lock-free
-      // read's by-design contention error. Disabled (404) unless the
-      // operator wired a state dir at construction, same posture as
-      // admin/backup's backupBase.
-      case ("GET", "/api/v1/admin/frequent-items") =>
-        frequentItemsStateDir match {
-          case None => (404, err(
-            "frequent-items state not configured on this server " +
-              "(pass frequentItemsStateDir to RestServer)"))
-          case Some(sd) =>
-            val (st, gst, wst) = foldedFrequentItems(sd)
-            val n = obj()
-            gst match {
-              case None if wst.isDefined =>
-                // the selection ladder's windowed rung — "trending now"
-                val w = wst.get
-                n.put("grouped", false)
-                n.put("windowed", true)
-                n.put("k", w.k)
-                n.put("checkpoint", w.checkpoint)
-                n.put("last_batch_id", w.lastBatchId)
-                n.put("window", w.window)
-                n.put("ring_depth", w.ring.size)
-                n.put("n", w.n)
-                val agg = w.aggregateCounts
-                n.put("state_entries", agg.size)
-                val c = n.putObject("counts")
-                agg.toSeq.sortBy { case (item, cnt) => (-cnt, item) }
-                  .foreach { case (item, cnt) => c.put(item, cnt) }
-              case Some(g0) =>
-                n.put("grouped", true)
-                n.put("k", g0.k)
-                n.put("checkpoint", g0.checkpoint)
-                n.put("last_batch_id", g0.lastBatchId)
-                n.put("n", g0.groups.valuesIterator.map(_.n).sum)
-                n.put("state_entries", g0.totalEntries)
-                n.put("group_count", g0.groups.size)
-                // running count of null-group-key rows the fold excluded
-                // (correct per the batch recount's inner-join semantics,
-                // but a source column rotting to NULL would quietly thin
-                // the profile — this is the monitor's visibility into it)
-                n.put("excluded_null_rows", g0.excludedNullRows)
-                val gs = n.putObject("groups")
-                g0.groups.toSeq.sortBy(_._1).foreach { case (g, grp) =>
-                  val gn = gs.putObject(g)
-                  gn.put("n", grp.n)
-                  val c = gn.putObject("counts")
-                  grp.counts.toSeq.sortBy { case (item, cnt) => (-cnt, item) }
-                    .foreach { case (item, cnt) => c.put(item, cnt) }
-                }
-              case None =>
-                n.put("grouped", false)
-                n.put("k", st.k)
-                n.put("checkpoint", st.checkpoint)
-                n.put("last_batch_id", st.lastBatchId)
-                n.put("n", st.n)
-                n.put("state_entries", st.counts.size)
-                val c = n.putObject("counts")
-                // deterministic envelope order: count desc, item asc (the
-                // operator's own output order)
-                st.counts.toSeq.sortBy { case (item, cnt) => (-cnt, item) }
-                  .foreach { case (item, cnt) => c.put(item, cnt) }
-            }
-            // the counts are folded MG estimates (lower bounds, off by at
-            // most n/(k+1) of the (group's) mass) — exact values need the
-            // recount (POST .../recount below), which is a Spark job, not
-            // a monitoring read
-            n.put("counts_are_mg_estimates", true)
-            (200, n)
-        }
-      // the exact face of the operator (r14): recount the folded
-      // candidates over the stream's corpus at the requested threshold —
-      // heavyHittersFromState, served. ADMIN-gated by construction: it
-      // runs a Spark job over the operator-configured source dir (the
-      // backupBase posture — no client-supplied paths), so it completes
-      // the serving surface without letting a monitor aim the driver at
-      // arbitrary data. Disabled (404) unless BOTH the state dir and the
-      // source dir were wired at construction.
-      // running value-distribution profile of the streaming exact-
-      // histogram fold, flat OR grouped (graft extension): served via
-      // the LINEARIZABLE locked read, same posture and flat-vs-grouped
-      // selection rule as frequent-items. Unlike the MG envelope's
-      // estimates, these counts are EXACT and the quantile estimates are
-      // rank-exact — only the VALUE is quantized, to one bin width
-      // (reported as value_resolution). ?probs=0.5,0.9 overrides the
-      // default probes (malformed values 400 loudly); ?bins=true
-      // includes the full per-bin counts.
-      case ("GET", "/api/v1/admin/histogram") =>
-        histogramStateDir match {
-          case None => (404, err(
-            "histogram state not configured on this server " +
-              "(pass histogramStateDir to RestServer)"))
-          case Some(sd) =>
-            val qp = Option(ex.getRequestURI.getQuery)
-              .map(_.split("&").toSeq).getOrElse(Seq.empty)
-            val probsParsed: Either[String, Seq[Double]] =
-              qp.collectFirst {
-                case s if s.startsWith("probs=") => s.drop("probs=".length)
-              } match {
-                case None => Right(Seq(0.5, 0.9, 0.99))
-                case Some(v) =>
-                  val parts = v.split(",").toSeq.filter(_.nonEmpty)
-                  val ds = parts.map(p => scala.util.Try(p.toDouble).toOption)
-                  // d.isNaN: "NaN".toDouble parses, and NaN fails neither
-                  // range bound — without this it slips past the 400 and
-                  // trips quantiles' require as a 500
-                  if (parts.isEmpty || ds.exists(_.isEmpty)
-                      || ds.flatten.exists(d => d.isNaN || d < 0.0 || d > 1.0))
-                    Left("probs must be comma-separated numbers in " +
-                      s"[0, 1], got '$v'")
-                  else Right(ds.flatten)
-              }
-            probsParsed match {
-              case Left(msg) => (400, err(msg))
-              case Right(probs) =>
-                val (st, gst, wst) = foldedHistograms(sd)
-                val wantVerify = qp.contains("verify=true")
-                if (wantVerify && wst.isDefined)
-                  // the windowed rung cannot be recount-verified: the
-                  // corpus does not record which rows arrived in the
-                  // newest N micro-batches — a named category error, not
-                  // an attempted (wrong) all-time recount
-                  (409, err("windowed histogram cannot be " +
-                    "recount-verified against the source corpus: the " +
-                    "corpus does not record which rows arrived in the " +
-                    s"newest ${wst.get.window} micro-batches, so an " +
-                    "all-time recount cannot reproduce the window. The " +
-                    "ring's exactness is pinned by the fold's own oracle " +
-                    "row and spec"))
-                else if (wantVerify && histogramSourceDir.isEmpty)
-                  (403, err("histogram verify not configured on this " +
-                    "server: the recount is a Spark job over the stream's " +
-                    "source corpus — pass histogramSourceDir to RestServer " +
-                    "(client-supplied paths are not accepted, same posture " +
-                    "as frequent-items/recount)"))
-                else if (wantVerify && st.lastBatchId < 0L && gst.isEmpty)
-                  // nothing folded: verifying is a category error, not a
-                  // vacuous match — the frequent-items/recount 409 rule
-                  (409, err(s"no folded histogram state under $sd — start " +
-                    "the ingest (or point the server at its state dir) " +
-                    "before asking for a recount verify"))
-                else {
-                val n = obj()
-                def binning(spec: graft.operators.HistogramSketch
-                    .HistogramSpec): Unit = {
-                  n.put("lo", spec.lo)
-                  n.put("hi", spec.hi)
-                  n.put("n_bins", spec.nBins)
-                  n.put("value_resolution", spec.width)
-                  n.put("counts_are_exact", true)
-                }
-                // the out-of-range alert: a misconfigured (or drifted)
-                // [lo, hi) silently parks mass in under/overflow — the
-                // counts stay visible, but a monitor needs the FRACTION
-                // and a loud field once it crosses the configured
-                // threshold (histogramOutOfRangeAlert; NaN values land in
-                // overflow, so they count toward this too)
-                def outOfRange(total: Long, oor: Long): Unit = {
-                  val frac = if (total == 0L) 0.0 else oor.toDouble / total
-                  n.put("out_of_range_mass_fraction", frac)
-                  if (frac > histogramOutOfRangeAlert)
-                    n.put("binning_warning",
-                      f"$frac%.4f of the folded mass fell outside the " +
-                        f"configured [lo, hi) — past the " +
-                        f"$histogramOutOfRangeAlert alert threshold; the " +
-                        "quantile estimates clamp there. Re-derive the " +
-                        "binning (HistogramSketch.fromSample) and re-fold " +
-                        "with a fresh state dir")
-                }
-                gst match {
-                  case Some(g0) =>
-                    n.put("folded", true)
-                    n.put("grouped", true)
-                    binning(g0.spec)
-                    n.put("checkpoint", g0.checkpoint)
-                    n.put("last_batch_id", g0.lastBatchId)
-                    n.put("n", g0.groups.valuesIterator.map(_.n).sum)
-                    n.put("group_count", g0.groups.size)
-                    outOfRange(g0.groups.valuesIterator.map(_.n).sum,
-                      g0.groups.valuesIterator.map(gh =>
-                        gh.bins.getOrElse(-1, 0L) +
-                          gh.bins.getOrElse(g0.spec.nBins, 0L)).sum)
-                    // the excluded-null observability counter (the r14
-                    // grouped-fold rule) rides the envelope
-                    n.put("excluded_null_rows", g0.excludedNullRows)
-                    val gs = n.putObject("groups")
-                    g0.groups.toSeq.sortBy(_._1).foreach { case (g, gh) =>
-                      val gn = gs.putObject(g)
-                      gn.put("n", gh.n)
-                      gn.put("underflow", gh.bins.getOrElse(-1, 0L))
-                      gn.put("overflow",
-                        gh.bins.getOrElse(g0.spec.nBins, 0L))
-                      val qs = gn.putObject("quantiles")
-                      graft.operators.HistogramSketch
-                        .quantiles(g0.spec, gh.bins, probs)
-                        .foreach { case (p, est) =>
-                          qs.put(p.toString, est) }
-                      if (qp.contains("bins=true")) {
-                        val b = gn.putObject("bins")
-                        gh.bins.toSeq.sortBy(_._1).foreach { case (bin, c) =>
-                          b.put(bin.toString, c)
-                        }
-                      }
-                    }
-                  case None if wst.isDefined =>
-                    // the windowed rung: the flat envelope over the
-                    // ring's bin-wise aggregate, plus the window fields
-                    val w = wst.get
-                    val agg = w.aggregate
-                    n.put("folded", true)
-                    n.put("grouped", false)
-                    n.put("windowed", true)
-                    binning(agg.spec)
-                    n.put("checkpoint", w.checkpoint)
-                    n.put("last_batch_id", w.lastBatchId)
-                    n.put("window", w.window)
-                    n.put("ring_depth", w.ring.size)
-                    n.put("n", agg.n)
-                    n.put("underflow", agg.underflow)
-                    n.put("overflow", agg.overflow)
-                    outOfRange(agg.n, agg.underflow + agg.overflow)
-                    val wq = n.putObject("quantiles")
-                    graft.streaming.StreamingHistogram
-                      .quantilesFromSnapshot(agg, probs)
-                      .foreach { case (p, est) => wq.put(p.toString, est) }
-                    if (qp.contains("bins=true")) {
-                      val bl = n.putObject("bins")
-                      agg.bins.toSeq.sortBy(_._1).foreach { case (b, c) =>
-                        bl.put(b.toString, c) }
-                    }
-                  case None if st.lastBatchId < 0L =>
-                    // nothing folded in either shape: a well-formed empty
-                    // envelope (the frequent-items convention) — the
-                    // placeholder binning is NOT echoed, it would mislead
-                    // a monitor
-                    n.put("folded", false)
-                    n.put("last_batch_id", -1L)
-                    n.put("n", 0L)
-                  case None =>
-                    n.put("folded", true)
-                    n.put("grouped", false)
-                    binning(st.spec)
-                    n.put("checkpoint", st.checkpoint)
-                    n.put("last_batch_id", st.lastBatchId)
-                    n.put("n", st.n)
-                    n.put("underflow", st.underflow)
-                    n.put("overflow", st.overflow)
-                    outOfRange(st.n, st.underflow + st.overflow)
-                    val qs = n.putObject("quantiles")
-                    graft.streaming.StreamingHistogram
-                      .quantilesFromSnapshot(st, probs)
-                      .foreach { case (p, est) => qs.put(p.toString, est) }
-                    if (qp.contains("bins=true")) {
-                      val b = n.putObject("bins")
-                      st.bins.toSeq.sortBy(_._1).foreach { case (bin, c) =>
-                        b.put(bin.toString, c)
-                      }
-                    }
-                }
-                // ?verify=true: the grouped-HH recount analog for the
-                // quantile family — recompute the per-(group,)bin counts
-                // ONE-SHOT over the operator-configured source corpus
-                // with the state's own binning and compare cell-for-cell
-                // against the SAME locked snapshot the envelope serves.
-                // The fold is exact, so on a drained (quiesced) stream
-                // any mismatch is a real defect: bounds drift, a
-                // corrupted state file, or a source/state mismatch. A
-                // still-ingesting stream legitimately trails the source;
-                // last_batch_id is in the envelope for that call.
-                if (wantVerify) {
-                  val corpus = store.spark.read.parquet(histogramSourceDir.get)
-                  // the recount reads the operator-configured columns; a
-                  // source whose schema no longer carries them must be a
-                  // configuration-naming 422, not an AnalysisException
-                  // surfacing as an opaque 500 mid-recount
-                  val srcCols = corpus.columns.toSet
-                  val needed =
-                    (if (gst.isDefined) Seq(histogramGroupCol)
-                     else Seq.empty[String]) :+ histogramValueCol
-                  val missing = needed.filterNot(srcCols.contains)
-                  if (missing.nonEmpty)
-                    (422, err("histogram verify: configured column(s) " +
-                      missing.mkString("'", "', '", "'") +
-                      " not present in the source corpus schema (" +
-                      corpus.columns.mkString(", ") + ") — the server's " +
-                      "histogramGroupCol/histogramValueCol must name the " +
-                      "columns the ingest folded"))
-                  else {
-                  val v = n.putObject("verify")
-                  def diffCells(state: Map[Int, Long],
-                      recount: Map[Int, Long]): Int =
-                    (state.keySet ++ recount.keySet).count(b =>
-                      state.getOrElse(b, 0L) != recount.getOrElse(b, 0L))
-                  gst match {
-                    case Some(g0) =>
-                      // both the fold and the recount skip NULL values, so
-                      // a valueCol rotting to NULL would verify "matched"
-                      // invisibly — count the recount-side exclusions on
-                      // the SAME scan (a CollectMetrics node under the
-                      // aggregation barrier sees every source row, no
-                      // second pass)
-                      val nullObs = org.apache.spark.sql.Observation()
-                      val observed = corpus.observe(nullObs,
-                        count(when(col(histogramGroupCol).isNotNull &&
-                          col(histogramValueCol).cast("double").isNull,
-                          1)).as("null_values"))
-                      // bounded collect: the state's own group count is the
-                      // healthy recount's cardinality (state bins ⊆ source
-                      // groups on a drained stream). The fold's maxGroups
-                      // cap bounded the STATE at ingest time, but the
-                      // recount reads the CURRENT source — a group column
-                      // drifted toward per-row cardinality would otherwise
-                      // pull groups × (nBins+2) rows into the serving heap.
-                      // Small slack so a few legitimately-new groups still
-                      // report as named mismatches rather than a refusal.
-                      val cellCap =
-                        (g0.groups.size + 16) * (g0.spec.nBins + 2)
-                      val rows = graft.operators.HistogramSketch
-                        .countsPerGroup(observed, histogramGroupCol,
-                          histogramValueCol, g0.spec).head(cellCap + 1)
-                      if (rows.length > cellCap) {
-                        v.put("matched", false)
-                        v.put("error", "source group cardinality exceeds " +
-                          s"the verify bound: the folded state holds " +
-                          s"${g0.groups.size} groups but the source " +
-                          s"recount produced more than $cellCap cells — " +
-                          "the group column has drifted (e.g. toward " +
-                          "per-row cardinality); the cell compare was " +
-                          "skipped rather than collecting an unbounded " +
-                          "relation into the serving driver. Fix the " +
-                          "source (or re-fold with the wider key) before " +
-                          "verifying")
-                      } else {
-                      val recount = rows.groupBy(_.getString(0)).map {
-                        case (g, rs) => g -> rs.map(r =>
-                          r.getInt(1) -> r.getLong(2)).toMap
-                      }
-                      val allGroups =
-                        (g0.groups.keySet ++ recount.keySet).toSeq.sorted
-                      val bad = allGroups.filter { g =>
-                        diffCells(
-                          g0.groups.get(g).map(_.bins).getOrElse(Map.empty),
-                          recount.getOrElse(g, Map.empty)) > 0
-                      }
-                      v.put("matched", bad.isEmpty)
-                      v.put("recount_n", rows.map(_.getLong(2)).sum)
-                      v.put("state_n", g0.groups.valuesIterator.map(_.n).sum)
-                      v.put("recount_excluded_null_values",
-                        nullObs.get("null_values").asInstanceOf[Long])
-                      v.put("mismatched_group_count", bad.size)
-                      val bl = v.putArray("mismatched_groups")
-                      bad.take(10).foreach(bl.add)
-                      }
-                    case None =>
-                      val nullObs = org.apache.spark.sql.Observation()
-                      val recount = graft.operators.HistogramSketch
-                        .counts(corpus.select(col(histogramValueCol))
-                          .observe(nullObs, count(when(
-                            col(histogramValueCol).cast("double").isNull,
-                            1)).as("null_values")),
-                          histogramValueCol, st.spec)
-                        .collect() // bounded: <= nBins+2 rows
-                        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-                      val mismatches = diffCells(st.bins, recount)
-                      v.put("matched", mismatches == 0)
-                      v.put("recount_n", recount.valuesIterator.sum)
-                      v.put("state_n", st.n)
-                      v.put("recount_excluded_null_values",
-                        nullObs.get("null_values").asInstanceOf[Long])
-                      v.put("mismatched_bin_count", mismatches)
-                  }
-                  v.put("counts_are_exact", true)
-                  (200, n)
-                  }
-                } else (200, n)
-                }
-            }
-        }
-      // the sample→histogram bootstrap face: derive a fresh [lo, hi)
-      // binning from the STANDING sample fold's carried values (the
-      // HistogramSketch.fromSample arithmetic over the ≤ k locked-read
-      // entries — no Spark job, no corpus rescan) and return the spec an
-      // operator passes to StreamingHistogram.ingest (or
-      // ingestAutoBinned, the one-call programmatic form). The route
-      // DERIVES, it does not start a stream — a fold's lifecycle (its
-      // checkpoint, its state dir, who stops it) belongs to the
-      // operator's driver app, not an HTTP handler. Admin-gated by the
-      // same construction as the family: it reads only the
-      // operator-configured sampleStateDir.
-      case ("POST", "/api/v1/admin/histogram/from-sample") =>
-        sampleStateDir match {
-          case None => (404, err(
-            "sample state not configured on this server (pass " +
-              "sampleStateDir to RestServer) — the from-sample binning " +
-              "derives from the standing sample fold"))
-          case Some(sd) =>
-            val req = body(ex)
-            val nBins = Option(req).flatMap(r => Option(r.get("n_bins")))
-              .map(_.asInt()).getOrElse(32)
-            val coverage = Option(req).flatMap(r => Option(r.get("coverage")))
-              .map(_.asDouble()).getOrElse(0.99)
-            if (nBins <= 0)
-              (400, err(s"'n_bins' must be a positive integer, got $nBins"))
-            else if (coverage.isNaN || coverage <= 0.0 || coverage > 1.0)
-              (400, err(s"'coverage' must be in (0, 1], got $coverage"))
-            else {
-              // the sample route's flat-vs-grouped selection rule; a
-              // grouped fold requires naming WHICH group's distribution
-              // to bin for (a stratified binning is per-group by nature)
-              val st = graft.streaming.StreamingSample
-                .readStateLocked(store.spark, sd)
-              val gst =
-                if (st.lastBatchId < 0L)
-                  Some(graft.streaming.StreamingGroupedSample
-                    .readStateLocked(store.spark, sd))
-                    .filter(_.lastBatchId >= 0L)
-                else None
-              val entriesOr: Either[(Int, ObjectNode),
-                  Seq[graft.streaming.StreamingSample.SampleEntry]] =
-                gst match {
-                  case Some(g0) =>
-                    Option(req).flatMap(r => Option(r.get("group")))
-                      .map(_.asText()) match {
-                      case None => Left((400, err("the folded sample is " +
-                        s"GROUPED (${g0.groups.size} groups) — pass " +
-                        "'group' to derive a binning from one group's " +
-                        "sample")))
-                      case Some(g) => g0.groups.get(g)
-                        .map(gs => Right(gs.entries))
-                        .getOrElse(Left((404, err(s"group '$g' not in " +
-                          s"the folded grouped sample state " +
-                          s"(${g0.groups.size} groups folded)"))))
-                    }
-                  case None if st.lastBatchId < 0L =>
-                    // nothing folded: deriving is a category error (the
-                    // recount/verify 409 rule)
-                    Left((409, err(s"no folded sample state under $sd — " +
-                      "start the sample ingest (with a valueCol) before " +
-                      "asking for a from-sample binning")))
-                  case None => Right(st.entries)
-                }
-              entriesOr match {
-                case Left(resp) => resp
-                case Right(entries)
-                    if !entries.exists(_.value.exists(
-                      java.lang.Double.isFinite)) =>
-                  // folded, but no distribution to bin: a configuration
-                  // category (sample folded without a valueCol)
-                  (422, err("the folded sample carries no finite values " +
-                    "— it was folded without a valueCol (or every value " +
-                    "is null/NaN/Inf); re-fold the sample with the " +
-                    "column the histogram will bin"))
-                case Right(entries) =>
-                  val vals = entries.flatMap(_.value)
-                    .filter(java.lang.Double.isFinite)
-                  // the ONE derive arithmetic — fromValues, shared with
-                  // the DataFrame face and ingestAutoBinned so the
-                  // three entry points cannot drift — over the ≤ k
-                  // already-local carried values (no Spark job)
-                  val spec = graft.operators.HistogramSketch
-                    .fromValues(vals, nBins, coverage)
-                  val n = obj()
-                  n.put("lo", spec.lo)
-                  n.put("hi", spec.hi)
-                  n.put("n_bins", spec.nBins)
-                  n.put("value_resolution", spec.width)
-                  n.put("coverage", coverage)
-                  n.put("sample_values", vals.size)
-                  n.put("sample_last_batch_id",
-                    gst.map(_.lastBatchId).getOrElse(st.lastBatchId))
-                  (200, n)
-              }
-            }
-        }
-      // the folded deterministic bottom-k sample (graft extension):
-      // served via the LINEARIZABLE locked read like the family's other
-      // folds, with the family's flat-vs-grouped selection rule (one
-      // state dir holds either fold's file; flat wins ties). Entries are
-      // exact — each (group's) sample is a deterministic function of the
-      // corpus (salted-hash bottom-k), so a monitor can cross-check it
-      // against any batch replay bit-for-bit. ?group=NAME selects one
-      // group's sample from a grouped fold.
-      case ("GET", "/api/v1/admin/sample") =>
-        sampleStateDir match {
-          case None => (404, err(
-            "sample state not configured on this server " +
-              "(pass sampleStateDir to RestServer)"))
-          case Some(sd) =>
-            def writeEntries(into: ObjectNode,
-                es: Seq[graft.streaming.StreamingSample.SampleEntry]): Unit = {
-              val arr = into.putArray("entries")
-              es.foreach { e =>
-                val en = arr.addObject()
-                en.put("id", e.id)
-                e.value.foreach(v => en.put("value", v))
-              }
-            }
-            val st = graft.streaming.StreamingSample
-              .readStateLocked(store.spark, sd)
-            val gst =
-              if (st.lastBatchId < 0L)
-                Some(graft.streaming.StreamingGroupedSample
-                  .readStateLocked(store.spark, sd))
-                  .filter(_.lastBatchId >= 0L)
-              else None
-            // RAW query, decoded per VALUE after the '&' split: getQuery
-            // pre-decodes percent-escapes, so a group name containing '&'
-            // or '=' (sent correctly encoded, e.g. group=r%26d) would be
-            // truncated at the decoded separator and 404 as 'r'
-            val qp = Option(ex.getRequestURI.getRawQuery)
-              .map(_.split("&").toSeq).getOrElse(Seq.empty)
-            val wantGroup = qp.collectFirst {
-              case s if s.startsWith("group=") => java.net.URLDecoder
-                .decode(s.drop("group=".length), "UTF-8")
-            }
-            // ?verify=true — the sampling face's recount twin (the
-            // histogram's verify=true / frequent-items' /recount analog):
-            // recompute the (per-group) bottom-k ONE-SHOT over the
-            // operator-configured source corpus with the state's own
-            // (k, salt) and compare entry-for-entry against the SAME
-            // locked snapshot the envelope serves. The fold is a pure
-            // function of the corpus, so on a drained stream any
-            // mismatch is a real defect — skipped data, a corrupted
-            // state file, or a source/state mismatch; a still-ingesting
-            // stream legitimately trails (last_batch_id is in the
-            // envelope for that call).
-            val wantVerify = qp.contains("verify=true")
-            if (wantVerify && sampleSourceDir.isEmpty)
-              (403, err("sample verify not configured on this server: " +
-                "the recount is a Spark job over the stream's source " +
-                "corpus — pass sampleSourceDir to RestServer (client-" +
-                "supplied paths are not accepted, same posture as " +
-                "histogram verify)"))
-            else if (wantVerify && st.lastBatchId < 0L && gst.isEmpty)
-              (409, err(s"no folded sample state under $sd — start the " +
-                "ingest (or point the server at its state dir) before " +
-                "asking for a recount verify"))
-            else {
-            // shared by both shapes: 422 when the configured recount
-            // columns are missing from the source schema (the histogram
-            // verify rule — configuration-naming, never an opaque 500)
-            def verifyCorpus(needGroup: Boolean)
-                : Either[(Int, ObjectNode), org.apache.spark.sql.DataFrame] = {
-              val corpus = store.spark.read.parquet(sampleSourceDir.get)
-              val needed = (if (needGroup) Seq(sampleGroupCol)
-                else Seq.empty[String]) ++ Seq(sampleIdCol) ++
-                sampleValueCol.toSeq
-              val missing = needed.filterNot(corpus.columns.toSet.contains)
-              if (missing.nonEmpty)
-                Left((422, err("sample verify: configured column(s) " +
-                  missing.mkString("'", "', '", "'") +
-                  " not present in the source corpus schema (" +
-                  corpus.columns.mkString(", ") + ") — the server's " +
-                  "sampleGroupCol/sampleIdCol/sampleValueCol must name " +
-                  "the columns the ingest folded")))
-              else Right(corpus)
-            }
-            val n = obj()
-            gst match {
-              case Some(g0) =>
-                wantGroup match {
-                  case Some(g) if !g0.groups.contains(g) =>
-                    (404, err(s"group '$g' not in the folded grouped " +
-                      s"sample state (${g0.groups.size} groups folded)"))
-                  case _ =>
-                    n.put("folded", true)
-                    n.put("grouped", true)
-                    n.put("k", g0.k)
-                    n.put("salt", g0.salt)
-                    n.put("checkpoint", g0.checkpoint)
-                    n.put("last_batch_id", g0.lastBatchId)
-                    n.put("n_seen",
-                      g0.groups.valuesIterator.map(_.nSeen).sum)
-                    n.put("group_count", g0.groups.size)
-                    n.put("excluded_null_rows", g0.excludedNullRows)
-                    n.put("entries_are_exact", true)
-                    val selected = wantGroup match {
-                      case Some(g) => Seq(g -> g0.groups(g))
-                      case None => g0.groups.toSeq.sortBy(_._1)
-                    }
-                    val gs = n.putObject("groups")
-                    selected.foreach { case (g, s0) =>
-                      val gn = gs.putObject(g)
-                      gn.put("n_seen", s0.nSeen)
-                      gn.put("sample_size", s0.entries.size)
-                      writeEntries(gn, s0.entries)
-                    }
-                    if (!wantVerify) (200, n)
-                    else verifyCorpus(needGroup = true) match {
-                      case Left(resp) => resp
-                      case Right(corpus) =>
-                        val v = n.putObject("verify")
-                        // bounded collect: the recount twin yields ≤ k
-                        // rows per source group — a group column drifted
-                        // toward per-row cardinality would make that
-                        // groups × k; cap at (stateGroups + 16) × k and
-                        // refuse loudly past it (the histogram verify
-                        // bound rule)
-                        val rowCap = (g0.groups.size + 16) * g0.k
-                        val rows = graft.streaming.StreamingGroupedSample
-                          .batchBottomKPerGroup(corpus, g0.k, g0.salt,
-                            sampleGroupCol, sampleIdCol, sampleValueCol)
-                          .head(rowCap + 1)
-                        if (rows.length > rowCap) {
-                          v.put("matched", false)
-                          v.put("error", "source group cardinality " +
-                            s"exceeds the verify bound: the folded state " +
-                            s"holds ${g0.groups.size} groups but the " +
-                            s"recount produced more than $rowCap rows — " +
-                            "the group column has drifted; the compare " +
-                            "was skipped rather than collecting an " +
-                            "unbounded relation into the serving driver")
-                        } else {
-                          val recount = rows.groupBy(_.getString(0)).map {
-                            case (g, rs) => g -> rs.map(r =>
-                              graft.streaming.StreamingSample.SampleEntry(
-                                r.getLong(1), r.getLong(2),
-                                if (r.isNullAt(3)) None
-                                else Some(r.getDouble(3))))
-                              .sortBy(e => (e.key, e.id)).toSeq
-                          }
-                          val allGroups = (g0.groups.keySet ++
-                            recount.keySet).toSeq.sorted
-                          val bad = allGroups.filter(g =>
-                            g0.groups.get(g).map(_.entries)
-                              .getOrElse(Seq.empty) !=
-                              recount.getOrElse(g, Seq.empty))
-                          v.put("matched", bad.isEmpty)
-                          v.put("state_group_count", g0.groups.size)
-                          v.put("recount_group_count", recount.size)
-                          v.put("mismatched_group_count", bad.size)
-                          val bl = v.putArray("mismatched_groups")
-                          bad.take(10).foreach(bl.add)
-                        }
-                        v.put("entries_are_exact", true)
-                        (200, n)
-                    }
-                }
-              // a ?group ask can only be answered from a GROUPED fold —
-              // silently serving the flat (or empty) envelope would let a
-              // monitor parse the whole sample as one stratum's
-              case None if wantGroup.isDefined =>
-                (404, err(s"group '${wantGroup.get}' not available: the " +
-                  (if (st.lastBatchId < 0L) "state dir holds no folded sample"
-                   else "folded sample is flat (no groups)") +
-                  " — group selection needs a StreamingGroupedSample fold"))
-              case None if st.lastBatchId < 0L =>
-                // nothing folded in either shape: the family's
-                // well-formed empty envelope
-                n.put("folded", false)
-                n.put("last_batch_id", -1L)
-                n.put("n_seen", 0L)
-                (200, n)
-              case None =>
-                n.put("folded", true)
-                n.put("grouped", false)
-                n.put("k", st.k)
-                n.put("salt", st.salt)
-                n.put("checkpoint", st.checkpoint)
-                n.put("last_batch_id", st.lastBatchId)
-                n.put("n_seen", st.nSeen)
-                n.put("sample_size", st.entries.size)
-                n.put("entries_are_exact", true)
-                writeEntries(n, st.entries)
-                if (!wantVerify) (200, n)
-                else verifyCorpus(needGroup = false) match {
-                  case Left(resp) => resp
-                  case Right(corpus) =>
-                    val v = n.putObject("verify")
-                    // bounded by construction: batchBottomK collects ≤ k
-                    val recount = graft.streaming.StreamingSample
-                      .batchBottomK(corpus, st.k, st.salt, sampleIdCol,
-                        sampleValueCol)
-                    // split the verdict so an operator can tell skipped
-                    // data (ids differ) from a value-column misconfig
-                    // (ids equal, carried values differ — e.g. the
-                    // server's sampleValueCol names a different column
-                    // than the ingest folded)
-                    val idsMatch = recount.map(e => (e.key, e.id)) ==
-                      st.entries.map(e => (e.key, e.id))
-                    val valuesMatch = recount.map(_.value) ==
-                      st.entries.map(_.value)
-                    v.put("matched", idsMatch && valuesMatch)
-                    v.put("ids_matched", idsMatch)
-                    v.put("values_matched", valuesMatch)
-                    v.put("state_size", st.entries.size)
-                    v.put("recount_size", recount.size)
-                    val bl = v.putArray("mismatched_ids")
-                    (recount.map(_.id).toSet -- st.entries.map(_.id).toSet)
-                      .toSeq.sorted.take(10).foreach(bl.add)
-                    v.put("entries_are_exact", true)
-                    (200, n)
-                }
-            }
-            }
-        }
-      case ("GET", "/api/v1/admin/moments") =>
-        momentsStateDir match {
-          case None => (404, err(
-            "moments state not configured on this server " +
-              "(pass momentsStateDir to RestServer)"))
-          case Some(sd) =>
-            import graft.streaming.StreamingMoments.Moments
-            // the ONE state-field contract (putMoments — n_rows/n_null +
-            // the n>0-gated min/max/string-sums rule, shared with both
-            // fold writers) plus the envelope-only extras: n and the
-            // derived FP views a monitor actually plots
-            def writeMoments(into: ObjectNode, m: Moments): Unit = {
-              graft.streaming.StreamingMoments.putMoments(into, m)
-              into.put("n", m.n)
-              if (m.n > 0L) {
-                m.mean.foreach(v => into.put("mean", v))
-                m.stddevPop.foreach(v => into.put("stddev_pop", v))
-              }
-            }
-            // the family's flat-vs-grouped selection rule (one state dir,
-            // flat wins ties), extended one rung for this face's TIME
-            // dimension: flat → grouped → windowed. All reads
-            // linearizable
-            val st = graft.streaming.StreamingMoments
-              .readStateLocked(store.spark, sd)
-            val gst =
-              if (st.lastBatchId < 0L)
-                Some(graft.streaming.StreamingGroupedMoments
-                  .readStateLocked(store.spark, sd))
-                  .filter(_.lastBatchId >= 0L)
-              else None
-            val wst =
-              if (st.lastBatchId < 0L && gst.isEmpty)
-                Some(graft.streaming.StreamingWindowedMoments
-                  .readStateLocked(store.spark, sd))
-                  .filter(_.lastBatchId >= 0L)
-              else None
-            // RAW query, decoded per VALUE after the '&' split: getQuery
-            // pre-decodes percent-escapes, so a group name containing '&'
-            // or '=' (sent correctly encoded, e.g. group=r%26d) would be
-            // truncated at the decoded separator and 404 as 'r'
-            val qp = Option(ex.getRequestURI.getRawQuery)
-              .map(_.split("&").toSeq).getOrElse(Seq.empty)
-            val wantGroup = qp.collectFirst {
-              case s if s.startsWith("group=") => java.net.URLDecoder
-                .decode(s.drop("group=".length), "UTF-8")
-            }
-            // ?verify=true — the moments face's recount twin: recompute
-            // the (per-group) exact moments ONE-SHOT over the operator-
-            // configured source corpus and compare number-for-number
-            // against the SAME locked snapshot the envelope serves. The
-            // fold is exact, so on a drained stream any mismatch is a
-            // real defect; a still-ingesting stream legitimately trails
-            // (last_batch_id is in the envelope for that call).
-            val wantVerify = qp.contains("verify=true")
-            // the windowed 409 is checked BEFORE the unconfigured-source
-            // 403 (the histogram route's order): a windowed fold can
-            // never be recount-verified, so a 403 telling the operator
-            // to configure momentsSourceDir would send them on an
-            // errand that cannot end in a working verify
-            if (wantVerify && wst.isDefined)
-              (409, err("windowed moments cannot be recount-verified " +
-                "against the source corpus: the corpus does not record " +
-                "which rows arrived in the newest " +
-                s"${wst.get.window} micro-batches, so an all-time " +
-                "recount cannot reproduce the window. The ring's " +
-                "exactness is pinned by the fold's own oracle row and " +
-                "spec"))
-            else if (wantVerify && momentsSourceDir.isEmpty)
-              (403, err("moments verify not configured on this server: " +
-                "the recount is a Spark job over the stream's source " +
-                "corpus — pass momentsSourceDir to RestServer (client-" +
-                "supplied paths are not accepted, same posture as the " +
-                "other profiling verifies)"))
-            else if (wantVerify && st.lastBatchId < 0L && gst.isEmpty &&
-                wst.isEmpty)
-              (409, err(s"no folded moments state under $sd — start the " +
-                "ingest (or point the server at its state dir) before " +
-                "asking for a recount verify"))
-            else {
-            // 422 when the configured recount columns are missing from
-            // the source schema (configuration-naming, never an opaque
-            // 500) — the histogram/sample verify rule
-            def verifyCorpus(needGroup: Boolean)
-                : Either[(Int, ObjectNode), org.apache.spark.sql.DataFrame] = {
-              val corpus = store.spark.read.parquet(momentsSourceDir.get)
-              val needed = (if (needGroup) Seq(momentsGroupCol)
-                else Seq.empty[String]) :+ momentsValueCol
-              val missing = needed.filterNot(corpus.columns.toSet.contains)
-              if (missing.nonEmpty)
-                Left((422, err("moments verify: configured column(s) " +
-                  missing.mkString("'", "', '", "'") +
-                  " not present in the source corpus schema (" +
-                  corpus.columns.mkString(", ") + ") — the server's " +
-                  "momentsGroupCol/momentsValueCol must name the columns " +
-                  "the ingest folded")))
-              else Right(corpus)
-            }
-            val n = obj()
-            gst match {
-              case Some(g0) =>
-                wantGroup match {
-                  case Some(g) if !g0.groups.contains(g) =>
-                    (404, err(s"group '$g' not in the folded grouped " +
-                      s"moments state (${g0.groups.size} groups folded)"))
-                  case _ =>
-                    n.put("folded", true)
-                    n.put("grouped", true)
-                    n.put("value_col", g0.valueCol)
-                    n.put("checkpoint", g0.checkpoint)
-                    n.put("last_batch_id", g0.lastBatchId)
-                    n.put("group_count", g0.groups.size)
-                    n.put("excluded_null_rows", g0.excludedNullRows)
-                    n.put("moments_are_exact", true)
-                    val selected = wantGroup match {
-                      case Some(g) => Seq(g -> g0.groups(g))
-                      case None => g0.groups.toSeq.sortBy(_._1)
-                    }
-                    val gs = n.putObject("groups")
-                    selected.foreach { case (g, m) =>
-                      writeMoments(gs.putObject(g), m)
-                    }
-                    if (!wantVerify) (200, n)
-                    else verifyCorpus(needGroup = true) match {
-                      case Left(resp) => resp
-                      case Right(corpus) =>
-                        val v = n.putObject("verify")
-                        // bounded collect: one row per source group — a
-                        // group column drifted toward per-row cardinality
-                        // would make that unbounded; cap at stateGroups +
-                        // 16 and refuse loudly past it (the family's
-                        // verify bound rule)
-                        val rowCap = g0.groups.size + 16
-                        // group cast to string — the comoments face's
-                        // rule: a non-string source group column reads
-                        // as named mismatches, never a getString 500
-                        val rows = graft.operators.Profile
-                          .momentsPerGroup(corpus, momentsGroupCol,
-                            momentsValueCol)
-                          .withColumn("group", col("group").cast("string"))
-                          .head(rowCap + 1)
-                        if (rows.length > rowCap) {
-                          v.put("matched", false)
-                          v.put("error", "source group cardinality " +
-                            s"exceeds the verify bound: the folded state " +
-                            s"holds ${g0.groups.size} groups but the " +
-                            s"recount produced more than $rowCap rows — " +
-                            "the group column has drifted; the compare " +
-                            "was skipped rather than collecting an " +
-                            "unbounded relation into the serving driver")
-                        } else {
-                          val recount = rows.map(r => r.getString(0) ->
-                            graft.streaming.StreamingMoments.momentsFromRow(
-                              r, 1, "moments verify recount")).toMap
-                          val allGroups = (g0.groups.keySet ++
-                            recount.keySet).toSeq.sorted
-                          val bad = allGroups.filter(g =>
-                            !g0.groups.get(g).zip(recount.get(g))
-                              .exists { case (a, b) => a == b })
-                          v.put("matched", bad.isEmpty)
-                          v.put("state_group_count", g0.groups.size)
-                          v.put("recount_group_count", recount.size)
-                          v.put("mismatched_group_count", bad.size)
-                          val bl = v.putArray("mismatched_groups")
-                          bad.take(10).foreach(bl.add)
-                        }
-                        v.put("moments_are_exact", true)
-                        (200, n)
-                    }
-                }
-              case None if wst.isDefined =>
-                val w = wst.get
-                // wantVerify cannot reach here: the windowed 409 is the
-                // FIRST verify pre-check above (before the 403)
-                if (wantGroup.isDefined)
-                  (404, err(s"group '${wantGroup.get}' not available: " +
-                    "the folded moments are a sliding WINDOW (no " +
-                    "groups) — group selection needs a " +
-                    "StreamingGroupedMoments fold"))
-                else {
-                  n.put("folded", true)
-                  n.put("grouped", false)
-                  n.put("windowed", true)
-                  n.put("value_col", w.valueCol)
-                  n.put("checkpoint", w.checkpoint)
-                  n.put("last_batch_id", w.lastBatchId)
-                  n.put("window", w.window)
-                  n.put("ring_depth", w.ring.size)
-                  n.put("moments_are_exact", true)
-                  writeMoments(n, w.aggregate)
-                  (200, n)
-                }
-              case None if wantGroup.isDefined =>
-                (404, err(s"group '${wantGroup.get}' not available: the " +
-                  (if (st.lastBatchId < 0L) "state dir holds no folded moments"
-                   else "folded moments are flat (no groups)") +
-                  " — group selection needs a StreamingGroupedMoments fold"))
-              case None if st.lastBatchId < 0L =>
-                n.put("folded", false)
-                n.put("last_batch_id", -1L)
-                n.put("n_rows", 0L)
-                (200, n)
-              case None =>
-                n.put("folded", true)
-                n.put("grouped", false)
-                n.put("value_col", st.valueCol)
-                n.put("checkpoint", st.checkpoint)
-                n.put("last_batch_id", st.lastBatchId)
-                n.put("moments_are_exact", true)
-                writeMoments(n, st.moments)
-                if (!wantVerify) (200, n)
-                else verifyCorpus(needGroup = false) match {
-                  case Left(resp) => resp
-                  case Right(corpus) =>
-                    val v = n.putObject("verify")
-                    // bounded by construction: the recount is ONE row
-                    val recount = graft.streaming.StreamingMoments
-                      .batchMoments(corpus, momentsValueCol)
-                    v.put("matched", recount == st.moments)
-                    v.put("state_n_rows", st.moments.nRows)
-                    v.put("recount_n_rows", recount.nRows)
-                    v.put("moments_are_exact", true)
-                    (200, n)
-                }
-            }
-            }
-        }
-      case ("GET", "/api/v1/admin/profile") =>
-        // the ONE-POLL monitor face: every CONFIGURED profiling face's
-        // headline envelope in a single response — liveness
-        // (last_batch_id per face) plus the number a drift dashboard
-        // plots (mass / n / estimate / mean / correlation), with the
-        // full per-face routes for drill-down. Reads are per-face
-        // LINEARIZABLE (each face's own locked read) but NOT atomic
-        // across faces — the faces are independent streams with
-        // independent folds, so there is no cross-face snapshot to
-        // serve; each face carries its own last_batch_id so a consumer
-        // can see exactly what it is looking at. A face whose state
-        // read fails (e.g. the locked read's contention path) reports a
-        // NAMED per-face error instead of failing the whole envelope —
-        // a combined monitor poll must not go dark because one of six
-        // streams is mid-swap.
-        val n = obj()
-        val faces = n.putObject("faces")
-        var configured = 0
-        def face(name: String)(fill: ObjectNode => Unit): Unit = {
-          configured += 1
-          val f = faces.putObject(name)
-          try fill(f)
-          catch { case scala.util.control.NonFatal(e) =>
-            f.put("error", s"${e.getClass.getSimpleName}: " +
-              Option(e.getMessage).getOrElse("").take(300))
-          }
-        }
-        frequentItemsStateDir.foreach(sd => face("frequent_items") { f =>
-          val st = graft.streaming.StreamingHeavyHitters
-            .readStateLocked(store.spark, sd)
-          if (st.lastBatchId >= 0L) {
-            f.put("folded", true); f.put("grouped", false)
-            f.put("last_batch_id", st.lastBatchId)
-            f.put("checkpoint", st.checkpoint)
-            f.put("n", st.n)
-            f.put("candidate_count", st.counts.size)
-            f.put("k", st.k)
-          } else {
-            val g = graft.streaming.StreamingGroupedHeavyHitters
-              .readStateLocked(store.spark, sd)
-            if (g.lastBatchId >= 0L) {
-              f.put("folded", true); f.put("grouped", true)
-              f.put("last_batch_id", g.lastBatchId)
-              f.put("checkpoint", g.checkpoint)
-              f.put("group_count", g.groups.size)
-              f.put("total_entries", g.totalEntries)
-              f.put("excluded_null_rows", g.excludedNullRows)
-              f.put("k", g.k)
-            } else {
-              val w = graft.streaming.StreamingWindowedHeavyHitters
-                .readStateLocked(store.spark, sd)
-              if (w.lastBatchId >= 0L) {
-                f.put("folded", true); f.put("grouped", false)
-                f.put("windowed", true)
-                f.put("last_batch_id", w.lastBatchId)
-                f.put("checkpoint", w.checkpoint)
-                f.put("window", w.window)
-                f.put("ring_depth", w.ring.size)
-                f.put("n", w.n)
-                f.put("candidate_count", w.aggregateCounts.size)
-                f.put("k", w.k)
-              } else f.put("folded", false)
-            }
-          }
-        })
-        histogramStateDir.foreach(sd => face("histogram") { f =>
-          val st = graft.streaming.StreamingHistogram
-            .readStateLocked(store.spark, sd)
-          if (st.lastBatchId >= 0L) {
-            f.put("folded", true); f.put("grouped", false)
-            f.put("last_batch_id", st.lastBatchId)
-            f.put("checkpoint", st.checkpoint)
-            f.put("n", st.n)
-            f.put("lo", st.spec.lo); f.put("hi", st.spec.hi)
-            f.put("n_bins", st.spec.nBins)
-            f.put("underflow", st.underflow); f.put("overflow", st.overflow)
-          } else {
-            val g = graft.streaming.StreamingGroupedHistogram
-              .readStateLocked(store.spark, sd)
-            if (g.lastBatchId >= 0L) {
-              f.put("folded", true); f.put("grouped", true)
-              f.put("last_batch_id", g.lastBatchId)
-              f.put("checkpoint", g.checkpoint)
-              f.put("group_count", g.groups.size)
-              f.put("total_cells", g.totalCells)
-              f.put("excluded_null_rows", g.excludedNullRows)
-            } else {
-              val w = graft.streaming.StreamingWindowedHistogram
-                .readStateLocked(store.spark, sd)
-              if (w.lastBatchId >= 0L) {
-                val agg = w.aggregate
-                f.put("folded", true); f.put("grouped", false)
-                f.put("windowed", true)
-                f.put("last_batch_id", w.lastBatchId)
-                f.put("checkpoint", w.checkpoint)
-                f.put("window", w.window)
-                f.put("ring_depth", w.ring.size)
-                f.put("n", agg.n)
-                f.put("underflow", agg.underflow)
-                f.put("overflow", agg.overflow)
-              } else f.put("folded", false)
-            }
-          }
-        })
-        sampleStateDir.foreach(sd => face("sample") { f =>
-          val st = graft.streaming.StreamingSample
-            .readStateLocked(store.spark, sd)
-          if (st.lastBatchId >= 0L) {
-            f.put("folded", true); f.put("grouped", false)
-            f.put("last_batch_id", st.lastBatchId)
-            f.put("checkpoint", st.checkpoint)
-            f.put("k", st.k)
-            f.put("n_seen", st.nSeen)
-            f.put("entry_count", st.entries.size)
-          } else {
-            val g = graft.streaming.StreamingGroupedSample
-              .readStateLocked(store.spark, sd)
-            if (g.lastBatchId >= 0L) {
-              f.put("folded", true); f.put("grouped", true)
-              f.put("last_batch_id", g.lastBatchId)
-              f.put("checkpoint", g.checkpoint)
-              f.put("k", g.k)
-              f.put("group_count", g.groups.size)
-              f.put("total_entries", g.totalEntries)
-              f.put("excluded_null_rows", g.excludedNullRows)
-            } else f.put("folded", false)
-          }
-        })
-        momentsStateDir.foreach(sd => face("moments") { f =>
-          val st = graft.streaming.StreamingMoments
-            .readStateLocked(store.spark, sd)
-          if (st.lastBatchId >= 0L) {
-            f.put("folded", true); f.put("grouped", false)
-            f.put("last_batch_id", st.lastBatchId)
-            f.put("checkpoint", st.checkpoint)
-            f.put("value_col", st.valueCol)
-            f.put("n_rows", st.moments.nRows)
-            f.put("n_null", st.moments.nNull)
-            st.moments.mean.foreach(v => f.put("mean", v))
-            st.moments.stddevPop.foreach(v => f.put("stddev_pop", v))
-          } else {
-            val g = graft.streaming.StreamingGroupedMoments
-              .readStateLocked(store.spark, sd)
-            if (g.lastBatchId >= 0L) {
-              f.put("folded", true); f.put("grouped", true)
-              f.put("last_batch_id", g.lastBatchId)
-              f.put("checkpoint", g.checkpoint)
-              f.put("value_col", g.valueCol)
-              f.put("group_count", g.groups.size)
-              f.put("excluded_null_rows", g.excludedNullRows)
-            } else {
-              val w = graft.streaming.StreamingWindowedMoments
-                .readStateLocked(store.spark, sd)
-              if (w.lastBatchId >= 0L) {
-                f.put("folded", true); f.put("grouped", false)
-                f.put("windowed", true)
-                f.put("last_batch_id", w.lastBatchId)
-                f.put("checkpoint", w.checkpoint)
-                f.put("value_col", w.valueCol)
-                f.put("window", w.window)
-                f.put("ring_depth", w.ring.size)
-                val agg = w.aggregate
-                f.put("n_rows", agg.nRows)
-                f.put("n_null", agg.nNull)
-                agg.mean.foreach(v => f.put("mean", v))
-                agg.stddevPop.foreach(v => f.put("stddev_pop", v))
-              } else f.put("folded", false)
-            }
-          }
-        })
-        distinctStateDir.foreach(sd => face("distinct") { f =>
-          val st = graft.streaming.StreamingDistinct
-            .readStateLocked(store.spark, sd)
-          if (st.lastBatchId >= 0L) {
-            f.put("folded", true); f.put("grouped", false)
-            f.put("last_batch_id", st.lastBatchId)
-            f.put("checkpoint", st.checkpoint)
-            f.put("value_col", st.valueCol)
-            f.put("n_rows", st.nRows)
-            f.put("n_null", st.nNull)
-            st.estimate.foreach(v => f.put("estimate", v))
-          } else {
-            val g = graft.streaming.StreamingGroupedDistinct
-              .readStateLocked(store.spark, sd)
-            if (g.lastBatchId >= 0L) {
-              f.put("folded", true); f.put("grouped", true)
-              f.put("last_batch_id", g.lastBatchId)
-              f.put("checkpoint", g.checkpoint)
-              f.put("value_col", g.valueCol)
-              f.put("group_count", g.groups.size)
-              f.put("excluded_null_rows", g.excludedNullRows)
-            } else {
-              val w = graft.streaming.StreamingWindowedDistinct
-                .readStateLocked(store.spark, sd)
-              if (w.lastBatchId >= 0L) {
-                f.put("folded", true); f.put("grouped", false)
-                f.put("windowed", true)
-                f.put("last_batch_id", w.lastBatchId)
-                f.put("checkpoint", w.checkpoint)
-                f.put("value_col", w.valueCol)
-                f.put("window", w.window)
-                f.put("ring_depth", w.ring.size)
-                f.put("n_rows", w.nRows)
-                f.put("n_null", w.nNull)
-                w.estimate.foreach(v => f.put("estimate", v))
-              } else f.put("folded", false)
-            }
-          }
-        })
-        comomentsStateDir.foreach(sd => face("comoments") { f =>
-          val st = graft.streaming.StreamingComoments
-            .readStateLocked(store.spark, sd)
-          if (st.lastBatchId >= 0L) {
-            f.put("folded", true); f.put("grouped", false)
-            f.put("last_batch_id", st.lastBatchId)
-            f.put("checkpoint", st.checkpoint)
-            f.put("x_col", st.xCol); f.put("y_col", st.yCol)
-            f.put("n_rows", st.comoments.nRows)
-            f.put("n", st.comoments.n)
-            st.comoments.covariancePop.foreach(v =>
-              f.put("covariance_pop", v))
-            st.comoments.correlation.foreach(v => f.put("correlation", v))
-          } else {
-            val g = graft.streaming.StreamingGroupedComoments
-              .readStateLocked(store.spark, sd)
-            if (g.lastBatchId >= 0L) {
-              f.put("folded", true); f.put("grouped", true)
-              f.put("last_batch_id", g.lastBatchId)
-              f.put("checkpoint", g.checkpoint)
-              f.put("x_col", g.xCol); f.put("y_col", g.yCol)
-              f.put("group_count", g.groups.size)
-              f.put("excluded_null_rows", g.excludedNullRows)
-            } else f.put("folded", false)
-          }
-        })
-        if (configured == 0)
-          (404, err("no profiling faces configured on this server — " +
-            "pass at least one of frequentItemsStateDir/" +
-            "histogramStateDir/sampleStateDir/momentsStateDir/" +
-            "distinctStateDir/comomentsStateDir to RestServer"))
-        else {
-          n.put("face_count", configured)
-          (200, n)
-        }
-
-      case ("GET", "/api/v1/admin/comoments") =>
-        comomentsStateDir match {
-          case None => (404, err(
-            "comoments state not configured on this server " +
-              "(pass comomentsStateDir to RestServer)"))
-          case Some(sd) =>
-            import graft.streaming.StreamingComoments.Comoments
-            // the ONE state-field contract (putComoments — the counts +
-            // the n>0-gated min/max/string-sums rule, shared with both
-            // fold writers) plus the envelope-only extras: the derived
-            // FP views a ratio-drift monitor actually plots
-            def writeComoments(into: ObjectNode, m: Comoments): Unit = {
-              graft.streaming.StreamingComoments.putComoments(into, m)
-              if (m.n > 0L) {
-                m.meanX.foreach(v => into.put("mean_x", v))
-                m.meanY.foreach(v => into.put("mean_y", v))
-                m.covariancePop.foreach(v => into.put("covariance_pop", v))
-                // None when either side is constant (zero variance):
-                // the field is simply absent, never NaN
-                m.correlation.foreach(v => into.put("correlation", v))
-              }
-            }
-            // the family's flat-vs-grouped selection rule (one state dir,
-            // flat wins ties), both reads linearizable
-            val st = graft.streaming.StreamingComoments
-              .readStateLocked(store.spark, sd)
-            val gst =
-              if (st.lastBatchId < 0L)
-                Some(graft.streaming.StreamingGroupedComoments
-                  .readStateLocked(store.spark, sd))
-                  .filter(_.lastBatchId >= 0L)
-              else None
-            // RAW query, decoded per VALUE after the '&' split (the
-            // family's encoded-group rule)
-            val qp = Option(ex.getRequestURI.getRawQuery)
-              .map(_.split("&").toSeq).getOrElse(Seq.empty)
-            val wantGroup = qp.collectFirst {
-              case s if s.startsWith("group=") => java.net.URLDecoder
-                .decode(s.drop("group=".length), "UTF-8")
-            }
-            // ?verify=true — the bivariate face's recount twin: recompute
-            // the (per-group) exact co-moments ONE-SHOT over the operator-
-            // configured source corpus and compare number-for-number
-            // against the SAME locked snapshot the envelope serves
-            val wantVerify = qp.contains("verify=true")
-            if (wantVerify && comomentsSourceDir.isEmpty)
-              (403, err("comoments verify not configured on this server: " +
-                "the recount is a Spark job over the stream's source " +
-                "corpus — pass comomentsSourceDir to RestServer (client-" +
-                "supplied paths are not accepted, same posture as the " +
-                "other profiling verifies)"))
-            else if (wantVerify && st.lastBatchId < 0L && gst.isEmpty)
-              (409, err(s"no folded comoments state under $sd — start " +
-                "the ingest (or point the server at its state dir) " +
-                "before asking for a recount verify"))
-            else {
-            // 422 when the configured recount columns are missing from
-            // the source schema (configuration-naming, never an opaque
-            // 500) — the profiling-family verify rule
-            def verifyCorpus(needGroup: Boolean)
-                : Either[(Int, ObjectNode), org.apache.spark.sql.DataFrame] = {
-              val corpus = store.spark.read.parquet(comomentsSourceDir.get)
-              val needed = (if (needGroup) Seq(comomentsGroupCol)
-                else Seq.empty[String]) ++ Seq(comomentsXCol, comomentsYCol)
-              val missing = needed.filterNot(corpus.columns.toSet.contains)
-              if (missing.nonEmpty)
-                Left((422, err("comoments verify: configured column(s) " +
-                  missing.mkString("'", "', '", "'") +
-                  " not present in the source corpus schema (" +
-                  corpus.columns.mkString(", ") + ") — the server's " +
-                  "comomentsGroupCol/comomentsXCol/comomentsYCol must " +
-                  "name the columns the ingest folded")))
-              else Right(corpus)
-            }
-            val n = obj()
-            gst match {
-              case Some(g0) =>
-                wantGroup match {
-                  case Some(g) if !g0.groups.contains(g) =>
-                    (404, err(s"group '$g' not in the folded grouped " +
-                      s"comoments state (${g0.groups.size} groups folded)"))
-                  case _ =>
-                    n.put("folded", true)
-                    n.put("grouped", true)
-                    n.put("x_col", g0.xCol)
-                    n.put("y_col", g0.yCol)
-                    n.put("checkpoint", g0.checkpoint)
-                    n.put("last_batch_id", g0.lastBatchId)
-                    n.put("group_count", g0.groups.size)
-                    n.put("excluded_null_rows", g0.excludedNullRows)
-                    n.put("comoments_are_exact", true)
-                    val selected = wantGroup match {
-                      case Some(g) => Seq(g -> g0.groups(g))
-                      case None => g0.groups.toSeq.sortBy(_._1)
-                    }
-                    val gs = n.putObject("groups")
-                    selected.foreach { case (g, m) =>
-                      writeComoments(gs.putObject(g), m)
-                    }
-                    if (!wantVerify) (200, n)
-                    else verifyCorpus(needGroup = true) match {
-                      case Left(resp) => resp
-                      case Right(corpus) =>
-                        val v = n.putObject("verify")
-                        // bounded collect: one row per source group — cap
-                        // at stateGroups + 16 and refuse loudly past it
-                        // (the family's verify bound rule)
-                        val rowCap = g0.groups.size + 16
-                        // group cast to string: the folded state's keys
-                        // are strings by the ingest schema, and a
-                        // non-string source group column must surface
-                        // as NAMED group mismatches, never as a
-                        // ClassCastException-shaped 500 off getString
-                        val rows = graft.operators.Profile
-                          .comomentsPerGroup(corpus, comomentsGroupCol,
-                            comomentsXCol, comomentsYCol)
-                          .withColumn("group", col("group").cast("string"))
-                          .head(rowCap + 1)
-                        if (rows.length > rowCap) {
-                          v.put("matched", false)
-                          v.put("error", "source group cardinality " +
-                            s"exceeds the verify bound: the folded state " +
-                            s"holds ${g0.groups.size} groups but the " +
-                            s"recount produced more than $rowCap rows — " +
-                            "the group column has drifted; the compare " +
-                            "was skipped rather than collecting an " +
-                            "unbounded relation into the serving driver")
-                        } else {
-                          val recount = rows.map(r => r.getString(0) ->
-                            graft.streaming.StreamingComoments
-                              .comomentsFromRow(r, 1,
-                                "comoments verify recount")).toMap
-                          val allGroups = (g0.groups.keySet ++
-                            recount.keySet).toSeq.sorted
-                          val bad = allGroups.filter(g =>
-                            !g0.groups.get(g).zip(recount.get(g))
-                              .exists { case (a, b) => a == b })
-                          v.put("matched", bad.isEmpty)
-                          v.put("state_group_count", g0.groups.size)
-                          v.put("recount_group_count", recount.size)
-                          v.put("mismatched_group_count", bad.size)
-                          val bl = v.putArray("mismatched_groups")
-                          bad.take(10).foreach(bl.add)
-                        }
-                        v.put("comoments_are_exact", true)
-                        (200, n)
-                    }
-                }
-              case None if wantGroup.isDefined =>
-                (404, err(s"group '${wantGroup.get}' not available: the " +
-                  (if (st.lastBatchId < 0L)
-                    "state dir holds no folded comoments"
-                   else "folded comoments are flat (no groups)") +
-                  " — group selection needs a StreamingGroupedComoments " +
-                  "fold"))
-              case None if st.lastBatchId < 0L =>
-                n.put("folded", false)
-                n.put("last_batch_id", -1L)
-                n.put("n_rows", 0L)
-                (200, n)
-              case None =>
-                n.put("folded", true)
-                n.put("grouped", false)
-                n.put("x_col", st.xCol)
-                n.put("y_col", st.yCol)
-                n.put("checkpoint", st.checkpoint)
-                n.put("last_batch_id", st.lastBatchId)
-                n.put("comoments_are_exact", true)
-                writeComoments(n, st.comoments)
-                if (!wantVerify) (200, n)
-                else verifyCorpus(needGroup = false) match {
-                  case Left(resp) => resp
-                  case Right(corpus) =>
-                    val v = n.putObject("verify")
-                    // bounded by construction: the recount is ONE row
-                    val recount = graft.streaming.StreamingComoments
-                      .batchComoments(corpus, comomentsXCol, comomentsYCol)
-                    v.put("matched", recount == st.comoments)
-                    v.put("state_n_rows", st.comoments.nRows)
-                    v.put("recount_n_rows", recount.nRows)
-                    v.put("comoments_are_exact", true)
-                    (200, n)
-                }
-            }
-            }
-        }
-      case ("GET", "/api/v1/admin/distinct") =>
-        distinctStateDir match {
-          case None => (404, err(
-            "distinct state not configured on this server " +
-              "(pass distinctStateDir to RestServer)"))
-          case Some(sd) =>
-            def writeDistinct(into: ObjectNode, nRows: Long, nNull: Long,
-                est: Option[Double]): Unit = {
-              into.put("n_rows", nRows)
-              into.put("n_null", nNull)
-              est.foreach(e => into.put("estimate", e))
-            }
-            // the family's selection ladder (one state dir, earlier
-            // rungs win ties): flat → grouped → windowed. All reads
-            // linearizable
-            val st = graft.streaming.StreamingDistinct
-              .readStateLocked(store.spark, sd)
-            val gst =
-              if (st.lastBatchId < 0L)
-                Some(graft.streaming.StreamingGroupedDistinct
-                  .readStateLocked(store.spark, sd))
-                  .filter(_.lastBatchId >= 0L)
-              else None
-            val wst =
-              if (st.lastBatchId < 0L && gst.isEmpty)
-                Some(graft.streaming.StreamingWindowedDistinct
-                  .readStateLocked(store.spark, sd))
-                  .filter(_.lastBatchId >= 0L)
-              else None
-            // RAW query, decoded per VALUE after the '&' split: getQuery
-            // pre-decodes percent-escapes, so a group name containing '&'
-            // or '=' (sent correctly encoded, e.g. group=r%26d) would be
-            // truncated at the decoded separator and 404 as 'r'
-            val qp = Option(ex.getRequestURI.getRawQuery)
-              .map(_.split("&").toSeq).getOrElse(Seq.empty)
-            val wantGroup = qp.collectFirst {
-              case s if s.startsWith("group=") => java.net.URLDecoder
-                .decode(s.drop("group=".length), "UTF-8")
-            }
-            // ?verify=true — the cardinality face's recount twin: build
-            // the one-shot sketch over the operator-configured source
-            // corpus and compare CANONICAL estimates (union-composite on
-            // both sides — the HLL semilattice makes them equal on a
-            // drained stream) plus the exact row counters.
-            val wantVerify = qp.contains("verify=true")
-            // the windowed 409 before the unconfigured-source 403 — the
-            // moments route's ordering: a windowed fold can never be
-            // recount-verified, so a 403 would send the operator on an
-            // errand that cannot end in a working verify
-            if (wantVerify && wst.isDefined)
-              (409, err("windowed distinct cannot be recount-verified " +
-                "against the source corpus: the corpus does not record " +
-                "which rows arrived in the newest " +
-                s"${wst.get.window} micro-batches, so an all-time " +
-                "recount cannot reproduce the window. The ring's " +
-                "semilattice equality is pinned by the fold's own " +
-                "oracle row and spec"))
-            else if (wantVerify && distinctSourceDir.isEmpty)
-              (403, err("distinct verify not configured on this server: " +
-                "the recount is a Spark job over the stream's source " +
-                "corpus — pass distinctSourceDir to RestServer (client-" +
-                "supplied paths are not accepted, same posture as the " +
-                "other profiling verifies)"))
-            else if (wantVerify && st.lastBatchId < 0L && gst.isEmpty &&
-                wst.isEmpty)
-              (409, err(s"no folded distinct state under $sd — start the " +
-                "ingest (or point the server at its state dir) before " +
-                "asking for a recount verify"))
-            else {
-            def verifyCorpus(needGroup: Boolean)
-                : Either[(Int, ObjectNode), org.apache.spark.sql.DataFrame] = {
-              val corpus = store.spark.read.parquet(distinctSourceDir.get)
-              val needed = (if (needGroup) Seq(distinctGroupCol)
-                else Seq.empty[String]) :+ distinctValueCol
-              val missing = needed.filterNot(corpus.columns.toSet.contains)
-              if (missing.nonEmpty)
-                Left((422, err("distinct verify: configured column(s) " +
-                  missing.mkString("'", "', '", "'") +
-                  " not present in the source corpus schema (" +
-                  corpus.columns.mkString(", ") + ") — the server's " +
-                  "distinctGroupCol/distinctValueCol must name the " +
-                  "columns the ingest folded")))
-              else Right(corpus)
-            }
-            def cEst(bytes: Array[Byte], lgK: Int): Option[Double] =
-              graft.streaming.StreamingDistinct.canonicalEstimate(lgK, bytes)
-            val n = obj()
-            gst match {
-              case Some(g0) =>
-                wantGroup match {
-                  case Some(g) if !g0.groups.contains(g) =>
-                    (404, err(s"group '$g' not in the folded grouped " +
-                      s"distinct state (${g0.groups.size} groups folded)"))
-                  case _ =>
-                    n.put("folded", true)
-                    n.put("grouped", true)
-                    n.put("lg_k", g0.lgK)
-                    n.put("value_col", g0.valueCol)
-                    n.put("checkpoint", g0.checkpoint)
-                    n.put("last_batch_id", g0.lastBatchId)
-                    n.put("group_count", g0.groups.size)
-                    n.put("excluded_null_rows", g0.excludedNullRows)
-                    n.put("counters_are_exact", true)
-                    val selected = wantGroup match {
-                      case Some(g) => Seq(g -> g0.groups(g))
-                      case None => g0.groups.toSeq.sortBy(_._1)
-                    }
-                    val gs = n.putObject("groups")
-                    selected.foreach { case (g, d) =>
-                      writeDistinct(gs.putObject(g), d.nRows, d.nNull,
-                        d.estimate)
-                    }
-                    if (!wantVerify) (200, n)
-                    else verifyCorpus(needGroup = true) match {
-                      case Left(resp) => resp
-                      case Right(corpus) =>
-                        val v = n.putObject("verify")
-                        // bounded collect: one sketch row per source
-                        // group, capped like the other grouped verifies
-                        val rowCap = g0.groups.size + 16
-                        val gcol = col("`" + distinctGroupCol
-                          .replace("`", "``") + "`")
-                        val vcol = col("`" + distinctValueCol
-                          .replace("`", "``") + "`")
-                        val rows = corpus.filter(gcol.isNotNull)
-                          .groupBy(gcol.as("g"))
-                          .agg(count(lit(1)).as("n_rows"),
-                            count(vcol).as("n"),
-                            hll_sketch_agg(vcol, lit(g0.lgK)).as("sk"))
-                          .head(rowCap + 1)
-                        if (rows.length > rowCap) {
-                          v.put("matched", false)
-                          v.put("error", "source group cardinality " +
-                            s"exceeds the verify bound: the folded state " +
-                            s"holds ${g0.groups.size} groups but the " +
-                            s"recount produced more than $rowCap rows — " +
-                            "the group column has drifted; the compare " +
-                            "was skipped rather than collecting an " +
-                            "unbounded relation into the serving driver")
-                        } else {
-                          val recount = rows.map { r =>
-                            val bytes = if (r.getLong(2) == 0L ||
-                                r.isNullAt(3)) Array.empty[Byte]
-                              else r.getAs[Array[Byte]](3)
-                            r.getString(0) -> ((r.getLong(1),
-                              r.getLong(1) - r.getLong(2), bytes))
-                          }.toMap
-                          val allGroups = (g0.groups.keySet ++
-                            recount.keySet).toSeq.sorted
-                          val bad = allGroups.filter { g =>
-                            (g0.groups.get(g), recount.get(g)) match {
-                              case (Some(a), Some((bn, bnull, bsk))) =>
-                                a.nRows != bn || a.nNull != bnull ||
-                                  cEst(a.sketch, g0.lgK) != cEst(bsk, g0.lgK)
-                              case _ => true
-                            }
-                          }
-                          v.put("matched", bad.isEmpty)
-                          v.put("state_group_count", g0.groups.size)
-                          v.put("recount_group_count", recount.size)
-                          v.put("mismatched_group_count", bad.size)
-                          val bl = v.putArray("mismatched_groups")
-                          bad.take(10).foreach(bl.add)
-                        }
-                        (200, n)
-                    }
-                }
-              case None if wst.isDefined =>
-                val w = wst.get
-                // wantVerify cannot reach here: the windowed 409 is the
-                // FIRST verify pre-check above (before the 403)
-                if (wantGroup.isDefined)
-                  (404, err(s"group '${wantGroup.get}' not available: " +
-                    "the folded distinct state is a sliding WINDOW (no " +
-                    "groups) — group selection needs a " +
-                    "StreamingGroupedDistinct fold"))
-                else {
-                  n.put("folded", true)
-                  n.put("grouped", false)
-                  n.put("windowed", true)
-                  n.put("lg_k", w.lgK)
-                  n.put("value_col", w.valueCol)
-                  n.put("checkpoint", w.checkpoint)
-                  n.put("last_batch_id", w.lastBatchId)
-                  n.put("window", w.window)
-                  n.put("ring_depth", w.ring.size)
-                  n.put("counters_are_exact", true)
-                  writeDistinct(n, w.nRows, w.nNull, w.estimate)
-                  (200, n)
-                }
-              case None if wantGroup.isDefined =>
-                (404, err(s"group '${wantGroup.get}' not available: the " +
-                  (if (st.lastBatchId < 0L) "state dir holds no folded distinct state"
-                   else "folded distinct state is flat (no groups)") +
-                  " — group selection needs a StreamingGroupedDistinct fold"))
-              case None if st.lastBatchId < 0L =>
-                n.put("folded", false)
-                n.put("last_batch_id", -1L)
-                n.put("n_rows", 0L)
-                (200, n)
-              case None =>
-                n.put("folded", true)
-                n.put("grouped", false)
-                n.put("lg_k", st.lgK)
-                n.put("value_col", st.valueCol)
-                n.put("checkpoint", st.checkpoint)
-                n.put("last_batch_id", st.lastBatchId)
-                n.put("counters_are_exact", true)
-                writeDistinct(n, st.nRows, st.nNull, st.estimate)
-                if (!wantVerify) (200, n)
-                else verifyCorpus(needGroup = false) match {
-                  case Left(resp) => resp
-                  case Right(corpus) =>
-                    val v = n.putObject("verify")
-                    val (tn, tnull, tsk) = graft.streaming.StreamingDistinct
-                      .batchSketch(corpus, distinctValueCol, st.lgK)
-                    val countersMatch =
-                      tn == st.nRows && tnull == st.nNull
-                    val estMatch =
-                      cEst(st.sketch, st.lgK) == cEst(tsk, st.lgK)
-                    v.put("matched", countersMatch && estMatch)
-                    v.put("counters_matched", countersMatch)
-                    v.put("estimate_matched", estMatch)
-                    v.put("state_n_rows", st.nRows)
-                    v.put("recount_n_rows", tn)
-                    (200, n)
-                }
-            }
-            }
-        }
+      case ("GET", "/api/v1/admin/profile") => profile()
+      case ("GET", path) if faceRoutes.contains(path) =>
+        faceRoutes(path).serve(ex)
       case ("POST", "/api/v1/admin/frequent-items/recount") =>
-        (frequentItemsStateDir, frequentItemsSourceDir) match {
-          case (Some(sd), Some(srcDir)) =>
-            val req = body(ex)
-            if (req == null || !req.hasNonNull("denominator"))
-              (400, err("'denominator' required (items at >= 1/denominator " +
-                "of the (group's) token mass are returned, with EXACT counts)"))
-            else {
-              val denom = req.get("denominator").asLong()
-              // validated HERE as well as in the operators: Jackson's
-              // asLong() coerces non-numeric JSON to 0, and a zero or
-              // negative denominator inverts the threshold arithmetic —
-              // a 200 "exact" answer for a garbage request
-              if (denom <= 0)
-                (400, err(s"'denominator' must be a positive integer, " +
-                  s"got ${req.get("denominator").asText()}"))
-              else {
-                // ONE locked snapshot drives the flat-vs-grouped decision
-                // AND the recount (heavyHittersFromSnapshot, no internal
-                // lock-free re-read): under a hot writer the route can
-                // neither hit the lock-free read's contention error nor
-                // serve totals from a different batch than the counts
-                val (st, gstOpt, wstOpt) = foldedFrequentItems(sd)
-                if (wstOpt.isDefined)
-                  // the family's windowed-verify rule: the corpus does
-                  // not record which rows arrived in the newest N
-                  // batches, so an all-time recount cannot reproduce
-                  // the window — a named 409, checked BEFORE the
-                  // no-state one (the windowed state IS folded)
-                  (409, err("windowed frequent-items cannot be exactly " +
-                    "recounted against the source corpus: the corpus " +
-                    "does not record which rows arrived in the newest " +
-                    s"${wstOpt.get.window} micro-batches. The window's " +
-                    "coverage guarantee is pinned by the fold's own " +
-                    "oracle row and spec; serve the envelope's MG " +
-                    "lower bounds instead"))
-                else if (st.lastBatchId < 0L && gstOpt.isEmpty)
-                  // nothing folded: recounting is a category error, not an
-                  // empty answer — 409 so a misconfigured monitor can't
-                  // read "no state" as "no heavy hitters"
-                  (409, err(s"no folded frequent-items state under $sd — " +
-                    "start the ingest (or point the server at its state " +
-                    "dir) before asking for an exact recount"))
-                else {
-                  val corpus = store.spark.read.parquet(srcDir)
-                  val n = obj()
-                  n.put("denominator", denom)
-                  gstOpt match {
-                    case None =>
-                      val toks = corpus.select(explode(
-                        graft.functions.TextFunctions.tokens(col("text"))).as("token"))
-                      val rows = graft.streaming.StreamingHeavyHitters
-                        .heavyHittersFromSnapshot(st, sd, toks, "token", denom)
-                        .collect() // bounded: <= denominator heavy hitters
-                      n.put("grouped", false)
-                      n.put("n", st.n)
-                      val c = n.putObject("counts")
-                      rows.foreach(r => c.put(r.getString(0), r.getLong(1)))
-                    case Some(gst) =>
-                      val toks = corpus.select(col("source"), explode(
-                        graft.functions.TextFunctions.tokens(col("text"))).as("token"))
-                      val rows = graft.streaming.StreamingGroupedHeavyHitters
-                        .heavyHittersFromSnapshot(gst, sd, store.spark, toks,
-                          "source", "token", denom)
-                        .collect() // bounded: <= groups x denominator rows
-                      n.put("grouped", true)
-                      n.put("n", gst.groups.valuesIterator.map(_.n).sum)
-                      n.put("excluded_null_rows", gst.excludedNullRows)
-                      val gs = n.putObject("groups")
-                      rows.foreach { r =>
-                        val gn =
-                          if (gs.has(r.getString(0))) gs.get(r.getString(0))
-                            .asInstanceOf[ObjectNode]
-                          else gs.putObject(r.getString(0))
-                        gn.put(r.getString(1), r.getLong(2))
-                      }
-                  }
-                  // the point of this route vs the GET envelope's estimates
-                  n.put("counts_are_exact", true)
-                  (200, n)
-                }
-              }
-            }
-          case (Some(_), None) => (403, err(
-            "frequent-items recount not configured on this server: the " +
-              "recount is a Spark job over the stream's source corpus — " +
-              "pass frequentItemsSourceDir to RestServer (client-supplied " +
-              "paths are not accepted, same posture as admin/backup)"))
-          case _ => (404, err(
-            "frequent-items state not configured on this server " +
-              "(pass frequentItemsStateDir to RestServer)"))
-        }
+        recountFrequentItems(ex)
+      case ("POST", "/api/v1/admin/histogram/from-sample") =>
+        deriveFromSample(ex)
       case ("POST", "/api/v1/admin/migrate") =>
         val tm0 = System.nanoTime()
         val migrated = store.migrate()
@@ -2897,67 +1158,928 @@ class RestServer(store: VectorStore, port: Int = 0, cacheSize: Int = 128,
   private def optInt(req: JsonNode, name: String, dflt: Int): Int =
     if (req != null && req.hasNonNull(name)) req.get(name).asInt() else dflt
 
-  /** The ONE encoding of the frequent-items flat-vs-grouped selection
-    * rule, shared by the GET envelope and the recount route so the two
-    * surfaces cannot drift: the dir may hold the FLAT fold's state
-    * (mg_state.json) or the GROUPED fold's (mg_grouped_state.json) —
-    * serve whichever is folded, flat winning ties. Returns the flat
-    * snapshot plus the grouped one ONLY when it should be served
-    * (grouped folded, flat not); neither folded = (empty flat, None) —
-    * the GET serializes that through its flat branch (no hand-written
-    * empty envelope), the recount treats it as a 409 category error.
-    * Both reads are LINEARIZABLE (the writer's swap lock), so a hot
-    * stream yields a consistent snapshot, and every field the caller
-    * serves — totals, counts, thresholds — must come from THIS snapshot,
-    * never a second read behind it. */
-  private def foldedFrequentItems(sd: String)
-      : (graft.streaming.StreamingHeavyHitters.MgSnapshot,
-         Option[graft.streaming.StreamingGroupedHeavyHitters.GroupedMgSnapshot],
-         Option[graft.streaming.StreamingWindowedHeavyHitters.WindowedMgSnapshot]) = {
-    val st = graft.streaming.StreamingHeavyHitters
-      .readStateLocked(store.spark, sd)
-    val gst =
-      if (st.lastBatchId < 0L)
-        Some(graft.streaming.StreamingGroupedHeavyHitters
-          .readStateLocked(store.spark, sd))
-          .filter(_.lastBatchId >= 0L)
-      else None
-    val wst =
-      if (st.lastBatchId < 0L && gst.isEmpty)
-        Some(graft.streaming.StreamingWindowedHeavyHitters
-          .readStateLocked(store.spark, sd))
-          .filter(_.lastBatchId >= 0L)
-      else None
-    (st, gst, wst)
+  // ---- the streaming-profile admin faces (see the class doc) ----
+
+  /** The request's RAW query, split on '&' before any value is decoded:
+    * getQuery pre-decodes percent-escapes, so a value carrying an encoded
+    * '&' or '=' (group=r%26d) would be cut at the decoded separator. */
+  private final class Query(ex: HttpExchange) {
+    private val params =
+      Option(ex.getRequestURI.getRawQuery).toSeq.flatMap(_.split("&"))
+    def get(name: String): Option[String] = params.collectFirst {
+      case p if p.startsWith(name + "=") =>
+        java.net.URLDecoder.decode(p.drop(name.length + 1), UTF_8)
+    }
+    def flag(name: String): Boolean = params.contains(name + "=true")
   }
 
-  /** The histogram instantiation of the frequent-items flat-vs-grouped
-    * selection rule (see [[foldedFrequentItems]] — same contract: one
-    * encoding per state family, both reads linearizable, flat wins
-    * ties, neither-folded serializes through the flat branch's empty
-    * envelope): the dir may hold the FLAT fold's state
-    * (hist_state.json) or the GROUPED fold's (hist_grouped_state.json). */
-  private def foldedHistograms(sd: String)
-      : (graft.streaming.StreamingHistogram.HistSnapshot,
-         Option[graft.streaming.StreamingGroupedHistogram.GroupedHistSnapshot],
-         Option[graft.streaming.StreamingWindowedHistogram.WindowedHistSnapshot]) = {
-    val st = graft.streaming.StreamingHistogram
-      .readStateLocked(store.spark, sd)
-    val gst =
-      if (st.lastBatchId < 0L)
-        Some(graft.streaming.StreamingGroupedHistogram
-          .readStateLocked(store.spark, sd))
-          .filter(_.lastBatchId >= 0L)
-      else None
-    // the face's TIME-dimension rung: flat → grouped → windowed
-    val wst =
-      if (st.lastBatchId < 0L && gst.isEmpty)
-        Some(graft.streaming.StreamingWindowedHistogram
-          .readStateLocked(store.spark, sd))
-          .filter(_.lastBatchId >= 0L)
-      else None
-    (st, gst, wst)
+  /** One profiling face. It supplies only what differs between faces —
+    * its rung readers, the fields its envelope and profile summary add on
+    * each rung, its recount twin — and inherits the route template:
+    * the unconfigured 404, the selection ladder, the `?group` rule, the
+    * verify pre-checks, the missing-column 422 and the profile entry.
+    * A face with no windowed rung or no twin supplies none. */
+  private abstract class Face[F <: FoldSnapshot, V,
+      G <: GroupedFoldSnapshot[V], W <: WindowedFoldSnapshot](
+      val name: String, val param: String, val stateDir: Option[String],
+      groupedFold: String) {
+
+    def flat(sd: String): F
+    def grouped(sd: String): G
+    def windowed: Option[String => W] = None
+    def twin: Option[Twin[F, G]] = None
+    /** A face-specific query refusal (400). */
+    def invalid(q: Query): Option[String] = None
+
+    def flatEnvelope(n: ObjectNode, st: F, q: Query): Unit
+    /** The grouped envelope's top-level fields; returns the writer of one
+      * group's entry. */
+    def groupedEnvelope(n: ObjectNode, st: G, q: Query): (ObjectNode, V) => Unit
+    def windowedEnvelope(n: ObjectNode, st: W, q: Query): Unit = ()
+    def unfoldedEnvelope(n: ObjectNode, st: F, q: Query): Unit
+
+    def flatSummary(f: ObjectNode, st: F): Unit
+    def groupedSummary(f: ObjectNode, st: G): Unit
+    def windowedSummary(f: ObjectNode, st: W): Unit = ()
+
+    /** The ladder: flat → grouped → windowed, the first rung that folded
+      * anything wins (one state dir, earlier rungs win ties). Every read
+      * is the LINEARIZABLE locked read, and every field a route serves
+      * comes from the one snapshot selected here. */
+    final def select(sd: String): Rung[F, G, W] = {
+      val st = flat(sd)
+      if (st.lastBatchId >= 0L) FlatRung(st)
+      else {
+        val g = grouped(sd)
+        if (g.lastBatchId >= 0L) GroupedRung(g)
+        else windowed.map(_(sd)).filter(_.lastBatchId >= 0L)
+          .fold[Rung[F, G, W]](Unfolded(st))(WindowedRung(_))
+      }
+    }
+
+    /** 404 unless the operator wired this face's state dir. */
+    final def configured(route: String => (Int, ObjectNode))
+        : (Int, ObjectNode) = stateDir match {
+      case None => (404, err(s"$name state not configured on this server " +
+        s"(pass ${param}StateDir to RestServer)"))
+      case Some(sd) => route(sd)
+    }
+
+    /** 403: a recount is a Spark job, so it reads only an operator-
+      * configured corpus, never a client-supplied path. */
+    final def sourceRefusal(what: String, sourceDir: Option[String])
+        : Option[(Int, ObjectNode)] =
+      if (sourceDir.isDefined) None
+      else Some((403, err(s"$name $what not configured on this server: " +
+        "the recount is a Spark job over the stream's source corpus — " +
+        s"pass ${param}SourceDir to RestServer (client-supplied paths " +
+        "are not accepted)")))
+
+    /** 409: a window cannot be recounted — the corpus does not record
+      * which rows arrived in the newest batches. */
+    final def windowRefusal(rung: Rung[F, G, W], what: String)
+        : Option[(Int, ObjectNode)] = rung match {
+      case WindowedRung(w) => Some((409, err(s"windowed $name cannot be " +
+        s"$what against the source corpus: the corpus does not record " +
+        s"which rows arrived in the newest ${w.window} micro-batches, so " +
+        "an all-time recount cannot reproduce the window. The ring is " +
+        "pinned by the fold's own oracle row and spec")))
+      case _ => None
+    }
+
+    /** 409: with nothing folded, a recount is a category error, never a
+      * vacuous match a monitor could read as "no drift". */
+    final def unfolded(sd: String, what: String): (Int, ObjectNode) =
+      (409, err(s"no folded $name state under $sd — start the ingest (or " +
+        s"point the server at its state dir) before asking for $what"))
+
+    final def unknownGroup(g: String, st: G): (Int, ObjectNode) =
+      (404, err(s"group '$g' not in the folded grouped $name state " +
+        s"(${st.groups.size} groups folded)"))
+
+    /** 404 for a `?group` only a grouped fold that folded it can answer:
+      * serving a flat, windowed or empty envelope instead would let a
+      * monitor read the whole profile as one stratum's. */
+    private def groupRefusal(rung: Rung[F, G, W], g: String)
+        : Option[(Int, ObjectNode)] = {
+      def unavailable(why: String) = Some((404, err(s"group '$g' not " +
+        s"available: $why — group selection needs a $groupedFold fold")))
+      rung match {
+        case GroupedRung(st) =>
+          if (st.groups.contains(g)) None else Some(unknownGroup(g, st))
+        case FlatRung(_) => unavailable(s"the folded $name state is flat " +
+          "(no groups)")
+        case WindowedRung(_) => unavailable(s"the folded $name state is a " +
+          "sliding WINDOW (no groups)")
+        case Unfolded(_) => unavailable(s"the state dir holds no folded " +
+          s"$name state")
+      }
+    }
+
+    /** GET /admin/<name>: verify pre-checks (windowed 409 → 403 →
+      * nothing-folded 409), the `?group` 404s, the envelope, then the
+      * twin's recount. */
+    final def serve(ex: HttpExchange): (Int, ObjectNode) = configured { sd =>
+      val q = new Query(ex)
+      invalid(q).map(msg => (400, err(msg))).getOrElse {
+        val rung = select(sd)
+        val group = q.get("group")
+        val verify = twin.filter(_ => q.flag("verify"))
+        verify.flatMap(t => windowRefusal(rung, "recount-verified")
+            .orElse(sourceRefusal("verify", t.sourceDir))
+            .orElse(Some(rung).collect { case Unfolded(_) =>
+              unfolded(sd, "a recount verify") }))
+          .orElse(group.flatMap(groupRefusal(rung, _)))
+          .getOrElse {
+            val n = obj()
+            header(n, rung)
+            rung match {
+              case FlatRung(st) => flatEnvelope(n, st, q)
+              case GroupedRung(st) =>
+                val write = groupedEnvelope(n, st, q)
+                val gs = n.putObject("groups")
+                group.fold(st.groups.toSeq.sortBy(_._1))(g =>
+                    Seq(g -> st.groups(g)))
+                  .foreach { case (g, v) => write(gs.putObject(g), v) }
+              case WindowedRung(st) => windowedEnvelope(n, st, q)
+              case Unfolded(st) => unfoldedEnvelope(n, st, q)
+            }
+            verify.fold((200, n))(recount(n, rung, _))
+          }
+      }
+    }
+
+    /** The twin's recount over the source corpus, against the SAME
+      * snapshot the envelope serves: 422 when the configured columns are
+      * not in the source schema (configuration-naming, never an opaque
+      * 500 mid-recount). */
+    private def recount(n: ObjectNode, rung: Rung[F, G, W], t: Twin[F, G])
+        : (Int, ObjectNode) = {
+      val corpus = store.spark.read.parquet(t.sourceDir.get)
+      val needed = (rung match {
+        case GroupedRung(_) => Seq(t.groupCol)
+        case _ => Seq.empty[String]
+      }) ++ t.cols
+      val missing = needed.filterNot(corpus.columns.toSet)
+      if (missing.nonEmpty)
+        (422, err(s"$name verify: configured column(s) " +
+          missing.mkString("'", "', '", "'") + " not present in the " +
+          s"source corpus schema (${corpus.columns.mkString(", ")}) — the " +
+          s"server's ${t.colParams} must name the columns the ingest folded"))
+      else {
+        val v = n.putObject("verify")
+        rung match {
+          case FlatRung(st) => t.flat(v, st, corpus)
+          case GroupedRung(st) => t.grouped(v, st, corpus)
+          case _ => // refused before the envelope
+        }
+        (200, n)
+      }
+    }
+
+    /** This face's `/admin/profile` entry: liveness plus the headline a
+      * drift dashboard plots. */
+    final def summary(f: ObjectNode, sd: String): Unit = {
+      val rung = select(sd)
+      f.put("folded", !rung.isInstanceOf[Unfolded[_]])
+      header(f, rung)
+      rung match {
+        case FlatRung(st) => flatSummary(f, st)
+        case GroupedRung(st) => groupedSummary(f, st)
+        case WindowedRung(st) => windowedSummary(f, st)
+        case Unfolded(_) =>
+      }
+    }
   }
+
+  /** The rung fields every face envelope and profile entry carries. */
+  private def header(n: ObjectNode, rung: Rung[FoldSnapshot,
+      GroupedFoldSnapshot[Any], WindowedFoldSnapshot]): Unit = {
+    def at(st: FoldSnapshot): Unit = {
+      n.put("checkpoint", st.checkpoint)
+      n.put("last_batch_id", st.lastBatchId)
+    }
+    rung match {
+      case FlatRung(st) => n.put("grouped", false); at(st)
+      case GroupedRung(st) =>
+        n.put("grouped", true); at(st)
+        n.put("group_count", st.groups.size)
+        // null-group-key rows the fold excluded: a source column rotting
+        // to NULL would otherwise quietly thin the profile
+        n.put("excluded_null_rows", st.excludedNullRows)
+      case WindowedRung(st) =>
+        n.put("grouped", false); n.put("windowed", true); at(st)
+        n.put("window", st.window)
+        n.put("ring_depth", st.ring.size)
+      case Unfolded(_) =>
+    }
+  }
+
+  /** A grouped twin's bounded recount and verdict. The fold's maxGroups
+    * bounded the STATE, but the recount reads the CURRENT source: a
+    * group column drifted toward per-row cardinality must be refused,
+    * never collected into the serving driver. So: head(cap + 1) with
+    * cap = (state groups + 16) × `rowsPerGroup` (the slack lets a few
+    * new groups report as named mismatches); past the cap the verdict is
+    * that refusal. Else `decode` keys the rows by group, `same` compares
+    * a group's state with its recount (a group on one side only is a
+    * mismatch), and the mismatched groups are listed sorted, first ten.
+    * Returns the decoded recount for the face's own verdict fields. */
+  private def groupVerdict[V, R](v: ObjectNode, groups: Map[String, V],
+      rowsPerGroup: Int, relation: DataFrame)(
+      decode: Array[Row] => Map[String, R])(
+      same: (V, R) => Boolean): Option[Map[String, R]] = {
+    val cap = (groups.size + 16) * rowsPerGroup
+    val rows = relation.head(cap + 1)
+    if (rows.length > cap) {
+      v.put("matched", false)
+      v.put("error", "source group cardinality exceeds the verify bound: " +
+        s"the folded state holds ${groups.size} groups but the recount " +
+        s"produced more than $cap rows — the group column has drifted " +
+        "(e.g. toward per-row cardinality); the compare was skipped rather " +
+        "than collecting an unbounded relation into the serving driver")
+      None
+    } else {
+      val recount = decode(rows)
+      val bad = (groups.keySet ++ recount.keySet).toSeq.sorted
+        .filterNot(g => groups.get(g).zip(recount.get(g)).exists(same.tupled))
+      v.put("matched", bad.isEmpty)
+      v.put("mismatched_group_count", bad.size)
+      val bl = v.putArray("mismatched_groups")
+      bad.take(10).foreach(bl.add)
+      Some(recount)
+    }
+  }
+
+  private def groupCounts(v: ObjectNode, state: Int, recount: Int): Unit = {
+    v.put("state_group_count", state)
+    v.put("recount_group_count", recount)
+  }
+
+  private val frequentItems = new Face[MgSnapshot, GroupState,
+      GroupedMgSnapshot, WindowedMgSnapshot]("frequent-items",
+      "frequentItems", frequentItemsStateDir, "StreamingGroupedHeavyHitters") {
+    def flat(sd: String) = StreamingHeavyHitters.readStateLocked(store.spark, sd)
+    def grouped(sd: String) =
+      StreamingGroupedHeavyHitters.readStateLocked(store.spark, sd)
+    override val windowed = Some((sd: String) =>
+      StreamingWindowedHeavyHitters.readStateLocked(store.spark, sd))
+    // the folded MG estimates — lower bounds, off by at most n/(k+1) of
+    // the (group's) mass; exact values are the POST recount's — in the
+    // operator's own order: count desc, item asc
+    private def counts(into: ObjectNode, cs: Map[String, Long]): Unit = {
+      val c = into.putObject("counts")
+      cs.toSeq.sortBy { case (item, cnt) => (-cnt, item) }
+        .foreach { case (item, cnt) => c.put(item, cnt) }
+    }
+    private def mg(n: ObjectNode, k: Int, mass: Long, entries: Int): Unit = {
+      n.put("k", k); n.put("n", mass); n.put("state_entries", entries)
+      n.put("counts_are_mg_estimates", true)
+    }
+    def flatEnvelope(n: ObjectNode, st: MgSnapshot, q: Query): Unit = {
+      mg(n, st.k, st.n, st.counts.size); counts(n, st.counts)
+    }
+    def groupedEnvelope(n: ObjectNode, st: GroupedMgSnapshot, q: Query)
+        : (ObjectNode, GroupState) => Unit = {
+      mg(n, st.k, st.groups.valuesIterator.map(_.n).sum, st.totalEntries)
+      (gn, g) => { gn.put("n", g.n); counts(gn, g.counts) }
+    }
+    // the windowed rung is "trending now": the ring-merged candidates
+    override def windowedEnvelope(n: ObjectNode, w: WindowedMgSnapshot,
+        q: Query): Unit = {
+      val agg = w.aggregateCounts
+      mg(n, w.k, w.n, agg.size); counts(n, agg)
+    }
+    // nothing folded serializes through the flat envelope
+    def unfoldedEnvelope(n: ObjectNode, st: MgSnapshot, q: Query): Unit = {
+      header(n, FlatRung(st)); flatEnvelope(n, st, q)
+    }
+    def flatSummary(f: ObjectNode, st: MgSnapshot): Unit = {
+      f.put("n", st.n); f.put("candidate_count", st.counts.size)
+      f.put("k", st.k)
+    }
+    def groupedSummary(f: ObjectNode, st: GroupedMgSnapshot): Unit = {
+      f.put("total_entries", st.totalEntries); f.put("k", st.k)
+    }
+    override def windowedSummary(f: ObjectNode,
+        w: WindowedMgSnapshot): Unit = {
+      f.put("n", w.n); f.put("candidate_count", w.aggregateCounts.size)
+      f.put("k", w.k)
+    }
+  }
+
+  private val histogram = new Face[HistSnapshot, GroupHist,
+      GroupedHistSnapshot, WindowedHistSnapshot]("histogram", "histogram",
+      histogramStateDir, "StreamingGroupedHistogram") {
+    def flat(sd: String) = StreamingHistogram.readStateLocked(store.spark, sd)
+    def grouped(sd: String) =
+      StreamingGroupedHistogram.readStateLocked(store.spark, sd)
+    override val windowed = Some((sd: String) =>
+      StreamingWindowedHistogram.readStateLocked(store.spark, sd))
+
+    // ?probs=0.5,0.9 overrides the default probes; malformed is a loud 400
+    private def probs(q: Query): Either[String, Seq[Double]] =
+      q.get("probs") match {
+        case None => Right(Seq(0.5, 0.9, 0.99))
+        case Some(v) =>
+          val parts = v.split(",").toSeq.filter(_.nonEmpty)
+          val ds = parts.map(p => scala.util.Try(p.toDouble).toOption)
+          // d.isNaN: "NaN".toDouble parses, and NaN fails neither range
+          // bound — without this it trips quantiles' require as a 500
+          if (parts.isEmpty || ds.exists(_.isEmpty)
+              || ds.flatten.exists(d => d.isNaN || d < 0.0 || d > 1.0))
+            Left(s"probs must be comma-separated numbers in [0, 1], got '$v'")
+          else Right(ds.flatten)
+      }
+    override def invalid(q: Query): Option[String] = probs(q).left.toOption
+
+    // counts are EXACT and quantiles rank-exact; only the VALUE is
+    // quantized, to one bin width
+    private def binning(n: ObjectNode, spec: HistogramSketch.HistogramSpec)
+        : Unit = {
+      n.put("folded", true)
+      n.put("lo", spec.lo); n.put("hi", spec.hi); n.put("n_bins", spec.nBins)
+      n.put("value_resolution", spec.width)
+      n.put("counts_are_exact", true)
+    }
+    // a misconfigured (or drifted) [lo, hi) silently parks mass in
+    // under/overflow (NaN values land in overflow): a monitor needs the
+    // FRACTION, and a loud field past histogramOutOfRangeAlert
+    private def outOfRange(n: ObjectNode, total: Long, oor: Long): Unit = {
+      val frac = if (total == 0L) 0.0 else oor.toDouble / total
+      n.put("out_of_range_mass_fraction", frac)
+      if (frac > histogramOutOfRangeAlert)
+        n.put("binning_warning",
+          f"$frac%.4f of the folded mass fell outside the configured " +
+            f"[lo, hi) — past the $histogramOutOfRangeAlert alert " +
+            "threshold; the quantile estimates clamp there. Re-derive the " +
+            "binning (HistogramSketch.fromSample) and re-fold with a fresh " +
+            "state dir")
+    }
+    private def cells(n: ObjectNode, q: Query, ps: Seq[(Double, Double)],
+        bins: Map[Int, Long]): Unit = {
+      val qs = n.putObject("quantiles")
+      ps.foreach { case (p, est) => qs.put(p.toString, est) }
+      if (q.flag("bins")) {
+        val b = n.putObject("bins")
+        bins.toSeq.sortBy(_._1).foreach { case (bin, c) =>
+          b.put(bin.toString, c) }
+      }
+    }
+    def flatEnvelope(n: ObjectNode, st: HistSnapshot, q: Query): Unit = {
+      binning(n, st.spec)
+      n.put("n", st.n)
+      n.put("underflow", st.underflow); n.put("overflow", st.overflow)
+      outOfRange(n, st.n, st.underflow + st.overflow)
+      cells(n, q, StreamingHistogram.quantilesFromSnapshot(st,
+        probs(q).getOrElse(Nil)), st.bins)
+    }
+    def groupedEnvelope(n: ObjectNode, st: GroupedHistSnapshot, q: Query)
+        : (ObjectNode, GroupHist) => Unit = {
+      val nBins = st.spec.nBins
+      val total = st.groups.valuesIterator.map(_.n).sum
+      binning(n, st.spec)
+      n.put("n", total)
+      outOfRange(n, total, st.groups.valuesIterator.map(gh =>
+        gh.bins.getOrElse(-1, 0L) + gh.bins.getOrElse(nBins, 0L)).sum)
+      (gn, gh) => {
+        gn.put("n", gh.n)
+        gn.put("underflow", gh.bins.getOrElse(-1, 0L))
+        gn.put("overflow", gh.bins.getOrElse(nBins, 0L))
+        cells(gn, q, HistogramSketch.quantiles(st.spec, gh.bins,
+          probs(q).getOrElse(Nil)), gh.bins)
+      }
+    }
+    // the ring's bin-wise aggregate, served as a flat envelope
+    override def windowedEnvelope(n: ObjectNode, w: WindowedHistSnapshot,
+        q: Query): Unit = flatEnvelope(n, w.aggregate, q)
+    // the placeholder binning is NOT echoed: it would mislead a monitor
+    def unfoldedEnvelope(n: ObjectNode, st: HistSnapshot, q: Query): Unit = {
+      n.put("folded", false); n.put("last_batch_id", -1L); n.put("n", 0L)
+    }
+    def flatSummary(f: ObjectNode, st: HistSnapshot): Unit = {
+      f.put("n", st.n)
+      f.put("lo", st.spec.lo); f.put("hi", st.spec.hi)
+      f.put("n_bins", st.spec.nBins)
+      f.put("underflow", st.underflow); f.put("overflow", st.overflow)
+    }
+    def groupedSummary(f: ObjectNode, st: GroupedHistSnapshot): Unit =
+      f.put("total_cells", st.totalCells)
+    override def windowedSummary(f: ObjectNode,
+        w: WindowedHistSnapshot): Unit = {
+      val agg = w.aggregate
+      f.put("n", agg.n)
+      f.put("underflow", agg.underflow); f.put("overflow", agg.overflow)
+    }
+
+    private def diffCells(state: Map[Int, Long], recount: Map[Int, Long])
+        : Int = (state.keySet ++ recount.keySet).count(b =>
+      state.getOrElse(b, 0L) != recount.getOrElse(b, 0L))
+    // both the fold and the recount skip NULL values, so a value column
+    // rotting to NULL would verify "matched" invisibly: the recount counts
+    // its exclusions on the SAME scan (a CollectMetrics node under the
+    // aggregation barrier sees every source row, no second pass)
+    private def nullValues(keep: org.apache.spark.sql.Column) =
+      count(when(keep && col(histogramValueCol).cast("double").isNull, 1))
+        .as("null_values")
+    override val twin = Some(Twin[HistSnapshot, GroupedHistSnapshot](
+      histogramSourceDir, histogramGroupCol, Seq(histogramValueCol),
+      "histogramGroupCol/histogramValueCol",
+      flat = (v, st, corpus) => {
+        val nulls = Observation()
+        val recount = HistogramSketch.counts(
+            corpus.select(col(histogramValueCol))
+              .observe(nulls, nullValues(lit(true))),
+            histogramValueCol, st.spec)
+          .collect() // bounded: <= nBins+2 rows
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+        val mismatches = diffCells(st.bins, recount)
+        v.put("matched", mismatches == 0)
+        v.put("recount_n", recount.valuesIterator.sum)
+        v.put("state_n", st.n)
+        v.put("recount_excluded_null_values",
+          nulls.get("null_values").asInstanceOf[Long])
+        v.put("mismatched_bin_count", mismatches)
+        v.put("counts_are_exact", true)
+      },
+      grouped = (v, st, corpus) => {
+        val nulls = Observation()
+        val observed = corpus.observe(nulls,
+          nullValues(col(histogramGroupCol).isNotNull))
+        groupVerdict(v, st.groups, st.spec.nBins + 2,
+            HistogramSketch.countsPerGroup(observed, histogramGroupCol,
+              histogramValueCol, st.spec))(
+            _.groupBy(_.getString(0)).map { case (g, rs) =>
+              g -> rs.map(r => r.getInt(1) -> r.getLong(2)).toMap })(
+            (gh, bins) => diffCells(gh.bins, bins) == 0)
+          .foreach { recount =>
+            v.put("recount_n", recount.valuesIterator.map(_.values.sum).sum)
+            v.put("state_n", st.groups.valuesIterator.map(_.n).sum)
+            v.put("recount_excluded_null_values",
+              nulls.get("null_values").asInstanceOf[Long])
+          }
+        v.put("counts_are_exact", true)
+      }))
+  }
+
+  private val sample = new Face[SampleSnapshot, GroupSample,
+      GroupedSampleSnapshot, Nothing]("sample", "sample", sampleStateDir,
+      "StreamingGroupedSample") {
+    def flat(sd: String) = StreamingSample.readStateLocked(store.spark, sd)
+    def grouped(sd: String) =
+      StreamingGroupedSample.readStateLocked(store.spark, sd)
+    // entries are exact: each (group's) sample is a deterministic
+    // function of the corpus (salted-hash bottom-k)
+    private def head(n: ObjectNode, k: Int, salt: String, seen: Long): Unit = {
+      n.put("folded", true); n.put("k", k); n.put("salt", salt)
+      n.put("n_seen", seen); n.put("entries_are_exact", true)
+    }
+    private def entries(into: ObjectNode, es: Seq[SampleEntry]): Unit = {
+      into.put("sample_size", es.size)
+      val arr = into.putArray("entries")
+      es.foreach { e =>
+        val en = arr.addObject()
+        en.put("id", e.id)
+        e.value.foreach(v => en.put("value", v))
+      }
+    }
+    def flatEnvelope(n: ObjectNode, st: SampleSnapshot, q: Query): Unit = {
+      head(n, st.k, st.salt, st.nSeen); entries(n, st.entries)
+    }
+    def groupedEnvelope(n: ObjectNode, st: GroupedSampleSnapshot, q: Query)
+        : (ObjectNode, GroupSample) => Unit = {
+      head(n, st.k, st.salt, st.groups.valuesIterator.map(_.nSeen).sum)
+      (gn, s) => { gn.put("n_seen", s.nSeen); entries(gn, s.entries) }
+    }
+    def unfoldedEnvelope(n: ObjectNode, st: SampleSnapshot, q: Query)
+        : Unit = {
+      n.put("folded", false); n.put("last_batch_id", -1L); n.put("n_seen", 0L)
+    }
+    def flatSummary(f: ObjectNode, st: SampleSnapshot): Unit = {
+      f.put("k", st.k); f.put("n_seen", st.nSeen)
+      f.put("entry_count", st.entries.size)
+    }
+    def groupedSummary(f: ObjectNode, st: GroupedSampleSnapshot): Unit = {
+      f.put("k", st.k); f.put("total_entries", st.totalEntries)
+    }
+    override val twin = Some(Twin[SampleSnapshot, GroupedSampleSnapshot](
+      sampleSourceDir, sampleGroupCol, sampleIdCol +: sampleValueCol.toSeq,
+      "sampleGroupCol/sampleIdCol/sampleValueCol",
+      flat = (v, st, corpus) => {
+        // bounded by construction: batchBottomK collects ≤ k
+        val recount = StreamingSample.batchBottomK(corpus, st.k, st.salt,
+          sampleIdCol, sampleValueCol)
+        // split so an operator can tell skipped data (ids differ) from a
+        // value-column misconfig (ids equal, carried values differ)
+        val idsMatch = recount.map(e => (e.key, e.id)) ==
+          st.entries.map(e => (e.key, e.id))
+        val valuesMatch = recount.map(_.value) == st.entries.map(_.value)
+        v.put("matched", idsMatch && valuesMatch)
+        v.put("ids_matched", idsMatch)
+        v.put("values_matched", valuesMatch)
+        v.put("state_size", st.entries.size)
+        v.put("recount_size", recount.size)
+        val bl = v.putArray("mismatched_ids")
+        (recount.map(_.id).toSet -- st.entries.map(_.id).toSet)
+          .toSeq.sorted.take(10).foreach(bl.add)
+        v.put("entries_are_exact", true)
+      },
+      grouped = (v, st, corpus) => {
+        groupVerdict(v, st.groups, st.k,
+            StreamingGroupedSample.batchBottomKPerGroup(corpus, st.k, st.salt,
+              sampleGroupCol, sampleIdCol, sampleValueCol))(
+            _.groupBy(_.getString(0)).map { case (g, rs) =>
+              g -> rs.map(r => SampleEntry(r.getLong(1), r.getLong(2),
+                  if (r.isNullAt(3)) None else Some(r.getDouble(3))))
+                .sortBy(e => (e.key, e.id)).toSeq })(
+            (s, recount) => s.entries == recount)
+          .foreach(recount => groupCounts(v, st.groups.size, recount.size))
+        v.put("entries_are_exact", true)
+      }))
+  }
+
+  private val moments = new Face[MomentsSnapshot, Moments,
+      GroupedMomentsSnapshot, WindowedMomentsSnapshot]("moments", "moments",
+      momentsStateDir, "StreamingGroupedMoments") {
+    def flat(sd: String) = StreamingMoments.readStateLocked(store.spark, sd)
+    def grouped(sd: String) =
+      StreamingGroupedMoments.readStateLocked(store.spark, sd)
+    override val windowed = Some((sd: String) =>
+      StreamingWindowedMoments.readStateLocked(store.spark, sd))
+    private def head(n: ObjectNode, valueCol: String): Unit = {
+      n.put("folded", true); n.put("value_col", valueCol)
+      n.put("moments_are_exact", true)
+    }
+    // the ONE state-field contract (putMoments, shared with both fold
+    // writers) plus the envelope-only extras a monitor plots
+    private def write(into: ObjectNode, m: Moments): Unit = {
+      StreamingMoments.putMoments(into, m)
+      into.put("n", m.n)
+      if (m.n > 0L) {
+        m.mean.foreach(v => into.put("mean", v))
+        m.stddevPop.foreach(v => into.put("stddev_pop", v))
+      }
+    }
+    private def headline(f: ObjectNode, valueCol: String, m: Moments): Unit = {
+      f.put("value_col", valueCol)
+      f.put("n_rows", m.nRows); f.put("n_null", m.nNull)
+      m.mean.foreach(v => f.put("mean", v))
+      m.stddevPop.foreach(v => f.put("stddev_pop", v))
+    }
+    def flatEnvelope(n: ObjectNode, st: MomentsSnapshot, q: Query): Unit = {
+      head(n, st.valueCol); write(n, st.moments)
+    }
+    def groupedEnvelope(n: ObjectNode, st: GroupedMomentsSnapshot, q: Query)
+        : (ObjectNode, Moments) => Unit = {
+      head(n, st.valueCol); write
+    }
+    override def windowedEnvelope(n: ObjectNode, w: WindowedMomentsSnapshot,
+        q: Query): Unit = { head(n, w.valueCol); write(n, w.aggregate) }
+    def unfoldedEnvelope(n: ObjectNode, st: MomentsSnapshot, q: Query)
+        : Unit = {
+      n.put("folded", false); n.put("last_batch_id", -1L); n.put("n_rows", 0L)
+    }
+    def flatSummary(f: ObjectNode, st: MomentsSnapshot): Unit =
+      headline(f, st.valueCol, st.moments)
+    def groupedSummary(f: ObjectNode, st: GroupedMomentsSnapshot): Unit =
+      f.put("value_col", st.valueCol)
+    override def windowedSummary(f: ObjectNode,
+        w: WindowedMomentsSnapshot): Unit =
+      headline(f, w.valueCol, w.aggregate)
+    override val twin = Some(Twin[MomentsSnapshot, GroupedMomentsSnapshot](
+      momentsSourceDir, momentsGroupCol, Seq(momentsValueCol),
+      "momentsGroupCol/momentsValueCol",
+      flat = (v, st, corpus) => {
+        // bounded by construction: the recount is ONE row
+        val recount = StreamingMoments.batchMoments(corpus, momentsValueCol)
+        v.put("matched", recount == st.moments)
+        v.put("state_n_rows", st.moments.nRows)
+        v.put("recount_n_rows", recount.nRows)
+        v.put("moments_are_exact", true)
+      },
+      grouped = (v, st, corpus) => {
+        // group cast to string: a non-string source group column reads
+        // as named mismatches, never a getString 500
+        groupVerdict(v, st.groups, 1, Profile.momentsPerGroup(corpus,
+            momentsGroupCol, momentsValueCol)
+            .withColumn("group", col("group").cast("string")))(
+            _.map(r => r.getString(0) -> StreamingMoments.momentsFromRow(r, 1,
+              "moments verify recount")).toMap)(_ == _)
+          .foreach(recount => groupCounts(v, st.groups.size, recount.size))
+        v.put("moments_are_exact", true)
+      }))
+  }
+
+  private val distinct = new Face[DistinctSnapshot, GroupDistinct,
+      GroupedDistinctSnapshot, WindowedDistinctSnapshot]("distinct",
+      "distinct", distinctStateDir, "StreamingGroupedDistinct") {
+    def flat(sd: String) = StreamingDistinct.readStateLocked(store.spark, sd)
+    def grouped(sd: String) =
+      StreamingGroupedDistinct.readStateLocked(store.spark, sd)
+    override val windowed = Some((sd: String) =>
+      StreamingWindowedDistinct.readStateLocked(store.spark, sd))
+    // exact row/null counters plus the HLL estimate
+    private def head(n: ObjectNode, lgK: Int, valueCol: String): Unit = {
+      n.put("folded", true); n.put("lg_k", lgK); n.put("value_col", valueCol)
+      n.put("counters_are_exact", true)
+    }
+    private def counters(into: ObjectNode, nRows: Long, nNull: Long,
+        est: Option[Double]): Unit = {
+      into.put("n_rows", nRows)
+      into.put("n_null", nNull)
+      est.foreach(e => into.put("estimate", e))
+    }
+    def flatEnvelope(n: ObjectNode, st: DistinctSnapshot, q: Query): Unit = {
+      head(n, st.lgK, st.valueCol)
+      counters(n, st.nRows, st.nNull, st.estimate)
+    }
+    def groupedEnvelope(n: ObjectNode, st: GroupedDistinctSnapshot,
+        q: Query): (ObjectNode, GroupDistinct) => Unit = {
+      head(n, st.lgK, st.valueCol)
+      (gn, d) => counters(gn, d.nRows, d.nNull, d.estimate)
+    }
+    override def windowedEnvelope(n: ObjectNode,
+        w: WindowedDistinctSnapshot, q: Query): Unit = {
+      head(n, w.lgK, w.valueCol); counters(n, w.nRows, w.nNull, w.estimate)
+    }
+    def unfoldedEnvelope(n: ObjectNode, st: DistinctSnapshot, q: Query)
+        : Unit = {
+      n.put("folded", false); n.put("last_batch_id", -1L); n.put("n_rows", 0L)
+    }
+    def flatSummary(f: ObjectNode, st: DistinctSnapshot): Unit = {
+      f.put("value_col", st.valueCol)
+      counters(f, st.nRows, st.nNull, st.estimate)
+    }
+    def groupedSummary(f: ObjectNode, st: GroupedDistinctSnapshot): Unit =
+      f.put("value_col", st.valueCol)
+    override def windowedSummary(f: ObjectNode,
+        w: WindowedDistinctSnapshot): Unit = {
+      f.put("value_col", w.valueCol)
+      counters(f, w.nRows, w.nNull, w.estimate)
+    }
+    // the verify compares CANONICAL estimates (union-composite on both
+    // sides — the HLL semilattice makes them equal on a drained stream)
+    // plus the exact counters
+    private def canonical(bytes: Array[Byte], lgK: Int): Option[Double] =
+      StreamingDistinct.canonicalEstimate(lgK, bytes)
+    override val twin = Some(Twin[DistinctSnapshot, GroupedDistinctSnapshot](
+      distinctSourceDir, distinctGroupCol, Seq(distinctValueCol),
+      "distinctGroupCol/distinctValueCol",
+      flat = (v, st, corpus) => {
+        val (tn, tnull, tsk) =
+          StreamingDistinct.batchSketch(corpus, distinctValueCol, st.lgK)
+        val countersMatch = tn == st.nRows && tnull == st.nNull
+        val estMatch = canonical(st.sketch, st.lgK) == canonical(tsk, st.lgK)
+        v.put("matched", countersMatch && estMatch)
+        v.put("counters_matched", countersMatch)
+        v.put("estimate_matched", estMatch)
+        v.put("state_n_rows", st.nRows)
+        v.put("recount_n_rows", tn)
+      },
+      grouped = (v, st, corpus) => {
+        val g = col("`" + distinctGroupCol.replace("`", "``") + "`")
+        val vc = col("`" + distinctValueCol.replace("`", "``") + "`")
+        groupVerdict(v, st.groups, 1, corpus.filter(g.isNotNull)
+            .groupBy(g.as("g"))
+            .agg(count(lit(1)).as("n_rows"), count(vc).as("n"),
+              hll_sketch_agg(vc, lit(st.lgK)).as("sk")))(
+            _.map { r =>
+              val bytes = if (r.getLong(2) == 0L || r.isNullAt(3))
+                  Array.empty[Byte] else r.getAs[Array[Byte]](3)
+              r.getString(0) -> GroupDistinct(r.getLong(1),
+                r.getLong(1) - r.getLong(2), bytes)
+            }.toMap)(
+            (a, b) => a.nRows == b.nRows && a.nNull == b.nNull &&
+              canonical(a.sketch, st.lgK) == canonical(b.sketch, st.lgK))
+          .foreach(recount => groupCounts(v, st.groups.size, recount.size))
+      }))
+  }
+
+  private val comoments = new Face[ComomentsSnapshot, Comoments,
+      GroupedComomentsSnapshot, Nothing]("comoments", "comoments",
+      comomentsStateDir, "StreamingGroupedComoments") {
+    def flat(sd: String) = StreamingComoments.readStateLocked(store.spark, sd)
+    def grouped(sd: String) =
+      StreamingGroupedComoments.readStateLocked(store.spark, sd)
+    private def head(n: ObjectNode, xCol: String, yCol: String): Unit = {
+      n.put("folded", true); n.put("x_col", xCol); n.put("y_col", yCol)
+      n.put("comoments_are_exact", true)
+    }
+    // the ONE state-field contract (putComoments, shared with both fold
+    // writers) plus the derived views a ratio-drift monitor plots
+    private def write(into: ObjectNode, m: Comoments): Unit = {
+      StreamingComoments.putComoments(into, m)
+      if (m.n > 0L) {
+        m.meanX.foreach(v => into.put("mean_x", v))
+        m.meanY.foreach(v => into.put("mean_y", v))
+        m.covariancePop.foreach(v => into.put("covariance_pop", v))
+        // None when either side is constant: absent, never NaN
+        m.correlation.foreach(v => into.put("correlation", v))
+      }
+    }
+    def flatEnvelope(n: ObjectNode, st: ComomentsSnapshot, q: Query): Unit = {
+      head(n, st.xCol, st.yCol); write(n, st.comoments)
+    }
+    def groupedEnvelope(n: ObjectNode, st: GroupedComomentsSnapshot,
+        q: Query): (ObjectNode, Comoments) => Unit = {
+      head(n, st.xCol, st.yCol); write
+    }
+    def unfoldedEnvelope(n: ObjectNode, st: ComomentsSnapshot, q: Query)
+        : Unit = {
+      n.put("folded", false); n.put("last_batch_id", -1L); n.put("n_rows", 0L)
+    }
+    def flatSummary(f: ObjectNode, st: ComomentsSnapshot): Unit = {
+      f.put("x_col", st.xCol); f.put("y_col", st.yCol)
+      f.put("n_rows", st.comoments.nRows)
+      f.put("n", st.comoments.n)
+      st.comoments.covariancePop.foreach(v => f.put("covariance_pop", v))
+      st.comoments.correlation.foreach(v => f.put("correlation", v))
+    }
+    def groupedSummary(f: ObjectNode, st: GroupedComomentsSnapshot): Unit = {
+      f.put("x_col", st.xCol); f.put("y_col", st.yCol)
+    }
+    override val twin = Some(Twin[ComomentsSnapshot, GroupedComomentsSnapshot](
+      comomentsSourceDir, comomentsGroupCol, Seq(comomentsXCol, comomentsYCol),
+      "comomentsGroupCol/comomentsXCol/comomentsYCol",
+      flat = (v, st, corpus) => {
+        // bounded by construction: the recount is ONE row
+        val recount = StreamingComoments.batchComoments(corpus,
+          comomentsXCol, comomentsYCol)
+        v.put("matched", recount == st.comoments)
+        v.put("state_n_rows", st.comoments.nRows)
+        v.put("recount_n_rows", recount.nRows)
+        v.put("comoments_are_exact", true)
+      },
+      grouped = (v, st, corpus) => {
+        // group cast to string: the state's keys are strings by the
+        // ingest schema, and a non-string source group column must
+        // surface as NAMED mismatches, never a getString 500
+        groupVerdict(v, st.groups, 1, Profile.comomentsPerGroup(corpus,
+            comomentsGroupCol, comomentsXCol, comomentsYCol)
+            .withColumn("group", col("group").cast("string")))(
+            _.map(r => r.getString(0) -> StreamingComoments.comomentsFromRow(
+              r, 1, "comoments verify recount")).toMap)(_ == _)
+          .foreach(recount => groupCounts(v, st.groups.size, recount.size))
+        v.put("comoments_are_exact", true)
+      }))
+  }
+
+  private val faces: Seq[Face[_, _, _, _]] =
+    Seq(frequentItems, histogram, sample, moments, distinct, comoments)
+  private val faceRoutes = faces.map(f => s"/api/v1/admin/${f.name}" -> f).toMap
+
+  /** GET /admin/profile — the ONE-POLL monitor face: every configured
+    * face's profile entry, from the same face list and ladder as the
+    * per-face routes. Per-face LINEARIZABLE reads, NOT atomic across
+    * faces (independent streams; each entry carries its own
+    * last_batch_id). A face whose read fails (e.g. the locked read's
+    * contention path) reports a NAMED error instead of failing the poll:
+    * one stream mid-swap must not darken the whole monitor. */
+  private def profile(): (Int, ObjectNode) = {
+    val n = obj()
+    val entries = n.putObject("faces")
+    val wired = faces.filter(_.stateDir.isDefined)
+    wired.foreach { face =>
+      val f = entries.putObject(face.name.replace('-', '_'))
+      try face.summary(f, face.stateDir.get)
+      catch { case NonFatal(e) =>
+        f.put("error", s"${e.getClass.getSimpleName}: " +
+          Option(e.getMessage).getOrElse("").take(300))
+      }
+    }
+    if (wired.isEmpty)
+      (404, err("no profiling faces configured on this server — pass at " +
+        "least one of " + faces.map(_.param + "StateDir").mkString("/") +
+        " to RestServer"))
+    else {
+      n.put("face_count", wired.size)
+      (200, n)
+    }
+  }
+
+  /** POST /admin/frequent-items/recount — the EXACT face of the folded
+    * MG state: a Spark recount of the folded candidates over the
+    * operator-configured corpus at the requested threshold, driven by the
+    * ONE snapshot the ladder selected (no lock-free re-read behind it).
+    * Order: 403 (no source) → 400 (denominator) → the recount 409s. */
+  private def recountFrequentItems(ex: HttpExchange): (Int, ObjectNode) =
+    frequentItems.configured { sd =>
+      frequentItems.sourceRefusal("recount", frequentItemsSourceDir)
+        .getOrElse {
+          val req = body(ex)
+          if (req == null || !req.hasNonNull("denominator"))
+            (400, err("'denominator' required (items at >= 1/denominator " +
+              "of the (group's) token mass are returned, with EXACT counts)"))
+          // validated HERE as well as in the operators: Jackson's asLong()
+          // coerces non-numeric JSON to 0, and a zero or negative
+          // denominator inverts the threshold arithmetic
+          else if (req.get("denominator").asLong() <= 0)
+            (400, err(s"'denominator' must be a positive integer, " +
+              s"got ${req.get("denominator").asText()}"))
+          else {
+            val denom = req.get("denominator").asLong()
+            val rung = frequentItems.select(sd)
+            frequentItems.windowRefusal(rung, "exactly recounted")
+              .orElse(Some(rung).collect { case Unfolded(_) =>
+                frequentItems.unfolded(sd, "an exact recount") })
+              .getOrElse {
+              val corpus = store.spark.read.parquet(frequentItemsSourceDir.get)
+              val tokens = explode(
+                graft.functions.TextFunctions.tokens(col("text"))).as("token")
+              val n = obj()
+              n.put("denominator", denom)
+              rung match {
+                case FlatRung(st) =>
+                  val rows = StreamingHeavyHitters.heavyHittersFromSnapshot(
+                      st, sd, corpus.select(tokens), "token", denom)
+                    .collect() // bounded: <= denominator heavy hitters
+                  n.put("grouped", false)
+                  n.put("n", st.n)
+                  val c = n.putObject("counts")
+                  rows.foreach(r => c.put(r.getString(0), r.getLong(1)))
+                case GroupedRung(st) =>
+                  val rows = StreamingGroupedHeavyHitters
+                    .heavyHittersFromSnapshot(st, sd, store.spark,
+                      corpus.select(col("source"), tokens), "source", "token",
+                      denom)
+                    .collect() // bounded: <= groups x denominator rows
+                  n.put("grouped", true)
+                  n.put("n", st.groups.valuesIterator.map(_.n).sum)
+                  n.put("excluded_null_rows", st.excludedNullRows)
+                  val gs = n.putObject("groups")
+                  rows.foreach { r =>
+                    val g = r.getString(0)
+                    (if (gs.has(g)) gs.get(g).asInstanceOf[ObjectNode]
+                     else gs.putObject(g)).put(r.getString(1), r.getLong(2))
+                  }
+                case _ => // refused above
+              }
+              // the point of this route vs the GET envelope's estimates
+              n.put("counts_are_exact", true)
+              (200, n)
+            }
+          }
+        }
+    }
+
+  /** POST /admin/histogram/from-sample — derive a [lo, hi) binning from
+    * the STANDING sample fold's carried values (the fromValues arithmetic
+    * over the ≤ k locked-read entries: no Spark job, no corpus rescan)
+    * and return the spec an operator passes to a new histogram fold. It
+    * derives only: a fold's lifecycle belongs to the operator's driver
+    * app. A grouped sample needs 'group' (a stratified binning is
+    * per-group by nature). */
+  private def deriveFromSample(ex: HttpExchange): (Int, ObjectNode) =
+    sample.configured { sd =>
+      val req = Option(body(ex))
+      val nBins = req.flatMap(r => Option(r.get("n_bins")))
+        .map(_.asInt()).getOrElse(32)
+      val coverage = req.flatMap(r => Option(r.get("coverage")))
+        .map(_.asDouble()).getOrElse(0.99)
+      if (nBins <= 0)
+        (400, err(s"'n_bins' must be a positive integer, got $nBins"))
+      else if (coverage.isNaN || coverage <= 0.0 || coverage > 1.0)
+        (400, err(s"'coverage' must be in (0, 1], got $coverage"))
+      else {
+        val picked: Either[(Int, ObjectNode), (Seq[SampleEntry], Long)] =
+          sample.select(sd) match {
+            case GroupedRung(st) =>
+              req.flatMap(r => Option(r.get("group"))).map(_.asText()) match {
+                case None => Left((400, err("the folded sample is GROUPED " +
+                  s"(${st.groups.size} groups) — pass 'group' to derive a " +
+                  "binning from one group's sample")))
+                case Some(g) => st.groups.get(g)
+                  .map(gs => Right((gs.entries, st.lastBatchId)))
+                  .getOrElse(Left(sample.unknownGroup(g, st)))
+              }
+            case FlatRung(st) => Right((st.entries, st.lastBatchId))
+            case _ => Left(sample.unfolded(sd, "a from-sample binning"))
+          }
+        picked.flatMap { case (entries, lastBatchId) =>
+          val vals = entries.flatMap(_.value).filter(java.lang.Double.isFinite)
+          // folded, but nothing to bin: a configuration category
+          if (vals.isEmpty)
+            Left((422, err("the folded sample carries no finite values — it " +
+              "was folded without a valueCol (or every value is " +
+              "null/NaN/Inf); re-fold the sample with the column the " +
+              "histogram will bin")))
+          else {
+            // the ONE derive arithmetic, shared with the DataFrame face
+            // and ingestAutoBinned so the entry points cannot drift
+            val spec = HistogramSketch.fromValues(vals, nBins, coverage)
+            val n = obj()
+            n.put("lo", spec.lo)
+            n.put("hi", spec.hi)
+            n.put("n_bins", spec.nBins)
+            n.put("value_resolution", spec.width)
+            n.put("coverage", coverage)
+            n.put("sample_values", vals.size)
+            n.put("sample_last_batch_id", lastBatchId)
+            Right((200, n))
+          }
+        }.merge
+      }
+    }
 
   private def floats(n: JsonNode): Array[Float] =
     if (n == null || !n.isArray) Array.empty
@@ -2991,6 +2113,28 @@ class RestServer(store: VectorStore, port: Int = 0, cacheSize: Int = 128,
     ex.close()
   }
 }
+
+// the profiling faces' ladder rungs and verify twin (RestServer's admin
+// route template)
+
+/** Where a face's selection ladder landed. */
+private[serve] sealed trait Rung[+F, +G, +W]
+private[serve] final case class FlatRung[F](st: F) extends Rung[F, Nothing, Nothing]
+private[serve] final case class GroupedRung[G](st: G)
+  extends Rung[Nothing, G, Nothing]
+private[serve] final case class WindowedRung[W](st: W)
+  extends Rung[Nothing, Nothing, W]
+/** Nothing folded on any rung: the flat reader's empty snapshot. */
+private[serve] final case class Unfolded[F](st: F) extends Rung[F, Nothing, Nothing]
+
+/** A face's verify twin: the operator-configured source corpus, the
+  * columns the recount reads (`groupCol` only on the grouped rung), the
+  * constructor parameters naming them, and the recount of each
+  * verifiable rung, written into the envelope's `verify` object. */
+private[serve] final case class Twin[F, G](sourceDir: Option[String],
+    groupCol: String, cols: Seq[String], colParams: String,
+    flat: (ObjectNode, F, DataFrame) => Unit,
+    grouped: (ObjectNode, G, DataFrame) => Unit)
 
 /** `runMain graft.serve.ServeMain <storePath> [port] [wsPort]` — standalone
   * server (wsPort: the RFC 6455 `/api/v1/updates/ws` companion listener;

@@ -3,9 +3,30 @@ package graft.streaming
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+
+/** What every fold's snapshot carries: the checkpoint its batch ids
+  * belong to and the last batch it folded (-1 = nothing folded yet). */
+trait FoldSnapshot {
+  def checkpoint: String
+  def lastBatchId: Long
+}
+
+/** A grouped fold's snapshot: one state per group key, plus the running
+  * count of null-group-key rows the fold excluded. */
+trait GroupedFoldSnapshot[+V] extends FoldSnapshot {
+  def groups: Map[String, V]
+  def excludedNullRows: Long
+}
+
+/** A windowed ring's snapshot: the window size and the per-batch slots
+  * of the newest batches it still holds. */
+trait WindowedFoldSnapshot extends FoldSnapshot {
+  def window: Int
+  def ring: Seq[Any]
+}
 
 /** The state-file scaffold every streaming fold runs on: the twelve
   * all-time faces (flat and grouped moments, comoments, distinct, heavy
@@ -33,10 +54,9 @@ import org.apache.spark.sql.types.StructType
   * Writes go through the face's `encode` onto one Jackson object node,
   * so field order is the order `encode` puts them in; a face whose
   * payload is a map sorts it there if its file layout is sorted. */
-private[streaming] final class FoldStateStore[S](
+private[streaming] final class FoldStateStore[S <: FoldSnapshot](
     face: String, stateName: String, requiredFields: Seq[String],
-    empty: S, lastBatchIdOf: S => Long, checkpointOf: S => String,
-    encode: (ObjectNode, S) => Unit, decode: JsonNode => S) {
+    empty: S, encode: (ObjectNode, S) => Unit, decode: JsonNode => S) {
 
   private def file(spark: SparkSession, stateDir: String) =
     new graft.core.SwapStateFile(
@@ -77,8 +97,7 @@ private[streaming] final class FoldStateStore[S](
   /** The family's checkpoint binding refusal for this face (see
     * [[FoldStateStore.checkCheckpoint]]). */
   def checkCheckpoint(st: S, stateDir: String, checkpoint: String): Unit =
-    FoldStateStore.checkCheckpoint(face, stateDir, checkpointOf(st),
-      checkpoint)
+    FoldStateStore.checkCheckpoint(face, stateDir, st.checkpoint, checkpoint)
 
   /** The applyBatch skeleton: read, face binding check, fresh-state
     * probe, replay idempotence, fold-then-write. `fold` computes the
@@ -91,14 +110,14 @@ private[streaming] final class FoldStateStore[S](
     // 0..batchId-1 were committed in the checkpoint and will never be
     // re-delivered — their rows would be permanently missing from a
     // state claimed exact
-    if (lastBatchIdOf(st) < 0L && batchId > 0L)
+    if (st.lastBatchId < 0L && batchId > 0L)
       throw new IllegalStateException(
         s"$face at $stateDir is empty but the checkpoint resumes at " +
           s"batch $batchId — batches 0..${batchId - 1} were already " +
           "committed and will not be re-delivered, so folding from here " +
           "would silently omit them. Use a fresh checkpoint with a fresh " +
           "state dir (the source will be re-read from the start)")
-    if (batchId <= lastBatchIdOf(st)) st // replayed batch: already folded
+    if (batchId <= st.lastBatchId) st // replayed batch: already folded
     else {
       val next = fold(st)
       write(spark, stateDir, next)
@@ -154,9 +173,9 @@ private[streaming] final class FoldStateStore[S](
   def merge(spark: SparkSession, inDirs: Seq[String], outDir: String,
       globalNoun: String)(combine: (Seq[S], String, Long) => S): S = {
     val states = inDirs.map(d => d -> readLocked(spark, d))
-    val (ckpt, lastId) = StateMerge.guard(spark, face, globalNoun, inDirs,
-      outDir, states, lastBatchIdOf, checkpointOf,
-      lastBatchIdOf(read(spark, outDir)))
+    val (ckpt, lastId) = StateMerge.guard[S](spark, face, globalNoun, inDirs,
+      outDir, states, _.lastBatchId, _.checkpoint,
+      read(spark, outDir).lastBatchId)
     val merged = combine(states.map(_._2), ckpt, lastId)
     write(spark, outDir, merged)
     merged
@@ -178,4 +197,43 @@ private[streaming] object FoldStateStore {
           "batch ids restart at 0 per checkpoint, so continuing would " +
           "skip new data as replays (or double-count on a rewound " +
           "checkpoint). Use a fresh state dir with a fresh checkpoint")
+
+  /** The six grouped folds' per-batch group probe: ONE bounded collect of
+    * the batch's per-group relation (group key in column 0), each real
+    * group's row folded into `groups` by `add` (from `zero` for a new
+    * group), and the group-cap refusal. head(maxGroups + 2): the null
+    * group (at most one row) must not displace a real group at the probe
+    * boundary, and a batch whose own real-group count exceeds the cap can
+    * never fold into a capped state, so the probe both bounds the driver
+    * allocation and detects the refusal. Returns the merged groups and
+    * the null group's row tally (column `nullCountCol`) — the batch's
+    * excluded-row count. `batchPath` names where a per-document key
+    * belongs instead. */
+  def foldGroups[V](face: String, stateDir: String, maxGroups: Int,
+      batchPath: String, perGroup: DataFrame, nullCountCol: Int,
+      groups: Map[String, V], zero: V)(add: (V, Row) => V)
+      : (Map[String, V], Long) = {
+    val rows = perGroup.head(maxGroups + 2)
+    val (nullRows, realRows) = rows.partition(_.isNullAt(0))
+    val merged = scala.collection.mutable.Map.empty[String, V] ++= groups
+    realRows.foreach { r =>
+      val g = r.getString(0)
+      merged.put(g, add(merged.getOrElse(g, zero), r))
+    }
+    if (merged.size > maxGroups) {
+      // a full probe TRUNCATED the batch's group relation, so the merged
+      // count is then only a LOWER BOUND on the real cardinality
+      val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
+      throw new IllegalStateException(
+        s"$face at $stateDir would hold $atLeast${merged.size} groups, " +
+          s"past maxGroups=$maxGroups — the state file (and the per-batch " +
+          "driver fold) is bounded BY this cap. Raise maxGroups if the " +
+          "group key is genuinely this wide and the driver can hold it, " +
+          "or coarsen the group key; a per-document-cardinality key " +
+          s"belongs on $batchPath, not a driver-side state file. Batch NOT " +
+          "applied; the stream should be stopped and re-planned")
+    }
+    (merged.toMap,
+      nullRows.headOption.map(_.getLong(nullCountCol)).getOrElse(0L))
+  }
 }

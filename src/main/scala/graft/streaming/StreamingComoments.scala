@@ -131,6 +131,7 @@ object StreamingComoments {
     * binding, last applied micro-batch id, and the exact co-moments. */
   case class ComomentsSnapshot(xCol: String, yCol: String,
       checkpoint: String, lastBatchId: Long, comoments: Comoments)
+      extends FoldSnapshot
 
   /** JSON field writer shared with the grouped fold — sums as STRINGS
     * (exact integers of unbounded width; a JSON double would silently
@@ -178,8 +179,7 @@ object StreamingComoments {
   private val store = new FoldStateStore[ComomentsSnapshot](
     "comoments state", "comoments_state.json",
     Seq("x_col", "y_col", "checkpoint"),
-    ComomentsSnapshot("", "", "", -1L, emptyComoments), _.lastBatchId,
-    _.checkpoint,
+    ComomentsSnapshot("", "", "", -1L, emptyComoments),
     encode = (root, snap) => {
       root.put("x_col", snap.xCol)
       root.put("y_col", snap.yCol)

@@ -58,7 +58,7 @@ object StreamingDistinct {
     * bytes (empty array = nothing folded yet / all-null stream). */
   case class DistinctSnapshot(lgK: Int, valueCol: String,
       checkpoint: String, lastBatchId: Long, nRows: Long, nNull: Long,
-      sketch: Array[Byte]) {
+      sketch: Array[Byte]) extends FoldSnapshot {
     /** The running distinct estimate (None when nothing non-null has
       * been folded). Exact through the sketch's sparse regimes,
       * ~1.04/sqrt(2^lgK) relative error dense. */
@@ -84,8 +84,7 @@ object StreamingDistinct {
   private val store = new FoldStateStore[DistinctSnapshot](
     "distinct state", "distinct_state.json",
     Seq("lg_k", "value_col", "checkpoint"),
-    DistinctSnapshot(-1, "", "", -1L, 0L, 0L, Array.empty), _.lastBatchId,
-    _.checkpoint,
+    DistinctSnapshot(-1, "", "", -1L, 0L, 0L, Array.empty),
     encode = (root, snap) => {
       root.put("lg_k", snap.lgK)
       root.put("value_col", snap.valueCol)

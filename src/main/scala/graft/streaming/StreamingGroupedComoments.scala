@@ -54,7 +54,7 @@ object StreamingGroupedComoments {
     * field). */
   case class GroupedComomentsSnapshot(xCol: String, yCol: String,
       checkpoint: String, lastBatchId: Long, groups: Map[String, Comoments],
-      excludedNullRows: Long)
+      excludedNullRows: Long) extends GroupedFoldSnapshot[Comoments]
 
   /** Default group cap — the grouped-family default
     * ([[StreamingGroupedHeavyHitters.DefaultMaxGroups]] rationale). */
@@ -64,7 +64,6 @@ object StreamingGroupedComoments {
     "grouped comoments state", "comoments_grouped_state.json",
     Seq("x_col", "y_col", "checkpoint"),
     GroupedComomentsSnapshot("", "", "", -1L, Map.empty, 0L),
-    _.lastBatchId, _.checkpoint,
     encode = (root, snap) => {
       root.put("x_col", snap.xCol)
       root.put("y_col", snap.yCol)
@@ -134,43 +133,16 @@ object StreamingGroupedComoments {
         val aggs = Profile.comomentsAggs(xCol, yCol)
         val grouped = batch.groupBy(g.as("__group"))
           .agg(aggs.head, aggs.tail: _*)
-        // bounded collect: head(cap + 2) — the null group (at most one row)
-        // must not displace a real group at the probe boundary; a batch
-        // whose own real-group count exceeds the cap can never fold into a
-        // capped state, so the probe both bounds the driver allocation and
-        // detects the refusal case
-        val rows = grouped.head(maxGroups + 2)
-        val (nullRows, realRows) = rows.partition(_.isNullAt(0))
-        val excludedThisBatch =
-          nullRows.headOption.map(_.getLong(1)).getOrElse(0L)
-        val merged = scala.collection.mutable.Map.empty[String, Comoments]
-        merged ++= st.groups
-        realRows.foreach { r =>
-          val grp = r.getString(0)
-          val bm = comomentsFromRow(r, 1,
+        val (merged, excludedThisBatch) = FoldStateStore.foldGroups(
+          "grouped comoments state", stateDir, maxGroups,
+          "the batch comomentsPerGroup path", grouped, 1, st.groups,
+          StreamingComoments.emptyComoments) { (prev, r) =>
+          mergeComoments(prev, comomentsFromRow(r, 1,
             s"grouped comoments fold at $stateDir (batch $batchId, " +
-              s"group '$grp')")
-          merged.put(grp,
-            mergeComoments(
-              merged.getOrElse(grp, StreamingComoments.emptyComoments), bm))
+              s"group '${r.getString(0)}')"))
         }
-        if (merged.size > maxGroups) {
-          // the head probe TRUNCATES the batch's group relation, so when it
-          // came back full `merged.size` is only a LOWER BOUND on the real
-          // cardinality
-          val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
-          throw new IllegalStateException(
-            s"grouped comoments state at $stateDir would hold " +
-              s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
-              "the state file (and the per-batch driver fold) is bounded " +
-              "BY this cap. Raise maxGroups if the group key is genuinely " +
-              "this wide and the driver can hold it, or coarsen the group " +
-              "key; a per-document-cardinality key belongs on the batch " +
-              "comomentsPerGroup path, not a driver-side state file. Batch " +
-              "NOT applied; the stream should be stopped and re-planned")
-        }
-        GroupedComomentsSnapshot(xCol, yCol, checkpoint, batchId,
-          merged.toMap, st.excludedNullRows + excludedThisBatch)
+        GroupedComomentsSnapshot(xCol, yCol, checkpoint, batchId, merged,
+          st.excludedNullRows + excludedThisBatch)
       })
 
   /** Start the stream: parquet arrivals under `sourceDir` with a STRING

@@ -52,6 +52,7 @@ object StreamingGroupedDistinct {
   case class GroupedDistinctSnapshot(lgK: Int, valueCol: String,
       checkpoint: String, lastBatchId: Long,
       groups: Map[String, GroupDistinct], excludedNullRows: Long)
+      extends GroupedFoldSnapshot[GroupDistinct]
 
   /** Default group cap — the grouped-family default: ~10k groups × a
     * few-KB sketch is tens of MB of state at most, far below anything a
@@ -62,7 +63,6 @@ object StreamingGroupedDistinct {
     "grouped distinct state", "distinct_grouped_state.json",
     Seq("lg_k", "value_col", "checkpoint"),
     GroupedDistinctSnapshot(-1, "", "", -1L, Map.empty, 0L),
-    _.lastBatchId, _.checkpoint,
     encode = (root, snap) => {
       root.put("lg_k", snap.lgK)
       root.put("value_col", snap.valueCol)
@@ -136,43 +136,21 @@ object StreamingGroupedDistinct {
         val grouped = batch.groupBy(g.as("__group"))
           .agg(count(lit(1)).as("n_rows"), count(v).as("n"),
             hll_sketch_agg(v, lit(lgK)).as("sk"))
-        // bounded collect: head(cap + 2) — the null group (at most one
-        // row) must not displace a real group at the probe boundary
-        val rows = grouped.head(maxGroups + 2)
-        val (nullRows, realRows) = rows.partition(_.isNullAt(0))
-        val excludedThisBatch =
-          nullRows.headOption.map(_.getLong(1)).getOrElse(0L)
-        val merged = scala.collection.mutable.Map.empty[String, GroupDistinct]
-        merged ++= st.groups
-        realRows.foreach { r =>
-          val grp = r.getString(0)
+        val (merged, excludedThisBatch) = FoldStateStore.foldGroups(
+          "grouped distinct state", stateDir, maxGroups,
+          "the batch count(DISTINCT) path", grouped, 1, st.groups,
+          GroupDistinct(0L, 0L, Array.empty)) { (prev, r) =>
           val nRows = r.getLong(1)
           val n = r.getLong(2)
           // the flat fold's no-values rule, per group
           val bytes =
             if (n == 0L || r.isNullAt(3)) Array.empty[Byte]
             else r.getAs[Array[Byte]](3)
-          val prev = merged.getOrElse(grp, GroupDistinct(0L, 0L, Array.empty))
-          merged.put(grp, GroupDistinct(prev.nRows + nRows,
-            prev.nNull + (nRows - n),
-            StreamingDistinct.unionSketches(lgK, prev.sketch, bytes)))
+          GroupDistinct(prev.nRows + nRows, prev.nNull + (nRows - n),
+            StreamingDistinct.unionSketches(lgK, prev.sketch, bytes))
         }
-        if (merged.size > maxGroups) {
-          // the head probe TRUNCATES the batch's group relation, so when
-          // it came back full `merged.size` is only a LOWER BOUND
-          val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
-          throw new IllegalStateException(
-            s"grouped distinct state at $stateDir would hold " +
-              s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
-              "the state file (and the per-batch driver fold) is bounded " +
-              "BY this cap. Raise maxGroups if the group key is genuinely " +
-              "this wide and the driver can hold it, or coarsen the group " +
-              "key; a per-document-cardinality key belongs on the batch " +
-              "count(DISTINCT) path, not a driver-side state file. Batch " +
-              "NOT applied; the stream should be stopped and re-planned")
-        }
-        GroupedDistinctSnapshot(lgK, valueCol, checkpoint, batchId,
-          merged.toMap, st.excludedNullRows + excludedThisBatch)
+        GroupedDistinctSnapshot(lgK, valueCol, checkpoint, batchId, merged,
+          st.excludedNullRows + excludedThisBatch)
       })
 
   /** Cross-cluster merge — the grouped cardinality face of

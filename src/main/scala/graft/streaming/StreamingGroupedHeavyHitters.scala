@@ -65,7 +65,7 @@ object StreamingGroupedHeavyHitters {
     * makes that visible on the REST envelope). */
   case class GroupedMgSnapshot(k: Int, checkpoint: String,
       lastBatchId: Long, groups: Map[String, GroupState],
-      excludedNullRows: Long) {
+      excludedNullRows: Long) extends GroupedFoldSnapshot[GroupState] {
     /** Total state entries across groups (the boundedness measurable). */
     def totalEntries: Int = groups.valuesIterator.map(_.counts.size).sum
   }
@@ -78,8 +78,7 @@ object StreamingGroupedHeavyHitters {
 
   private val store = new FoldStateStore[GroupedMgSnapshot](
     "grouped MG state", "mg_grouped_state.json", Seq("k", "checkpoint"),
-    GroupedMgSnapshot(-1, "", -1L, Map.empty, 0L), _.lastBatchId,
-    _.checkpoint,
+    GroupedMgSnapshot(-1, "", -1L, Map.empty, 0L),
     encode = (root, snap) => {
       root.put("k", snap.k)
       root.put("checkpoint", snap.checkpoint)
@@ -161,42 +160,16 @@ object StreamingGroupedHeavyHitters {
           .groupBy("source")
           .agg(HeavyHitters.mgCandidates(k)(col("token")).as("cand"),
             count(col("token")).as("n"))
-        // bounded collect: head(cap + 2) — the null group (at most one row)
-        // must not displace a real group at the probe boundary; a batch
-        // whose OWN real-group count exceeds the cap can never fold into a
-        // capped state, so the probe both bounds the driver allocation and
-        // detects the refusal case
-        val rows = perGroup.head(maxGroups + 2)
-        val (nullRows, realRows) = rows.partition(_.isNullAt(0))
-        val excludedThisBatch = nullRows.headOption.map(_.getLong(2)).getOrElse(0L)
-        val merged = scala.collection.mutable.Map.empty[String, GroupState]
-        merged ++= st.groups
-        realRows.foreach { r =>
-          val g = r.getString(0)
+        val (merged, excludedThisBatch) = FoldStateStore.foldGroups(
+          "grouped MG state", stateDir, maxGroups,
+          "the batch exactPerGroup path", perGroup, 2, st.groups,
+          GroupState(0L, Map.empty)) { (prev, r) =>
           val bc = r.getSeq[org.apache.spark.sql.Row](1)
             .map(c => (c.getString(0), c.getLong(1)))
-          val bn = r.getLong(2)
-          val prev = merged.getOrElse(g, GroupState(0L, Map.empty))
-          merged.put(g, GroupState(prev.n + bn,
-            StreamingHeavyHitters.mergeMg(k, prev.counts, bc)))
+          GroupState(prev.n + r.getLong(2),
+            StreamingHeavyHitters.mergeMg(k, prev.counts, bc))
         }
-        if (merged.size > maxGroups) {
-          // the head probe TRUNCATES the batch's group relation, so when it
-          // came back full `merged.size` is only a LOWER BOUND on the real
-          // cardinality (a 1M-group batch would otherwise report ~cap+1
-          // groups and mislead an operator sizing a raised cap)
-          val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
-          throw new IllegalStateException(
-            s"grouped MG state at $stateDir would hold $atLeast${merged.size} " +
-              s"groups, past maxGroups=$maxGroups — the state file (and the " +
-              "per-batch driver fold) is bounded by groups × k BY this cap. " +
-              "Raise maxGroups if the group key is genuinely this wide and " +
-              "the driver can hold it, or coarsen the group key; a per-" +
-              "document-cardinality key belongs on the batch exactPerGroup " +
-              "path, not a driver-side state file. Batch NOT applied; the " +
-              "stream should be stopped and re-planned")
-        }
-        GroupedMgSnapshot(k, checkpoint, batchId, merged.toMap,
+        GroupedMgSnapshot(k, checkpoint, batchId, merged,
           st.excludedNullRows + excludedThisBatch)
       })
 

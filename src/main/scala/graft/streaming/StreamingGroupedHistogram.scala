@@ -50,7 +50,7 @@ object StreamingGroupedHistogram {
     * observability counter. */
   case class GroupedHistSnapshot(spec: HistogramSpec, checkpoint: String,
       lastBatchId: Long, groups: Map[String, GroupHist],
-      excludedNullRows: Long) {
+      excludedNullRows: Long) extends GroupedFoldSnapshot[GroupHist] {
     /** Total state cells across groups (the boundedness measurable). */
     def totalCells: Int = groups.valuesIterator.map(_.bins.size).sum
   }
@@ -65,7 +65,6 @@ object StreamingGroupedHistogram {
     "grouped histogram state", "hist_grouped_state.json",
     Seq("lo", "hi", "n_bins", "checkpoint"),
     GroupedHistSnapshot(HistogramSpec(0.0, 1.0, 1), "", -1L, Map.empty, 0L),
-    _.lastBatchId, _.checkpoint,
     encode = (root, snap) => {
       StreamingHistogram.putSpec(root, snap.spec)
       root.put("checkpoint", snap.checkpoint)
@@ -127,16 +126,10 @@ object StreamingGroupedHistogram {
           .groupBy("g")
           .agg(collect_list(struct(col("bin"), col("cnt"))).as("cells"),
             sum("cnt").as("n"))
-        // bounded collect: the null group is at most one row, so cap + 2
-        // both bounds the driver allocation and detects the refusal case
-        val rows = perGroup.head(maxGroups + 2)
-        val (nullRows, realRows) = rows.partition(_.isNullAt(0))
-        val excludedThisBatch = nullRows.headOption.map(_.getLong(2)).getOrElse(0L)
-        val merged = scala.collection.mutable.Map.empty[String, GroupHist]
-        merged ++= st.groups
-        realRows.foreach { r =>
-          val g = r.getString(0)
-          val prev = merged.getOrElse(g, GroupHist(0L, Map.empty))
+        val (merged, excludedThisBatch) = FoldStateStore.foldGroups(
+          "grouped histogram state", stateDir, maxGroups,
+          "a batch groupBy", perGroup, 2, st.groups,
+          GroupHist(0L, Map.empty)) { (prev, r) =>
           var bins = prev.bins
           var added = 0L
           r.getSeq[org.apache.spark.sql.Row](1).foreach { cell =>
@@ -144,25 +137,10 @@ object StreamingGroupedHistogram {
             bins = bins.updated(bin, bins.getOrElse(bin, 0L) + c)
             added += c
           }
-          merged.put(g, GroupHist(prev.n + added, bins))
+          GroupHist(prev.n + added, bins)
         }
-        if (merged.size > maxGroups) {
-          // the head probe truncates the batch's group relation: a full
-          // probe means the count below is only a LOWER bound
-          val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
-          throw new IllegalStateException(
-            s"grouped histogram state at $stateDir would hold " +
-              s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
-              "the state file (and the per-batch driver fold) is bounded " +
-              "by groups x (nBins+2) BY this cap. Raise maxGroups if the " +
-              "group key is genuinely this wide and the driver can hold " +
-              "it, or coarsen the group key; a per-document-cardinality " +
-              "key belongs on a batch groupBy, not a driver-side state " +
-              "file. Batch NOT applied; the stream should be stopped and " +
-              "re-planned")
-        }
-        GroupedHistSnapshot(spec, checkpoint, batchId,
-          merged.toMap, st.excludedNullRows + excludedThisBatch)
+        GroupedHistSnapshot(spec, checkpoint, batchId, merged,
+          st.excludedNullRows + excludedThisBatch)
       })
 
   /** The checkpoint/binning binding rules — [[StreamingHistogram]]'s rule

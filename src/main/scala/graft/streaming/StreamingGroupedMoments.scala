@@ -52,7 +52,7 @@ object StreamingGroupedMoments {
     * counter (observability, not a binding field). */
   case class GroupedMomentsSnapshot(valueCol: String, checkpoint: String,
       lastBatchId: Long, groups: Map[String, Moments],
-      excludedNullRows: Long)
+      excludedNullRows: Long) extends GroupedFoldSnapshot[Moments]
 
   /** Default group cap — the grouped-family default
     * ([[StreamingGroupedHeavyHitters.DefaultMaxGroups]] rationale: ~10k
@@ -64,8 +64,7 @@ object StreamingGroupedMoments {
   private val store = new FoldStateStore[GroupedMomentsSnapshot](
     "grouped moments state", "moments_grouped_state.json",
     Seq("value_col", "checkpoint"),
-    GroupedMomentsSnapshot("", "", -1L, Map.empty, 0L), _.lastBatchId,
-    _.checkpoint,
+    GroupedMomentsSnapshot("", "", -1L, Map.empty, 0L),
     encode = (root, snap) => {
       root.put("value_col", snap.valueCol)
       root.put("checkpoint", snap.checkpoint)
@@ -131,43 +130,16 @@ object StreamingGroupedMoments {
         val aggs = Profile.momentsAggs(valueCol)
         val grouped = batch.groupBy(g.as("__group"))
           .agg(aggs.head, aggs.tail: _*)
-        // bounded collect: head(cap + 2) — the null group (at most one row)
-        // must not displace a real group at the probe boundary; a batch
-        // whose own real-group count exceeds the cap can never fold into a
-        // capped state, so the probe both bounds the driver allocation and
-        // detects the refusal case
-        val rows = grouped.head(maxGroups + 2)
-        val (nullRows, realRows) = rows.partition(_.isNullAt(0))
-        val excludedThisBatch =
-          nullRows.headOption.map(_.getLong(1)).getOrElse(0L)
-        val merged = scala.collection.mutable.Map.empty[String, Moments]
-        merged ++= st.groups
-        realRows.foreach { r =>
-          val grp = r.getString(0)
-          val bm = momentsFromRow(r, 1,
+        val (merged, excludedThisBatch) = FoldStateStore.foldGroups(
+          "grouped moments state", stateDir, maxGroups,
+          "the batch momentsPerGroup path", grouped, 1, st.groups,
+          StreamingMoments.emptyMoments) { (prev, r) =>
+          mergeMoments(prev, momentsFromRow(r, 1,
             s"grouped moments fold at $stateDir (batch $batchId, " +
-              s"group '$grp')")
-          merged.put(grp,
-            mergeMoments(merged.getOrElse(grp, StreamingMoments.emptyMoments),
-              bm))
+              s"group '${r.getString(0)}')"))
         }
-        if (merged.size > maxGroups) {
-          // the head probe TRUNCATES the batch's group relation, so when it
-          // came back full `merged.size` is only a LOWER BOUND on the real
-          // cardinality
-          val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
-          throw new IllegalStateException(
-            s"grouped moments state at $stateDir would hold " +
-              s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
-              "the state file (and the per-batch driver fold) is bounded " +
-              "BY this cap. Raise maxGroups if the group key is genuinely " +
-              "this wide and the driver can hold it, or coarsen the group " +
-              "key; a per-document-cardinality key belongs on the batch " +
-              "momentsPerGroup path, not a driver-side state file. Batch " +
-              "NOT applied; the stream should be stopped and re-planned")
-        }
-        GroupedMomentsSnapshot(valueCol, checkpoint, batchId,
-          merged.toMap, st.excludedNullRows + excludedThisBatch)
+        GroupedMomentsSnapshot(valueCol, checkpoint, batchId, merged,
+          st.excludedNullRows + excludedThisBatch)
       })
 
   /** Start the stream: parquet arrivals under `sourceDir` with a STRING

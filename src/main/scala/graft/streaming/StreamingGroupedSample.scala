@@ -60,7 +60,7 @@ object StreamingGroupedSample {
     * the excluded-null-rows counter (the r14 grouped-fold rule). */
   case class GroupedSampleSnapshot(k: Int, salt: String, checkpoint: String,
       lastBatchId: Long, groups: Map[String, GroupSample],
-      excludedNullRows: Long) {
+      excludedNullRows: Long) extends GroupedFoldSnapshot[GroupSample] {
     /** Total entries across groups (the boundedness measurable). */
     def totalEntries: Int = groups.valuesIterator.map(_.entries.size).sum
   }
@@ -73,8 +73,7 @@ object StreamingGroupedSample {
   private val store = new FoldStateStore[GroupedSampleSnapshot](
     "grouped sample state", "sample_grouped_state.json",
     Seq("k", "salt", "checkpoint"),
-    GroupedSampleSnapshot(-1, "", "", -1L, Map.empty, 0L), _.lastBatchId,
-    _.checkpoint,
+    GroupedSampleSnapshot(-1, "", "", -1L, Map.empty, 0L),
     encode = (root, snap) => {
       root.put("k", snap.k)
       root.put("salt", snap.salt)
@@ -151,40 +150,17 @@ object StreamingGroupedSample {
           .agg(TopKImperative.bottomKSample(k)(
               col("__key"), col("__id"), col("__v")).as("bk"),
             count(lit(1)).as("n"))
-        // bounded collect: head(cap + 2) — the null group (at most one row)
-        // must not displace a real group at the probe boundary (the grouped
-        // MG fold's probe rule)
-        val rows = perGroup.head(maxGroups + 2)
-        val (nullRows, realRows) = rows.partition(_.isNullAt(0))
-        val excludedThisBatch = nullRows.headOption.map(_.getLong(2)).getOrElse(0L)
-        val merged = scala.collection.mutable.Map.empty[String, GroupSample]
-        merged ++= st.groups
-        realRows.foreach { r =>
-          val g = r.getString(0)
+        val (merged, excludedThisBatch) = FoldStateStore.foldGroups(
+          "grouped sample state", stateDir, maxGroups,
+          "the batch batchBottomKPerGroup path", perGroup, 2, st.groups,
+          GroupSample(0L, Seq.empty)) { (prev, r) =>
           val bk = r.getSeq[Row](1).map(c => SampleEntry(c.getLong(0),
             c.getLong(1), if (c.isNullAt(2)) None else Some(c.getDouble(2))))
-          val bn = r.getLong(2)
-          val prev = merged.getOrElse(g, GroupSample(0L, Seq.empty))
-          merged.put(g, GroupSample(prev.nSeen + bn,
-            StreamingSample.mergeBottomK(k, prev.entries, bk)))
+          GroupSample(prev.nSeen + r.getLong(2),
+            StreamingSample.mergeBottomK(k, prev.entries, bk))
         }
-        if (merged.size > maxGroups) {
-          // the head probe TRUNCATES the batch's group relation, so when it
-          // came back full `merged.size` is only a LOWER BOUND on the real
-          // cardinality (the grouped MG fold's phrasing rule)
-          val atLeast = if (rows.length >= maxGroups + 2) "at least " else ""
-          throw new IllegalStateException(
-            s"grouped sample state at $stateDir would hold " +
-              s"$atLeast${merged.size} groups, past maxGroups=$maxGroups — " +
-              "the state file (and the per-batch driver fold) is bounded " +
-              "by groups × k BY this cap. Raise maxGroups if the group key " +
-              "is genuinely this wide and the driver can hold it, or " +
-              "coarsen the group key; a per-document-cardinality key has " +
-              "no business in a driver-side sample state file. Batch NOT " +
-              "applied; the stream should be stopped and re-planned")
-        }
-        GroupedSampleSnapshot(k, salt, checkpoint, batchId,
-          merged.toMap, st.excludedNullRows + excludedThisBatch)
+        GroupedSampleSnapshot(k, salt, checkpoint, batchId, merged,
+          st.excludedNullRows + excludedThisBatch)
       })
 
   /** Cross-cluster merge — the grouped sampling face of

@@ -45,11 +45,11 @@ object StreamingHeavyHitters {
     * item -> folded MG count (≤ k entries, each a lower bound off by at
     * most n/(k+1)). */
   case class MgSnapshot(k: Int, checkpoint: String, lastBatchId: Long,
-      n: Long, counts: Map[String, Long])
+      n: Long, counts: Map[String, Long]) extends FoldSnapshot
 
   private val store = new FoldStateStore[MgSnapshot](
     "MG state", "mg_state.json", Seq("k", "checkpoint"),
-    MgSnapshot(-1, "", -1L, 0L, Map.empty), _.lastBatchId, _.checkpoint,
+    MgSnapshot(-1, "", -1L, 0L, Map.empty),
     encode = (root, snap) => {
       root.put("k", snap.k)
       root.put("checkpoint", snap.checkpoint)

@@ -39,7 +39,7 @@ object StreamingHistogram {
     * micro-batch id, exact total (non-null) value count, exact underflow/
     * overflow counts, and the exact per-bin counts (sparse map). */
   case class HistSnapshot(spec: HistogramSpec, checkpoint: String,
-      lastBatchId: Long, n: Long, bins: Map[Int, Long]) {
+      lastBatchId: Long, n: Long, bins: Map[Int, Long]) extends FoldSnapshot {
     def underflow: Long = bins.getOrElse(-1, 0L)
     def overflow: Long = bins.getOrElse(spec.nBins, 0L)
   }
@@ -48,7 +48,6 @@ object StreamingHistogram {
     "histogram state", "hist_state.json",
     Seq("lo", "hi", "n_bins", "checkpoint"),
     HistSnapshot(HistogramSpec(0.0, 1.0, 1), "", -1L, 0L, Map.empty),
-    _.lastBatchId, _.checkpoint,
     encode = (root, snap) => {
       putSpec(root, snap.spec)
       root.put("checkpoint", snap.checkpoint)

@@ -85,7 +85,7 @@ object StreamingMoments {
     * state's identity — see the class scaladoc), the checkpoint binding,
     * last applied micro-batch id, and the exact moments. */
   case class MomentsSnapshot(valueCol: String, checkpoint: String,
-      lastBatchId: Long, moments: Moments)
+      lastBatchId: Long, moments: Moments) extends FoldSnapshot
 
   /** JSON field writer shared with the grouped fold — sums as STRINGS
     * (they are exact integers of unbounded width; a JSON double would
@@ -117,8 +117,7 @@ object StreamingMoments {
 
   private val store = new FoldStateStore[MomentsSnapshot](
     "moments state", "moments_state.json", Seq("value_col", "checkpoint"),
-    MomentsSnapshot("", "", -1L, emptyMoments), _.lastBatchId,
-    _.checkpoint,
+    MomentsSnapshot("", "", -1L, emptyMoments),
     encode = (root, snap) => {
       root.put("value_col", snap.valueCol)
       root.put("checkpoint", snap.checkpoint)

@@ -59,14 +59,14 @@ object StreamingSample {
     * included — the uniformity is over DISTINCT ids; nSeen is the
     * observability counter), and the ≤ k entries sorted by (key, id). */
   case class SampleSnapshot(k: Int, salt: String, checkpoint: String,
-      lastBatchId: Long, nSeen: Long, entries: Seq[SampleEntry]) {
+      lastBatchId: Long, nSeen: Long, entries: Seq[SampleEntry])
+      extends FoldSnapshot {
     def ids: Seq[Long] = entries.map(_.id)
   }
 
   private val store = new FoldStateStore[SampleSnapshot](
     "sample state", "sample_state.json", Seq("k", "salt", "checkpoint"),
-    SampleSnapshot(-1, "", "", -1L, 0L, Seq.empty), _.lastBatchId,
-    _.checkpoint,
+    SampleSnapshot(-1, "", "", -1L, 0L, Seq.empty),
     encode = (root, snap) => {
       root.put("k", snap.k)
       root.put("salt", snap.salt)

@@ -57,7 +57,7 @@ object StreamingWindowedDistinct {
     * (batchId, slot), oldest first, ≤ window entries. */
   case class WindowedDistinctSnapshot(lgK: Int, valueCol: String,
       checkpoint: String, window: Int, lastBatchId: Long,
-      ring: Seq[(Long, BatchSlot)]) {
+      ring: Seq[(Long, BatchSlot)]) extends WindowedFoldSnapshot {
     /** The window's arrival envelope: exact row/null counts over
       * exactly the newest ≤ window batches. */
     def nRows: Long = ring.iterator.map(_._2.nRows).sum
@@ -81,7 +81,6 @@ object StreamingWindowedDistinct {
     WindowedRing.registered("distinct_window_state.json"),
     Seq("lg_k", "value_col", "checkpoint", "window"),
     WindowedDistinctSnapshot(-1, "", "", -1, -1L, Seq.empty),
-    _.lastBatchId, _.checkpoint,
     encode = (root, snap) => {
       root.put("lg_k", snap.lgK)
       root.put("value_col", snap.valueCol)

@@ -55,7 +55,8 @@ object StreamingWindowedHeavyHitters {
     * applied batch id, and the ring — (batchId, slot), oldest first,
     * ≤ window entries. */
   case class WindowedMgSnapshot(k: Int, checkpoint: String, window: Int,
-      lastBatchId: Long, ring: Seq[(Long, MgSlot)]) {
+      lastBatchId: Long, ring: Seq[(Long, MgSlot)])
+      extends WindowedFoldSnapshot {
     /** The window's exact token mass — the recount threshold's
       * denominator base, and the exactly-once pin (an eviction off by
       * one batch changes it). */
@@ -75,7 +76,6 @@ object StreamingWindowedHeavyHitters {
     WindowedRing.registered("mg_window_state.json"),
     Seq("k", "checkpoint", "window"),
     WindowedMgSnapshot(-1, "", -1, -1L, Seq.empty),
-    _.lastBatchId, _.checkpoint,
     encode = (root, snap) => {
       root.put("k", snap.k)
       root.put("checkpoint", snap.checkpoint)

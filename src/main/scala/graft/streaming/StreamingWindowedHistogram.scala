@@ -38,7 +38,7 @@ object StreamingWindowedHistogram {
     * oldest first, ≤ window entries. */
   case class WindowedHistSnapshot(spec: HistogramSpec, checkpoint: String,
       window: Int, lastBatchId: Long,
-      ring: Seq[(Long, Long, Map[Int, Long])]) {
+      ring: Seq[(Long, Long, Map[Int, Long])]) extends WindowedFoldSnapshot {
     /** The served view: the exact bin-wise sum of the ring, shaped as
       * the flat face's snapshot so every consumer of [[HistSnapshot]]
       * (quantile interpolation, envelopes) applies verbatim. */
@@ -58,7 +58,6 @@ object StreamingWindowedHistogram {
     Seq("lo", "hi", "n_bins", "checkpoint", "window"),
     WindowedHistSnapshot(HistogramSpec(0.0, 1.0, 1), "", -1, -1L,
       Seq.empty),
-    _.lastBatchId, _.checkpoint,
     encode = (root, snap) => {
       StreamingHistogram.putSpec(root, snap.spec)
       root.put("checkpoint", snap.checkpoint)

@@ -47,7 +47,8 @@ object StreamingWindowedMoments {
     * window width), last applied batch id, and the ring — (batchId,
     * exact per-batch moments), oldest first, ≤ window entries. */
   case class WindowedMomentsSnapshot(valueCol: String, checkpoint: String,
-      window: Int, lastBatchId: Long, ring: Seq[(Long, Moments)]) {
+      window: Int, lastBatchId: Long, ring: Seq[(Long, Moments)])
+      extends WindowedFoldSnapshot {
     /** The served view: the exact semilattice reduction of the ring —
       * the moments of exactly the newest ≤ window batches' rows. */
     def aggregate: Moments =
@@ -60,7 +61,6 @@ object StreamingWindowedMoments {
     WindowedRing.registered("moments_window_state.json"),
     Seq("value_col", "checkpoint", "window"),
     WindowedMomentsSnapshot("", "", -1, -1L, Seq.empty),
-    _.lastBatchId, _.checkpoint,
     encode = (root, snap) => {
       root.put("value_col", snap.valueCol)
       root.put("checkpoint", snap.checkpoint)

@@ -175,4 +175,19 @@ class DedupClustersSpec extends SparkSpec {
     assert(local == Set(Some(1L) -> Some(1L), Some(2L) -> Some(1L),
       Some(3L) -> Some(3L), Some(4L) -> Some(3L), None -> None))
   }
+
+  test("a degenerate LSH bucket yields its C(n,2) pairs without one " +
+      "bucket-sized pair array") {
+    // 300 identical docs land in the same (band, bucket) on every band;
+    // the scan path must pair them from O(bucket) arrays — a flatten of
+    // per-id pair lists materializes all C(n,2) pairs in one array value
+    val n = 300L
+    val docs = (1L to n).map(i => (i, "one shared near duplicate body"))
+      .toDF("doc_id", "text")
+    val pairs = Dedup.minhashLshPairs(docs, shingleN = 2, bands = 4,
+      rowsPerBand = 2, threshold = 0.5)
+    val plan = pairs.queryExecution.executedPlan.toString
+    assert(!plan.contains("flatten"), plan)
+    assert(pairs.count() == n * (n - 1) / 2)
+  }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Sliding-window cardinality (the ring design's third instantiation,
-  * on the promoted [[RingStateStore]] scaffold): the window union's
+  * on the promoted [[FoldStateStore]] scaffold): the window union's
   * registers EQUAL the one-shot sketch over exactly the newest `window`
   * batches' rows (the HLL semilattice — canonical-estimate equality,
   * the flat face's estimator-normalization rule), eviction really
