@@ -30,17 +30,15 @@ object AnnQueries {
     * reference serves any number of searches from one persisted graph. */
   def ensureHnswScaleIndex(s: SparkSession, dir: String): String = {
     // bump the version suffix whenever graph construction changes — the
-    // cached index must never outlive the code that built it
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"/tmp/graft_hnsw_idx/${tag}_efc100_v3" // v3: +routing centroids
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
+    // cached index must never outlive the code that built it (v3: +routing
+    // centroids)
+    val base = QueryShapes.buildOnce(s, "hnsw_idx_efc100_v3",
+        s"$dir/embeddings.parquet") { b =>
       val e = Tables.load(s, dir, "embeddings")
-      Hnsw.buildAndSave(scaleCorpus(e), path,
+      Hnsw.buildAndSave(scaleCorpus(e), s"$b/idx",
         cfg = Hnsw.HnswConfig(efConstruction = 100, efSearch = 80))
     }
-    path
+    s"$base/idx"
   }
 
   /** Build-once persisted IVF index over the scale corpus: k-means
@@ -49,17 +47,8 @@ object AnnQueries {
     * assignment are a once-per-corpus-version cost, exactly like the
     * reference's trained historical tier; searches then probe-prune
     * partitions of the persisted table. */
-  def ensureIvfScaleIndex(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"/tmp/graft_ivf_idx/${tag}_k32_v2"
-    QueryShapes.buildOnce(s, base) {
-      // DEPENDENT caches die with this one: the BQ code table carries this
-      // index's cluster assignments and reranks against its raw inverted
-      // file — a rebuild here with a stale BQ sidecar would silently serve
-      // codes routed by the OLD clustering
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"/tmp/graft_bq_idx/${tag}_d64_v2"), true)
+  def ensureIvfScaleIndex(s: SparkSession, dir: String): String =
+    QueryShapes.buildOnce(s, "ivf_idx_k32_v2", s"$dir/embeddings.parquet") { base =>
       val corpus = scaleCorpus(Tables.load(s, dir, "embeddings"))
       val cents = Ivf.train(corpus, Ivf.IvfConfig(nClusters = 32,
         maxIterations = 10, trainSize = 10000, initMode = "driver"))
@@ -67,7 +56,6 @@ object AnnQueries {
       Ivf.writePartitioned(assigned, s"$base/data")
       Ivf.exportCentroids(cents, s"$base/centroids")
     }
-  }
 
   /** Build-once persisted sign-bit code table over the 100K scale corpus
     * (id, words ARRAY<LONG>, cluster_id) — dim/8 bytes per row, written as
@@ -75,21 +63,21 @@ object AnnQueries {
     * [[ensureIvfScaleIndex]] (whose raw inverted file supplies the rerank
     * vectors), so BQ searches probe-prune code partitions instead of
     * full-scanning the table — the store path's shape, now on the bare
-    * operator path too. */
+    * operator path too. It is keyed on the IVF index's `_DONE` marker,
+    * whose path names that index and whose mtime dates its build, so a
+    * rebuilt IVF index (new clustering) keys a new code table instead of
+    * serving codes routed by the old clustering. */
   def ensureBqScaleIndex(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = ensureIvfScaleIndex(s, dir)
-    val path = s"/tmp/graft_bq_idx/${tag}_d64_v2" // v2: +cluster_id partitioning
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
+    val ivf = ensureIvfScaleIndex(s, dir)
+    // v2: +cluster_id partitioning
+    val base = QueryShapes.buildOnce(s, "bq_idx_d64_v2", s"$ivf/_DONE") { b =>
       graft.operators.Ivf.writePartitioned(
-        s.read.parquet(s"$base/data")
+        s.read.parquet(s"$ivf/data")
           .select(col("id"), Bq.encode(col("embedding"), 64).as("words"),
             col("cluster_id")),
-        path)
+        s"$b/codes")
     }
-    path
+    s"$base/codes"
   }
 
   private def labelCentroids(emb: DataFrame): DataFrame =
@@ -101,14 +89,13 @@ object AnnQueries {
     * closed-form, and max_level is the deterministic splitmix64 draw the
     * oracle replays. Idempotent via a _DONE marker written LAST. */
   def ensureGraphStatsIndex(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = QueryShapes.buildOnce(s, s"/tmp/graft_hnsw_gstats/${tag}_v1") {
+    val base = QueryShapes.buildOnce(s, "hnsw_gstats_v1",
+        s"$dir/embeddings.parquet") { b =>
       val e = Tables.load(s, dir, "embeddings")
       val corpus = e.select(col("vec_id").cast("long").as("id"), col("embedding"))
-      Hnsw.buildAndSave(corpus, s"/tmp/graft_hnsw_gstats/${tag}_v1/idx")
+      Hnsw.buildAndSave(corpus, s"$b/idx")
       val maxId = corpus.agg(max("id")).head.getLong(0)
-      Hnsw.deleteFromSaved(s, s"/tmp/graft_hnsw_gstats/${tag}_v1/idx",
-        0L.to(maxId).by(3L))
+      Hnsw.deleteFromSaved(s, s"$b/idx", 0L.to(maxId).by(3L))
     }
     s"$base/idx"
   }
@@ -402,8 +389,7 @@ lv AS (SELECT least(floor(-ln(((z3 // 2048)::DOUBLE + 1.0) /
     // arithmetic, so a miscounting maintenance op fails the row loudly.
     "store_hnsw_crud" -> ((s, dir) => {
       val e = Tables.load(s, dir, "embeddings")
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val path = s"/tmp/graft_hnsw_crud/${tag}_v1"
+      val path = QueryShapes.fixtureDir(s, "hnsw_crud_v1", s"$dir/embeddings.parquet")
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       // the lifecycle mutates the index, so each run rebuilds from scratch
@@ -731,17 +717,15 @@ lv AS (SELECT least(floor(-ln(((z3 // 2048)::DOUBLE + 1.0) /
     * moved to a once-per-corpus-version fixture, the same warm framing as
     * the persisted scale indexes. Versioned path: bump when training
     * changes. */
-  def ensureOpqBenchModels(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    QueryShapes.buildOnce(s, s"/tmp/graft_opq_model/${tag}_m8k16t1000i5_v1") {
-      val base = s"/tmp/graft_opq_model/${tag}_m8k16t1000i5_v1"
+  def ensureOpqBenchModels(s: SparkSession, dir: String): String =
+    QueryShapes.buildOnce(s, "opq_model_m8k16t1000i5_v1",
+        s"$dir/embeddings.parquet") { base =>
       val corpus = QueryShapes.stretchedCorpus(Tables.load(s, dir, "embeddings"))
       Pq.save(s, Pq.train(corpus, dim = 64, m = 8, k = 16, trainSize = 1000),
         s"$base/pq")
       Opq.save(s, Opq.train(corpus, dim = 64, m = 8, k = 16,
         trainSize = 1000, iters = 5), s"$base/opq")
     }
-  }
 
   private val centSql400 =
     """cent AS (

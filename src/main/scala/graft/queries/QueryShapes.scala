@@ -87,24 +87,82 @@ object QueryShapes {
     org.apache.commons.io.FileUtils.deleteQuietly(stagingDir)
   }
 
-  /** Build-once cache protocol shared by every persisted query fixture
-    * (serving stores, scale indexes): gate on an explicit `_DONE` marker
-    * written LAST — never on a data dir's own `_SUCCESS`, which would
-    * wedge the cache forever if a crash landed between two artifact
-    * writes (data present, sidecar missing, build skipped on every
-    * subsequent run) — drop partials before rebuilding, and create the
-    * marker only after `build` returns. Returns `base`. */
-  def buildOnce(s: org.apache.spark.sql.SparkSession, base: String)(
-      build: => Unit): String = {
-    val done = new org.apache.hadoop.fs.Path(base, "_DONE")
-    val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(done)) {
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      build
-      fs.create(done, true).close()
+  /** Where the build-once query fixtures live (serving stores, scale
+    * indexes, trained models). */
+  private val FixtureRoot = "/tmp/graft_fixtures"
+
+  /** The fixture dir for `name` over the corpus at `corpusDir` (a file or
+    * a dir: pass exactly what the fixture reads, e.g.
+    * `$sfDir/embeddings.parquet`, so regenerating an unrelated table keeps
+    * it): `name` (which carries the construction version, e.g.
+    * `store_idx_v5`) plus a fingerprint of the corpus — its qualified path
+    * and every file's relative path, length and mtime, from one listing
+    * (no Spark job). A corpus regenerated under the same path gets a new
+    * dir, and two corpora never share one (`/a/b` vs `/a_b`). */
+  def fixtureDir(s: org.apache.spark.sql.SparkSession, name: String,
+      corpusDir: String): String = {
+    import org.apache.hadoop.fs.Path
+    import java.nio.charset.StandardCharsets.UTF_8
+    val root = new Path(corpusDir)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(root)
+    val prefix = qualified.toUri.getPath.stripSuffix("/") + "/"
+    val files = Seq.newBuilder[String]
+    // listStatus, not listFiles: the local FS builds each LocatedFileStatus
+    // by forking a process for the file's permissions (~3 ms a file), and
+    // every query call over a fixture comes through here
+    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
+      if (st.isDirectory) walk(st.getPath)
+      else files += s"${st.getPath.toUri.getPath.stripPrefix(prefix)}\t" +
+        s"${st.getLen}\t${st.getModificationTime}"
     }
-    base
+    walk(qualified)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    md.update(qualified.toString.getBytes(UTF_8))
+    files.result().sorted.foreach(f => md.update(("\n" + f).getBytes(UTF_8)))
+    val fp = md.digest().take(8).map(b => f"$b%02x").mkString
+    s"$FixtureRoot/${name}_$fp"
   }
+
+  /** Build-once cache shared by every persisted query fixture: returns
+    * [[fixtureDir]]`(name, corpusDir)`, first building it if absent.
+    * `build` writes into a fresh sibling temp dir (always into
+    * sub-paths of it), which is published by ONE atomic rename after
+    * `build` returns and the `_DONE` marker is written — so a reader
+    * never sees a half-built fixture and a failed build leaves nothing.
+    * Of two concurrent builders, the one that loses the rename drops its
+    * copy and uses the winner's. A publish also removes this name's temp
+    * dirs older than [[StaleBuildMs]], which only a killed build leaves.
+    * Fixtures of superseded corpora are kept: another corpus path may
+    * still be served from them. */
+  def buildOnce(s: org.apache.spark.sql.SparkSession, name: String,
+      corpusDir: String)(build: String => Unit): String = {
+    import java.nio.file.{FileSystemException, Files, Paths, StandardCopyOption}
+    val dir = Paths.get(fixtureDir(s, name, corpusDir))
+    if (!Files.exists(dir.resolve("_DONE"))) {
+      val building = s"${name}_building_"
+      val tmp = Files.createDirectories(dir.resolveSibling(
+        building + java.util.UUID.randomUUID()))
+      try {
+        build(tmp.toString)
+        Files.createFile(tmp.resolve("_DONE"))
+        try Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
+        catch {
+          // another builder published first: keep theirs
+          case _: FileSystemException if Files.exists(dir.resolve("_DONE")) => ()
+        }
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
+      val cutoff = System.currentTimeMillis() - StaleBuildMs
+      Option(dir.getParent.toFile.listFiles()).toSeq.flatten
+        .filter(f => f.getName.startsWith(building) && f.lastModified() < cutoff)
+        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    }
+    dir.toString
+  }
+
+  /** Age past which a fixture's temp build dir is taken as a killed
+    * build's leftover: far above the longest fixture build (minutes). */
+  val StaleBuildMs: Long = 24L * 3600 * 1000
 
   def exactDigest(exact: DataFrame): DataFrame =
     exact.agg(

@@ -25,12 +25,9 @@ object StoreQueries {
     * odd ones recent), recent tier indexed with saved HNSW, historical
     * tier PQ-encoded. Bump the version suffix when construction changes —
     * a stale /tmp store must never outlive the code that built it. */
-  def ensureServingStore(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    // bump the version suffix when construction changes
-    QueryShapes.buildOnce(s, s"/tmp/graft_store_idx/${tag}_v5") {
-      val st = new VectorStore(s, s"/tmp/graft_store_idx/${tag}_v5/store",
-        storeConfig)
+  def ensureServingStore(s: SparkSession, dir: String): String =
+    QueryShapes.buildOnce(s, "store_idx_v5", s"$dir/embeddings.parquet") { base =>
+      val st = new VectorStore(s, s"$base/store", storeConfig)
       val e = Tables.load(s, dir, "embeddings")
       val oldTs = java.sql.Timestamp.from(
         java.time.Instant.now().minusSeconds(7200))
@@ -47,7 +44,6 @@ object StoreQueries {
       st.enableSq()         // u8 code tier over the same historical rows
       st.enableBq()         // sign-bit code tier (coarsest rung, 32x smaller)
     }
-  }
 
   /** Build-once store behind `store_opq_search`: the ann_opq anisotropic
     * corpus ([[QueryShapes.stretchedCorpus]]) ingested through the bulk
@@ -57,11 +53,9 @@ object StoreQueries {
     * the IDENTICAL budget (m=8, 16 codes, 1000-sample training — the
     * ann_opq budget), which is what makes the row's ge_plain gate a real
     * tier-vs-tier comparison through the store front door. */
-  def ensureOpqServingStore(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    QueryShapes.buildOnce(s, s"/tmp/graft_store_idx/${tag}_opq_v1") {
-      val st = new VectorStore(s,
-        s"/tmp/graft_store_idx/${tag}_opq_v1/store", storeConfig)
+  def ensureOpqServingStore(s: SparkSession, dir: String): String =
+    QueryShapes.buildOnce(s, "store_idx_opq_v1", s"$dir/embeddings.parquet") { base =>
+      val st = new VectorStore(s, s"$base/store", storeConfig)
       val corpus = QueryShapes.stretchedCorpus(Tables.load(s, dir, "embeddings"))
       val oldTs = java.sql.Timestamp.from(
         java.time.Instant.now().minusSeconds(7200))
@@ -72,7 +66,6 @@ object StoreQueries {
       st.enablePq(m = 8, kCodes = 16, trainSize = 1000)
       st.enableOpq(m = 8, kCodes = 16, trainSize = 1000, iters = 5)
     }
-  }
 
   private def queries8(e: DataFrame): DataFrame =
     e.filter(col("vec_id") < 8)
@@ -88,12 +81,11 @@ object StoreQueries {
     * recent behind the saved HNSW graph. This is the store whose AMORTIZED
     * serving throughput the store_*_scale bench rows measure; 8-query rows
     * measure fixed plan overhead instead. */
-  def ensureScaleServingStore(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    QueryShapes.buildOnce(s,
-        s"/tmp/graft_store_idx/${tag}_scale_v6") { // v6: +PQ code tier
-      val st = new VectorStore(s,
-        s"/tmp/graft_store_idx/${tag}_scale_v6/store", scaleStoreConfig)
+  def ensureScaleServingStore(s: SparkSession, dir: String): String =
+    // v6: +PQ code tier
+    QueryShapes.buildOnce(s, "store_idx_scale_v6",
+        s"$dir/embeddings.parquet") { base =>
+      val st = new VectorStore(s, s"$base/store", scaleStoreConfig)
       val corpus = QueryShapes.scaleCorpus(Tables.load(s, dir, "embeddings"))
       val oldTs = java.sql.Timestamp.from(
         java.time.Instant.now().minusSeconds(7200))
@@ -111,7 +103,6 @@ object StoreQueries {
       st.enableSq()
       st.enableBq()
     }
-  }
 
   /** 100 corpus-vector queries against the scale store, aimed at one tier
     * by parity: `offset = 1` hits the odd (recent/HNSW) rows, `offset = 0`

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.BenchSession
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Width/depth legs for the transitive dup-cluster labeling
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.tools.ChainPropRun
   *   SPARK_GRAFT_CHAIN_DEPTHS  (default "64,1024,4096")
   *   SPARK_GRAFT_CHAIN_PAIRS   (default "100000,1000000,10000000")
-  *   SPARK_GRAFT_CPUS          (default 32)
+  *   SPARK_GRAFT_CPUS          (default 4, via BenchSession)
   */
 object ChainPropRun {
   def main(args: Array[String]): Unit = {
@@ -25,13 +25,7 @@ object ChainPropRun {
       .split(",").map(_.trim.toInt).toSeq
     val volumes = sys.env.getOrElse("SPARK_GRAFT_CHAIN_PAIRS",
       "100000,1000000,10000000").split(",").map(_.trim.toLong).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // this tool MEASURES the distributed propagation rounds — disable the
     // bounded in-driver union-find path so small legs stay comparable

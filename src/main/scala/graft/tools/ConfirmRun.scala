@@ -1,9 +1,9 @@
 package graft.tools
 
+import graft.BenchSession
 import graft.core.Tables
 import graft.store.VectorStore
 import graft.streaming.{MigrationPolicy, MigrationScheduler}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Price `checkIntegrity(confirmTransients = true)` under LIVE
@@ -25,19 +25,12 @@ import org.apache.spark.sql.functions._
 object ConfirmRun {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val scans = sys.env.getOrElse("SPARK_GRAFT_CONFIRM_SCANS", "6").toInt
     val waits = sys.env.getOrElse("SPARK_GRAFT_CONFIRM_WAITS", "2000,10000")
       .split(",").map(_.trim.toLong).toSeq
     val gaps = sys.env.getOrElse("SPARK_GRAFT_SCHED_GAPS_MS", "0,2000")
       .split(",").map(_.trim.toLong).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val path = java.nio.file.Files

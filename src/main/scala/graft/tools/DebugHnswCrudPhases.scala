@@ -1,8 +1,8 @@
 package graft.tools
 
+import graft.BenchSession
 import graft.core.Tables
 import graft.operators.Hnsw
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev scratch (optimization round): per-phase wall timing of the
@@ -10,17 +10,7 @@ import org.apache.spark.sql.functions._
 object DebugHnswCrudPhases {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()

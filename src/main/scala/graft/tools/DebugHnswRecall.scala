@@ -1,9 +1,9 @@
 package graft.tools
 
+import graft.BenchSession
 import graft.core.Tables
 import graft.operators.{Hnsw, Knn}
 import graft.queries.{AnnQueries, QueryShapes}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement harness for the store_hnsw_recall gate: per-query recall@10
@@ -13,14 +13,7 @@ object DebugHnswRecall {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for (dir <- dirs) {
       val e = Tables.load(spark, dir, "embeddings")

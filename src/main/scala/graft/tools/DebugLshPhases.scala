@@ -1,8 +1,8 @@
 package graft.tools
 
+import graft.BenchSession
 import graft.core.Tables
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev scratch (optimization round 18): phase timing of the MinHash-LSH
@@ -12,17 +12,8 @@ import org.apache.spark.sql.functions._
 object DebugLshPhases {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.builder().getOrCreate()
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.sparkContext.setLogLevel("WARN")
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()
@@ -70,7 +61,7 @@ object DebugLshPhases {
         try graft.operators.Dedup.minhashLshPairsFromBandKeys(hashed,
             threshold = 0.3, inputPersisted = true)
           .write.format("noop").mode("overwrite").save()
-        finally spark.conf.set("spark.sql.shuffle.partitions", cpus)
+        finally spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
       }
       t("pairs cached (smallInput bc)") {
         graft.operators.Dedup.minhashLshPairsFromBandKeys(hashed,

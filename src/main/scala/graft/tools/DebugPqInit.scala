@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.BenchSession
 import graft.operators.{Knn, Pq}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off measurement: PQ codebook quality (corpus reconstruction MSE +
@@ -11,11 +11,7 @@ import org.apache.spark.sql.functions._
 object DebugPqInit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .appName("pq-init-ab").master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val corpus = emb.select(col("vec_id").as("id"), col("embedding")).cache()

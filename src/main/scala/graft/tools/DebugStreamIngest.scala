@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.BenchSession
 import graft.core.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch profiler for the streaming_ingest probe: times the micro-batch
@@ -10,15 +10,7 @@ import org.apache.spark.sql.functions._
 object DebugStreamIngest {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).agg(sum("id")).collect()
 

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.BenchSession
 import graft.core.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev scratch (optimization round): phase-timing of one streaming fold
@@ -11,15 +11,7 @@ import org.apache.spark.sql.functions._
 object DebugStreamPhases {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val b = BenchSession.builder()
     sys.env.get("GRAFT_DBG_CKPT_FM").foreach(c =>
       b.config("spark.sql.streaming.checkpointFileManagerClass", c))
     sys.env.get("GRAFT_DBG_CKPT_CRC").foreach(c =>

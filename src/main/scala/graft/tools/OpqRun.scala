@@ -1,9 +1,9 @@
 package graft.tools
 
+import graft.BenchSession
 import graft.core.Tables
 import graft.operators.{Ivf, Knn, Opq, Pq}
 import graft.queries.QueryShapes
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** OPQ vs plain PQ, measured on the 100K anisotropically-stretched scale
@@ -16,14 +16,7 @@ import org.apache.spark.sql.functions._
 object OpqRun {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).agg(sum("id")).collect()
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.BenchSession
 import org.apache.spark.sql.functions._
 
 /** Optimization-round plan capture: prints `.explain("formatted")` for the
@@ -15,16 +15,8 @@ object PlanCapture {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val which = args.drop(1).toSet
     def want(n: String) = which.isEmpty || which(n)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.builder().getOrCreate()
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.sparkContext.setLogLevel("WARN")
     import graft.core.Tables
 
@@ -87,14 +79,14 @@ object PlanCapture {
         .repartition(4).write.parquet(s"$tmp/data")
       val batch = spark.read.parquet(s"$tmp/data")
       spark.conf.set("spark.sql.adaptive.enabled", "false") // streaming has no AQE
-      println("-- at session shuffle partitions (32, the untuned plan) --")
+      println(s"-- at session shuffle partitions ($sessionParts, the untuned plan) --")
       batch.groupBy("source").agg(count(lit(1)), sum("value"))
         .explain("formatted")
       spark.conf.set("spark.sql.shuffle.partitions", "1")
       println("-- at the batch-derived count (1, the tuned plan) --")
       batch.groupBy("source").agg(count(lit(1)), sum("value"))
         .explain("formatted")
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
+      spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
     }

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.BenchSession
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -22,19 +22,7 @@ object ProfileQuery {
     require(args.length >= 2, "usage: ProfileQuery <sfDir> <query>...")
     val sfDir = args.head
     val names = args.tail
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.codegen.cache.maxEntries",
-        math.max(4000, graft.SparkEntry.queries.size * 60).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val jobs = mutable.ArrayBuffer.empty[JobRec]

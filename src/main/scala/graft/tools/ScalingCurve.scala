@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.BenchSession
 import graft.operators.{Dedup, Hnsw, Ivf, Knn}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-exponent probe for the flagship shapes: exact scan
@@ -24,25 +25,7 @@ import org.apache.spark.sql.functions._
 object ScalingCurve {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      // the grouped top-k TypedImperativeAggregate keeps a BOUNDED buffer
-      // per group (<= max(4k, 64) candidates, ~1 KB at k<=16), so the
-      // object-hash aggregate's 128-groups-per-partition fallback budget
-      // is far too conservative for it: a partition holding a few hundred
-      // vertex groups would silently degrade to sort-based aggregation
-      // over the full pair expansion (measured 10x on the k-NN graph
-      // shapes). 4096 groups x ~1 KB is single-digit MB per task.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).agg(sum("id")).collect()
 

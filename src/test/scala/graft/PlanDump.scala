@@ -386,7 +386,7 @@ object PlanDump {
         |driver-side fold that follows is O(nBins) vector addition into
         |the FsSwap-committed state file; no plan at all. Nothing here
         |grows with stream length — the 100 TB/day property the
-        |HistStreamRun table prices.""".stripMargin)
+        |`FoldRun --face hist` table prices.""".stripMargin)
         .linesIterator.map(_.trim).mkString(" "))
       sb.append("\n\n```\n")
       sb.append(df.queryExecution.executedPlan.toString.take(6000))
